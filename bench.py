@@ -60,204 +60,12 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
-from lakehouse_adventureworks2022_spark.plans.catalog import QUERIES
+from lakehouse_adventureworks2022_spark.plans.catalog import QUERIES, RECORDS
 from lakehouse_adventureworks2022_spark.session import get_spark
 
-#: Queries timed by the driver's per-round bench. Covers the star-join
-#: marts, the fact build, window/dedup, and the generated dim.
-HEADLINE = [
-    "top_products",
-    "sales_summary",
-    "fact_sales",
-    "dim_date",
-    "latest_event_per_user",
-    "event_windows",
-    "event_sessions",
-    "incremental_read",
-    "flatten_props",
-    "scd2_part_dimension",
-    "text_stats",
-    "dedup_minhash_lsh",
-    "ann_cosine_topk_np",
-    "tpch_q1",
-    "tpch_q5",
-    "tpch_q8_market_share",
-    "silver_lineitem_enriched",
-    "customer_running_revenue",
-    "asof_click_attribution",
-    "error_burst_context",
-    "small_quantity_part_revenue",
-    "customer_order_distribution",
-    "ann_cosine_topk_ivf",
-    # deployed-IVF twin: builds+persists the index on the first rep, so
-    # the median-of-3 reports the amortized (search-only) cost — the
-    # build/search split the one-shot form can't show
-    "ann_cosine_topk_ivf_amortized",
-    "sales_rollup",
-    "clean_corpus",
-    # round-5 additions (kept AFTER the stable r1-comparable set so
-    # historical per-query comparisons stay aligned)
-    "chunk_documents",
-    "incremental_dedup",
-    "clean_boilerplate",
-    "doc_perplexity",
-    "quality_classifier",
-    "ann_cosine_topk_pq",
-    # deployed-PQ twin: builds+persists the codes index on the first
-    # rep, so the median reports the amortized (ADC+re-rank) cost
-    "ann_cosine_topk_pq_amortized",
-    "temperature_mixture",
-    "semdedup_prune",
-    "rag_retrieval",
-    # deployed-retrieval twin: persisted chunk index built on the first
-    # rep, median reports the steady-state (search-only) cost
-    "rag_retrieval_amortized",
-    "remove_repeated_spans",
-    "bpe_tokenize",
-    "clean_assets",
-    # steady-state hard-negative mining over the persisted chunk index
-    "hard_negatives",
-    # two-leg hybrid retrieval over persisted BM25 + IVF indexes
-    "hybrid_retrieval",
-    # SCD2 point-in-time fact enrichment (600k facts × version history)
-    "scd2_part_price_asof",
-    # round-6 additions (after the frozen r5 baseline set — they gain
-    # per-query baselines at the next deliberate re-freeze)
-    "funnel_conversion",
-    "retention_cohorts",
-    "event_anomalies",
-    "corpus_vocabulary",
-    # the two hardest new TPC-H shapes: 5-join profit rollup and the
-    # double-correlation planned as per-order count predicates
-    "tpch_q9_product_profit",
-    "tpch_q21_waiting_suppliers",
-    # bounded-shuffle sketch ops: MG-candidates exact top-k and the
-    # mergeable KLL quantile build (shuffles sketches, never values)
-    "heavy_hitters_event_types",
-    "kll_value_quantiles",
-    # round-7 additions: the two ex-scale-killers (global window ->
-    # 1-row-aggregate broadcast join, r6 verdict #1) now benched so a
-    # plan regression would show here, plus q2 after its selective-part
-    # semi-join pushdown (r6 verdict #5)
-    "tpch_q22_idle_balances",
-    "tpch_q11_important_parts",
-    "tpch_q2_min_balance_supplier",
-    # r7 curation/sketch additions (swept twins / bounded differentials)
-    "pii_scrub",
-    "normalize_text",
-    "domain_census",
-    "docs_capped_per_source",
-    "audience_overlap",
-    "ann_cosine_topk_sq8",
-    # deployed-SQ8 twin: index built on the first rep, median reports
-    # the amortized (compressed scan + re-rank) cost
-    "ann_cosine_topk_sq8_amortized",
-    # r8 combined tier: IVF probe pruning bounds the SQ8-compressed
-    # scan (plain SQ8 scans every code row — the missing tier the r7
-    # verdict named); one-shot + deployed twin
-    "ann_cosine_topk_ivf_sq8",
-    "ann_cosine_topk_ivf_sq8_amortized",
-    "dq_expectations_orders",
-    # real MP4 frame extraction: in-plan MJPEG mux -> ISO-BMFF
-    # sample-table parse -> per-frame dHash via the real JPEG decoder
-    "video_frame_harvest",
-    # r8: deployed-shape twin over a persisted corpus — measures the
-    # harvest operator (parse -> decode -> dHash -> agg), not the
-    # fixture generation the one-shot form is dominated by
-    "video_frame_harvest_amortized",
-    # r8: codec-agnostic bytes-level video near-dup (keyframe payload
-    # hashes out of the sample tables — no pixel decode)
-    "video_keyframe_dedup",
-    # r8: benchmark-hygiene n-gram decontamination (explode -> broadcast
-    # gram join -> per-doc agg; exact, swept DuckDB twin) + the fuzzy
-    # MinHash cross-corpus tier over planted perturbed eval twins
-    "eval_decontamination",
-    "eval_decontamination_fuzzy",
-    # r8: CCNet perplexity terciles + weighted-epochs materialization
-    "perplexity_quality_buckets",
-    "docs_epoch_mixture",
-    # r9: CDC merge through TableManager.merge_upsert (exact, swept
-    # twin) + IVF+SQ8 replay-idempotent ingest-and-search steady state
-    "cdc_upsert",
-    "ivf_sq8_index_ingest",
-    # r10: chunk-index daily ingest — per-batch chunk+encode+append +
-    # grown-index retrieval (the incremental path that replaces the
-    # full chunk-index rebuild corpus growth used to pay)
-    "rag_index_ingest",
-    # r10: DSIR importance weighting toward a target domain (exact,
-    # swept DuckDB twin; two linear explode+agg passes + broadcast
-    # bounded models)
-    "docs_dsir_weights",
-    # r10: cross-source n-gram overlap matrix (exact, swept twin; one
-    # distinct agg + per-gram source-list pair expansion)
-    "source_overlap_matrix",
-    # r10: bloom-gated incremental dedup — the deployed steady state of
-    # the vs-history exact stage (persisted bloom + In() pushdown);
-    # first rep builds state+bloom, median reports the gated batch cost
-    "incremental_dedup_bloom",
-    # r10: WET-style HTML→text extraction (exact, generated swept twin;
-    # zero-shuffle codegen regex pipeline)
-    "html_extract",
-    # r10: full raw-crawl pipeline (extract → scrub → corpus-wide
-    # boilerplate strip → gate/dedup → split)
-    "web_corpus_pipeline",
-    # r10: corpus diagnostics (exact swept twins) — Zipf slope over the
-    # vocab head, Flesch readability projection
-    "corpus_zipf",
-    "doc_readability",
-    # r11: URL canonicalization + URL-exact dedup census (exact, swept
-    # generated twin; zero-shuffle projection + one census agg)
-    "url_canonicalize",
-    # r11: WARC container ingestion — in-plan spec-shaped mux (gzip
-    # members) through the real record parser (exact driver oracle)
-    "warc_ingest",
-    # r11: sitemap ingestion — in-plan plant, extract + entity decode
-    # (exact driver oracle; zero-shuffle projection)
-    "sitemap_extract",
-    # r12: WARC revisit records + crawler-digest dedup (exact driver
-    # oracle — revisit mux through the real parser, digest-keyed aggs)
-    "warc_revisit_digest",
-    # r12: sitemap <lastmod> extraction — per-entry loc/lastmod pairing
-    # (exact driver oracle; zero-shuffle projection)
-    "sitemap_lastmod",
-    # late r12: WET conversion-record ingestion (exact swept twin —
-    # the CommonCrawl *.warc.wet.gz layout through the real parser)
-    "wet_ingest",
-    # late r12: Sitemap: directive discovery from robots.txt (exact
-    # swept twin; zero-shuffle split+explode projection)
-    "robots_sitemap_discovery",
-    # late r12: anchor-outlink extraction + host link graph (exact
-    # swept twins) and 5-iteration host PageRank (rows-only; the
-    # iterative join+agg loop with per-iteration lineage truncation)
-    "outlink_extract",
-    "host_link_graph",
-    "host_pagerank",
-    # late r12: SURT url keys — the CDX-index sort key (exact swept
-    # twin; zero-shuffle staged projection)
-    "cdx_urlkey",
-    # late r12: discovery-tier composite — sitemaps + robots → gated
-    # frontier (exact swept twin; the robots gate's first
-    # oracle-channel evidence)
-    "crawl_frontier",
-    # r13: host-authority enrichment — the PageRank prior broadcast-
-    # joined onto docs by canonical host (exact swept twin; zero
-    # doc-side shuffle)
-    "host_authority",
-    # r13: politeness planning — robots Crawl-delay → md5 host shards
-    # + per-URL fetch schedule (exact swept twin; one by-host window)
-    "crawl_politeness",
-    # r13: per-host crawl health report — in-plan mux through the real
-    # parser into ONE uniform-key agg (exact swept twin)
-    "crawl_health",
-    # r13: amortized random-access capture fetch — persisted archive +
-    # CDX index built on the first rep; the median measures the
-    # byte-range lookup batch, never an archive scan (exact swept twin)
-    "warc_random_access",
-    # r13: archive-aware frontier pruning — frontier minus the CDX
-    # index unless modified since capture (exact swept twin; one
-    # uniform-short-key join)
-    "frontier_refresh",
-]
+#: Queries timed by the driver's per-round bench: the catalog records
+#: marked ``headline``.
+HEADLINE = [r.name for r in RECORDS if r.headline]
 
 
 def _purge_amortized_state(sf_dir: str) -> list[str]:
@@ -276,22 +84,13 @@ def _purge_amortized_state(sf_dir: str) -> list[str]:
     from lakehouse_adventureworks2022_spark.plans import text_queries as tq
 
     dirs: list[str] = []
-    try:
-        for prefix in (
-            "ivf_index_", "pq_index_", "sq8_index_",
-            "ivf_sq8_index_", "ivf_sq8_ingest_",
-        ):
-            dirs.append(tq.ivf_index_dir_for(sf_dir, prefix))
-    except OSError:
-        pass  # fixture without embeddings.parquet: no vector indexes
-    try:
-        rag = tq.rag_index_dir_for(sf_dir)
-        dirs += [rag, rag + "_bm25", tq.rag_index_dir_for(sf_dir, "rag_ingest_index_")]
-        dirs.append(tq._dedup_state_dir_for(sf_dir))
-        dirs.append(tq.mp4_corpus_dir_for(sf_dir))
-        dirs.append(tq._warc_archive_dir_for(sf_dir))
-    except OSError:
-        pass  # fixture without documents.parquet
+    for table, prefix, recipe in tq.AMORTIZED_STATE:
+        try:
+            d = tq.fixture_state_dir(sf_dir, table, prefix, recipe)
+        except OSError:
+            continue  # fixture without this table: no such state
+        # the chunk index keeps its BM25 leg in a sibling dir
+        dirs += [d, d + "_bm25"] if prefix == "rag_index_" else [d]
     removed = []
     for d in dirs:
         if os.path.isdir(d):

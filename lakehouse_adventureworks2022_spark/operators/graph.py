@@ -31,6 +31,17 @@ from pyspark.sql import functions as F
 from lakehouse_adventureworks2022_spark.session import default_parallelism
 
 
+def _exact_sum(col: str):
+    """Sum of a rank-mass column (values in [0, 1]) that does not depend
+    on the order Spark merges partial aggregates in: each double is
+    rounded once to DECIMAL(38,30) — an absolute step of 1e-30, far
+    below any rank's double ulp — and decimal addition is exact, hence
+    associative. A plain double ``sum`` differs by ulps whenever
+    adaptive planning or shuffle timing reorders the merge, which broke
+    run-to-run reproducibility (test_pagerank_deterministic_across_runs)."""
+    return F.sum(F.col(col).cast("decimal(38,30)")).cast("double")
+
+
 def pagerank(
     edges: DataFrame,
     src_col: str = "src_host",
@@ -95,10 +106,7 @@ def pagerank(
     )
     n = nodes.count()  # bounded: one scalar for the teleport term
     # per-source outgoing fractions, built once and persisted
-    # co-partitioned on the join key every iteration reuses (persist,
-    # not checkpoint, for nodes/frac: swapping them to checkpoints
-    # reintroduced run-to-run float-sum ulp instability in the contribs
-    # aggregation — see test_pagerank_deterministic_across_runs). Only
+    # co-partitioned on the join key every iteration reuses. Only
     # positive-weight edges distribute mass (docstring contract) —
     # without the filter a source whose weights sum to 0 yields NULL
     # fractions (0/0) non-ANSI, or a mid-loop throw under ANSI.
@@ -117,14 +125,14 @@ def pagerank(
             frac.join(ranks, frac["src"] == ranks["node"])
             .select("dst", (F.col("frac") * F.col("rank")).alias("c"))
             .groupBy("dst")
-            .agg(F.sum("c").alias("contrib"))
+            .agg(_exact_sum("c").alias("contrib"))
         )
         # dangling mass = rank not redistributed by any edge. The total
         # redistributed IS sum(contrib), so dangling = 1 - that sum
         # (ranks sum to 1 by construction) — a one-row aggregate
         # attached by broadcast, never a driver collect in the loop.
         dangling = contribs.agg(
-            (1.0 - F.coalesce(F.sum("contrib"), F.lit(0.0))).alias(
+            (1.0 - F.coalesce(_exact_sum("contrib"), F.lit(0.0))).alias(
                 "__dangling__"
             )
         )

@@ -138,23 +138,6 @@ def _scalars(lm: DataFrame, **aggs: Column) -> DataFrame:
     return F.broadcast(lm.agg(*[c.alias(k) for k, c in aggs.items()]))
 
 
-def _warn_manage_cache(manage_cache) -> None:
-    """r13 removed the scorers' model persist (measured pessimization —
-    see score_perplexity's docstring); ``manage_cache`` is a no-op kept
-    for signature compatibility. Warn anyone still passing it so the
-    changed contract is a signal, not a silent behavior change."""
-    if manage_cache is not None:
-        import warnings
-
-        warnings.warn(
-            "manage_cache is a no-op since r13: the perplexity scorers "
-            "no longer persist the model frame (ReuseExchange covers "
-            "within-action reuse); drop the argument",
-            DeprecationWarning,
-            stacklevel=3,
-        )
-
-
 def score_perplexity(
     docs: DataFrame,
     lm: DataFrame,
@@ -162,7 +145,6 @@ def score_perplexity(
     n: int = 2,
     k: float = 0.5,
     vocab_size: int | None = None,
-    manage_cache: bool | None = None,
 ) -> DataFrame:
     """Per-document add-k perplexity under a trained model:
     ``(doc_id, n_transitions, avg_nll, ppl)`` — lower = more fluent
@@ -186,13 +168,7 @@ def score_perplexity(
     with the cache live; 1.48 s with no persist at all). At 100 TB the
     exchange-reuse posture holds: shuffle files are reused from disk,
     nothing recomputes the corpus explode.
-
-    ``manage_cache`` is retained for signature compatibility only;
-    since r13 neither value takes a persist here, and passing it
-    explicitly emits a ``DeprecationWarning`` (r13 ADVICE — external
-    callers relying on the old persist contract deserve a signal).
     """
-    _warn_manage_cache(manage_cache)
     ctx_totals = lm.groupBy("context").agg(F.sum("c").alias("ctx_c"))
     grams = _gram_frame(docs, text_col, n, with_doc_id=True)
     joined = grams.join(lm, ["context", "word"], "left").join(
@@ -240,7 +216,6 @@ def score_perplexity_interpolated(
     k: float = 0.5,
     lam: float = 0.7,
     vocab_size: int | None = None,
-    manage_cache: bool | None = None,
 ) -> DataFrame:
     """Jelinek-Mercer interpolated perplexity: ``P = λ·P_n(w|ctx) +
     (1−λ)·P_1(w)`` — the standard backoff that keeps rare-context
@@ -256,7 +231,6 @@ def score_perplexity_interpolated(
     """
     # no persist: model consumers share the (context, word) exchange
     # via ReuseExchange — see score_perplexity (r13 opt)
-    _warn_manage_cache(manage_cache)
     ctx_totals = lm.groupBy("context").agg(F.sum("c").alias("ctx_c"))
     uni = lm.groupBy("word").agg(F.sum("c").alias("uc"))
     # model-level scalars as one broadcast subplan (no driver collects
@@ -324,7 +298,6 @@ def score_perplexity_kn(
     discount: float = 0.75,
     k: float = 0.5,
     vocab_size: int | None = None,
-    manage_cache: bool | None = None,
 ) -> DataFrame:
     """Interpolated Kneser-Ney perplexity (r7) — the standard strongest
     count-based smoothing (Kneser & Ney 1995; Chen & Goodman 1999):
@@ -345,7 +318,6 @@ def score_perplexity_kn(
     (context, word), so type counts are plain row counts."""
     # no persist: model consumers share the (context, word) exchange
     # via ReuseExchange — see score_perplexity (r13 opt)
-    _warn_manage_cache(manage_cache)
     ctx_stats = lm.groupBy("context").agg(
         F.sum("c").alias("ctx_c"),
         F.count(F.lit(1)).alias("ctx_types"),

@@ -1,5 +1,4 @@
 from lakehouse_adventureworks2022_spark.plans.catalog import (  # noqa: F401
     ORACLES,
     QUERIES,
-    get_queries,
 )

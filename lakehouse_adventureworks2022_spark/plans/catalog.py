@@ -2,6 +2,10 @@
 (SURVEY.md §2 inventory) with an ANSI-SQL oracle twin for differential
 testing against DuckDB (SURVEY.md §5.1, driver contract).
 
+Each query is registered by exactly one ``Query`` record in ``RECORDS``;
+``QUERIES``, ``ORACLES``, ``PYTEST_ORACLES`` and ``bench.HEADLINE`` are
+derived from it.
+
 Conventions (the driver hashes values after sorting columns by name):
 - every computed/aggregate column is aliased identically in the Spark plan
   and the oracle SQL;
@@ -16,6 +20,7 @@ Conventions (the driver hashes values after sorting columns by name):
 from __future__ import annotations
 
 from collections.abc import Callable
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -28,13 +33,41 @@ from lakehouse_adventureworks2022_spark.plans import (
     relational,
     scd2_query,
     semistructured,
-    text_queries,
     tpch,
     tpch_extra,
     windowed,
 )
+from lakehouse_adventureworks2022_spark.plans import text_queries as tq
+from lakehouse_adventureworks2022_spark.plans.tpch_extra import EXTRA_ORACLES as EXTRA
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
+
+#: The driver verifies only the FIRST ``DRIVER_WINDOW`` entries of
+#: ``queries()`` against ``oracle_sql()``, so ordering is part of the
+#: contract: the ``driver=True`` records lead ``QUERIES``.
+DRIVER_WINDOW = 50
+
+
+@dataclass(frozen=True)
+class Query:
+    """One catalog entry. Exactly one of ``oracle`` (DuckDB SQL twin) or
+    ``rows_only`` (why no twin exists) is given. ``driver`` places the
+    oracle in the driver's window instead of the pytest sweep
+    (tests/test_rotated_oracles.py, tools/check_oracles.py);
+    ``headline`` puts the query in bench.py's timed set."""
+
+    name: str
+    fn: QueryFn
+    oracle: str | None = None
+    rows_only: str | None = None
+    driver: bool = False
+    headline: bool = False
+
+    def __post_init__(self) -> None:
+        if (self.oracle is None) == (self.rows_only is None):
+            raise ValueError(f"{self.name}: give exactly one of oracle= or rows_only=")
+        if self.driver and self.oracle is None:
+            raise ValueError(f"{self.name}: a driver-window query needs an oracle")
 
 
 def _sliding_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -82,688 +115,10 @@ def _dq_pk(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_table(spark, sf_dir, "lineitem"), ["l_orderkey", "l_linenumber"]
     )
 
-#: The driver verifies only the FIRST ``DRIVER_WINDOW`` entries of
-#: ``queries()`` against their oracles, so ordering is part of the
-#: contract: every oracle-backed query MUST sit inside the window and the
-#: no-oracle (approximate-by-design) variants go last. Guarded by a
-#: module-import assert below and ``tests/test_catalog.py``.
-DRIVER_WINDOW = 50
 
-QUERIES: dict[str, QueryFn] = {
-    # ---- oracle-backed queries: exactly DRIVER_WINDOW of them, first ----
-    # (top_products / sales_summary — green since r1 — rotated to
-    # tests/test_rotated_oracles.py in the late-r7 third rotation; the
-    # J7/J8 star shapes stay driver-evidenced via tpch_q5/tpch_q9)
-    # late-r7 third rotation IN — first driver oracles for the two
-    # ex-scale-killer plans the r6 verdict flagged (global window ->
-    # 1-row-aggregate broadcast join), the EXISTS/top-supplier shapes,
-    # and two of the longest-swept exact twins:
-    "tpch_q22_idle_balances": tpch_extra.q22_idle_balances,
-    "tpch_q11_important_parts": tpch_extra.q11_important_parts,
-    "tpch_q4_priority_check": tpch_extra.q4_priority_check,
-    "tpch_q15_top_supplier": tpch_extra.q15_top_supplier,
-    # ---- r10-continuation seventh rotation IN: first driver oracles
-    # for the five exact swept newcomers (docs_hash_sample /
-    # dim_supplier_geo / chunk_documents / temperature_mixture /
-    # dedup_clusters — driver-green for 3-6 rounds each — rotate out to
-    # tests/test_rotated_oracles.py, identical hash rigor at two SFs;
-    # dim_customer_geo keeps the J2 geo chain driver-adjacent, the
-    # sampling family stays evidenced by docs_stratified_sample /
-    # docs_sample_exact_n in the window) ----
-    # DSIR importance weighting toward a target domain (exact —
-    # md5-bucketed hashed-n-gram models)
-    "docs_dsir_weights": text_queries.q_docs_dsir_weights,
-    # cross-source n-gram overlap matrix (exact distinct-set algebra)
-    "source_overlap_matrix": text_queries.q_source_overlap,
-    # WET-style HTML→text extraction (exact; twin GENERATED from
-    # textops.HTML_STRIP_STEPS, adversarial-corpus fuzzed)
-    "html_extract": text_queries.q_html_extract,
-    # Zipf rank-frequency diagnostic (exact; regr aggregates shared by
-    # both engines over a bounded top-n window)
-    "corpus_zipf": text_queries.q_corpus_zipf,
-    # Flesch readability feature (exact; literally-shared regex counts,
-    # floor-based cross-engine rounding)
-    "doc_readability": text_queries.q_doc_readability,
-    # events (WF1, windows; incremental_read/watermark_state/
-    # flatten_props — S2-S4, A1/A2, F9 — rotated to
-    # tests/test_rotated_oracles.py in r6, green since r1)
-    # (latest_event_per_user — green since r1 — rotated to
-    # tests/test_rotated_oracles.py in r7; WF1 window evidence continues
-    # via the four window-function queries below)
-    # (remove_repeated_spans — r7 first driver oracle, green r7-r12 —
-    # rotated to tests/test_rotated_oracles.py in the r13 eleventh
-    # rotation; promoted in its place after two swept-green rounds:)
-    # SURT url keys — the CDX-index sort key (exact; oracle recomputes
-    # the SURT strings from documents; r13 first driver oracle)
-    "cdx_urlkey": text_queries.q_cdx_urlkey,
-    # (event_windows — green since r1 — rotated OUT late-r7; the
-    # time-bucket agg shape stays driver-evidenced in
-    # event_windows_sliding below)
-    # SCD2 composite (O5: F1, J5/J6, P9-P11, WF1/WF2, W4/W5)
-    "scd2_part_dimension": scd2_query.scd2_part_dimension,
-    # (text_stats — driver-green r1-r9, the longest-tenured text row —
-    # rotated to tests/test_rotated_oracles.py in the r10 sixth
-    # rotation; text-family window evidence continues via
-    # corpus_vocabulary / clean_boilerplate / normalize_text /
-    # ngram_repetition / pii_scrub)
-    # weighted-epochs mixture materialization (r8; exact — twin
-    # generated from the same weights table; r10 first driver oracle)
-    "docs_epoch_mixture": text_queries.q_docs_epoch_mixture,
-    # (token_counts / lang_id — green since r1 — rotated to
-    # tests/test_rotated_oracles.py in late r6; text-family window
-    # evidence continues via text_stats / corpus_vocabulary /
-    # corpus_report)
-    # (corpus_vocabulary — first driver oracle in r6, green r6-r10 —
-    # rotated to tests/test_rotated_oracles.py in the r11 eighth
-    # rotation; vocabulary-shape evidence continues in-window via
-    # corpus_zipf, which aggregates the same vocabulary() build)
-    # ---- r11 eighth rotation IN: first driver oracle for the exact
-    # r11 newcomer ----
-    # URL canonicalization + URL-exact dedup census (exact; twin
-    # GENERATED from the operator's constants, adversarial-fuzzed)
-    "url_canonicalize": text_queries.q_url_canonicalize,
-    # (heavy_hitters_event_types — late-r6 first driver oracle, green
-    # ~5 rounds — rotated to tests/test_rotated_oracles.py in the r11
-    # eighth rotation; sketch-family window evidence continues via
-    # kll_value_quantiles and audience_overlap)
-    # WARC container ingestion (r11; exact — in-plan spec-shaped mux
-    # with per-record gzip members, REAL record parser, oracle
-    # recomputes URI + payload md5/len straight from documents)
-    "warc_ingest": text_queries.q_warc_ingest,
-    # training-data ops: dedup. The exact-Jaccard form is the
-    # *verification primitive* (quadratic if fed a corpus — hence the
-    # ``_exact`` name); MinHash-LSH is the corpus-scale path.
-    # (dedup_exact — green since r1 — rotated to
-    # tests/test_rotated_oracles.py in r7; the exact-dedup shape also
-    # runs inside clean_corpus below)
-    # (clean_boilerplate — r7 first driver oracle, green r7-r12 —
-    # rotated to tests/test_rotated_oracles.py in the r13 eleventh
-    # rotation; promoted in its place:)
-    # discovery-tier composite: sitemaps + robots → gated frontier
-    # (exact; planted prefixes make the robots verdict SQL-recomputable
-    # — the gate's first driver-channel row; r13 first driver oracle)
-    "crawl_frontier": text_queries.q_crawl_frontier,
-    # (dedup_ngram_jaccard_exact / clean_corpus — green r4-r7 — rotated
-    # to tests/test_rotated_oracles.py in the r8 fifth rotation; the
-    # candidate-verify primitive stays driver-evidenced inside
-    # dedup_minhash_lsh, and the cleaning composite via
-    # clean_boilerplate/normalize_text/pii_scrub)
-    "dedup_minhash_lsh": text_queries.q_minhash_lsh,
-    # (dedup_simhash — driver-green since the early rounds — rotated to
-    # tests/test_rotated_oracles.py in the r11 eighth rotation;
-    # near-dup window evidence continues via dedup_minhash_lsh)
-    # sitemap ingestion (r11; exact — in-plan spec-shaped plant,
-    # extract+entity-decode; oracle recomputes the URLs directly)
-    "sitemap_extract": text_queries.q_sitemap_extract,
-    # (docs_stratified_sample — r8 first driver oracle, green r8-r11 —
-    # rotated to tests/test_rotated_oracles.py in the late-r12 tenth
-    # rotation; deterministic-sampling window evidence continues via
-    # docs_sample_exact_n / docs_capped_per_source / docs_epoch_mixture)
-    # ---- late-r12 tenth rotation IN: first driver oracles for the
-    # exact late-r12 newcomers (all swept green at two SFs the same
-    # round) ----
-    # WET container ingestion — conversion records through the real
-    # parser (oracle recomputes URI + text md5/len from documents)
-    "wet_ingest": text_queries.q_wet_ingest,
-    "docs_sample_exact_n": text_queries.q_docs_sample_exact_n,
-    # (tpch_q1 / tpch_q3 — green since r1 — rotated to
-    # tests/test_rotated_oracles.py in r7; the wide-agg and join+filter
-    # shapes stay driver-evidenced by q5/q7/q9/q10 and the extras)
-    # (ngram_repetition — r7 first driver oracle, green r7-r11 —
-    # rotated to tests/test_rotated_oracles.py in the r12 ninth
-    # rotation; text-quality window evidence continues via
-    # html_extract / corpus_zipf / doc_readability)
-    # ---- r12 ninth rotation IN: first driver oracle for the exact
-    # r12 newcomer ----
-    # WARC revisit records + crawler-digest dedup (exact — oracle
-    # recomputes digest/keeper/capture-count straight from documents)
-    "warc_revisit_digest": text_queries.q_warc_revisit_digest,
-    # (doc_perplexity — r7 first driver oracle, green r7-r11 — rotated
-    # to tests/test_rotated_oracles.py in the r12 ninth rotation;
-    # LM-scoring window evidence continues via
-    # perplexity_quality_buckets, which buckets the same model's
-    # scores)
-    # sitemap <lastmod> extraction for incremental re-crawl (exact —
-    # per-entry loc/lastmod pairing, NULL where absent)
-    "sitemap_lastmod": text_queries.q_sitemap_lastmod,
-    # (tpch_q5 / tpch_q8_market_share — green since r1 — rotated OUT
-    # late-r7; the multi-join star + market-share-ratio shapes stay
-    # driver-evidenced via tpch_q7/q9/q14)
-    # (silver_lineitem_enriched — green since r1 — rotated to
-    # tests/test_rotated_oracles.py in r7; the J1 snowflake shape stays
-    # driver-evidenced inside sales_summary/tpch_q5/tpch_q9)
-    # (corpus_drift — r7 first driver oracle, green r7-r11 — rotated
-    # to tests/test_rotated_oracles.py in the late-r12 tenth rotation;
-    # monitoring window evidence continues via embedding_drift and
-    # event_anomalies)
-    # Sitemap: directive discovery from robots.txt (oracle recomputes
-    # the planted URLs; group-independent, key case-insensitive)
-    "robots_sitemap_discovery": text_queries.q_robots_sitemap_discovery,
-    # (sales_rollup — green since r1 — rotated to
-    # tests/test_rotated_oracles.py late-r7; ROLLUP evidence continues
-    # via revenue_grouping_sets)
-    # (pii_scrub — late-r7 first driver oracle, green r7-r11 — rotated
-    # to tests/test_rotated_oracles.py in the late-r12 tenth rotation;
-    # curation-scrub window evidence continues via normalize_text and
-    # domain_census)
-    # anchor-outlink extraction (oracle recomputes the resolved links
-    # from documents; bounded RFC 3986 resolution)
-    "outlink_extract": text_queries.q_outlink_extract,
-    # (revenue_grouping_sets — green r4-r7 — rotated to
-    # tests/test_rotated_oracles.py in the r8 fifth rotation; its slot
-    # goes to the declarative DQ expectation suite below)
-    "dq_expectations_orders": relational.dq_expectations_orders,
-    # (customers_without_orders / repeat_customers / user_churn_set_ops /
-    # daily_event_pivot — green since r2 — rotated to
-    # tests/test_rotated_oracles.py in late r6; anti/semi-join window
-    # evidence continues at higher difficulty via the promoted
-    # Q18/Q20/Q21 shapes below)
-    # (event_value_stats / xml_roundtrip — green since r1 — rotated to
-    # tests/test_rotated_oracles.py in r7; exact-percentile and
-    # semi-structured evidence continue there at two scale factors)
-    # embedding-space drift (r7 first driver oracle; 6dp-rounded folds)
-    "embedding_drift": text_queries.q_embedding_drift,
-    # trailing-window z-score anomalies (r7 first driver oracle)
-    "event_anomalies": text_queries.q_event_anomalies,
-    # (corpus_report — green r4-r7 — rotated to
-    # tests/test_rotated_oracles.py in the r8 fifth rotation; its
-    # component stats stay driver-evidenced via text_stats /
-    # corpus_vocabulary)
-    # (tpch_q7_nation_volume / tpch_q10_returned_items /
-    # tpch_q14_promo_revenue_ratio — driver-green r6-r9 — rotated to
-    # tests/test_rotated_oracles.py in the r10 sixth rotation; the
-    # multi-join volume, returned-items and CASE-ratio shapes stay
-    # driver-evidenced via tpch_q9/q21, q18/q20 and q12/q19 in-window)
-    # r10 sixth rotation IN: the five exact queries that were swept
-    # (check_oracles + pytest) but never held a driver CORRECTNESS row
-    # because the window was full — benchmark-hygiene decontamination
-    # (exact 13-gram + fuzzy MinHash cross-corpus), CCNet perplexity
-    # terciles, weighted-epochs mixture, and the CDC merge result:
-    "eval_decontamination": text_queries.q_eval_decontamination,
-    "eval_decontamination_fuzzy": text_queries.q_eval_decontamination_fuzzy,
-    "perplexity_quality_buckets": text_queries.q_perplexity_quality_buckets,
-    # late-r6 second promotion: the hardest extra shapes gain
-    # first-time driver oracles (correlated-min lookup, 5-join profit
-    # rollup, HAVING-subquery, nested-agg semi-join chain, and the Q21
-    # double-correlation planned as per-order count predicates)
-    "tpch_q2_min_balance_supplier": tpch_extra.q2_min_balance_supplier,
-    "tpch_q9_product_profit": tpch_extra.q9_product_profit,
-    "tpch_q18_large_orders": tpch_extra.q18_large_orders,
-    "tpch_q20_excess_shippers": tpch_extra.q20_excess_shippers,
-    "tpch_q21_waiting_suppliers": tpch_extra.q21_waiting_suppliers,
-    # r8 fifth rotation IN: the last three swept TPC-H-extra shapes
-    # gain first-time DRIVER oracles (disjunctive OR-pushdown, CASE
-    # bands, NOT-IN distinct counts — hashes judge-verified green)
-    "tpch_q19_disjunctive_revenue": tpch_extra.q19_disjunctive_revenue,
-    "tpch_q12_shipping_delay_bands": tpch_extra.q12_shipping_delay_bands,
-    "tpch_q16_supplier_count_by_part": tpch_extra.q16_supplier_count_by_part,
-    # (ann_cosine_topk — driver-green r2-r9, the exact brute-force
-    # similarity baseline — rotated to tests/test_rotated_oracles.py in
-    # the r10 sixth rotation; exact array-math window evidence
-    # continues via embedding_drift, and every approximate ANN tier
-    # keeps its recall-floor differential in pytest)
-    # end-to-end CDC merge through TableManager.merge_upsert (r9; exact
-    # — the merge result is plain relational algebra; r10 first driver
-    # oracle for the WRITE path's result)
-    "cdc_upsert": facts.q_cdc_upsert,
-    # (customer_order_distribution / event_sessions /
-    # nation_top_customers — green since r1 — rotated to
-    # tests/test_rotated_oracles.py late-r7; the Q13 histogram,
-    # session-window and rank shapes keep the identical hash diff
-    # there, and window-function evidence continues in-window via
-    # customer_running_revenue / priority_revenue_share / moving stats)
-    # unicode normalization with planted messy suffixes (late-r7 first
-    # driver oracle; twin shares the translate table + regex classes)
-    "normalize_text": text_queries.q_normalize_text,
-    # per-domain URL census with planted links (late-r7 first driver
-    # oracle; blocklist-policy input table)
-    "domain_census": text_queries.q_domain_census,
-    # (event_windows_sliding — green r4-r7 — rotated to
-    # tests/test_rotated_oracles.py in the r8 fifth rotation; the
-    # time-bucket agg shape stays tested there at two SFs)
-    # balanced-source cap: exact-N per stratum (late-r7 first driver
-    # oracle; partial WindowGroupLimit plan shape pinned in tests)
-    "docs_capped_per_source": text_queries.q_docs_capped_per_source,
-    # window-function breadth (frames, lag, ratio-to-total)
-    "customer_running_revenue": windowed.customer_running_revenue,
-    # (priority_revenue_share — green r4-r7 — rotated to
-    # tests/test_rotated_oracles.py in the r8 fifth rotation;
-    # ratio-to-total window evidence continues there and via
-    # customer_running_revenue / user_value_moving_stats in-window)
-    # trailing-frame moving stats (late-r6 first driver oracle)
-    "user_value_moving_stats": tpch_extra.user_value_moving_stats,
-    # time-series gap fill
-    "user_hourly_gapfill": events.user_hourly_gapfill,
-    # advanced join shapes (as-of, banded range, EXISTS, correlated agg)
-    "asof_click_attribution": advanced_joins.asof_click_attribution,
-    "error_burst_context": advanced_joins.error_burst_context,
-    # (late_shipment_priority — green since r1 — rotated OUT late-r7;
-    # the EXISTS shape gets its first driver oracle via
-    # tpch_q4_priority_check above)
-    "small_quantity_part_revenue": advanced_joins.small_quantity_part_revenue,
-    # product-analytics + SCD2 point-in-time (first driver oracles in
-    # r6; DuckDB-diffed in pytest since r5)
-    "funnel_conversion": relational.funnel_conversion,
-    "retention_cohorts": relational.retention_cohorts,
-    # (scd2_part_price_asof — r6 first driver oracle, green r6-r11 —
-    # rotated to tests/test_rotated_oracles.py in the late-r12 tenth
-    # rotation; SCD2/as-of window evidence continues via
-    # scd2_part_dimension and asof_click_attribution)
-    # host link graph census (oracle recomputes the grouped counts
-    # from documents; the PageRank feedstock)
-    "host_link_graph": text_queries.q_host_link_graph,
-    # ---- past the window: r6-rotated long-stable queries (green since
-    # r1; same hash-diff rigor now in tests/test_rotated_oracles.py via
-    # ROTATED_ORACLES below) ----
-    "dim_date": lambda spark, sf_dir: dims.build_dim_date(spark),
-    "incremental_read": events.incremental_read,
-    "watermark_state": events.watermark_state,
-    "flatten_props": events.flatten_props,
-    "doc_fingerprint": text_queries.q_fingerprint,
-    "dq_null_profile": _dq_null_profile,
-    "dq_orderkey_integrity": _dq_fk,
-    "dq_lineitem_pk": _dq_pk,
-    # late-r6 second rotation (green since r1/r2): slots freed for the
-    # hard TPC-H-extra shapes, moving stats and heavy hitters above
-    "token_counts": text_queries.q_token_counts,
-    "lang_id": text_queries.q_lang_id,
-    "customers_without_orders": relational.customers_without_orders,
-    "repeat_customers": relational.repeat_customers,
-    "user_churn_set_ops": semistructured.user_churn_set_ops,
-    "daily_event_pivot": semistructured.daily_event_pivot,
-    "tpch_q6_forecast_revenue": tpch_extra.q6_forecast_revenue,
-    # ---- no-oracle (approximate-by-design) variants: past the window ----
-    "top_products_approx": marts.top_products_approx,
-    "event_value_stats_approx": relational.event_value_stats_approx,
-    # default embedding near-dup name routes to the SRP-LSH scale path
-    # (the exact all-pairs form lives in tests only — see
-    # similarity.embedding_near_dup_pairs, the oracle/recall denominator)
-    "dedup_embedding_cosine": text_queries.q_embedding_near_dup_lsh,
-    "ann_cosine_topk_np": text_queries.q_ann_cosine_np,
-    "ann_cosine_topk_lsh": text_queries.q_ann_cosine_lsh,
-    "ann_cosine_topk_ivf": text_queries.q_ann_cosine_ivf,
-    # deployed-IVF shape: persisted cell-clustered index, search-only
-    # steady state (bench medians show the amortized cost; results are
-    # identical to the one-shot form — build is deterministic)
-    "ann_cosine_topk_ivf_amortized": text_queries.q_ann_cosine_ivf_amortized,
-    # (tpch_q19/q12/q16 — the last swept TPC-H-extra shapes — promoted
-    # to first-time DRIVER oracles in the r8 fifth rotation above;
-    # every TPC-H shape in the catalog has now held a driver row)
-    # ---- r8 fifth rotation out of the window (green r4-r7; the
-    # identical hash-diff rigor continues in
-    # tests/test_rotated_oracles.py at sf0.001 AND sf0.01) ----
-    "dedup_ngram_jaccard_exact": text_queries.q_ngram_jaccard,
-    "clean_corpus": text_queries.q_clean_corpus,
-    "revenue_grouping_sets": relational.revenue_grouping_sets,
-    "corpus_report": text_queries.q_corpus_report,
-    "event_windows_sliding": _sliding_windows,
-    "priority_revenue_share": windowed.priority_revenue_share,
-    # ---- r7 third rotation out of the window (green since r1/r2; the
-    # identical hash-diff rigor continues in
-    # tests/test_rotated_oracles.py at sf0.001 AND sf0.01) ----
-    "dim_customer_geo": dims.build_dim_customer_geo,
-    "fact_sales": facts.build_fact_sales,
-    # dedup-latest default: the window form — measured FASTER than the
-    # max_by scale path at bench scale (sf0.1 A/B in SCALE.md); max_by
-    # stays exported (tested row-equal) for extreme per-key skew.
-    "latest_event_per_user": events.latest_event_per_user,
-    "dedup_exact": text_queries.q_dedup_exact,
-    "tpch_q1": tpch.tpch_q1,
-    "tpch_q3": tpch.tpch_q3,
-    "silver_lineitem_enriched": tpch.silver_lineitem_enriched,
-    "event_value_stats": relational.event_value_stats,
-    "xml_roundtrip": semistructured.xml_roundtrip,
-    # ---- late-r7 third rotation out (green since r1; slots freed for
-    # tpch_q22/q11/q4/q15, docs_hash_sample, dim_supplier_geo above) ----
-    "top_products": marts.top_products,
-    "sales_summary": marts.sales_summary,
-    "event_windows": events.event_windows,
-    "tpch_q5": tpch.tpch_q5,
-    "tpch_q8_market_share": tpch.tpch_q8_market_share,
-    "late_shipment_priority": advanced_joins.late_shipment_priority,
-    # daily-ingest dedup vs historical state (signature-estimated
-    # near-dup verify ⇒ approximate by design)
-    "incremental_dedup": text_queries.q_incremental_dedup,
-    # full corpus→training-batches chain (exact; end-to-end invariant
-    # tests in pytest — window full)
-    "packed_corpus": text_queries.q_packed_corpus,
-    # learned quality gate (pyspark.ml logistic over engine features;
-    # model-based scores — not SQL-oracle territory)
-    "quality_classifier": text_queries.q_quality_classifier,
-    # deterministic seeded epoch shuffle (exact permutation; xxhash64
-    # has no DuckDB twin — permutation/stability tests in pytest)
-    "shuffle_corpus": text_queries.q_shuffle_corpus,
-    # PQ-compressed ANN with exact re-rank (approximate by design)
-    "ann_cosine_topk_pq": text_queries.q_ann_cosine_pq,
-    # combined IVF-PQ (probe pruning × code compression × re-rank)
-    "ann_cosine_topk_ivf_pq": text_queries.q_ann_cosine_ivf_pq,
-    # deployed-PQ steady state (persisted codes index, ADC+re-rank only)
-    "ann_cosine_topk_pq_amortized": text_queries.q_ann_cosine_pq_amortized,
-    # (dim_supplier_geo and docs_hash_sample promoted to first-time
-    # DRIVER oracles in the late-r7 third rotation;
-    # docs_stratified_sample / docs_sample_exact_n promoted in the r8
-    # fifth rotation — the whole sampling family is now driver-verified)
-    # SemDeDup cluster-bounded semantic dedup (deterministic, not
-    # SQL-expressible - planted-dup differentials in tests)
-    "semdedup_prune": text_queries.q_semdedup,
-    # end-to-end retrieval composite: chunk -> hashing-trick vectorize ->
-    # IVF index -> free-text top-k (IVF probing: approximate by design)
-    "rag_retrieval": text_queries.q_rag_retrieval,
-    # corpus-trained BPE tokenization (exact; worked-example + replay
-    # differentials in tests/test_bpe.py — no SQL twin for the merges)
-    "bpe_tokenize": text_queries.q_bpe_tokenize,
-    # deployed-retrieval steady state (persisted chunk index, search only)
-    "rag_retrieval_amortized": text_queries.q_rag_retrieval_amortized,
-    # multimodal asset dedup composite (exact + perceptual, fake-hash
-    # plumbing over text-backed assets; real codecs proven in pytest)
-    "clean_assets": text_queries.q_clean_assets,
-    # hard-negative mining over the persisted chunk index (contrastive
-    # training data; IVF probing ⇒ approximate)
-    "hard_negatives": text_queries.q_hard_negatives,
-    # two-leg hybrid retrieval: BM25 inverted index + IVF vector leg,
-    # reciprocal-rank fused (IVF probing ⇒ approximate)
-    "hybrid_retrieval": text_queries.q_hybrid_retrieval,
-    # (heavy_hitters_event_types was promoted into the window late-r6)
-    # corpus-trained unigram-LM tokenizer (exact; EM loop has no SQL
-    # twin — differentials in tests/test_unigram.py)
-    "unigram_tokenize": text_queries.q_unigram_tokenize,
-    # ---- late-r7 second rotation out of the window (green since r1;
-    # identical hash rigor continues in tests/test_rotated_oracles.py;
-    # slots freed for pii_scrub / normalize_text / domain_census /
-    # docs_capped_per_source above) ----
-    "sales_rollup": relational.sales_rollup,
-    "event_sessions": _session_windows,
-    "customer_order_distribution": relational.customer_order_distribution,
-    "nation_top_customers": windowed.nation_top_customers,
-    # mergeable KLL quantile sketches (rank-bounded approximate by
-    # design; error/merge/roundtrip bounds in tests/test_sketches.py)
-    "kll_value_quantiles": text_queries.q_kll_quantiles,
-    # (dq_expectations_orders promoted to a first-time DRIVER oracle in
-    # the r8 fifth rotation)
-    # KMV/theta distinct-set sketches: pairwise audience overlap
-    # (union/intersection/jaccard estimates HLL state cannot answer;
-    # approximate by design — exact-differential bounds in
-    # tests/test_theta.py)
-    "audience_overlap": relational.audience_overlap,
-    # SQ8 scalar-quantized ANN (r7 third compression tier; approximate
-    # by design — recall/layout/code-range tests in pytest)
-    "ann_cosine_topk_sq8": text_queries.q_ann_cosine_sq8,
-    # r8 combined tier: probe-pruned cells × SQ8-compressed scan
-    "ann_cosine_topk_ivf_sq8": text_queries.q_ann_cosine_ivf_sq8,
-    "ann_cosine_topk_ivf_sq8_amortized": text_queries.q_ann_cosine_ivf_sq8_amortized,
-    # deployed-SQ8 steady state (persisted params+codes index)
-    "ann_cosine_topk_sq8_amortized": text_queries.q_ann_cosine_sq8_amortized,
-    # real MP4 frame extraction (r7: pure-stdlib ISO-BMFF sample-table
-    # parse + per-frame dHash through the real JPEG decode path)
-    "video_frame_harvest": text_queries.q_video_frame_harvest,
-    # deployed-shape twin: persisted synthetic corpus, measures the
-    # harvest (parse→decode→dHash→agg) without fixture generation
-    "video_frame_harvest_amortized": text_queries.q_video_frame_harvest_amortized,
-    # bytes-level video near-dup from keyframe payload hashes (r8):
-    # codec-agnostic — covers H.264-class tracks without pixel decode
-    "video_keyframe_dedup": text_queries.q_video_keyframe_dedup,
-    # (eval_decontamination / eval_decontamination_fuzzy /
-    # perplexity_quality_buckets / docs_epoch_mixture / cdc_upsert —
-    # the five exact-but-never-driver-verified queries — promoted to
-    # first-time DRIVER oracles in the r10 sixth rotation above; every
-    # oracle-checkable query in the catalog has again held a driver row)
-    # ---- r10 sixth rotation out of the window (driver-green r1-r9 /
-    # r6-r9; the identical hash-diff rigor continues in
-    # tests/test_rotated_oracles.py at sf0.001 AND sf0.01) ----
-    "text_stats": text_queries.q_text_stats,
-    "ann_cosine_topk": text_queries.q_ann_cosine,
-    "tpch_q7_nation_volume": tpch_extra.q7_nation_volume,
-    "tpch_q10_returned_items": tpch_extra.q10_returned_items,
-    "tpch_q14_promo_revenue_ratio": tpch_extra.q14_promo_revenue_ratio,
-    # IVF+SQ8 daily-ingest steady state: replay-idempotent batch append
-    # + search over base ∪ appends (r9; approximate ANN ⇒ rows-only)
-    "ivf_sq8_index_ingest": text_queries.q_ivf_sq8_index_ingest,
-    # chunk-index daily ingest: per-batch chunk+encode+append instead of
-    # the full rebuild (r10 — closes the r9 20× ledger's >5× row;
-    # approximate IVF probing ⇒ rows-only)
-    "rag_index_ingest": text_queries.q_rag_index_ingest,
-    # bloom-gated incremental dedup steady state (r10; output ≡
-    # incremental_dedup — the persisted bloom sketch only changes the
-    # vs-history plan: definite-new rows skip the state table, the tiny
-    # maybe-dup list pushes into the state scan as In(); equivalence +
-    # planted-FP differentials in tests/test_bloom_sketch.py)
-    "incremental_dedup_bloom": text_queries.q_incremental_dedup_bloom,
-    # full raw-crawl pipeline: extraction → scrub → corpus-wide
-    # boilerplate strip → gate/dedup → split (r10; rows-only — LSH
-    # near-dup stage, same reason as clean_corpus)
-    "web_corpus_pipeline": text_queries.q_web_corpus_pipeline,
-    # URL canonicalization + URL-exact dedup census (r11): the crawl
-    # front-door primitive that runs BEFORE fetch/extract — exact,
-    # generated DuckDB twin in PYTEST_ORACLES (past the full window;
-    # promotes at the next rotation)
-    # ---- r11 eighth rotation OUT (driver-green r6-r10; identical
-    # hash-diff rigor continues in tests/test_rotated_oracles.py at two
-    # SFs; slot freed for url_canonicalize above) ----
-    "corpus_vocabulary": text_queries.q_corpus_vocabulary,
-    "heavy_hitters_event_types": text_queries.q_heavy_hitters,
-    "dedup_simhash": text_queries.q_simhash,
-    # ---- r10-continuation seventh rotation OUT (driver-green for 3-6
-    # rounds each; the identical hash-diff rigor continues in
-    # tests/test_rotated_oracles.py at sf0.001 AND sf0.01; slots freed
-    # for docs_dsir_weights / source_overlap_matrix / html_extract /
-    # corpus_zipf / doc_readability above) ----
-    "docs_hash_sample": text_queries.q_docs_hash_sample,
-    "dim_supplier_geo": dims.build_dim_supplier_geo,
-    "chunk_documents": text_queries.q_chunk_documents,
-    "temperature_mixture": text_queries.q_temperature_mixture,
-    "dedup_clusters": text_queries.q_dedup_clusters,
-    # ---- r12 ninth rotation OUT (r7 first driver oracles, green
-    # r7-r11; the identical hash-diff rigor continues in
-    # tests/test_rotated_oracles.py at two SFs; slots freed for
-    # warc_revisit_digest / sitemap_lastmod above) ----
-    "ngram_repetition": text_queries.q_ngram_repetition,
-    "doc_perplexity": text_queries.q_doc_perplexity,
-    # host PageRank over the planted graph (rows-only — iterative
-    # float fixpoint; math differential in tests/test_graph.py)
-    "host_pagerank": text_queries.q_host_pagerank,
-    # host-authority enrichment: the PageRank prior broadcast-joined
-    # onto docs by canonical host (exact r13 newcomer past the window;
-    # swept via PYTEST_ORACLES until the next rotation)
-    "host_authority": text_queries.q_host_authority,
-    # politeness planning: robots Crawl-delay → host shards + fetch
-    # schedule (exact r13 newcomer past the window; md5 shards so the
-    # twin recomputes the identical bucket)
-    "crawl_politeness": text_queries.q_crawl_politeness,
-    # per-host crawl health report: the fetch-tier alert surface as
-    # ONE uniform-key agg (exact r13 newcomer past the window)
-    "crawl_health": text_queries.q_crawl_health,
-    # amortized random-access capture fetch over a persisted archive +
-    # CDX index (exact r13 newcomer past the window; byte-range reads,
-    # never a scan)
-    "warc_random_access": text_queries.q_warc_random_access,
-    # archive-aware frontier pruning: frontier minus the CDX index
-    # unless modified since capture (exact r13 newcomer past the
-    # window)
-    "frontier_refresh": text_queries.q_frontier_refresh,
-    # ---- r13 eleventh rotation OUT (both r7 first driver oracles,
-    # green r7-r12; identical hash-diff rigor continues in
-    # tests/test_rotated_oracles.py at two SFs; slots freed for
-    # cdx_urlkey / crawl_frontier above) ----
-    # ExactSubstr repeated-span removal (literal-run-key SQL twin +
-    # Python-reference differential)
-    "remove_repeated_spans": text_queries.q_remove_repeated_spans,
-    # C4-style boilerplate-line removal
-    "clean_boilerplate": text_queries.q_clean_boilerplate,
-    # ---- late-r12 tenth rotation OUT (first driver oracles r6-r8,
-    # green through r11; the identical hash-diff rigor continues in
-    # tests/test_rotated_oracles.py at two SFs; slots freed for
-    # wet_ingest / robots_sitemap_discovery / outlink_extract /
-    # host_link_graph above) ----
-    "docs_stratified_sample": text_queries.q_docs_stratified_sample,
-    "corpus_drift": text_queries.q_corpus_drift,
-    "pii_scrub": text_queries.q_pii_scrub,
-    "scd2_part_price_asof": scd2_query.scd2_part_price_asof,
-}
-
-
-#: Queries intentionally WITHOUT a SQL oracle in THIS catalog (rows-only
-#: check when the driver reaches them). Two legitimate reasons, noted
-#: per entry: approximate/float-order-dependent by design, or exact but
-#: past the full 50-slot window with the DuckDB differential check
-#: living in pytest instead. Every other query MUST have an oracle.
-NON_ORACLE_QUERIES: frozenset[str] = frozenset(
-    {
-        "top_products_approx",  # HLL distinct count
-        "ann_cosine_topk_np",  # GEMM float-sum order ≠ sequential fold
-        "ann_cosine_topk_lsh",  # single-probe LSH: recall < 1 by design
-        "ann_cosine_topk_ivf",  # n_probe-cell IVF: recall < 1 by design
-        "ann_cosine_topk_ivf_amortized",  # same IVF result via persisted index
-        "event_value_stats_approx",  # t-digest percentiles
-        "dedup_embedding_cosine",  # SRP-LSH candidates: recall < 1 by design
-        # (tpch_q19/q12/q16 promoted to driver oracles in the r8 fifth
-        # rotation — no TPC-H shape is rows-only any more)
-        # exact, r8 fifth rotation out of the window (green r4-r7):
-        # same hash-diff rigor in tests/test_rotated_oracles.py
-        "dedup_ngram_jaccard_exact",
-        "clean_corpus",
-        "revenue_grouping_sets",
-        "corpus_report",
-        "event_windows_sliding",
-        "priority_revenue_share",
-        "incremental_dedup",  # signature-estimated verify: approx by design
-        "packed_corpus",  # exact; end-to-end invariants in pytest
-        "quality_classifier",  # learned scores: no SQL twin
-        "shuffle_corpus",  # exact; xxhash64 has no DuckDB twin
-        "ann_cosine_topk_pq",  # PQ quantization: recall < 1 by design
-        "ann_cosine_topk_ivf_pq",  # probe-pruned IVF-PQ: recall < 1
-        "ann_cosine_topk_pq_amortized",  # ≡ one-shot PQ via saved index
-        # exact, r6-rotated past the window (green since r1): same
-        # hash-diff rigor in tests/test_rotated_oracles.py
-        "dim_date",
-        "incremental_read",
-        "watermark_state",
-        "flatten_props",
-        "doc_fingerprint",
-        "dq_null_profile",
-        "dq_orderkey_integrity",
-        "dq_lineitem_pk",
-        # (docs_stratified_sample / docs_sample_exact_n promoted to
-        # driver oracles in the r8 fifth rotation)
-        # exact, late-r7 third rotation out (green since r1): same
-        # hash-diff rigor in tests/test_rotated_oracles.py
-        "top_products",
-        "sales_summary",
-        "event_windows",
-        "tpch_q5",
-        "tpch_q8_market_share",
-        "late_shipment_priority",
-        "semdedup_prune",  # k-means clustering: no SQL twin
-        "rag_retrieval",  # IVF probe pruning: recall < 1 by design
-        "bpe_tokenize",  # exact; merge loop has no SQL twin
-        "rag_retrieval_amortized",  # ≡ one-shot retrieval via saved index
-        "clean_assets",  # binary assets have no oracle tables
-        "hard_negatives",  # IVF probing: approximate by design
-        "hybrid_retrieval",  # IVF leg: approximate by design
-        # late-r6 second rotation out of the window (green since r1/r2;
-        # same hash-diff rigor in tests/test_rotated_oracles.py)
-        "token_counts",
-        "lang_id",
-        "customers_without_orders",
-        "repeat_customers",
-        "user_churn_set_ops",
-        "daily_event_pivot",
-        "tpch_q6_forecast_revenue",
-        "kll_value_quantiles",  # KLL sketch: rank-bounded approx by design
-        # (dq_expectations_orders promoted to a driver oracle in r8)
-        "audience_overlap",  # KMV/theta set estimates: approx by design
-        "ann_cosine_topk_sq8",  # SQ8 shortlist: approx by design
-        "ann_cosine_topk_sq8_amortized",  # ≡ one-shot SQ8 via saved index
-        "ann_cosine_topk_ivf_sq8",  # probe-pruned SQ8: approx by design
-        "ann_cosine_topk_ivf_sq8_amortized",  # ≡ one-shot via saved index
-        "unigram_tokenize",  # exact; EM loop has no SQL twin
-        "video_frame_harvest",  # binary video assets have no oracle tables
-        "video_frame_harvest_amortized",  # ≡ one-shot via persisted corpus
-        "video_keyframe_dedup",  # binary video assets have no oracle tables
-        # (eval_decontamination / eval_decontamination_fuzzy /
-        # perplexity_quality_buckets / docs_epoch_mixture / cdc_upsert
-        # promoted to first-time driver oracles in the r10 sixth
-        # rotation)
-        # exact, r10 sixth rotation out of the window (driver-green
-        # r1-r9 / r2-r9 / r6-r9): same hash-diff rigor continues in
-        # tests/test_rotated_oracles.py at two SFs
-        "text_stats",
-        "ann_cosine_topk",
-        "tpch_q7_nation_volume",
-        "tpch_q10_returned_items",
-        "tpch_q14_promo_revenue_ratio",
-        "ivf_sq8_index_ingest",  # probe-pruned ANN: approx by design
-        "rag_index_ingest",  # probe-pruned ANN: approx by design
-        "incremental_dedup_bloom",  # ≡ incremental_dedup: approx by design
-        "web_corpus_pipeline",  # LSH near-dup stage: approx by design
-        # exact, r11 eighth rotation out of the window (driver-green
-        # ~5 rounds each): same hash-diff rigor in
-        # tests/test_rotated_oracles.py
-        "corpus_vocabulary",
-        "heavy_hitters_event_types",
-        "dedup_simhash",
-        # exact, r10-continuation seventh rotation out of the window
-        # (driver-green 3-6 rounds each): same hash-diff rigor in
-        # tests/test_rotated_oracles.py at two SFs
-        "docs_hash_sample",
-        "dim_supplier_geo",
-        "chunk_documents",
-        "temperature_mixture",
-        "dedup_clusters",
-        # late-r7 second rotation out of the window (green since r1;
-        # same hash-diff rigor in tests/test_rotated_oracles.py)
-        "sales_rollup",
-        "event_sessions",
-        "customer_order_distribution",
-        "nation_top_customers",
-        # r7 third rotation out of the window (green since r1/r2; same
-        # hash-diff rigor in tests/test_rotated_oracles.py)
-        "dim_customer_geo",
-        "fact_sales",
-        "latest_event_per_user",
-        "dedup_exact",
-        "tpch_q1",
-        "tpch_q3",
-        "silver_lineitem_enriched",
-        "event_value_stats",
-        "xml_roundtrip",
-        # exact, r12 ninth rotation out of the window (r7 first driver
-        # oracles, green r7-r11): same hash-diff rigor in
-        # tests/test_rotated_oracles.py at two SFs
-        "ngram_repetition",
-        "doc_perplexity",
-        "host_pagerank",  # iterative float fixpoint: no SQL twin
-        # (cdx_urlkey / crawl_frontier were promoted to first-time
-        # DRIVER oracles in the r13 eleventh rotation)
-        # exact r13 newcomers past the window (queued for the next
-        # rotation; swept via PYTEST_ORACLES)
-        "host_authority",
-        "crawl_politeness",
-        "crawl_health",
-        "warc_random_access",
-        "frontier_refresh",
-        # exact, r13 eleventh rotation out of the window (r7 first
-        # driver oracles, green r7-r12): same hash-diff rigor in
-        # tests/test_rotated_oracles.py at two SFs
-        "remove_repeated_spans",
-        "clean_boilerplate",
-        # exact, late-r12 tenth rotation out of the window (first
-        # driver oracles r6-r8, green through r11): same hash-diff
-        # rigor in tests/test_rotated_oracles.py at two SFs
-        "docs_stratified_sample",
-        "corpus_drift",
-        "pii_scrub",
-        "scd2_part_price_asof",
-    }
-)
-
-
-def get_queries() -> dict[str, QueryFn]:
-    return dict(QUERIES)
-
-
-#: dim_supplier_geo's oracle (shared source of truth with
-#: tests/test_sampling.py since its r5 rotation; promoted back into the
-#: driver window in the late-r7 third rotation).
+# DuckDB twins kept in the catalog rather than beside their plan
+# builders; their exact bytes, indentation included, are pinned by
+# tests/catalog_snapshot.json.
 ORACLE_DIM_SUPPLIER_GEO = """
     SELECT s.s_suppkey AS supplier_key,
            s.s_name AS supplier_name,
@@ -775,109 +130,22 @@ ORACLE_DIM_SUPPLIER_GEO = """
     JOIN region r ON n.n_regionkey = r.r_regionkey
 """
 
-ORACLES: dict[str, str] = {
-    # late-r7 third rotation: top_products / sales_summary inline SQL
-    # moved verbatim to ROTATED_ORACLES below; promoted in their place
-    # (twins already sweep-green at three SFs in tests):
-    "tpch_q22_idle_balances": tpch_extra.EXTRA_ORACLES[
-        "tpch_q22_idle_balances"
-    ],
-    "tpch_q11_important_parts": tpch_extra.EXTRA_ORACLES[
-        "tpch_q11_important_parts"
-    ],
-    "tpch_q4_priority_check": tpch_extra.EXTRA_ORACLES[
-        "tpch_q4_priority_check"
-    ],
-    "tpch_q15_top_supplier": tpch_extra.EXTRA_ORACLES[
-        "tpch_q15_top_supplier"
-    ],
-    # r10-continuation seventh rotation IN (the five veterans' SQL
-    # moved verbatim to ROTATED_ORACLES below)
-    "docs_dsir_weights": text_queries.ORACLE_DOCS_DSIR_WEIGHTS,
-    "source_overlap_matrix": text_queries.ORACLE_SOURCE_OVERLAP,
-    "html_extract": text_queries.ORACLE_HTML_EXTRACT,
-    "corpus_zipf": text_queries.ORACLE_CORPUS_ZIPF,
-    "doc_readability": text_queries.ORACLE_DOC_READABILITY,
-    # r7 rotation: the inline SQL of dim_customer_geo / fact_sales /
-    # latest_event_per_user moved verbatim to ROTATED_ORACLES below
-    # r13 eleventh rotation: remove_repeated_spans / clean_boilerplate
-    # constants moved to ROTATED_ORACLES; promoted in their place
-    # (twins sweep-green in check_oracles + pytest since late r12):
-    "cdx_urlkey": text_queries.ORACLE_CDX_URLKEY,
-    "crawl_frontier": text_queries.ORACLE_CRAWL_FRONTIER,
-    # late-r7 third rotation: event_windows inline SQL moved verbatim
-    # to ROTATED_ORACLES below
-    "scd2_part_dimension": scd2_query.ORACLE,
-    # r10 sixth rotation: text_stats / ann_cosine_topk inline constants
-    # moved to ROTATED_ORACLES below; promoted in their place (twins
-    # already sweep-green in check_oracles + pytest since r8/r9):
-    "eval_decontamination": text_queries.ORACLE_EVAL_DECONTAMINATION,
-    "eval_decontamination_fuzzy": text_queries.ORACLE_EVAL_DECONTAMINATION_FUZZY,
-    "perplexity_quality_buckets": text_queries.ORACLE_PERPLEXITY_QUALITY_BUCKETS,
-    "docs_epoch_mixture": text_queries.ORACLE_DOCS_EPOCH_MIXTURE,
-    "cdc_upsert": facts.ORACLE_CDC_UPSERT,
-    # r8 fifth rotation: corpus_report / dedup_ngram_jaccard_exact /
-    # clean_corpus constants and the event_windows_sliding /
-    # revenue_grouping_sets / priority_revenue_share inline SQL moved
-    # verbatim to ROTATED_ORACLES below
-    # corpus_vocabulary: rotated out in r11 — constant in ROTATED_ORACLES
-    "url_canonicalize": text_queries.ORACLE_URL_CANONICALIZE,
-    # heavy_hitters_event_types: rotated out in r11 — constant in
-    # ROTATED_ORACLES
-    "warc_ingest": text_queries.ORACLE_WARC_INGEST,
-    # clean_boilerplate: rotated out in r13 — constant in ROTATED_ORACLES
-    "dedup_minhash_lsh": text_queries.ORACLE_MINHASH_LSH,
-    # ann_cosine_topk: rotated out in r10 — constant in ROTATED_ORACLES
-    # ann_cosine_topk_np: GEMM float-sum order differs ⇒ rows-only check
-    # ann_cosine_topk_lsh: approximate by design ⇒ rows-only check
-    # dedup_simhash: rotated out in r11 — constant in ROTATED_ORACLES
-    "sitemap_extract": text_queries.ORACLE_SITEMAP_EXTRACT,
-    # dedup_embedding_cosine: SRP-LSH scale path ⇒ rows-only check; the
-    # exact all-pairs oracle (ORACLE_EMBEDDING_NEAR_DUP) is exercised in
-    # tests/test_training_ops.py against the exact form directly.
-    # r8 fifth rotation IN (constants shared with the pytest sweeps
-    # that hash-verified them since r5/r7); docs_stratified_sample
-    # rotated out in the late-r12 tenth rotation — constant in
-    # ROTATED_ORACLES
-    "wet_ingest": text_queries.ORACLE_WET_INGEST,
-    "docs_sample_exact_n": text_queries.ORACLE_DOCS_SAMPLE_EXACT_N,
-    "dq_expectations_orders": relational.ORACLE_DQ_EXPECTATIONS_ORDERS,
-    "tpch_q19_disjunctive_revenue": tpch_extra.EXTRA_ORACLES[
-        "tpch_q19_disjunctive"
-    ],
-    "tpch_q12_shipping_delay_bands": tpch_extra.EXTRA_ORACLES[
-        "tpch_q12_shipping_delay_bands"
-    ],
-    "tpch_q16_supplier_count_by_part": tpch_extra.EXTRA_ORACLES[
-        "tpch_q16_supplier_count_by_part"
-    ],
-    # r7 rotation: tpch_q1 / tpch_q3 inline SQL moved verbatim to
-    # ROTATED_ORACLES below
-    # r12 ninth rotation: ngram_repetition / doc_perplexity constants
-    # moved to ROTATED_ORACLES below; promoted in their place
-    "warc_revisit_digest": text_queries.ORACLE_WARC_REVISIT_DIGEST,
-    "sitemap_lastmod": text_queries.ORACLE_SITEMAP_LASTMOD,
-    # late-r7 third rotation: tpch_q5 inline SQL moved verbatim to
-    # ROTATED_ORACLES below
-    # r7 rotation: silver_lineitem_enriched inline SQL moved verbatim
-    # to ROTATED_ORACLES below
-    # corpus_drift: rotated out late-r12 — constant in ROTATED_ORACLES
-    "robots_sitemap_discovery": (
-        text_queries.ORACLE_ROBOTS_SITEMAP_DISCOVERY
-    ),
-    # late-r7 rotation: sales_rollup / event_sessions /
-    # customer_order_distribution / nation_top_customers inline SQL
-    # moved verbatim to ROTATED_ORACLES below
-    # pii_scrub: rotated out late-r12 — constant in ROTATED_ORACLES
-    "outlink_extract": text_queries.ORACLE_OUTLINK_EXTRACT,
-    # r7 rotation: event_value_stats inline SQL moved verbatim to
-    # ROTATED_ORACLES below; xml_roundtrip keeps its constant there
-    "embedding_drift": text_queries.ORACLE_EMBEDDING_DRIFT,
-    "event_anomalies": text_queries.ORACLE_EVENT_ANOMALIES,
-    "normalize_text": text_queries.ORACLE_NORMALIZE_TEXT,
-    # late-r7 third rotation: tpch_q8_market_share inline SQL moved
-    # verbatim to ROTATED_ORACLES below
-    "user_hourly_gapfill": """
+ORACLE_CUSTOMER_RUNNING_REVENUE = """
+        SELECT o_custkey AS customer_key,
+               o_orderkey AS order_key,
+               o_orderdate AS order_date,
+               o_totalprice AS order_total,
+               CAST(row_number() OVER w AS INT) AS order_seq,
+               CAST(date_diff('day', lag(o_orderdate) OVER w, o_orderdate)
+                    AS INT) AS days_since_prev,
+               ROUND(SUM(o_totalprice) OVER (
+                       PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
+                       ROWS UNBOUNDED PRECEDING), 4) AS cum_spend
+        FROM orders
+        WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
+    """
+
+ORACLE_USER_HOURLY_GAPFILL = """
         WITH bounds AS (
           SELECT date_trunc('hour', MIN(ts)) AS lo,
                  date_trunc('hour', MAX(ts)) AS hi
@@ -901,24 +169,9 @@ ORACLES: dict[str, str] = {
         CROSS JOIN hours h
         LEFT JOIN hourly ON hourly.a_user = u.user_id
                         AND hourly.a_hour = h.hour_ts
-    """,
-    "domain_census": text_queries.ORACLE_DOMAIN_CENSUS,
-    "customer_running_revenue": """
-        SELECT o_custkey AS customer_key,
-               o_orderkey AS order_key,
-               o_orderdate AS order_date,
-               o_totalprice AS order_total,
-               CAST(row_number() OVER w AS INT) AS order_seq,
-               CAST(date_diff('day', lag(o_orderdate) OVER w, o_orderdate)
-                    AS INT) AS days_since_prev,
-               ROUND(SUM(o_totalprice) OVER (
-                       PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-                       ROWS UNBOUNDED PRECEDING), 4) AS cum_spend
-        FROM orders
-        WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
-    """,
-    "docs_capped_per_source": text_queries.ORACLE_DOCS_CAPPED_PER_SOURCE,
-    "asof_click_attribution": """
+    """
+
+ORACLE_ASOF_CLICK_ATTRIBUTION = """
         WITH tagged AS (
           SELECT event_id, user_id, ts, value,
                  CASE WHEN event_type = 'click' THEN event_id END AS click_id,
@@ -944,8 +197,9 @@ ORACLES: dict[str, str] = {
                date_diff('second', last_click_ts, ts) AS seconds_since_click
         FROM carried
         WHERE is_purchase = 1
-    """,
-    "error_burst_context": """
+    """
+
+ORACLE_ERROR_BURST_CONTEXT = """
         SELECT e.event_id AS error_id,
                e.user_id,
                e.ts AS error_ts,
@@ -959,10 +213,9 @@ ORACLES: dict[str, str] = {
          AND a.ts <= e.ts
         WHERE e.event_type = 'error'
         GROUP BY 1, 2, 3
-    """,
-    # late-r7 third rotation: late_shipment_priority inline SQL moved
-    # verbatim to ROTATED_ORACLES below
-    "small_quantity_part_revenue": """
+    """
+
+ORACLE_SMALL_QUANTITY_PART_REVENUE = """
         WITH pa AS (
           SELECT l_partkey, AVG(l_quantity) * 0.5 AS half_avg_qty
           FROM lineitem GROUP BY 1
@@ -975,20 +228,11 @@ ORACLES: dict[str, str] = {
         JOIN part p ON l.l_partkey = p.p_partkey
         WHERE l.l_quantity < pa.half_avg_qty
         GROUP BY 1
-    """,
-    # (tpch_q7/q10/q14 — driver-green r6-r9 — rotated out in r10; their
-    # EXTRA_ORACLES references moved verbatim to ROTATED_ORACLES below)
-    # late-r6 second promotion — same single-source SQL the pytest
-    # sweep has hash-diffed all round
-    "tpch_q2_min_balance_supplier": tpch_extra.EXTRA_ORACLES["tpch_q2_min_balance_supplier"],
-    "tpch_q9_product_profit": tpch_extra.EXTRA_ORACLES["tpch_q9_product_profit"],
-    "tpch_q18_large_orders": tpch_extra.EXTRA_ORACLES["tpch_q18_large_orders"],
-    "tpch_q20_excess_shippers": tpch_extra.EXTRA_ORACLES["tpch_q20_excess_shippers"],
-    "tpch_q21_waiting_suppliers": tpch_extra.EXTRA_ORACLES["tpch_q21_waiting_suppliers"],
-    "user_value_moving_stats": tpch_extra.EXTRA_ORACLES["user_value_moving_stats"],
-    # ordered-funnel conversion: earliest-chain semantics (step k = the
-    # first step-k event within the gap of the chosen step-(k−1) time)
-    "funnel_conversion": """
+    """
+
+# ordered-funnel conversion: earliest-chain semantics (step k = the
+# first step-k event within the gap of the chosen step-(k−1) time)
+ORACLE_FUNNEL_CONVERSION = """
         WITH s1 AS (
           SELECT user_id, MIN(ts) AS t FROM events
           WHERE event_type = 'view' GROUP BY user_id
@@ -1013,9 +257,10 @@ ORACLES: dict[str, str] = {
                      6) AS conversion
         FROM steps
         ORDER BY step
-    """,
-    # weekly retention-cohort matrix (cohort = Monday of first event)
-    "retention_cohorts": """
+    """
+
+# weekly retention-cohort matrix (cohort = Monday of first event)
+ORACLE_RETENTION_COHORTS = """
         WITH ev AS (
           SELECT user_id, date_trunc('week', ts) AS wk FROM events
         ), firsts AS (
@@ -1039,35 +284,424 @@ ORACLES: dict[str, str] = {
                    AS retention
         FROM counts c JOIN sizes s USING (cohort_week)
         ORDER BY cohort_week, week_n
-    """,
-    # scd2_part_price_asof: rotated out late-r12 — inline SQL moved
-    # verbatim to ROTATED_ORACLES below; promoted in its place:
-    "host_link_graph": text_queries.ORACLE_HOST_LINK_GRAPH,
-}
+    """
 
+ORACLE_DIM_DATE = """
+        WITH spine AS (
+          SELECT CAST(full_ts AS DATE) AS d
+          FROM generate_series(TIMESTAMP '2010-01-01', TIMESTAMP '2029-12-31',
+                               INTERVAL 1 DAY) t(full_ts)
+        )
+        SELECT CAST(strftime(d, '%Y%m%d') AS INT) AS date_key,
+               CAST(d AS TIMESTAMP) AS full_date,
+               CAST(year(d) AS INT) AS year,
+               CAST(quarter(d) AS INT) AS quarter,
+               CAST(month(d) AS INT) AS month,
+               monthname(d) AS month_name,
+               strftime(d, '%b') AS month_abbr,
+               CAST(day(d) AS INT) AS day_of_month,
+               CAST(dayofyear(d) AS INT) AS day_of_year,
+               CAST(weekofyear(d) AS INT) AS week_of_year,
+               CAST(isodow(d) AS INT) AS day_of_week,
+               dayname(d) AS day_name,
+               strftime(d, '%a') AS day_abbr,
+               isodow(d) IN (6, 7) AS is_weekend,
+               CAST(year(d) + CASE WHEN month(d) >= 7 THEN 1 ELSE 0 END AS INT) AS fiscal_year,
+               CAST(((month(d) + 5) % 12) // 3 + 1 AS INT) AS fiscal_quarter,
+               CAST(((month(d) + 5) % 12) + 1 AS INT) AS fiscal_month
+        FROM spine
+    """
 
-#: DuckDB oracle SQL for the r6-rotated queries — exact and long-stable
-#: (driver-green r1–r5), moved out of the 50-slot window to free slots
-#: for first-time oracles. tests/test_rotated_oracles.py applies the
-#: SAME row-count + schema + value-hash comparison the driver does.
-ROTATED_ORACLES: dict[str, str] = {
-    # ---- r13 eleventh rotation (both r7 first driver oracles, green
-    # r7-r12; slots freed for the exact late-r12 newcomers
-    # cdx_urlkey / crawl_frontier) ----
-    "remove_repeated_spans": text_queries.ORACLE_REMOVE_REPEATED_SPANS,
-    "clean_boilerplate": text_queries.ORACLE_CLEAN_BOILERPLATE,
-    # ---- late-r12 tenth rotation (first driver oracles r6-r8, green
-    # through r11; slots freed for the exact late-r12 newcomers
-    # wet_ingest / robots_sitemap_discovery / outlink_extract /
-    # host_link_graph) ----
-    "docs_stratified_sample": text_queries.ORACLE_DOCS_STRATIFIED_SAMPLE,
-    "corpus_drift": text_queries.ORACLE_CORPUS_DRIFT,
-    "pii_scrub": text_queries.ORACLE_PII_SCRUB,
-    # SCD2 point-in-time enrichment: the dim is rebuilt from the same
-    # synthetic two-batch history scd2_part_dimension applies, then each
-    # fact's audit instant BETWEEN-joins to its valid version (the Spark
-    # side uses the union + running-last PIT join — no inequality join)
-    "scd2_part_price_asof": """
+ORACLE_INCREMENTAL_READ = """
+        SELECT event_type,
+               COUNT(*) AS event_count,
+               MAX(ts) AS max_ts,
+               MAX(event_id) AS last_event_id,
+               ROUND(SUM(value), 4) AS total_value
+        FROM events
+        WHERE ts > TIMESTAMP '2024-01-15 00:00:00'
+        GROUP BY event_type
+    """
+
+ORACLE_WATERMARK_STATE = """
+        SELECT COALESCE(MAX(event_id), 0) AS last_id,
+               MAX(ts) AS last_event_time,
+               COUNT(*) AS record_count
+        FROM events
+    """
+
+ORACLE_FLATTEN_PROPS = """
+        SELECT event_id,
+               user_id,
+               ts,
+               CAST(json_extract_string(props, '$.k') AS INT) AS prop_k,
+               value
+        FROM events
+        WHERE event_type = 'purchase'
+    """
+
+ORACLE_DQ_NULL_PROFILE = """
+        WITH n AS (SELECT COUNT(*) AS total FROM orders)
+        SELECT c.column_name,
+               c.null_count,
+               CAST(c.null_count AS DOUBLE) / n.total AS null_ratio
+        FROM n, (
+          SELECT 'o_orderkey' AS column_name,
+                 COUNT(*) FILTER (o_orderkey IS NULL) AS null_count FROM orders
+          UNION ALL SELECT 'o_custkey',
+                 COUNT(*) FILTER (o_custkey IS NULL) FROM orders
+          UNION ALL SELECT 'o_orderstatus',
+                 COUNT(*) FILTER (o_orderstatus IS NULL) FROM orders
+          UNION ALL SELECT 'o_totalprice',
+                 COUNT(*) FILTER (o_totalprice IS NULL) FROM orders
+          UNION ALL SELECT 'o_orderdate',
+                 COUNT(*) FILTER (o_orderdate IS NULL) FROM orders
+          UNION ALL SELECT 'o_orderpriority',
+                 COUNT(*) FILTER (o_orderpriority IS NULL) FROM orders
+        ) c
+    """
+
+ORACLE_DQ_ORDERKEY_INTEGRITY = """
+        SELECT DISTINCT l.l_orderkey AS orphan_key
+        FROM lineitem l
+        WHERE NOT EXISTS (
+          SELECT 1 FROM orders o WHERE o.o_orderkey = l.l_orderkey
+        )
+    """
+
+ORACLE_DQ_LINEITEM_PK = """
+        SELECT l_orderkey, l_linenumber, COUNT(*) AS dup_count
+        FROM lineitem
+        GROUP BY 1, 2
+        HAVING COUNT(*) > 1
+    """
+
+ORACLE_CUSTOMERS_WITHOUT_ORDERS = """
+        SELECT c.c_custkey AS customer_key,
+               c.c_name AS customer_name,
+               c.c_mktsegment AS market_segment
+        FROM customer c
+        WHERE NOT EXISTS (
+          SELECT 1 FROM orders o
+          WHERE o.o_custkey = c.c_custkey
+            AND o.o_orderdate >= TIMESTAMP '2000-01-01'
+        )
+    """
+
+ORACLE_REPEAT_CUSTOMERS = """
+        SELECT c.c_custkey AS customer_key,
+               c.c_name AS customer_name
+        FROM customer c
+        WHERE c.c_custkey IN (
+          SELECT o_custkey FROM orders GROUP BY o_custkey HAVING COUNT(*) > 10
+        )
+    """
+
+ORACLE_REVENUE_GROUPING_SETS = """
+        SELECT r.r_name AS region_name,
+               c.c_mktsegment AS market_segment,
+               CAST(ROUND(SUM(CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(28,6))), 4) AS DOUBLE)
+                 AS total_revenue,
+               COUNT(*) AS line_count,
+               CAST(GROUPING(r.r_name, c.c_mktsegment) AS INT)
+                 AS grouping_level
+        FROM lineitem l
+        JOIN orders o ON l.l_orderkey = o.o_orderkey
+        JOIN customer c ON o.o_custkey = c.c_custkey
+        JOIN nation n ON c.c_nationkey = n.n_nationkey
+        JOIN region r ON n.n_regionkey = r.r_regionkey
+        GROUP BY GROUPING SETS ((r.r_name), (c.c_mktsegment), ())
+    """
+
+ORACLE_EVENT_WINDOWS_SLIDING = """
+        SELECT time_bucket(INTERVAL '15 minutes', ts)
+                 - k.i * (INTERVAL '15 minutes') AS window_start,
+               event_type,
+               COUNT(*) AS event_count,
+               ROUND(SUM(value), 4) AS total_value
+        FROM events, range(4) k(i)
+        GROUP BY 1, 2
+    """
+
+ORACLE_PRIORITY_REVENUE_SHARE = """
+        WITH per AS (
+          SELECT CAST(year(o_orderdate) AS INT) AS order_year,
+                 o_orderpriority AS order_priority,
+                 CAST(ROUND(SUM(CAST(o_totalprice AS DECIMAL(28,6))), 4) AS DOUBLE) AS revenue,
+                 COUNT(*) AS order_count
+          FROM orders GROUP BY 1, 2
+        )
+        SELECT order_year, order_priority, revenue, order_count,
+               ROUND(revenue / SUM(revenue) OVER (PARTITION BY order_year), 6)
+                 AS revenue_share
+        FROM per
+    """
+
+ORACLE_DIM_CUSTOMER_GEO = """
+        SELECT c.c_custkey AS customer_key,
+               c.c_name AS customer_name,
+               c.c_mktsegment AS market_segment,
+               c.c_acctbal AS account_balance,
+               n.n_nationkey AS nation_key,
+               n.n_name AS nation_name,
+               r.r_regionkey AS region_key,
+               r.r_name AS region_name
+        FROM customer c
+        JOIN nation n ON c.c_nationkey = n.n_nationkey
+        JOIN region r ON n.n_regionkey = r.r_regionkey
+    """
+
+ORACLE_FACT_SALES = """
+        SELECT l.l_orderkey AS order_key,
+               l.l_linenumber AS line_number,
+               l.l_partkey AS product_key,
+               l.l_suppkey AS supplier_key,
+               o.o_custkey AS customer_key,
+               o.o_orderstatus AS order_status,
+               o.o_orderpriority AS order_priority,
+               CAST(strftime(o.o_orderdate, '%Y%m%d') AS INT) AS order_date_key,
+               CAST(strftime(l.l_shipdate, '%Y%m%d') AS INT) AS ship_date_key,
+               l.l_quantity AS order_qty,
+               l.l_extendedprice AS unit_price_ext,
+               l.l_discount AS discount,
+               l.l_tax AS tax,
+               l.l_extendedprice * (1 - l.l_discount) AS line_total,
+               l.l_returnflag AS return_flag,
+               l.l_linestatus AS line_status
+        FROM lineitem l LEFT JOIN orders o ON l.l_orderkey = o.o_orderkey
+    """
+
+ORACLE_LATEST_EVENT_PER_USER = """
+        SELECT event_id, ts, user_id, event_type, value
+        FROM (
+          SELECT e.*, row_number() OVER (
+                   PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
+          FROM events e
+        )
+        WHERE rn = 1
+    """
+
+ORACLE_TPCH_Q1 = """
+        SELECT l_returnflag, l_linestatus,
+               CAST(ROUND(SUM(CAST(l_quantity AS DECIMAL(28,6))), 4) AS DOUBLE) AS sum_qty,
+               CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(28,6))), 4) AS DOUBLE) AS sum_base_price,
+               CAST(ROUND(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(28,6))), 4) AS DOUBLE) AS sum_disc_price,
+               CAST(ROUND(SUM(CAST(l_extendedprice * (1 - l_discount) * (1 + l_tax) AS DECIMAL(28,6))), 6) AS DOUBLE)
+                 AS sum_charge,
+               CAST(ROUND(SUM(CAST(l_quantity AS DECIMAL(28,6))), 2) AS DOUBLE) / COUNT(*) AS avg_qty,
+               CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(28,6))), 2) AS DOUBLE) / COUNT(*) AS avg_price,
+               CAST(ROUND(SUM(CAST(l_discount AS DECIMAL(28,6))), 2) AS DOUBLE) / COUNT(*) AS avg_disc,
+               COUNT(*) AS count_order
+        FROM lineitem
+        WHERE l_shipdate <= TIMESTAMP '1998-09-02'
+        GROUP BY l_returnflag, l_linestatus
+    """
+
+ORACLE_TPCH_Q3 = """
+        SELECT l.l_orderkey AS order_key,
+               o.o_orderdate AS order_date,
+               o.o_orderpriority AS order_priority,
+               ROUND(SUM(l.l_extendedprice * (1 - l.l_discount)), 4) AS revenue
+        FROM lineitem l
+        JOIN orders o ON l.l_orderkey = o.o_orderkey
+        JOIN customer c ON o.o_custkey = c.c_custkey
+        WHERE l.l_shipdate > TIMESTAMP '1998-06-15'
+          AND o.o_orderdate < TIMESTAMP '1998-06-15'
+          AND c.c_mktsegment = 'BUILDING'
+        GROUP BY 1, 2, 3
+        ORDER BY revenue DESC, order_key ASC
+        LIMIT 10
+    """
+
+ORACLE_SILVER_LINEITEM_ENRICHED = """
+        SELECT l.l_orderkey AS order_key,
+               l.l_linenumber AS line_number,
+               o.o_orderstatus AS order_status,
+               p.p_name AS product_name,
+               p.p_brand AS product_brand,
+               p.p_type AS product_type,
+               s.s_name AS supplier_name,
+               l.l_quantity AS quantity,
+               l.l_extendedprice AS extended_price,
+               l.l_extendedprice * (1 - l.l_discount) AS net_price
+        FROM lineitem l
+        JOIN orders o   ON l.l_orderkey = o.o_orderkey
+        JOIN part p     ON l.l_partkey = p.p_partkey
+        JOIN supplier s ON l.l_suppkey = s.s_suppkey
+    """
+
+ORACLE_EVENT_VALUE_STATS = """
+        SELECT event_type,
+               COUNT(*) AS n,
+               MIN(value) AS min_value,
+               quantile_cont(value, 0.5) AS p50,
+               quantile_cont(value, 0.9) AS p90,
+               quantile_cont(value, 0.99) AS p99,
+               MAX(value) AS max_value,
+               stddev_samp(value) AS stddev_value
+        FROM events
+        GROUP BY event_type
+    """
+
+ORACLE_TOP_PRODUCTS = """
+        SELECT p.p_partkey, p.p_name, p.p_brand,
+               ROUND(SUM(l.l_extendedprice * (1 - l.l_discount)), 4) AS total_revenue,
+               ROUND(SUM(l.l_quantity), 4) AS total_qty,
+               COUNT(DISTINCT l.l_orderkey) AS order_count
+        FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
+        GROUP BY p.p_partkey, p.p_name, p.p_brand
+        ORDER BY total_revenue DESC, p.p_partkey ASC
+        LIMIT 10
+    """
+
+ORACLE_SALES_SUMMARY = """
+        SELECT CAST(year(o.o_orderdate) AS INT) AS order_year,
+               o.o_orderpriority AS order_priority,
+               r.r_name AS region_name,
+               n.n_name AS nation_name,
+               c.c_mktsegment AS market_segment,
+               l.l_returnflag AS return_flag,
+               l.l_linestatus AS line_status,
+               COUNT(DISTINCT o.o_orderkey) AS order_count,
+               COUNT(*) AS line_count,
+               CAST(ROUND(SUM(CAST(l.l_quantity AS DECIMAL(28,6))), 4) AS DOUBLE) AS total_qty,
+               CAST(ROUND(SUM(CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(28,6))), 4) AS DOUBLE) AS total_revenue,
+               CAST(ROUND(SUM(CAST(l.l_extendedprice * l.l_discount AS DECIMAL(28,6))), 4) AS DOUBLE) AS total_discount_amount,
+               CAST(ROUND(SUM(CAST(l.l_extendedprice AS DECIMAL(28,6))), 2) AS DOUBLE) / COUNT(*) AS avg_unit_price_ext
+        FROM lineitem l
+        JOIN orders o   ON l.l_orderkey = o.o_orderkey
+        JOIN customer c ON o.o_custkey = c.c_custkey
+        JOIN nation n   ON c.c_nationkey = n.n_nationkey
+        JOIN region r   ON n.n_regionkey = r.r_regionkey
+        GROUP BY 1, 2, 3, 4, 5, 6, 7
+    """
+
+ORACLE_EVENT_WINDOWS = """
+        SELECT time_bucket(INTERVAL '1 hour', ts) AS window_start,
+               event_type,
+               COUNT(*) AS event_count,
+               ROUND(SUM(value), 4) AS total_value
+        FROM events
+        GROUP BY 1, 2
+    """
+
+ORACLE_TPCH_Q5 = """
+        SELECT n.n_name AS nation_name,
+               CAST(ROUND(SUM(CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(28,6))), 4) AS DOUBLE) AS revenue
+        FROM lineitem l
+        JOIN orders o   ON l.l_orderkey = o.o_orderkey
+        JOIN customer c ON o.o_custkey = c.c_custkey
+        JOIN supplier s ON l.l_suppkey = s.s_suppkey
+                       AND c.c_nationkey = s.s_nationkey
+        JOIN nation n   ON s.s_nationkey = n.n_nationkey
+        JOIN region r   ON n.n_regionkey = r.r_regionkey
+        WHERE o.o_orderdate >= TIMESTAMP '1996-01-01'
+          AND o.o_orderdate < TIMESTAMP '1998-01-01'
+        GROUP BY n.n_name
+    """
+
+ORACLE_TPCH_Q8_MARKET_SHARE = """
+        SELECT CAST(year(o.o_orderdate) AS INT) AS order_year,
+               CAST(ROUND(SUM(CAST(CASE WHEN sn.n_name = 'CHINA' THEN l.l_extendedprice * (1 - l.l_discount) ELSE 0.0 END AS DECIMAL(28,6))), 4) AS DOUBLE) AS china_revenue,
+               CAST(ROUND(SUM(CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(28,6))), 4) AS DOUBLE) AS total_revenue,
+               ROUND(CAST(ROUND(SUM(CAST(CASE WHEN sn.n_name = 'CHINA' THEN l.l_extendedprice * (1 - l.l_discount) ELSE 0.0 END AS DECIMAL(28,6))), 4) AS DOUBLE) / CAST(ROUND(SUM(CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(28,6))), 4) AS DOUBLE), 6) AS market_share
+        FROM lineitem l
+        JOIN orders o ON l.l_orderkey = o.o_orderkey
+        JOIN customer c ON o.o_custkey = c.c_custkey
+        JOIN nation cn ON c.c_nationkey = cn.n_nationkey
+        JOIN region r ON cn.n_regionkey = r.r_regionkey AND r.r_name = 'ASIA'
+        JOIN supplier s ON l.l_suppkey = s.s_suppkey
+        JOIN nation sn ON s.s_nationkey = sn.n_nationkey
+        GROUP BY 1
+    """
+
+ORACLE_LATE_SHIPMENT_PRIORITY = """
+        SELECT o.o_orderpriority AS order_priority,
+               COUNT(*) AS late_order_count
+        FROM orders o
+        WHERE EXISTS (
+          SELECT 1 FROM lineitem l
+          WHERE l.l_orderkey = o.o_orderkey
+            AND l.l_shipdate > o.o_orderdate + INTERVAL 60 DAY
+        )
+        GROUP BY 1
+    """
+
+ORACLE_SALES_ROLLUP = """
+        SELECT r.r_name AS region_name,
+               n.n_name AS nation_name,
+               c.c_mktsegment AS market_segment,
+               CAST(ROUND(SUM(CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(28,6))), 4) AS DOUBLE) AS total_revenue,
+               CAST(ROUND(SUM(CAST(l.l_quantity AS DECIMAL(28,6))), 4) AS DOUBLE) AS total_qty,
+               COUNT(*) AS line_count,
+               CAST(GROUPING(r.r_name, n.n_name, c.c_mktsegment) AS INT)
+                 AS grouping_level
+        FROM lineitem l
+        JOIN orders o   ON l.l_orderkey = o.o_orderkey
+        JOIN customer c ON o.o_custkey = c.c_custkey
+        JOIN nation n   ON c.c_nationkey = n.n_nationkey
+        JOIN region r   ON n.n_regionkey = r.r_regionkey
+        GROUP BY ROLLUP (r.r_name, n.n_name, c.c_mktsegment)
+    """
+
+ORACLE_EVENT_SESSIONS = """
+        WITH o AS (
+          SELECT user_id, ts, value,
+                 CASE WHEN lag(ts) OVER w IS NULL
+                       OR ts - lag(ts) OVER w >= INTERVAL '30 minutes'
+                      THEN 1 ELSE 0 END AS new_sess
+          FROM events
+          WINDOW w AS (PARTITION BY user_id ORDER BY ts, value)
+        ),
+        s AS (
+          SELECT *, SUM(new_sess) OVER (
+                   PARTITION BY user_id ORDER BY ts, value
+                   ROWS UNBOUNDED PRECEDING) AS sess_id
+          FROM o
+        )
+        SELECT user_id,
+               MIN(ts) AS session_start,
+               MAX(ts) + INTERVAL '30 minutes' AS session_end,
+               COUNT(*) AS event_count,
+               ROUND(SUM(value), 4) AS total_value
+        FROM s
+        GROUP BY user_id, sess_id
+    """
+
+ORACLE_CUSTOMER_ORDER_DISTRIBUTION = """
+        SELECT order_count, COUNT(*) AS customer_count
+        FROM (
+          SELECT c.c_custkey, COUNT(o.o_orderkey) AS order_count
+          FROM customer c
+          LEFT JOIN orders o
+            ON c.c_custkey = o.o_custkey AND o.o_orderpriority = '1-URGENT'
+          GROUP BY c.c_custkey
+        )
+        GROUP BY order_count
+    """
+
+ORACLE_NATION_TOP_CUSTOMERS = """
+        SELECT * FROM (
+          SELECT n.n_name AS nation_name,
+                 c.c_custkey AS customer_key,
+                 c.c_name AS customer_name,
+                 per.revenue,
+                 CAST(dense_rank() OVER (
+                        PARTITION BY n.n_name
+                        ORDER BY per.revenue DESC, c.c_custkey ASC)
+                      AS INT) AS revenue_rank
+          FROM (SELECT o_custkey, ROUND(SUM(o_totalprice), 4) AS revenue
+                FROM orders GROUP BY o_custkey) per
+          JOIN customer c ON per.o_custkey = c.c_custkey
+          JOIN nation n ON c.c_nationkey = n.n_nationkey
+        ) WHERE revenue_rank <= 3
+    """
+
+# SCD2 point-in-time enrichment: the dim is rebuilt from the same
+# synthetic two-batch history scd2_part_dimension applies, then each
+# fact's audit instant BETWEEN-joins to its valid version (the Spark
+# side uses the union + running-last PIT join — no inequality join)
+ORACLE_SCD2_PART_PRICE_ASOF = """
         WITH b1 AS (
           SELECT p_partkey, p_retailprice FROM part WHERE p_partkey % 13 <> 0
         ), b2 AS (
@@ -1101,511 +735,286 @@ ROTATED_ORACLES: dict[str, str] = {
           ON f.p_partkey = d.p_partkey
          AND f.audit_ts >= d.eff
          AND (d.exp IS NULL OR f.audit_ts < d.exp)
-    """,
-    # ---- r12 ninth rotation (r7 first driver oracles, green r7-r11;
-    # slots freed for the exact r12 newcomers warc_revisit_digest and
-    # sitemap_lastmod) ----
-    "ngram_repetition": text_queries.ORACLE_NGRAM_REPETITION,
-    "doc_perplexity": text_queries.ORACLE_DOC_PERPLEXITY,
-    # ---- r11 eighth rotation (long-tenured veterans; slots freed
-    # for the exact r11 newcomers url_canonicalize, warc_ingest and
-    # sitemap_extract) ----
-    "corpus_vocabulary": text_queries.ORACLE_CORPUS_VOCABULARY,
-    "heavy_hitters_event_types": text_queries.ORACLE_HEAVY_HITTERS,
-    "dedup_simhash": text_queries.ORACLE_SIMHASH,
-    # ---- r10-continuation seventh rotation (driver-green for 3-6
-    # rounds each; slots freed for the five exact swept newcomers:
-    # docs_dsir_weights, source_overlap_matrix, html_extract,
-    # corpus_zipf, doc_readability) ----
-    "docs_hash_sample": text_queries.ORACLE_DOCS_HASH_SAMPLE,
-    "dim_supplier_geo": ORACLE_DIM_SUPPLIER_GEO,
-    "chunk_documents": text_queries.ORACLE_CHUNK_DOCUMENTS,
-    "temperature_mixture": text_queries.ORACLE_TEMPERATURE_MIXTURE,
-    "dedup_clusters": text_queries.ORACLE_DEDUP_CLUSTERS,
-    # ---- r10 sixth rotation (driver-green r1-r9 / r2-r9 / r6-r9;
-    # slots freed for the five exact-but-never-driver-verified queries:
-    # eval_decontamination, eval_decontamination_fuzzy,
-    # perplexity_quality_buckets, docs_epoch_mixture, cdc_upsert) ----
-    "text_stats": text_queries.ORACLE_TEXT_STATS,
-    "ann_cosine_topk": text_queries.ORACLE_ANN_COSINE,
-    "tpch_q7_nation_volume": tpch_extra.EXTRA_ORACLES["tpch_q7_nation_volume"],
-    "tpch_q10_returned_items": tpch_extra.EXTRA_ORACLES["tpch_q10_returned_items"],
-    "tpch_q14_promo_revenue_ratio": tpch_extra.EXTRA_ORACLES["tpch_q14_promo_ratio"],
-    # ---- r8 fifth rotation (green r4-r7; slots freed for the last six
-    # never-driver-verified oracles: the sampling family, the DQ
-    # expectation suite, and tpch_q19/q12/q16) ----
-    "dedup_ngram_jaccard_exact": text_queries.ORACLE_NGRAM_JACCARD,
-    "clean_corpus": text_queries.ORACLE_CLEAN_CORPUS,
-    "corpus_report": text_queries.ORACLE_CORPUS_REPORT,
-    "event_windows_sliding": """
-        SELECT time_bucket(INTERVAL '15 minutes', ts)
-                 - k.i * (INTERVAL '15 minutes') AS window_start,
-               event_type,
-               COUNT(*) AS event_count,
-               ROUND(SUM(value), 4) AS total_value
-        FROM events, range(4) k(i)
-        GROUP BY 1, 2
-    """,
-    "revenue_grouping_sets": """
-        SELECT r.r_name AS region_name,
-               c.c_mktsegment AS market_segment,
-               CAST(ROUND(SUM(CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(28,6))), 4) AS DOUBLE)
-                 AS total_revenue,
-               COUNT(*) AS line_count,
-               CAST(GROUPING(r.r_name, c.c_mktsegment) AS INT)
-                 AS grouping_level
-        FROM lineitem l
-        JOIN orders o ON l.l_orderkey = o.o_orderkey
-        JOIN customer c ON o.o_custkey = c.c_custkey
-        JOIN nation n ON c.c_nationkey = n.n_nationkey
-        JOIN region r ON n.n_regionkey = r.r_regionkey
-        GROUP BY GROUPING SETS ((r.r_name), (c.c_mktsegment), ())
-    """,
-    "priority_revenue_share": """
-        WITH per AS (
-          SELECT CAST(year(o_orderdate) AS INT) AS order_year,
-                 o_orderpriority AS order_priority,
-                 CAST(ROUND(SUM(CAST(o_totalprice AS DECIMAL(28,6))), 4) AS DOUBLE) AS revenue,
-                 COUNT(*) AS order_count
-          FROM orders GROUP BY 1, 2
-        )
-        SELECT order_year, order_priority, revenue, order_count,
-               ROUND(revenue / SUM(revenue) OVER (PARTITION BY order_year), 6)
-                 AS revenue_share
-        FROM per
-    """,
-    # ---- late-r7 third rotation (green since r1; slots freed for the
-    # ex-scale-killer plans tpch_q22/q11, the EXISTS/top-supplier
-    # shapes, and the sampling/geo twins) ----
-    "top_products": """
-        SELECT p.p_partkey, p.p_name, p.p_brand,
-               ROUND(SUM(l.l_extendedprice * (1 - l.l_discount)), 4) AS total_revenue,
-               ROUND(SUM(l.l_quantity), 4) AS total_qty,
-               COUNT(DISTINCT l.l_orderkey) AS order_count
-        FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
-        GROUP BY p.p_partkey, p.p_name, p.p_brand
-        ORDER BY total_revenue DESC, p.p_partkey ASC
-        LIMIT 10
-    """,
-    "sales_summary": """
-        SELECT CAST(year(o.o_orderdate) AS INT) AS order_year,
-               o.o_orderpriority AS order_priority,
-               r.r_name AS region_name,
-               n.n_name AS nation_name,
-               c.c_mktsegment AS market_segment,
-               l.l_returnflag AS return_flag,
-               l.l_linestatus AS line_status,
-               COUNT(DISTINCT o.o_orderkey) AS order_count,
-               COUNT(*) AS line_count,
-               CAST(ROUND(SUM(CAST(l.l_quantity AS DECIMAL(28,6))), 4) AS DOUBLE) AS total_qty,
-               CAST(ROUND(SUM(CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(28,6))), 4) AS DOUBLE) AS total_revenue,
-               CAST(ROUND(SUM(CAST(l.l_extendedprice * l.l_discount AS DECIMAL(28,6))), 4) AS DOUBLE) AS total_discount_amount,
-               CAST(ROUND(SUM(CAST(l.l_extendedprice AS DECIMAL(28,6))), 2) AS DOUBLE) / COUNT(*) AS avg_unit_price_ext
-        FROM lineitem l
-        JOIN orders o   ON l.l_orderkey = o.o_orderkey
-        JOIN customer c ON o.o_custkey = c.c_custkey
-        JOIN nation n   ON c.c_nationkey = n.n_nationkey
-        JOIN region r   ON n.n_regionkey = r.r_regionkey
-        GROUP BY 1, 2, 3, 4, 5, 6, 7
-    """,
-    "event_windows": """
-        SELECT time_bucket(INTERVAL '1 hour', ts) AS window_start,
-               event_type,
-               COUNT(*) AS event_count,
-               ROUND(SUM(value), 4) AS total_value
-        FROM events
-        GROUP BY 1, 2
-    """,
-    "tpch_q5": """
-        SELECT n.n_name AS nation_name,
-               CAST(ROUND(SUM(CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(28,6))), 4) AS DOUBLE) AS revenue
-        FROM lineitem l
-        JOIN orders o   ON l.l_orderkey = o.o_orderkey
-        JOIN customer c ON o.o_custkey = c.c_custkey
-        JOIN supplier s ON l.l_suppkey = s.s_suppkey
-                       AND c.c_nationkey = s.s_nationkey
-        JOIN nation n   ON s.s_nationkey = n.n_nationkey
-        JOIN region r   ON n.n_regionkey = r.r_regionkey
-        WHERE o.o_orderdate >= TIMESTAMP '1996-01-01'
-          AND o.o_orderdate < TIMESTAMP '1998-01-01'
-        GROUP BY n.n_name
-    """,
-    "tpch_q8_market_share": """
-        SELECT CAST(year(o.o_orderdate) AS INT) AS order_year,
-               CAST(ROUND(SUM(CAST(CASE WHEN sn.n_name = 'CHINA' THEN l.l_extendedprice * (1 - l.l_discount) ELSE 0.0 END AS DECIMAL(28,6))), 4) AS DOUBLE) AS china_revenue,
-               CAST(ROUND(SUM(CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(28,6))), 4) AS DOUBLE) AS total_revenue,
-               ROUND(CAST(ROUND(SUM(CAST(CASE WHEN sn.n_name = 'CHINA' THEN l.l_extendedprice * (1 - l.l_discount) ELSE 0.0 END AS DECIMAL(28,6))), 4) AS DOUBLE) / CAST(ROUND(SUM(CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(28,6))), 4) AS DOUBLE), 6) AS market_share
-        FROM lineitem l
-        JOIN orders o ON l.l_orderkey = o.o_orderkey
-        JOIN customer c ON o.o_custkey = c.c_custkey
-        JOIN nation cn ON c.c_nationkey = cn.n_nationkey
-        JOIN region r ON cn.n_regionkey = r.r_regionkey AND r.r_name = 'ASIA'
-        JOIN supplier s ON l.l_suppkey = s.s_suppkey
-        JOIN nation sn ON s.s_nationkey = sn.n_nationkey
-        GROUP BY 1
-    """,
-    "late_shipment_priority": """
-        SELECT o.o_orderpriority AS order_priority,
-               COUNT(*) AS late_order_count
-        FROM orders o
-        WHERE EXISTS (
-          SELECT 1 FROM lineitem l
-          WHERE l.l_orderkey = o.o_orderkey
-            AND l.l_shipdate > o.o_orderdate + INTERVAL 60 DAY
-        )
-        GROUP BY 1
-    """,
-    # ---- late-r6 second rotation (green since r1/r2; slots freed for
-    # the hard TPC-H-extra shapes, moving stats and heavy hitters) ----
-    "token_counts": text_queries.ORACLE_TOKEN_COUNTS,
-    "lang_id": text_queries.ORACLE_LANG_ID,
-    "user_churn_set_ops": semistructured.ORACLE_USER_CHURN,
-    "daily_event_pivot": semistructured.ORACLE_DAILY_PIVOT,
-    "tpch_q6_forecast_revenue": tpch_extra.EXTRA_ORACLES["tpch_q6_forecast_revenue"],
-    "customers_without_orders": """
-        SELECT c.c_custkey AS customer_key,
-               c.c_name AS customer_name,
-               c.c_mktsegment AS market_segment
-        FROM customer c
-        WHERE NOT EXISTS (
-          SELECT 1 FROM orders o
-          WHERE o.o_custkey = c.c_custkey
-            AND o.o_orderdate >= TIMESTAMP '2000-01-01'
-        )
-    """,
-    "repeat_customers": """
-        SELECT c.c_custkey AS customer_key,
-               c.c_name AS customer_name
-        FROM customer c
-        WHERE c.c_custkey IN (
-          SELECT o_custkey FROM orders GROUP BY o_custkey HAVING COUNT(*) > 10
-        )
-    """,
-    # ---- r6 first rotation ----
-    "dim_date": """
-        WITH spine AS (
-          SELECT CAST(full_ts AS DATE) AS d
-          FROM generate_series(TIMESTAMP '2010-01-01', TIMESTAMP '2029-12-31',
-                               INTERVAL 1 DAY) t(full_ts)
-        )
-        SELECT CAST(strftime(d, '%Y%m%d') AS INT) AS date_key,
-               CAST(d AS TIMESTAMP) AS full_date,
-               CAST(year(d) AS INT) AS year,
-               CAST(quarter(d) AS INT) AS quarter,
-               CAST(month(d) AS INT) AS month,
-               monthname(d) AS month_name,
-               strftime(d, '%b') AS month_abbr,
-               CAST(day(d) AS INT) AS day_of_month,
-               CAST(dayofyear(d) AS INT) AS day_of_year,
-               CAST(weekofyear(d) AS INT) AS week_of_year,
-               CAST(isodow(d) AS INT) AS day_of_week,
-               dayname(d) AS day_name,
-               strftime(d, '%a') AS day_abbr,
-               isodow(d) IN (6, 7) AS is_weekend,
-               CAST(year(d) + CASE WHEN month(d) >= 7 THEN 1 ELSE 0 END AS INT) AS fiscal_year,
-               CAST(((month(d) + 5) % 12) // 3 + 1 AS INT) AS fiscal_quarter,
-               CAST(((month(d) + 5) % 12) + 1 AS INT) AS fiscal_month
-        FROM spine
-    """,
-    "incremental_read": """
-        SELECT event_type,
-               COUNT(*) AS event_count,
-               MAX(ts) AS max_ts,
-               MAX(event_id) AS last_event_id,
-               ROUND(SUM(value), 4) AS total_value
-        FROM events
-        WHERE ts > TIMESTAMP '2024-01-15 00:00:00'
-        GROUP BY event_type
-    """,
-    "watermark_state": """
-        SELECT COALESCE(MAX(event_id), 0) AS last_id,
-               MAX(ts) AS last_event_time,
-               COUNT(*) AS record_count
-        FROM events
-    """,
-    "flatten_props": """
-        SELECT event_id,
-               user_id,
-               ts,
-               CAST(json_extract_string(props, '$.k') AS INT) AS prop_k,
-               value
-        FROM events
-        WHERE event_type = 'purchase'
-    """,
-    "doc_fingerprint": text_queries.ORACLE_FINGERPRINT,
-    "dq_null_profile": """
-        WITH n AS (SELECT COUNT(*) AS total FROM orders)
-        SELECT c.column_name,
-               c.null_count,
-               CAST(c.null_count AS DOUBLE) / n.total AS null_ratio
-        FROM n, (
-          SELECT 'o_orderkey' AS column_name,
-                 COUNT(*) FILTER (o_orderkey IS NULL) AS null_count FROM orders
-          UNION ALL SELECT 'o_custkey',
-                 COUNT(*) FILTER (o_custkey IS NULL) FROM orders
-          UNION ALL SELECT 'o_orderstatus',
-                 COUNT(*) FILTER (o_orderstatus IS NULL) FROM orders
-          UNION ALL SELECT 'o_totalprice',
-                 COUNT(*) FILTER (o_totalprice IS NULL) FROM orders
-          UNION ALL SELECT 'o_orderdate',
-                 COUNT(*) FILTER (o_orderdate IS NULL) FROM orders
-          UNION ALL SELECT 'o_orderpriority',
-                 COUNT(*) FILTER (o_orderpriority IS NULL) FROM orders
-        ) c
-    """,
-    "dq_orderkey_integrity": """
-        SELECT DISTINCT l.l_orderkey AS orphan_key
-        FROM lineitem l
-        WHERE NOT EXISTS (
-          SELECT 1 FROM orders o WHERE o.o_orderkey = l.l_orderkey
-        )
-    """,
-    "dq_lineitem_pk": """
-        SELECT l_orderkey, l_linenumber, COUNT(*) AS dup_count
-        FROM lineitem
-        GROUP BY 1, 2
-        HAVING COUNT(*) > 1
-    """,
-    # ---- r7 third rotation (green since r1/r2; slots freed for the
-    # nine never-driver-verified training-data/monitoring shapes) ----
-    "dedup_exact": text_queries.ORACLE_DEDUP_EXACT,
-    "xml_roundtrip": semistructured.ORACLE_XML_ROUNDTRIP,
-    "dim_customer_geo": """
-        SELECT c.c_custkey AS customer_key,
-               c.c_name AS customer_name,
-               c.c_mktsegment AS market_segment,
-               c.c_acctbal AS account_balance,
-               n.n_nationkey AS nation_key,
-               n.n_name AS nation_name,
-               r.r_regionkey AS region_key,
-               r.r_name AS region_name
-        FROM customer c
-        JOIN nation n ON c.c_nationkey = n.n_nationkey
-        JOIN region r ON n.n_regionkey = r.r_regionkey
-    """,
-    "fact_sales": """
-        SELECT l.l_orderkey AS order_key,
-               l.l_linenumber AS line_number,
-               l.l_partkey AS product_key,
-               l.l_suppkey AS supplier_key,
-               o.o_custkey AS customer_key,
-               o.o_orderstatus AS order_status,
-               o.o_orderpriority AS order_priority,
-               CAST(strftime(o.o_orderdate, '%Y%m%d') AS INT) AS order_date_key,
-               CAST(strftime(l.l_shipdate, '%Y%m%d') AS INT) AS ship_date_key,
-               l.l_quantity AS order_qty,
-               l.l_extendedprice AS unit_price_ext,
-               l.l_discount AS discount,
-               l.l_tax AS tax,
-               l.l_extendedprice * (1 - l.l_discount) AS line_total,
-               l.l_returnflag AS return_flag,
-               l.l_linestatus AS line_status
-        FROM lineitem l LEFT JOIN orders o ON l.l_orderkey = o.o_orderkey
-    """,
-    "latest_event_per_user": """
-        SELECT event_id, ts, user_id, event_type, value
-        FROM (
-          SELECT e.*, row_number() OVER (
-                   PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
-          FROM events e
-        )
-        WHERE rn = 1
-    """,
-    "tpch_q1": """
-        SELECT l_returnflag, l_linestatus,
-               CAST(ROUND(SUM(CAST(l_quantity AS DECIMAL(28,6))), 4) AS DOUBLE) AS sum_qty,
-               CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(28,6))), 4) AS DOUBLE) AS sum_base_price,
-               CAST(ROUND(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(28,6))), 4) AS DOUBLE) AS sum_disc_price,
-               CAST(ROUND(SUM(CAST(l_extendedprice * (1 - l_discount) * (1 + l_tax) AS DECIMAL(28,6))), 6) AS DOUBLE)
-                 AS sum_charge,
-               CAST(ROUND(SUM(CAST(l_quantity AS DECIMAL(28,6))), 2) AS DOUBLE) / COUNT(*) AS avg_qty,
-               CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(28,6))), 2) AS DOUBLE) / COUNT(*) AS avg_price,
-               CAST(ROUND(SUM(CAST(l_discount AS DECIMAL(28,6))), 2) AS DOUBLE) / COUNT(*) AS avg_disc,
-               COUNT(*) AS count_order
-        FROM lineitem
-        WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-        GROUP BY l_returnflag, l_linestatus
-    """,
-    "tpch_q3": """
-        SELECT l.l_orderkey AS order_key,
-               o.o_orderdate AS order_date,
-               o.o_orderpriority AS order_priority,
-               ROUND(SUM(l.l_extendedprice * (1 - l.l_discount)), 4) AS revenue
-        FROM lineitem l
-        JOIN orders o ON l.l_orderkey = o.o_orderkey
-        JOIN customer c ON o.o_custkey = c.c_custkey
-        WHERE l.l_shipdate > TIMESTAMP '1998-06-15'
-          AND o.o_orderdate < TIMESTAMP '1998-06-15'
-          AND c.c_mktsegment = 'BUILDING'
-        GROUP BY 1, 2, 3
-        ORDER BY revenue DESC, order_key ASC
-        LIMIT 10
-    """,
-    "silver_lineitem_enriched": """
-        SELECT l.l_orderkey AS order_key,
-               l.l_linenumber AS line_number,
-               o.o_orderstatus AS order_status,
-               p.p_name AS product_name,
-               p.p_brand AS product_brand,
-               p.p_type AS product_type,
-               s.s_name AS supplier_name,
-               l.l_quantity AS quantity,
-               l.l_extendedprice AS extended_price,
-               l.l_extendedprice * (1 - l.l_discount) AS net_price
-        FROM lineitem l
-        JOIN orders o   ON l.l_orderkey = o.o_orderkey
-        JOIN part p     ON l.l_partkey = p.p_partkey
-        JOIN supplier s ON l.l_suppkey = s.s_suppkey
-    """,
-    "event_value_stats": """
-        SELECT event_type,
-               COUNT(*) AS n,
-               MIN(value) AS min_value,
-               quantile_cont(value, 0.5) AS p50,
-               quantile_cont(value, 0.9) AS p90,
-               quantile_cont(value, 0.99) AS p99,
-               MAX(value) AS max_value,
-               stddev_samp(value) AS stddev_value
-        FROM events
-        GROUP BY event_type
-    """,
-    # ---- late-r7 second rotation (green since r1; slots freed for the
-    # four new curation twins) ----
-    "sales_rollup": """
-        SELECT r.r_name AS region_name,
-               n.n_name AS nation_name,
-               c.c_mktsegment AS market_segment,
-               CAST(ROUND(SUM(CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(28,6))), 4) AS DOUBLE) AS total_revenue,
-               CAST(ROUND(SUM(CAST(l.l_quantity AS DECIMAL(28,6))), 4) AS DOUBLE) AS total_qty,
-               COUNT(*) AS line_count,
-               CAST(GROUPING(r.r_name, n.n_name, c.c_mktsegment) AS INT)
-                 AS grouping_level
-        FROM lineitem l
-        JOIN orders o   ON l.l_orderkey = o.o_orderkey
-        JOIN customer c ON o.o_custkey = c.c_custkey
-        JOIN nation n   ON c.c_nationkey = n.n_nationkey
-        JOIN region r   ON n.n_regionkey = r.r_regionkey
-        GROUP BY ROLLUP (r.r_name, n.n_name, c.c_mktsegment)
-    """,
-    "event_sessions": """
-        WITH o AS (
-          SELECT user_id, ts, value,
-                 CASE WHEN lag(ts) OVER w IS NULL
-                       OR ts - lag(ts) OVER w >= INTERVAL '30 minutes'
-                      THEN 1 ELSE 0 END AS new_sess
-          FROM events
-          WINDOW w AS (PARTITION BY user_id ORDER BY ts, value)
-        ),
-        s AS (
-          SELECT *, SUM(new_sess) OVER (
-                   PARTITION BY user_id ORDER BY ts, value
-                   ROWS UNBOUNDED PRECEDING) AS sess_id
-          FROM o
-        )
-        SELECT user_id,
-               MIN(ts) AS session_start,
-               MAX(ts) + INTERVAL '30 minutes' AS session_end,
-               COUNT(*) AS event_count,
-               ROUND(SUM(value), 4) AS total_value
-        FROM s
-        GROUP BY user_id, sess_id
-    """,
-    "customer_order_distribution": """
-        SELECT order_count, COUNT(*) AS customer_count
-        FROM (
-          SELECT c.c_custkey, COUNT(o.o_orderkey) AS order_count
-          FROM customer c
-          LEFT JOIN orders o
-            ON c.c_custkey = o.o_custkey AND o.o_orderpriority = '1-URGENT'
-          GROUP BY c.c_custkey
-        )
-        GROUP BY order_count
-    """,
-    "nation_top_customers": """
-        SELECT * FROM (
-          SELECT n.n_name AS nation_name,
-                 c.c_custkey AS customer_key,
-                 c.c_name AS customer_name,
-                 per.revenue,
-                 CAST(dense_rank() OVER (
-                        PARTITION BY n.n_name
-                        ORDER BY per.revenue DESC, c.c_custkey ASC)
-                      AS INT) AS revenue_rank
-          FROM (SELECT o_custkey, ROUND(SUM(o_totalprice), 4) AS revenue
-                FROM orders GROUP BY o_custkey) per
-          JOIN customer c ON per.o_custkey = c.c_custkey
-          JOIN nation n ON c.c_nationkey = n.n_nationkey
-        ) WHERE revenue_rank <= 3
-    """,
+    """
+
+
+RECORDS: tuple[Query, ...] = (
+    # ---- the driver window: hash-checked by the driver itself ----
+    Query("tpch_q22_idle_balances", tpch_extra.q22_idle_balances,
+        oracle=EXTRA["tpch_q22_idle_balances"], driver=True, headline=True),
+    Query("tpch_q11_important_parts", tpch_extra.q11_important_parts,
+        oracle=EXTRA["tpch_q11_important_parts"], driver=True, headline=True),
+    Query("tpch_q4_priority_check", tpch_extra.q4_priority_check,
+        oracle=EXTRA["tpch_q4_priority_check"], driver=True),
+    Query("tpch_q15_top_supplier", tpch_extra.q15_top_supplier,
+        oracle=EXTRA["tpch_q15_top_supplier"], driver=True),
+    Query("docs_dsir_weights", tq.q_docs_dsir_weights,
+        oracle=tq.ORACLE_DOCS_DSIR_WEIGHTS, driver=True, headline=True),
+    Query("source_overlap_matrix", tq.q_source_overlap,
+        oracle=tq.ORACLE_SOURCE_OVERLAP, driver=True, headline=True),
+    Query("html_extract", tq.q_html_extract,
+        oracle=tq.ORACLE_HTML_EXTRACT, driver=True, headline=True),
+    Query("corpus_zipf", tq.q_corpus_zipf,
+        oracle=tq.ORACLE_CORPUS_ZIPF, driver=True, headline=True),
+    Query("doc_readability", tq.q_doc_readability,
+        oracle=tq.ORACLE_DOC_READABILITY, driver=True, headline=True),
+    Query("cdx_urlkey", tq.q_cdx_urlkey, oracle=tq.ORACLE_CDX_URLKEY, driver=True, headline=True),
+    Query("scd2_part_dimension", scd2_query.scd2_part_dimension,
+        oracle=scd2_query.ORACLE, driver=True, headline=True),
+    Query("docs_epoch_mixture", tq.q_docs_epoch_mixture,
+        oracle=tq.ORACLE_DOCS_EPOCH_MIXTURE, driver=True, headline=True),
+    Query("url_canonicalize", tq.q_url_canonicalize,
+        oracle=tq.ORACLE_URL_CANONICALIZE, driver=True, headline=True),
+    Query("warc_ingest", tq.q_warc_ingest,
+        oracle=tq.ORACLE_WARC_INGEST, driver=True, headline=True),
+    Query("crawl_frontier", tq.q_crawl_frontier,
+        oracle=tq.ORACLE_CRAWL_FRONTIER, driver=True, headline=True),
+    Query("dedup_minhash_lsh", tq.q_minhash_lsh,
+        oracle=tq.ORACLE_MINHASH_LSH, driver=True, headline=True),
+    Query("sitemap_extract", tq.q_sitemap_extract,
+        oracle=tq.ORACLE_SITEMAP_EXTRACT, driver=True, headline=True),
+    Query("wet_ingest", tq.q_wet_ingest, oracle=tq.ORACLE_WET_INGEST, driver=True, headline=True),
+    Query("docs_sample_exact_n", tq.q_docs_sample_exact_n,
+        oracle=tq.ORACLE_DOCS_SAMPLE_EXACT_N, driver=True),
+    Query("warc_revisit_digest", tq.q_warc_revisit_digest,
+        oracle=tq.ORACLE_WARC_REVISIT_DIGEST, driver=True, headline=True),
+    Query("sitemap_lastmod", tq.q_sitemap_lastmod,
+        oracle=tq.ORACLE_SITEMAP_LASTMOD, driver=True, headline=True),
+    Query("robots_sitemap_discovery", tq.q_robots_sitemap_discovery,
+        oracle=tq.ORACLE_ROBOTS_SITEMAP_DISCOVERY, driver=True, headline=True),
+    Query("outlink_extract", tq.q_outlink_extract,
+        oracle=tq.ORACLE_OUTLINK_EXTRACT, driver=True, headline=True),
+    Query("dq_expectations_orders", relational.dq_expectations_orders,
+        oracle=relational.ORACLE_DQ_EXPECTATIONS_ORDERS, driver=True, headline=True),
+    Query("embedding_drift", tq.q_embedding_drift, oracle=tq.ORACLE_EMBEDDING_DRIFT, driver=True),
+    Query("event_anomalies", tq.q_event_anomalies,
+        oracle=tq.ORACLE_EVENT_ANOMALIES, driver=True, headline=True),
+    Query("eval_decontamination", tq.q_eval_decontamination,
+        oracle=tq.ORACLE_EVAL_DECONTAMINATION, driver=True, headline=True),
+    Query("eval_decontamination_fuzzy", tq.q_eval_decontamination_fuzzy,
+        oracle=tq.ORACLE_EVAL_DECONTAMINATION_FUZZY, driver=True, headline=True),
+    Query("perplexity_quality_buckets", tq.q_perplexity_quality_buckets,
+        oracle=tq.ORACLE_PERPLEXITY_QUALITY_BUCKETS, driver=True, headline=True),
+    Query("tpch_q2_min_balance_supplier", tpch_extra.q2_min_balance_supplier,
+        oracle=EXTRA["tpch_q2_min_balance_supplier"], driver=True, headline=True),
+    Query("tpch_q9_product_profit", tpch_extra.q9_product_profit,
+        oracle=EXTRA["tpch_q9_product_profit"], driver=True, headline=True),
+    Query("tpch_q18_large_orders", tpch_extra.q18_large_orders,
+        oracle=EXTRA["tpch_q18_large_orders"], driver=True),
+    Query("tpch_q20_excess_shippers", tpch_extra.q20_excess_shippers,
+        oracle=EXTRA["tpch_q20_excess_shippers"], driver=True),
+    Query("tpch_q21_waiting_suppliers", tpch_extra.q21_waiting_suppliers,
+        oracle=EXTRA["tpch_q21_waiting_suppliers"], driver=True, headline=True),
+    Query("tpch_q19_disjunctive_revenue", tpch_extra.q19_disjunctive_revenue,
+        oracle=EXTRA["tpch_q19_disjunctive"], driver=True),
+    Query("tpch_q12_shipping_delay_bands", tpch_extra.q12_shipping_delay_bands,
+        oracle=EXTRA["tpch_q12_shipping_delay_bands"], driver=True),
+    Query("tpch_q16_supplier_count_by_part", tpch_extra.q16_supplier_count_by_part,
+        oracle=EXTRA["tpch_q16_supplier_count_by_part"], driver=True),
+    Query("cdc_upsert", facts.q_cdc_upsert,
+        oracle=facts.ORACLE_CDC_UPSERT, driver=True, headline=True),
+    Query("normalize_text", tq.q_normalize_text,
+        oracle=tq.ORACLE_NORMALIZE_TEXT, driver=True, headline=True),
+    Query("domain_census", tq.q_domain_census,
+        oracle=tq.ORACLE_DOMAIN_CENSUS, driver=True, headline=True),
+    Query("docs_capped_per_source", tq.q_docs_capped_per_source,
+        oracle=tq.ORACLE_DOCS_CAPPED_PER_SOURCE, driver=True, headline=True),
+    Query("customer_running_revenue", windowed.customer_running_revenue,
+        oracle=ORACLE_CUSTOMER_RUNNING_REVENUE, driver=True, headline=True),
+    Query("user_value_moving_stats", tpch_extra.user_value_moving_stats,
+        oracle=EXTRA["user_value_moving_stats"], driver=True),
+    Query("user_hourly_gapfill", events.user_hourly_gapfill,
+        oracle=ORACLE_USER_HOURLY_GAPFILL, driver=True),
+    Query("asof_click_attribution", advanced_joins.asof_click_attribution,
+        oracle=ORACLE_ASOF_CLICK_ATTRIBUTION, driver=True, headline=True),
+    Query("error_burst_context", advanced_joins.error_burst_context,
+        oracle=ORACLE_ERROR_BURST_CONTEXT, driver=True, headline=True),
+    Query("small_quantity_part_revenue", advanced_joins.small_quantity_part_revenue,
+        oracle=ORACLE_SMALL_QUANTITY_PART_REVENUE, driver=True, headline=True),
+    Query("funnel_conversion", relational.funnel_conversion,
+        oracle=ORACLE_FUNNEL_CONVERSION, driver=True, headline=True),
+    Query("retention_cohorts", relational.retention_cohorts,
+        oracle=ORACLE_RETENTION_COHORTS, driver=True, headline=True),
+    Query("host_link_graph", tq.q_host_link_graph,
+        oracle=tq.ORACLE_HOST_LINK_GRAPH, driver=True, headline=True),
+    # ---- past the window: oracle-backed queries are hash-checked at two
+    # SFs in tests/test_rotated_oracles.py and by tools/check_oracles.py;
+    # rows_only ones are checked for rows when the driver reaches them ----
+    Query("dim_date", lambda spark, sf_dir: dims.build_dim_date(spark),
+        oracle=ORACLE_DIM_DATE, headline=True),
+    Query("incremental_read", events.incremental_read,
+        oracle=ORACLE_INCREMENTAL_READ, headline=True),
+    Query("watermark_state", events.watermark_state, oracle=ORACLE_WATERMARK_STATE),
+    Query("flatten_props", events.flatten_props, oracle=ORACLE_FLATTEN_PROPS, headline=True),
+    Query("doc_fingerprint", tq.q_fingerprint, oracle=tq.ORACLE_FINGERPRINT),
+    Query("dq_null_profile", _dq_null_profile, oracle=ORACLE_DQ_NULL_PROFILE),
+    Query("dq_orderkey_integrity", _dq_fk, oracle=ORACLE_DQ_ORDERKEY_INTEGRITY),
+    Query("dq_lineitem_pk", _dq_pk, oracle=ORACLE_DQ_LINEITEM_PK),
+    Query("token_counts", tq.q_token_counts, oracle=tq.ORACLE_TOKEN_COUNTS),
+    Query("lang_id", tq.q_lang_id, oracle=tq.ORACLE_LANG_ID),
+    Query("customers_without_orders", relational.customers_without_orders,
+        oracle=ORACLE_CUSTOMERS_WITHOUT_ORDERS),
+    Query("repeat_customers", relational.repeat_customers, oracle=ORACLE_REPEAT_CUSTOMERS),
+    Query("user_churn_set_ops", semistructured.user_churn_set_ops,
+        oracle=semistructured.ORACLE_USER_CHURN),
+    Query("daily_event_pivot", semistructured.daily_event_pivot,
+        oracle=semistructured.ORACLE_DAILY_PIVOT),
+    Query("tpch_q6_forecast_revenue", tpch_extra.q6_forecast_revenue,
+        oracle=EXTRA["tpch_q6_forecast_revenue"]),
+    Query("top_products_approx", marts.top_products_approx, rows_only="HLL distinct count"),
+    Query("event_value_stats_approx", relational.event_value_stats_approx,
+        rows_only="t-digest percentiles"),
+    Query("dedup_embedding_cosine", tq.q_embedding_near_dup_lsh,
+        rows_only="SRP-LSH candidates: recall < 1 by design"),
+    Query("ann_cosine_topk_np", tq.q_ann_cosine_np,
+        rows_only="GEMM float-sum order ≠ sequential fold", headline=True),
+    Query("ann_cosine_topk_lsh", tq.q_ann_cosine_lsh,
+        rows_only="single-probe LSH: recall < 1 by design"),
+    Query("ann_cosine_topk_ivf", tq.q_ann_cosine_ivf,
+        rows_only="n_probe-cell IVF: recall < 1 by design", headline=True),
+    Query("ann_cosine_topk_ivf_amortized", tq.q_ann_cosine_ivf_amortized,
+        rows_only="same IVF result via persisted index", headline=True),
+    Query("dedup_ngram_jaccard_exact", tq.q_ngram_jaccard, oracle=tq.ORACLE_NGRAM_JACCARD),
+    Query("clean_corpus", tq.q_clean_corpus, oracle=tq.ORACLE_CLEAN_CORPUS, headline=True),
+    Query("revenue_grouping_sets", relational.revenue_grouping_sets,
+        oracle=ORACLE_REVENUE_GROUPING_SETS),
+    Query("corpus_report", tq.q_corpus_report, oracle=tq.ORACLE_CORPUS_REPORT),
+    Query("event_windows_sliding", _sliding_windows, oracle=ORACLE_EVENT_WINDOWS_SLIDING),
+    Query("priority_revenue_share", windowed.priority_revenue_share,
+        oracle=ORACLE_PRIORITY_REVENUE_SHARE),
+    Query("dim_customer_geo", dims.build_dim_customer_geo, oracle=ORACLE_DIM_CUSTOMER_GEO),
+    Query("fact_sales", facts.build_fact_sales, oracle=ORACLE_FACT_SALES, headline=True),
+    Query("latest_event_per_user", events.latest_event_per_user,
+        oracle=ORACLE_LATEST_EVENT_PER_USER, headline=True),
+    Query("dedup_exact", tq.q_dedup_exact, oracle=tq.ORACLE_DEDUP_EXACT),
+    Query("tpch_q1", tpch.tpch_q1, oracle=ORACLE_TPCH_Q1, headline=True),
+    Query("tpch_q3", tpch.tpch_q3, oracle=ORACLE_TPCH_Q3),
+    Query("silver_lineitem_enriched", tpch.silver_lineitem_enriched,
+        oracle=ORACLE_SILVER_LINEITEM_ENRICHED, headline=True),
+    Query("event_value_stats", relational.event_value_stats, oracle=ORACLE_EVENT_VALUE_STATS),
+    Query("xml_roundtrip", semistructured.xml_roundtrip,
+        oracle=semistructured.ORACLE_XML_ROUNDTRIP),
+    Query("top_products", marts.top_products, oracle=ORACLE_TOP_PRODUCTS, headline=True),
+    Query("sales_summary", marts.sales_summary, oracle=ORACLE_SALES_SUMMARY, headline=True),
+    Query("event_windows", events.event_windows, oracle=ORACLE_EVENT_WINDOWS, headline=True),
+    Query("tpch_q5", tpch.tpch_q5, oracle=ORACLE_TPCH_Q5, headline=True),
+    Query("tpch_q8_market_share", tpch.tpch_q8_market_share,
+        oracle=ORACLE_TPCH_Q8_MARKET_SHARE, headline=True),
+    Query("late_shipment_priority", advanced_joins.late_shipment_priority,
+        oracle=ORACLE_LATE_SHIPMENT_PRIORITY),
+    Query("incremental_dedup", tq.q_incremental_dedup,
+        rows_only="signature-estimated verify: approx by design", headline=True),
+    Query("packed_corpus", tq.q_packed_corpus, rows_only="exact; end-to-end invariants in pytest"),
+    Query("quality_classifier", tq.q_quality_classifier,
+        rows_only="learned scores: no SQL twin", headline=True),
+    Query("shuffle_corpus", tq.q_shuffle_corpus, rows_only="exact; xxhash64 has no DuckDB twin"),
+    Query("ann_cosine_topk_pq", tq.q_ann_cosine_pq,
+        rows_only="PQ quantization: recall < 1 by design", headline=True),
+    Query("ann_cosine_topk_ivf_pq", tq.q_ann_cosine_ivf_pq,
+        rows_only="probe-pruned IVF-PQ: recall < 1"),
+    Query("ann_cosine_topk_pq_amortized", tq.q_ann_cosine_pq_amortized,
+        rows_only="≡ one-shot PQ via saved index", headline=True),
+    Query("semdedup_prune", tq.q_semdedup,
+        rows_only="k-means clustering: no SQL twin", headline=True),
+    Query("rag_retrieval", tq.q_rag_retrieval,
+        rows_only="IVF probe pruning: recall < 1 by design", headline=True),
+    Query("bpe_tokenize", tq.q_bpe_tokenize,
+        rows_only="exact; merge loop has no SQL twin", headline=True),
+    Query("rag_retrieval_amortized", tq.q_rag_retrieval_amortized,
+        rows_only="≡ one-shot retrieval via saved index", headline=True),
+    Query("clean_assets", tq.q_clean_assets,
+        rows_only="binary assets have no oracle tables", headline=True),
+    Query("hard_negatives", tq.q_hard_negatives,
+        rows_only="IVF probing: approximate by design", headline=True),
+    Query("hybrid_retrieval", tq.q_hybrid_retrieval,
+        rows_only="IVF leg: approximate by design", headline=True),
+    Query("unigram_tokenize", tq.q_unigram_tokenize, rows_only="exact; EM loop has no SQL twin"),
+    Query("sales_rollup", relational.sales_rollup, oracle=ORACLE_SALES_ROLLUP, headline=True),
+    Query("event_sessions", _session_windows, oracle=ORACLE_EVENT_SESSIONS, headline=True),
+    Query("customer_order_distribution", relational.customer_order_distribution,
+        oracle=ORACLE_CUSTOMER_ORDER_DISTRIBUTION, headline=True),
+    Query("nation_top_customers", windowed.nation_top_customers,
+        oracle=ORACLE_NATION_TOP_CUSTOMERS),
+    Query("kll_value_quantiles", tq.q_kll_quantiles,
+        rows_only="KLL sketch: rank-bounded approx by design", headline=True),
+    Query("audience_overlap", relational.audience_overlap,
+        rows_only="KMV/theta set estimates: approx by design", headline=True),
+    Query("ann_cosine_topk_sq8", tq.q_ann_cosine_sq8,
+        rows_only="SQ8 shortlist: approx by design", headline=True),
+    Query("ann_cosine_topk_ivf_sq8", tq.q_ann_cosine_ivf_sq8,
+        rows_only="probe-pruned SQ8: approx by design", headline=True),
+    Query("ann_cosine_topk_ivf_sq8_amortized", tq.q_ann_cosine_ivf_sq8_amortized,
+        rows_only="≡ one-shot via saved index", headline=True),
+    Query("ann_cosine_topk_sq8_amortized", tq.q_ann_cosine_sq8_amortized,
+        rows_only="≡ one-shot SQ8 via saved index", headline=True),
+    Query("video_frame_harvest", tq.q_video_frame_harvest,
+        rows_only="binary video assets have no oracle tables", headline=True),
+    Query("video_frame_harvest_amortized", tq.q_video_frame_harvest_amortized,
+        rows_only="≡ one-shot via persisted corpus", headline=True),
+    Query("video_keyframe_dedup", tq.q_video_keyframe_dedup,
+        rows_only="binary video assets have no oracle tables", headline=True),
+    Query("text_stats", tq.q_text_stats, oracle=tq.ORACLE_TEXT_STATS, headline=True),
+    Query("ann_cosine_topk", tq.q_ann_cosine, oracle=tq.ORACLE_ANN_COSINE),
+    Query("tpch_q7_nation_volume", tpch_extra.q7_nation_volume,
+        oracle=EXTRA["tpch_q7_nation_volume"]),
+    Query("tpch_q10_returned_items", tpch_extra.q10_returned_items,
+        oracle=EXTRA["tpch_q10_returned_items"]),
+    Query("tpch_q14_promo_revenue_ratio", tpch_extra.q14_promo_revenue_ratio,
+        oracle=EXTRA["tpch_q14_promo_ratio"]),
+    Query("ivf_sq8_index_ingest", tq.q_ivf_sq8_index_ingest,
+        rows_only="probe-pruned ANN: approx by design", headline=True),
+    Query("rag_index_ingest", tq.q_rag_index_ingest,
+        rows_only="probe-pruned ANN: approx by design", headline=True),
+    Query("incremental_dedup_bloom", tq.q_incremental_dedup_bloom,
+        rows_only="≡ incremental_dedup: approx by design", headline=True),
+    Query("web_corpus_pipeline", tq.q_web_corpus_pipeline,
+        rows_only="LSH near-dup stage: approx by design", headline=True),
+    Query("corpus_vocabulary", tq.q_corpus_vocabulary,
+        oracle=tq.ORACLE_CORPUS_VOCABULARY, headline=True),
+    Query("heavy_hitters_event_types", tq.q_heavy_hitters,
+        oracle=tq.ORACLE_HEAVY_HITTERS, headline=True),
+    Query("dedup_simhash", tq.q_simhash, oracle=tq.ORACLE_SIMHASH),
+    Query("docs_hash_sample", tq.q_docs_hash_sample, oracle=tq.ORACLE_DOCS_HASH_SAMPLE),
+    Query("dim_supplier_geo", dims.build_dim_supplier_geo, oracle=ORACLE_DIM_SUPPLIER_GEO),
+    Query("chunk_documents", tq.q_chunk_documents,
+        oracle=tq.ORACLE_CHUNK_DOCUMENTS, headline=True),
+    Query("temperature_mixture", tq.q_temperature_mixture,
+        oracle=tq.ORACLE_TEMPERATURE_MIXTURE, headline=True),
+    Query("dedup_clusters", tq.q_dedup_clusters, oracle=tq.ORACLE_DEDUP_CLUSTERS),
+    Query("ngram_repetition", tq.q_ngram_repetition, oracle=tq.ORACLE_NGRAM_REPETITION),
+    Query("doc_perplexity", tq.q_doc_perplexity, oracle=tq.ORACLE_DOC_PERPLEXITY, headline=True),
+    Query("host_pagerank", tq.q_host_pagerank,
+        rows_only="iterative float fixpoint: no SQL twin", headline=True),
+    Query("host_authority", tq.q_host_authority, oracle=tq.ORACLE_HOST_AUTHORITY, headline=True),
+    Query("crawl_politeness", tq.q_crawl_politeness,
+        oracle=tq.ORACLE_CRAWL_POLITENESS, headline=True),
+    Query("crawl_health", tq.q_crawl_health, oracle=tq.ORACLE_CRAWL_HEALTH, headline=True),
+    Query("warc_random_access", tq.q_warc_random_access,
+        oracle=tq.ORACLE_WARC_RANDOM_ACCESS, headline=True),
+    Query("frontier_refresh", tq.q_frontier_refresh,
+        oracle=tq.ORACLE_FRONTIER_REFRESH, headline=True),
+    Query("remove_repeated_spans", tq.q_remove_repeated_spans,
+        oracle=tq.ORACLE_REMOVE_REPEATED_SPANS, headline=True),
+    Query("clean_boilerplate", tq.q_clean_boilerplate,
+        oracle=tq.ORACLE_CLEAN_BOILERPLATE, headline=True),
+    Query("docs_stratified_sample", tq.q_docs_stratified_sample,
+        oracle=tq.ORACLE_DOCS_STRATIFIED_SAMPLE),
+    Query("corpus_drift", tq.q_corpus_drift, oracle=tq.ORACLE_CORPUS_DRIFT),
+    Query("pii_scrub", tq.q_pii_scrub, oracle=tq.ORACLE_PII_SCRUB, headline=True),
+    Query("scd2_part_price_asof", scd2_query.scd2_part_price_asof,
+        oracle=ORACLE_SCD2_PART_PRICE_ASOF, headline=True),
+)
+
+if sum(r.driver for r in RECORDS) > DRIVER_WINDOW:
+    raise ValueError(
+        f"more than {DRIVER_WINDOW} driver=True records: the driver would "
+        f"silently skip the oracles past its window"
+    )
+
+QUERIES: dict[str, QueryFn] = {
+    r.name: r.fn for r in sorted(RECORDS, key=lambda r: not r.driver)
 }
-
-
-# Ordering contract guard (import-time, so any regression fails fast and
-# loudly in every test run AND in the driver itself): the first
-# DRIVER_WINDOW queries are exactly the oracle-backed set.
-_window = list(QUERIES)[:DRIVER_WINDOW]
-_unverified = [q for q in _window if q not in ORACLES]
-assert not _unverified, (
-    f"oracle-backed window violated: {_unverified} sit inside the driver's "
-    f"first-{DRIVER_WINDOW} verification window without an oracle"
-)
-_outside = [q for q in list(QUERIES)[DRIVER_WINDOW:] if q in ORACLES]
-assert not _outside, (
-    f"oracle-backed queries pushed past the driver's {DRIVER_WINDOW}-entry "
-    f"verification window (would silently lose correctness rows): {_outside}"
-)
-#: catalog-name → tpch_extra.EXTRA_ORACLES key (two shapes use shorter
-#: EVERY pytest-side oracle keyed by catalog name. After the r10 sixth
-#: rotation promoted the last five swept twins (the decontamination
-#: tiers, perplexity buckets, epoch mixture, cdc_upsert) into the
-#: driver window, this is exactly the rotated-veteran set: every
-#: oracle-checkable query in the catalog has held a driver row at least
-#: once. Disjoint from ORACLES by construction (asserted below);
-#: tools/check_oracles.py folds these into its sweep so the health
-#: snapshot hash-checks every EXACT query, not only the driver window.
+ORACLES: dict[str, str] = {r.name: r.oracle for r in RECORDS if r.driver}
 PYTEST_ORACLES: dict[str, str] = {
-    **ROTATED_ORACLES,
-    # (warc_revisit_digest / sitemap_lastmod were promoted to
-    # first-time DRIVER oracles in the r12 ninth rotation, and
-    # wet_ingest / robots_sitemap_discovery / outlink_extract /
-    # host_link_graph in the late-r12 tenth — each after sweeping
-    # green at both SFs the same round)
-    # (cdx_urlkey / crawl_frontier were promoted to first-time DRIVER
-    # oracles in the r13 eleventh rotation after sweeping green at both
-    # SFs for two rounds)
-    # exact r13 newcomers awaiting the next rotation (the established
-    # queue): swept by check_oracles at every snapshot
-    "host_authority": text_queries.ORACLE_HOST_AUTHORITY,
-    "crawl_politeness": text_queries.ORACLE_CRAWL_POLITENESS,
-    "crawl_health": text_queries.ORACLE_CRAWL_HEALTH,
-    "warc_random_access": text_queries.ORACLE_WARC_RANDOM_ACCESS,
-    "frontier_refresh": text_queries.ORACLE_FRONTIER_REFRESH,
-    # (url_canonicalize was promoted to a first-time DRIVER oracle in
-    # the r11 eighth rotation after one swept-green round — the queue
-    # is empty again and this is exactly the rotated-veteran set)
-    # (the r8/r9 newcomers — eval_decontamination,
-    # eval_decontamination_fuzzy, perplexity_quality_buckets,
-    # docs_epoch_mixture, cdc_upsert — were promoted to first-time
-    # DRIVER oracles in the r10 sixth rotation; the five r10 swept
-    # newcomers — docs_dsir_weights, source_overlap_matrix,
-    # html_extract, corpus_zipf, doc_readability — were promoted to
-    # first-time DRIVER oracles in the r10-continuation seventh
-    # rotation, so this is again exactly the rotated-veteran set)
+    r.name: r.oracle for r in RECORDS if r.oracle is not None and not r.driver
 }
-
-# rotated oracles cover only past-window queries and never shadow a
-# driver oracle (a query has exactly one oracle home)
-_rot_bad = [
-    q
-    for q in ROTATED_ORACLES
-    if q in ORACLES or q not in QUERIES or q in list(QUERIES)[:DRIVER_WINDOW]
-]
-assert not _rot_bad, (
-    f"ROTATED_ORACLES entries must be past-window catalog queries with no "
-    f"driver oracle: {_rot_bad}"
-)
-_py_bad = [q for q in PYTEST_ORACLES if q in ORACLES or q not in QUERIES]
-assert not _py_bad, (
-    f"PYTEST_ORACLES entries must be registered past-window queries with "
-    f"no driver oracle: {_py_bad}"
-)

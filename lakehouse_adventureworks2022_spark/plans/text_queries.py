@@ -13,6 +13,10 @@ portability contracts:
 
 from __future__ import annotations
 
+import hashlib
+import os
+import tempfile
+
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -20,6 +24,47 @@ from pyspark.sql import functions as F
 from lakehouse_adventureworks2022_spark.operators import dedup, similarity, textops
 from lakehouse_adventureworks2022_spark.session import default_parallelism
 from lakehouse_adventureworks2022_spark.sources.readers import read_table
+
+
+# ---- persisted amortized-query state ---------------------------------
+
+#: Build-recipe tags folded into a state family's fingerprint, so a
+#: cached build of an older recipe cannot masquerade as the current one
+#: (the chunk index switched to corpus-scaled auto cells in ``-v2``).
+RAG_INDEX_RECIPE = "ivf-auto-v2"
+MP4_CORPUS_RECIPE = "mjpeg-4f-v1"
+
+#: Every family of persisted amortized-query state as
+#: ``fixture_state_dir(sf_dir, table, prefix, recipe)`` arguments.
+AMORTIZED_STATE: tuple[tuple[str, str, str | None], ...] = (
+    ("embeddings", "ivf_index_", None),
+    ("embeddings", "pq_index_", None),
+    ("embeddings", "sq8_index_", None),
+    ("embeddings", "ivf_sq8_index_", None),
+    ("embeddings", "ivf_sq8_ingest_", None),
+    ("documents", "rag_index_", RAG_INDEX_RECIPE),
+    ("documents", "rag_ingest_index_", RAG_INDEX_RECIPE),
+    ("documents", "dedup_state_", None),
+    ("documents", "mp4_corpus_", MP4_CORPUS_RECIPE),
+    ("documents", "warc_archive_", None),
+)
+
+
+def fixture_state_dir(
+    sf_dir: str, table: str, prefix: str, recipe: str | None = None
+) -> str:
+    """Deterministic per-fixture-version location (under the temp dir)
+    of one family of persisted amortized-query state: keyed to
+    ``sf_dir`` and the identity (size + mtime) of ``table``'s parquet
+    file, so a regenerated fixture gets fresh state instead of stale
+    indexes or history. ``prefix`` names the family; ``recipe``
+    versions its build."""
+    st = os.stat(os.path.join(sf_dir, f"{table}.parquet"))
+    key = f"{sf_dir}|{st.st_size}|{st.st_mtime_ns}"
+    if recipe:
+        key += f"|{recipe}"
+    tag = hashlib.md5(key.encode()).hexdigest()[:12]
+    return os.path.join(tempfile.gettempdir(), f"{prefix}{tag}")
 
 
 # ---- query functions -------------------------------------------------
@@ -96,10 +141,8 @@ def q_ann_cosine_pq_amortized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deployed-PQ shape: codes index built+persisted on first use per
     corpus version, later calls pay the compressed ADC scan + re-rank
     only. Identical results to the one-shot form (tested)."""
-    import os
-
     q, c = similarity.embedding_queries(spark, sf_dir)
-    idx = ivf_index_dir_for(sf_dir, "pq_index_")
+    idx = fixture_state_dir(sf_dir, "embeddings", "pq_index_")
     os.makedirs(idx, exist_ok=True)
     return similarity.cosine_topk_pq_amortized(q, c, idx, k=10)
 
@@ -111,28 +154,6 @@ def q_ann_cosine_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_training_ops.py."""
     q, c = similarity.embedding_queries(spark, sf_dir)
     return similarity.cosine_topk_ivf_pq(q, c, k=10)
-
-
-def ivf_index_dir_for(sf_dir: str, prefix: str = "ivf_index_") -> str:
-    """Deterministic per-corpus-version index location: keyed to the
-    embeddings file's identity (size + mtime), so a regenerated fixture
-    gets a fresh index instead of stale cells.
-
-    ``prefix`` names the index family sharing the identity key
-    (``pq_index_``, ``sq8_index_``, ``ivf_sq8_index_``,
-    ``ivf_sq8_ingest_``) — a parameter instead of the previous
-    ``.replace("ivf_index_", ...)`` string rewriting, which would
-    silently no-op (and cross-contaminate index dirs) if this
-    function's naming ever changed (r9 ADVICE)."""
-    import hashlib
-    import os
-    import tempfile
-
-    st = os.stat(os.path.join(sf_dir, "embeddings.parquet"))
-    tag = hashlib.md5(
-        f"{sf_dir}|{st.st_size}|{st.st_mtime_ns}".encode()
-    ).hexdigest()[:12]
-    return os.path.join(tempfile.gettempdir(), f"{prefix}{tag}")
 
 
 def q_packed_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -171,21 +192,6 @@ def q_corpus_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     return corpus_drift(
         docs.filter("doc_id % 2 = 0"), docs.filter("doc_id % 2 = 1")
     )
-
-
-def _dedup_state_dir_for(sf_dir: str) -> str:
-    """Per-corpus-version persisted dedup state (same fingerprint trick
-    as :func:`ivf_index_dir_for` — a regenerated fixture gets fresh
-    state, not stale history)."""
-    import hashlib
-    import os
-    import tempfile
-
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    tag = hashlib.md5(
-        f"{sf_dir}|{st.st_size}|{st.st_mtime_ns}".encode()
-    ).hexdigest()[:12]
-    return os.path.join(tempfile.gettempdir(), f"dedup_state_{tag}")
 
 
 def q_clean_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -336,8 +342,6 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Results are identical whether state is freshly built or reloaded
     (state construction is deterministic). Planted-scenario +
     plan-shape tests in tests/test_training_ops.py."""
-    import os
-
     from lakehouse_adventureworks2022_spark.operators.dedup import (
         incremental_dedup,
     )
@@ -348,7 +352,7 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = read_table(spark, sf_dir, "documents")
     hist = docs.filter("doc_id % 10 != 0")
     batch = docs.filter("doc_id % 10 == 0")
-    state_dir = _dedup_state_dir_for(sf_dir)
+    state_dir = fixture_state_dir(sf_dir, "documents", "dedup_state_")
     if not os.path.exists(f"{state_dir}/hashes/_SUCCESS"):
         init_dedup_state(hist, state_dir)
     hashes = spark.read.parquet(f"{state_dir}/hashes")
@@ -372,8 +376,6 @@ def q_incremental_dedup_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     First call per fixture builds hash/sig state + the bloom (the
     amortized-index pattern); later calls pay the gated batch cost only.
     """
-    import os
-
     from lakehouse_adventureworks2022_spark.operators.dedup import (
         incremental_dedup,
     )
@@ -385,7 +387,7 @@ def q_incremental_dedup_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = read_table(spark, sf_dir, "documents")
     hist = docs.filter("doc_id % 10 != 0")
     batch = docs.filter("doc_id % 10 == 0")
-    state_dir = _dedup_state_dir_for(sf_dir)
+    state_dir = fixture_state_dir(sf_dir, "documents", "dedup_state_")
     if not os.path.exists(f"{state_dir}/hashes/_SUCCESS"):
         init_dedup_state(hist, state_dir)
     bf = ensure_dedup_bloom(spark, state_dir)
@@ -462,7 +464,7 @@ def q_ann_cosine_ivf_amortized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     q, c = similarity.embedding_queries(spark, sf_dir)
     return similarity.cosine_topk_ivf_amortized(
-        q, c, ivf_index_dir_for(sf_dir), k=10
+        q, c, fixture_state_dir(sf_dir, "embeddings", "ivf_index_"), k=10
     )
 
 
@@ -957,24 +959,6 @@ def q_bpe_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def rag_index_dir_for(sf_dir: str, prefix: str = "rag_index_") -> str:
-    """Per-corpus-version chunk-index location (documents-file identity
-    key — same contract as ivf_index_dir_for; ``prefix`` names the
-    index family sharing the key, e.g. the ingest bench's own dir)."""
-    import hashlib
-    import os
-    import tempfile
-
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    # the recipe version is part of the key: r6 switched the deployed
-    # build to corpus-scaled auto cells, and a cached r5-era 16-cell
-    # index must not masquerade as the new recipe's output
-    tag = hashlib.md5(
-        f"{sf_dir}|{st.st_size}|{st.st_mtime_ns}|ivf-auto-v2".encode()
-    ).hexdigest()[:12]
-    return os.path.join(tempfile.gettempdir(), f"{prefix}{tag}")
-
-
 def q_rag_retrieval_amortized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deployed-retrieval twin of ``q_rag_retrieval``: the chunk index
     (chunk → vectorize → IVF) is built+persisted on first use per corpus
@@ -987,9 +971,8 @@ def q_rag_retrieval_amortized(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = read_table(spark, sf_dir, "documents")
-    centroids, cells = chunk_index_ensure(
-        spark, docs, rag_index_dir_for(sf_dir)
-    )
+    rag_idx = fixture_state_dir(sf_dir, "documents", "rag_index_", RAG_INDEX_RECIPE)
+    centroids, cells = chunk_index_ensure(spark, docs, rag_idx)
     queries = docs.filter(F.col("doc_id") % 50 == 0).select(
         (F.col("doc_id") + F.lit(5_000_000_000)).alias("query_id"),
         F.substring("text", 1, 200).alias("query_text"),
@@ -1015,8 +998,6 @@ def q_rag_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     Approximate by design (IVF probing) ⇒ rows-only; the
     append/replay/retrievability contracts are pinned in
     tests/test_vectorize.py."""
-    import os
-
     from lakehouse_adventureworks2022_spark.operators.vectorize import (
         chunk_index_append,
         chunk_index_ensure,
@@ -1024,7 +1005,9 @@ def q_rag_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = read_table(spark, sf_dir, "documents")
-    idx = rag_index_dir_for(sf_dir, "rag_ingest_index_")
+    idx = fixture_state_dir(
+        sf_dir, "documents", "rag_ingest_index_", RAG_INDEX_RECIPE
+    )
     os.makedirs(idx, exist_ok=True)
     base = docs.filter(F.col("doc_id") % 10 != 0)
     new_docs = docs.filter(F.col("doc_id") % 10 == 0).select(
@@ -1153,20 +1136,6 @@ def _harvest_frames(videos: DataFrame) -> DataFrame:
     )
 
 
-def mp4_corpus_dir_for(sf_dir: str) -> str:
-    """Per-corpus-version synthetic-MP4 location (documents-file
-    identity key — same contract as ivf_index_dir_for)."""
-    import hashlib
-    import os
-    import tempfile
-
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    tag = hashlib.md5(
-        f"{sf_dir}|{st.st_size}|{st.st_mtime_ns}|mjpeg-4f-v1".encode()
-    ).hexdigest()[:12]
-    return os.path.join(tempfile.gettempdir(), f"mp4_corpus_{tag}")
-
-
 def q_video_frame_harvest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Real MP4 frame extraction at query scale (r7, closing the r6
     "MP4 remains stubbed" gap): one-shot form — synthesizes the MJPEG
@@ -1190,9 +1159,7 @@ def q_video_frame_harvest_amortized(spark: SparkSession, sf_dir: str) -> DataFra
     the measured path is parse → decode → dHash → aggregate only —
     the operator a user actually runs over an EXISTING video corpus.
     Same result as the one-shot form (generation is deterministic)."""
-    import os
-
-    d = mp4_corpus_dir_for(sf_dir)
+    d = fixture_state_dir(sf_dir, "documents", "mp4_corpus_", MP4_CORPUS_RECIPE)
     if not os.path.exists(os.path.join(d, "_SUCCESS")):
         _synth_video_corpus(spark, sf_dir).write.mode("overwrite").parquet(d)
     # the corpus is kilobytes-per-video: without an explicit repartition
@@ -1215,8 +1182,6 @@ def q_video_keyframe_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     only from the equi-join on payload hash (never all-pairs); one
     uniform-key shuffle. Rows-only (binary by design); planted
     H.264-container differentials in tests/test_mp4.py."""
-    import os
-
     from lakehouse_adventureworks2022_spark.operators.multimodal import (
         ASSET_SCHEMA,
         video_near_dup_pairs,
@@ -1226,7 +1191,7 @@ def q_video_keyframe_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         build_mjpeg_muxer,
     )
 
-    d = mp4_corpus_dir_for(sf_dir)
+    d = fixture_state_dir(sf_dir, "documents", "mp4_corpus_", MP4_CORPUS_RECIPE)
     if not os.path.exists(os.path.join(d, "_SUCCESS")):
         _synth_video_corpus(spark, sf_dir).write.mode("overwrite").parquet(d)
     videos = spark.read.parquet(d).repartition(default_parallelism(spark))
@@ -1268,9 +1233,8 @@ def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = read_table(spark, sf_dir, "documents")
-    centroids, cells = chunk_index_ensure(
-        spark, docs, rag_index_dir_for(sf_dir)
-    )
+    rag_idx = fixture_state_dir(sf_dir, "documents", "rag_index_", RAG_INDEX_RECIPE)
+    centroids, cells = chunk_index_ensure(spark, docs, rag_idx)
     queries = docs.filter(F.col("doc_id") % 50 == 0).select(
         (F.col("doc_id") + F.lit(5_000_000_000)).alias("query_id"),
         F.substring("text", 1, 200).alias("query_text"),
@@ -1311,9 +1275,8 @@ def q_hybrid_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("doc_id") + F.lit(5_000_000_000)).alias("query_id"),
         F.substring("text", 1, 200).alias("query_text"),
     )
-    centroids, cells = chunk_index_ensure(
-        spark, docs, rag_index_dir_for(sf_dir)
-    )
+    rag_idx = fixture_state_dir(sf_dir, "documents", "rag_index_", RAG_INDEX_RECIPE)
+    centroids, cells = chunk_index_ensure(spark, docs, rag_idx)
     vec = retrieval_search(queries, centroids, cells, k=10)
     # BM25 index persisted beside the vector index (built once per
     # corpus version — the deployed lexical-leg shape). The fixture
@@ -1323,7 +1286,7 @@ def q_hybrid_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
         bm25_index_ensure,
     )
 
-    idx = rag_index_dir_for(sf_dir) + "_bm25"
+    idx = rag_idx + "_bm25"
     # lazy plan — costs nothing when ensure() finds the persisted index
     chunks = chunk_documents(
         docs, chunk_tokens=64, overlap_tokens=8
@@ -2014,10 +1977,8 @@ def q_ann_cosine_sq8_amortized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deployed-SQ8 shape: params+codes index built+persisted on first
     use per corpus version; later calls pay the compressed scan +
     re-rank only. Identical results to the one-shot form (tested)."""
-    import os
-
     q, c = similarity.embedding_queries(spark, sf_dir)
-    idx = ivf_index_dir_for(sf_dir, "sq8_index_")
+    idx = fixture_state_dir(sf_dir, "embeddings", "sq8_index_")
     os.makedirs(idx, exist_ok=True)
     return similarity.cosine_topk_sq8_amortized(q, c, idx, k=10)
 
@@ -2038,10 +1999,8 @@ def q_ann_cosine_ivf_sq8_amortized(spark: SparkSession, sf_dir: str) -> DataFram
     first use per corpus version; steady state pays the probe-pruned
     compressed scan + re-rank only. Identical results to the one-shot
     form (tested)."""
-    import os
-
     q, c = similarity.embedding_queries(spark, sf_dir)
-    idx = ivf_index_dir_for(sf_dir, "ivf_sq8_index_")
+    idx = fixture_state_dir(sf_dir, "embeddings", "ivf_sq8_index_")
     os.makedirs(idx, exist_ok=True)
     return similarity.cosine_topk_ivf_sq8_amortized(q, c, idx, k=10)
 
@@ -2060,10 +2019,8 @@ def q_ivf_sq8_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     must never see these appends. Approximate by design ⇒ rows-only;
     the append/replay/searchability contracts are pinned in
     tests/test_training_ops.py."""
-    import os
-
     q, c = similarity.embedding_queries(spark, sf_dir)
-    idx = ivf_index_dir_for(sf_dir, "ivf_sq8_ingest_")
+    idx = fixture_state_dir(sf_dir, "embeddings", "ivf_sq8_ingest_")
     os.makedirs(idx, exist_ok=True)
     newv = c.filter(F.col("vec_id") % 10 == 0).select(
         (F.col("vec_id") + F.lit(1_000_000)).alias("vec_id"), "embedding"
@@ -2819,21 +2776,6 @@ ORACLE_CRAWL_HEALTH = """
 """
 
 
-def _warc_archive_dir_for(sf_dir: str) -> str:
-    """Per-fixture-version persisted WARC archive (the
-    ``ivf_index_dir_for`` fingerprint trick — a regenerated fixture
-    gets a fresh archive, never stale captures)."""
-    import hashlib
-    import os
-    import tempfile
-
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    tag = hashlib.md5(
-        f"{sf_dir}|{st.st_size}|{st.st_mtime_ns}".encode()
-    ).hexdigest()[:12]
-    return os.path.join(tempfile.gettempdir(), f"warc_archive_{tag}")
-
-
 def q_warc_random_access(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Amortized random-access capture fetch (r13): a persisted WARC
     archive (one ``.warc.gz`` per 16-group of docs + its CDX parquet,
@@ -2848,8 +2790,6 @@ def q_warc_random_access(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly the ``doc_id % 50 = 0`` rows from ``documents`` — a fetch
     that slices the wrong range, drops a hit, or returns a stale
     record diverges the hash."""
-    import os
-
     from lakehouse_adventureworks2022_spark.sources.warc import (
         build_warc_codec,
         cdx_records,
@@ -2857,7 +2797,7 @@ def q_warc_random_access(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_warc,
     )
 
-    d = _warc_archive_dir_for(sf_dir)
+    d = fixture_state_dir(sf_dir, "documents", "warc_archive_")
     success = os.path.join(d, "_SUCCESS")
     if not os.path.exists(success):
         os.makedirs(d, exist_ok=True)

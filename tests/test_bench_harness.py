@@ -119,9 +119,9 @@ def test_bench_purges_amortized_state_and_records_reps(
     (sf_dir / "embeddings.parquet").write_bytes(b"y")
     monkeypatch.setenv("SPARK_GRAFT_SF_DIR", str(sf_dir))
     fake_state = [
-        tq.ivf_index_dir_for(str(sf_dir), "pq_index_"),
-        tq._dedup_state_dir_for(str(sf_dir)),
-        tq._warc_archive_dir_for(str(sf_dir)),
+        tq.fixture_state_dir(str(sf_dir), "embeddings", "pq_index_"),
+        tq.fixture_state_dir(str(sf_dir), "documents", "dedup_state_"),
+        tq.fixture_state_dir(str(sf_dir), "documents", "warc_archive_"),
     ]
     for d in fake_state:
         os.makedirs(d, exist_ok=True)
@@ -147,6 +147,38 @@ def test_bench_purges_amortized_state_and_records_reps(
     # per ATTEMPT (steal-dirty reps re-run up to reps+extra times, and
     # their attempts are recorded too)
     assert 2 <= len(side["query_stats"]["top_products"]["reps_sec"]) <= 4
+
+
+def test_amortized_state_dirs_keep_their_fingerprint_paths(sf_dir):
+    """Every amortized-state family resolves to the same path as the
+    per-family helpers it replaced: md5 of ``sf_dir|size|mtime_ns`` plus
+    the family's recipe suffix, first 12 hex chars, under the temp dir.
+    A changed path would orphan the persisted state on a warm machine
+    and leave it behind the bench purge."""
+    import hashlib
+    import os
+    import tempfile
+
+    from lakehouse_adventureworks2022_spark.plans import text_queries as tq
+
+    def old(table, prefix, suffix=""):
+        st = os.stat(os.path.join(sf_dir, f"{table}.parquet"))
+        key = f"{sf_dir}|{st.st_size}|{st.st_mtime_ns}{suffix}"
+        tag = hashlib.md5(key.encode()).hexdigest()[:12]
+        return os.path.join(tempfile.gettempdir(), f"{prefix}{tag}")
+
+    assert [tq.fixture_state_dir(sf_dir, *fam) for fam in tq.AMORTIZED_STATE] == [
+        old("embeddings", "ivf_index_"),
+        old("embeddings", "pq_index_"),
+        old("embeddings", "sq8_index_"),
+        old("embeddings", "ivf_sq8_index_"),
+        old("embeddings", "ivf_sq8_ingest_"),
+        old("documents", "rag_index_", "|ivf-auto-v2"),
+        old("documents", "rag_ingest_index_", "|ivf-auto-v2"),
+        old("documents", "dedup_state_"),
+        old("documents", "mp4_corpus_", "|mjpeg-4f-v1"),
+        old("documents", "warc_archive_"),
+    ]
 
 
 def test_bench_survives_broken_warmup(spark, monkeypatch, capsys, tmp_path):

@@ -4,13 +4,24 @@ sf0.001 (the driver runs the same comparison at sf0.01 — SURVEY.md §5.1).
 
 from __future__ import annotations
 
+import hashlib
+import json
+from pathlib import Path
+
 import duckdb
 import pytest
 
-from lakehouse_adventureworks2022_spark.plans.catalog import ORACLES, QUERIES
+from lakehouse_adventureworks2022_spark.plans.catalog import (
+    ORACLES,
+    PYTEST_ORACLES,
+    QUERIES,
+    RECORDS,
+    Query,
+)
 from tools.check_oracles import TABLES, canonical_hash, normalize_pandas
 
 SF = "/root/testdata/sf0.001"
+SNAPSHOT = Path(__file__).with_name("catalog_snapshot.json")
 
 
 @pytest.fixture(scope="module")
@@ -24,14 +35,45 @@ def duck():
     con.close()
 
 
-def test_all_queries_have_oracles_or_are_declared_approx():
-    from lakehouse_adventureworks2022_spark.plans.catalog import NON_ORACLE_QUERIES
+def test_registry_matches_snapshot():
+    """The tables derived from ``RECORDS`` reproduce the frozen registry
+    in tests/catalog_snapshot.json: the ordered ``QUERIES`` names, the
+    byte-identical SQL of each driver and pytest oracle, the rows-only
+    set and the bench headline set. Registering or moving a query is a
+    deliberate change to that file."""
+    import bench
 
-    missing = set(QUERIES) - set(ORACLES)
-    assert missing == set(NON_ORACLE_QUERIES), (
-        f"queries without oracle not declared in NON_ORACLE_QUERIES: "
-        f"{missing ^ set(NON_ORACLE_QUERIES)}"
+    snap = json.loads(SNAPSHOT.read_text())
+
+    def sha(sql: str) -> str:
+        return hashlib.sha256(sql.encode()).hexdigest()
+
+    assert list(QUERIES) == snap["queries"]
+    assert {k: sha(v) for k, v in ORACLES.items()} == snap["oracles"]
+    assert {k: sha(v) for k, v in PYTEST_ORACLES.items()} == snap["pytest_oracles"]
+    assert sorted(r.name for r in RECORDS if r.rows_only) == snap["rows_only"]
+    assert sorted(bench.HEADLINE) == snap["headline"]
+
+
+def test_all_queries_have_oracles_or_are_declared_approx():
+    """Every registered query is either oracle-backed (driver window or
+    pytest sweep) or declares why it has no twin — never neither."""
+    missing = set(QUERIES) - set(ORACLES) - set(PYTEST_ORACLES)
+    declared = {r.name for r in RECORDS if r.rows_only}
+    assert missing == declared, (
+        f"queries without oracle not declared rows_only: {missing ^ declared}"
     )
+    assert all(r.rows_only.strip() for r in RECORDS if r.rows_only)
+
+
+def test_record_needs_exactly_one_of_oracle_or_rows_only():
+    fn = QUERIES["top_products"]
+    with pytest.raises(ValueError):
+        Query("x", fn)
+    with pytest.raises(ValueError):
+        Query("x", fn, oracle="SELECT 1", rows_only="approximate")
+    with pytest.raises(ValueError):
+        Query("x", fn, rows_only="approximate", driver=True)
 
 
 def test_every_oracle_backed_query_inside_driver_window():
@@ -67,19 +109,9 @@ def test_coverage_md_totals_match_catalog():
     from the catalog imports and fail on any mismatch, so the ledger
     stays correct BY CONSTRUCTION."""
     import re
-    from pathlib import Path
-
-    from lakehouse_adventureworks2022_spark.plans.catalog import (
-        PYTEST_ORACLES,
-        ROTATED_ORACLES,
-    )
 
     total = len(QUERIES)
-    hash_verified = (
-        len(ORACLES)
-        + len(ROTATED_ORACLES)
-        + len(set(PYTEST_ORACLES) - set(ROTATED_ORACLES))
-    )
+    hash_verified = len(ORACLES) + len(PYTEST_ORACLES)
     rows_only = total - hash_verified
 
     text = Path(__file__).resolve().parent.parent.joinpath(

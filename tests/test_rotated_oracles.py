@@ -1,8 +1,7 @@
-"""r6-rotated oracle queries vs DuckDB — the 8 long-stable window
-queries (driver-green r1–r5) that gave up their 50-slot window seats to
-first-time oracles keep EXACTLY the driver's comparison here: row count
-+ schema (column names, normalized dtypes) + order-insensitive value
-hash (SURVEY.md §5.1; rotation pattern per the r5 verdict)."""
+"""Past-window oracle queries vs DuckDB: every exact catalog query
+outside the driver's 50-slot window (``PYTEST_ORACLES``) keeps EXACTLY
+the driver's comparison here: row count + schema (column names,
+normalized dtypes) + order-insensitive value hash (SURVEY.md §5.1)."""
 
 from __future__ import annotations
 
@@ -12,123 +11,15 @@ import pytest
 from lakehouse_adventureworks2022_spark.plans.catalog import (
     DRIVER_WINDOW,
     ORACLES,
+    PYTEST_ORACLES,
     QUERIES,
-    ROTATED_ORACLES,
+    RECORDS,
 )
 from tools.check_oracles import TABLES, canonical_hash, normalize_pandas
 
-#: Both the pytest fixture SF and the DRIVER's verification SF: the
-#: rotated queries held driver-green rows at sf0.01 for five rounds, so
-#: the replacement evidence must not be weaker than what it replaced.
+#: Both the pytest fixture SF and the DRIVER's verification SF, so the
+#: evidence for a past-window query is not weaker than a driver row.
 SFS = ("/root/testdata/sf0.001", "/root/testdata/sf0.01")
-
-# the rotation set is fixed: anything newly rotated out must be added
-# here (and the assert below makes forgetting loud)
-ROTATED = (
-    "dim_date",
-    "incremental_read",
-    "watermark_state",
-    "flatten_props",
-    "doc_fingerprint",
-    "dq_null_profile",
-    "dq_orderkey_integrity",
-    "dq_lineitem_pk",
-    # late-r6 second rotation: slots freed for the hard TPC-H-extra
-    # shapes, user_value_moving_stats and heavy_hitters_event_types
-    "token_counts",
-    "lang_id",
-    "customers_without_orders",
-    "repeat_customers",
-    "user_churn_set_ops",
-    "daily_event_pivot",
-    "tpch_q6_forecast_revenue",
-    # r7 third rotation: slots freed for the nine never-driver-verified
-    # training-data/monitoring shapes (chunk_documents, dedup_clusters,
-    # remove_repeated_spans, clean_boilerplate, ngram_repetition,
-    # doc_perplexity, corpus_drift, embedding_drift, event_anomalies)
-    "dim_customer_geo",
-    "fact_sales",
-    "latest_event_per_user",
-    "dedup_exact",
-    "tpch_q1",
-    "tpch_q3",
-    "silver_lineitem_enriched",
-    "event_value_stats",
-    "xml_roundtrip",
-    # late-r7 second rotation: slots freed for the four new curation
-    # twins (pii_scrub, normalize_text, domain_census,
-    # docs_capped_per_source)
-    "sales_rollup",
-    "event_sessions",
-    "customer_order_distribution",
-    "nation_top_customers",
-    # late-r7 third rotation: slots freed for the ex-scale-killer plans
-    # tpch_q22_idle_balances / tpch_q11_important_parts, the
-    # EXISTS/top-supplier shapes tpch_q4 / tpch_q15, and the
-    # longest-swept exact twins docs_hash_sample / dim_supplier_geo
-    "top_products",
-    "sales_summary",
-    "event_windows",
-    "tpch_q5",
-    "tpch_q8_market_share",
-    "late_shipment_priority",
-    # r8 fifth rotation: slots freed for the last six
-    # never-driver-verified oracles (docs_sample_exact_n,
-    # docs_stratified_sample, dq_expectations_orders, and
-    # tpch_q19/q12/q16) — after which every oracle-checkable query in
-    # the catalog has held a driver row at least once
-    "dedup_ngram_jaccard_exact",
-    "clean_corpus",
-    "revenue_grouping_sets",
-    "corpus_report",
-    "event_windows_sliding",
-    "priority_revenue_share",
-    # r10 sixth rotation: slots freed for the five exact queries that
-    # were swept but never held a driver CORRECTNESS row
-    # (eval_decontamination, eval_decontamination_fuzzy,
-    # perplexity_quality_buckets, docs_epoch_mixture, cdc_upsert)
-    "text_stats",
-    "ann_cosine_topk",
-    "tpch_q7_nation_volume",
-    "tpch_q10_returned_items",
-    "tpch_q14_promo_revenue_ratio",
-    # r10-continuation seventh rotation: slots freed for the five exact
-    # swept newcomers (docs_dsir_weights, source_overlap_matrix,
-    # html_extract, corpus_zipf, doc_readability)
-    "docs_hash_sample",
-    "dim_supplier_geo",
-    "chunk_documents",
-    "temperature_mixture",
-    "dedup_clusters",
-    # r11 eighth rotation: slots freed for the exact r11 newcomers
-    # url_canonicalize, warc_ingest and sitemap_extract (all swept-green
-    # the same round)
-    "corpus_vocabulary",
-    "heavy_hitters_event_types",
-    "dedup_simhash",
-    # r12 ninth rotation: slots freed for the exact r12 newcomers
-    # warc_revisit_digest and sitemap_lastmod (both swept green at two
-    # SFs the same round); text-quality / LM-scoring window evidence
-    # continues via html_extract/corpus_zipf/doc_readability and
-    # perplexity_quality_buckets
-    "ngram_repetition",
-    "doc_perplexity",
-    # late-r12 tenth rotation: slots freed for the exact late-r12
-    # newcomers wet_ingest / robots_sitemap_discovery /
-    # outlink_extract / host_link_graph (all swept green at two SFs
-    # the same round); sampling/monitoring/scrub/SCD2 window evidence
-    # continues via docs_sample_exact_n + docs_capped_per_source +
-    # docs_epoch_mixture, embedding_drift + event_anomalies,
-    # normalize_text + domain_census, and scd2_part_dimension +
-    # asof_click_attribution respectively
-    "docs_stratified_sample",
-    "corpus_drift",
-    "pii_scrub",
-    "scd2_part_price_asof",
-    # r13 eleventh rotation: slots freed for cdx_urlkey / crawl_frontier
-    "remove_repeated_spans",
-    "clean_boilerplate",
-)
 
 
 @pytest.fixture(scope="module", params=SFS)
@@ -144,20 +35,22 @@ def duck(request):
 
 
 def test_rotated_set_is_exactly_the_catalog_rotation():
-    assert set(ROTATED) == set(ROTATED_ORACLES)
-    # every rotated query is still registered, past the window, and has
-    # exactly one oracle home
+    """The pytest sweep holds exactly the oracle-backed records outside
+    the driver window: each still registered, past the window, and with
+    exactly one oracle home."""
+    rotated = {r.name for r in RECORDS if r.oracle is not None and not r.driver}
+    assert rotated == set(PYTEST_ORACLES)
     past_window = set(list(QUERIES)[DRIVER_WINDOW:])
-    for name in ROTATED:
+    for name in rotated:
         assert name in past_window
         assert name not in ORACLES
 
 
-@pytest.mark.parametrize("name", sorted(ROTATED))
+@pytest.mark.parametrize("name", sorted(PYTEST_ORACLES))
 def test_rotated_query_matches_oracle(spark, duck, name):
     sf, con = duck
     spark_pdf = normalize_pandas(QUERIES[name](spark, sf).toPandas())
-    duck_pdf = normalize_pandas(con.sql(ROTATED_ORACLES[name]).df())
+    duck_pdf = normalize_pandas(con.sql(PYTEST_ORACLES[name]).df())
     n_s, cols_s, h_s = canonical_hash(spark_pdf)
     n_d, cols_d, h_d = canonical_hash(duck_pdf)
     assert (n_s, cols_s, h_s) == (n_d, cols_d, h_d)

@@ -265,6 +265,22 @@ def test_boilerplate_counts_distinct_docs_not_occurrences(spark):
     assert "repeated inside one doc" in out[1]["text"]
 
 
+def test_boilerplate_null_text_kept_as_empty(spark):
+    """A doc whose text is NULL explodes to no lines: it is kept, comes
+    back with empty text, and counts no removed lines."""
+    rows = [(d, f"Accept cookies to continue\nbody of doc {d}") for d in (1, 2, 3)]
+    rows += [(4, None)]
+    docs = spark.createDataFrame(rows, "doc_id int, text string")
+    out = {
+        r["doc_id"]: r
+        for r in textops.remove_boilerplate_lines(docs, min_docs=3).collect()
+    }
+    assert sorted(out) == [1, 2, 3, 4]
+    assert out[4]["text"] == ""
+    assert out[4]["n_boilerplate_removed"] == 0
+    assert out[1]["n_boilerplate_removed"] == 1  # the inventory still ran
+
+
 def test_boilerplate_passthrough_columns_and_rowcount(spark):
     docs = read_table(spark, SF, "documents")
     out = textops.remove_boilerplate_lines(docs)

@@ -227,7 +227,7 @@ def main() -> None:
             incremental_dedup_gate_stage,
         )
         from lakehouse_adventureworks2022_spark.plans.text_queries import (
-            _dedup_state_dir_for,
+            fixture_state_dir,
         )
         from lakehouse_adventureworks2022_spark.sources.readers import (
             read_table,
@@ -240,7 +240,7 @@ def main() -> None:
         docs = read_table(spark, sf_dir, "documents")
         hist = docs.filter("doc_id % 10 != 0")
         batch = docs.filter("doc_id % 10 == 0")
-        state_dir = _dedup_state_dir_for(sf_dir)
+        state_dir = fixture_state_dir(sf_dir, "documents", "dedup_state_")
         if not _os.path.exists(f"{state_dir}/hashes/_SUCCESS"):
             init_dedup_state(hist, state_dir)
         hashes = spark.read.parquet(f"{state_dir}/hashes")

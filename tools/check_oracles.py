@@ -104,9 +104,9 @@ def main() -> int:
             failures.append(name)
             continue
         # driver oracles hash-check like the driver; pytest-side
-        # oracles (rotated window veterans + TPC-H-extra) hash-check
-        # with the same comparison so the health sweep covers every
-        # EXACT query — truly approximate queries stay rows-only
+        # oracles (the exact past-window queries) hash-check with the
+        # same comparison so the health sweep covers every EXACT
+        # query — rows-only queries stay rows-only
         oracle = ORACLES.get(name) or PYTEST_ORACLES.get(name)
         tag = "" if name in ORACLES else " (pytest-oracle)"
         if oracle is None:
