@@ -45,7 +45,7 @@ from lakehouse_adventureworks2022_spark.operators.similarity import (  # noqa: F
     cosine_topk_ivf_pq,
     cosine_topk_pq,
     ivf_build,
-    ivf_search,
+    search_index,
     semdedup,
 )
 from lakehouse_adventureworks2022_spark.operators.textops import (  # noqa: F401

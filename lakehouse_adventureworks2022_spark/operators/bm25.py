@@ -126,8 +126,10 @@ def bm25_index_ensure(
 ) -> tuple[DataFrame, DataFrame]:
     """Load the persisted inverted index at ``index_dir``, building and
     saving it first if absent — the deployed lexical-search shape
-    (build once per corpus version; the build is deterministic). Same
-    contract as ``similarity.ivf_index_ensure``."""
+    (build once per corpus version; the build is deterministic). The
+    dir is keyed to the corpus version by the caller; unlike the
+    manifest-committed vector indexes (``vector_index.ensure_index``)
+    it records no build params."""
     import os
 
     if not os.path.exists(f"{index_dir}/stats/_SUCCESS"):

@@ -263,18 +263,16 @@ def value_anomalies(
     )
 
 
-def ivf_ingest_drift(spark, index_dir: str, table: str = "cells") -> DataFrame:
-    """Per-cell occupancy drift of an ingest-grown IVF-family index:
-    the BASE table's cell-share distribution vs the distribution of all
-    COMMITTED appended batches (r10 — the online re-train trigger the
-    recall-vs-append-fraction sweep in SCALE.md calls for: recall decay
-    under frozen centroids is a DRIFT phenomenon, and drifted appends
-    show up as appended mass piling into cells out of proportion to the
-    base long before recall is measurably gone).
-
-    ``table`` = ``"cells"`` (plain IVF / chunk indexes) or ``"codes"``
-    (SQ8 tiers) — the append layout is identical
-    (``<table>_appends/<tag>`` batch dirs, ``_SUCCESS``-gated).
+def ivf_ingest_drift(spark, index_dir: str) -> DataFrame:
+    """Per-cell occupancy drift of an ingest-grown ivf index (any
+    codec): the BASE rows' cell-share distribution vs the distribution
+    of all COMMITTED appended batches (r10 — the online re-train
+    trigger the recall-vs-append-fraction sweep in SCALE.md calls for:
+    recall decay under frozen centroids is a DRIFT phenomenon, and
+    drifted appends show up as appended mass piling into cells out of
+    proportion to the base long before recall is measurably gone).
+    Both sides come from ``vector_index.load_index``, so only batches
+    the manifest committed count.
 
     Output: one row per cell —
     ``(cell, n_base, n_appended, share_base, share_appended,
@@ -285,22 +283,14 @@ def ivf_ingest_drift(spark, index_dir: str, table: str = "cells") -> DataFrame:
     Shape: two cell-keyed count aggregations over cell-clustered
     parquet (footer-sorted scans, map-side combine) + one join on the
     bounded cell key — never reads embeddings/codes payload columns."""
-    import os
+    from lakehouse_adventureworks2022_spark.operators.vector_index import (
+        load_index,
+    )
 
-    base = spark.read.parquet(f"{index_dir}/{table}")
-    appends_dir = f"{index_dir}/{table}_appends"
-    committed = []
-    if os.path.isdir(appends_dir):
-        committed = sorted(
-            os.path.join(appends_dir, n)
-            for n in os.listdir(appends_dir)
-            if not n.startswith((".", "_"))
-            and os.path.exists(os.path.join(appends_dir, n, "_SUCCESS"))
-        )
-    if committed:
-        appended = spark.read.parquet(*committed)
-    else:
-        appended = base.limit(0)  # no appends yet: zero drift by definition
+    index = load_index(spark, index_dir)
+    base = index.base
+    # no appends yet: zero drift by definition
+    appended = base.limit(0) if index.appended is None else index.appended
 
     def _shares(df: DataFrame, n_name: str, s_name: str) -> DataFrame:
         counts = df.groupBy("cell").agg(F.count(F.lit(1)).alias(n_name))

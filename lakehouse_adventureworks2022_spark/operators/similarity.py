@@ -20,6 +20,11 @@ Three tiers, same semantics, different scale points:
   deterministically from md5 bits so re-runs (and the oracle, if ever
   needed) agree. Approximate by design ⇒ rows-only check.
 
+The indexed tiers (IVF, PQ, SQ8 and their IVF compositions) are one
+:class:`VectorIndex` of kind ``(coarse, codec)`` searched by one
+:func:`search_index`; the one-shot ``cosine_topk_*`` forms build it in
+memory, ``operators/vector_index.py`` persists it behind a manifest.
+
 At 1000-executor scale: queries broadcast (they are the small side by
 definition); candidates stay partitioned; per-partition top-k via the
 window collapses to a final k·|queries| merge — no all-to-all shuffle of
@@ -28,7 +33,10 @@ the corpus.
 
 from __future__ import annotations
 
-from typing import Iterator
+import operator
+from dataclasses import dataclass
+from functools import reduce
+from typing import Any, Iterator
 
 import pandas as pd
 
@@ -71,6 +79,18 @@ def _cosine(a, b):
     return dot / (na * nb)
 
 
+def _rank_topk(scored: DataFrame, score: str, k: int) -> DataFrame:
+    """Per-query top-k of a ``(query_id, cand_id, <score>)`` frame —
+    the window every tier ends with: ``score`` desc, ``cand_id`` asc
+    (deterministic ties), ranks 1..k."""
+    w = Window.partitionBy("query_id").orderBy(F.desc(score), F.asc("cand_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w).cast("int"))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "cand_id", "rank", score)
+    )
+
+
 def cosine_topk(
     queries: DataFrame, candidates: DataFrame, k: int = 10
 ) -> DataFrame:
@@ -97,12 +117,7 @@ def cosine_topk(
             _cosine(F.col("qv"), F.col("cv")).alias("cosine"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("cand_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "cand_id", "rank", "cosine")
-    )
+    return _rank_topk(scored, "cosine", k)
 
 
 def cosine_topk_np(
@@ -151,13 +166,8 @@ def cosine_topk_np(
     partials = candidates.select("vec_id", "embedding").mapInPandas(
         score, schema=out_schema
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("cand_id"))
-    return (
-        partials.filter(F.col("cosine") != float("-inf"))  # masked self rows
-        .withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "cand_id", "rank", "cosine")
-    )
+    # drop the masked self rows
+    return _rank_topk(partials.filter(F.col("cosine") != float("-inf")), "cosine", k)
 
 
 def _srp_plane(t: int, p: int, dim: int) -> list[float]:
@@ -263,12 +273,7 @@ def cosine_topk_lsh(
     scored = pairs.select(
         "query_id", "cand_id", _cosine(F.col("qv"), F.col("cv")).alias("cosine")
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("cand_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "cand_id", "rank", "cosine")
-    )
+    return _rank_topk(scored, "cosine", k)
 
 
 def _safe_norms_np(m):
@@ -281,13 +286,301 @@ def _safe_norms_np(m):
     return n
 
 
+# ---- the one index shape every approximate tier shares ----------------
+
+#: score column each codec ranks its scan by (raw vectors score exactly)
+_SCORE = {"raw": "cosine", "pq": "adc_cosine", "sq8": "approx_cosine"}
+
+
+@dataclass(eq=False)
+class VectorIndex:
+    """One ANN index of kind ``(coarse, codec)``: ``coarse`` ∈ {none,
+    ivf} says WHICH rows a query scans (all of them, or the rows of its
+    ``n_probe`` nearest cells); ``codec`` ∈ {raw, sq8, pq} says WHAT a
+    scanned row holds (the vector, 1-byte-per-dim codes, or ``m``
+    subspace codes).
+
+    ``base`` (plus ``appended``: the committed ingest batches of a
+    persisted index) holds the encoded rows —
+    ``(cand_id, embedding | codes + vnorm[, cell])``. The driver-side
+    state is kilobytes: ``centroids`` (n_cells × dim unit rows),
+    ``codebooks`` (m × n_codes × sub_d), ``mins``/``scales`` (SQ8, d
+    floats each). The one-shot ``cosine_topk_*`` forms build one in
+    memory; ``vector_index`` persists and reopens them; both search
+    through :func:`search_index`, so the two forms agree by
+    construction (REPOSE's shape: partition-local scan, global top-k
+    merge)."""
+
+    coarse: str = "none"
+    codec: str = "raw"
+    base: DataFrame | None = None
+    appended: DataFrame | None = None
+    centroids: Any = None
+    codebooks: Any = None
+    mins: list | None = None
+    scales: list | None = None
+
+    @property
+    def data(self) -> DataFrame:
+        """Every indexed row: the base plus the committed appends."""
+        if self.appended is None:
+            return self.base
+        return self.base.unionByName(self.appended)
+
+
+def _build_index(
+    candidates: DataFrame,
+    coarse: str = "none",
+    codec: str = "raw",
+    n_cells: int | None = 16,
+    train_cap: int | None = 2048,
+    m: int = 16,
+    n_codes: int = 32,
+) -> VectorIndex:
+    """Train and encode a ``(coarse, codec)`` index over
+    ``(vec_id, embedding)`` candidates, in memory. Every trainer is
+    deterministic (hash-ordered samples, fixed iterations), so rebuilds
+    agree bit-for-bit. ``n_cells``/``train_cap`` None = corpus-scaled
+    cells (:func:`ivf_build_auto`)."""
+    if coarse not in ("none", "ivf") or codec not in _SCORE:
+        raise ValueError(f"unknown index kind ({coarse!r}, {codec!r})")
+    index = VectorIndex(coarse, codec)
+    if coarse == "ivf" and (n_cells is None or train_cap is None):
+        centroids, _ = ivf_build_auto(candidates, n_cells=n_cells, train_cap=train_cap)
+        index.centroids = _centroid_matrix(centroids)
+    elif coarse == "ivf":
+        index.centroids = _ivf_train(candidates, n_cells=n_cells, train_cap=train_cap)
+    if codec == "pq":
+        index.codebooks = _pq_train(candidates, m=m, n_codes=n_codes, train_cap=train_cap)
+    elif codec == "sq8":
+        # composed builds already know the dimension: skip sq8_train's probe
+        dim = None if index.centroids is None else index.centroids.shape[1]
+        index.mins, index.scales = sq8_train(candidates, dim=dim)
+    index.base = _encode(index, candidates)
+    return index
+
+
+def _encode(index: VectorIndex, vectors: DataFrame) -> DataFrame:
+    """``(vec_id, embedding)`` rows in ``index``'s stored form under its
+    FROZEN state — nearest cell (ivf), then the codec. Builds and
+    appends share it, so an appended row is exactly what a rebuild
+    under the same state would have stored."""
+    if index.coarse == "ivf":
+        vectors = _assign_cells_df(vectors, index.centroids)
+    if index.codec == "pq":
+        return _pq_encode(index.codebooks, vectors)
+    id_col = "cand_id" if "cand_id" in vectors.columns else "vec_id"
+    if index.codec == "sq8":
+        extra = ("cell",) if index.coarse == "ivf" else ()
+        return sq8_encode(
+            vectors, index.mins, index.scales, id_col=id_col, extra_cols=extra
+        )
+    if id_col == "vec_id":
+        return vectors.select(F.col("vec_id").alias("cand_id"), "embedding")
+    return vectors
+
+
+def _probe_rows(index: VectorIndex, qrows, n_probe: int) -> tuple[list, list | None]:
+    """Driver-side per-query probe rows and the probed cell set (None
+    when ``coarse`` is none). A row is ``(query_id[, cell], payload…)``
+    — one per (query, probed cell) — where the payload is what the
+    codec's score needs: the raw query vector; the PQ lookup table
+    ``LUT[sub][code] = dot(q_sub, centroid)`` of the normalized query;
+    or the SQ8 decomposition ``dot(q, dequant(c)) = qmin + Σ
+    (q_i·scale_i)·code_i`` with the query norm. Bounded by query_cap ×
+    n_probe rows — broadcast-sized by construction."""
+    import numpy as np
+
+    qm = np.array([r["embedding"] for r in qrows], dtype=np.float64)
+    qm_n = qm / _safe_norms_np(qm)
+    if index.codec == "raw":
+        payload = [([float(x) for x in q],) for q in qm]
+    elif index.codec == "pq":
+        n_sub, _, sub_d = index.codebooks.shape
+        payload = [
+            (
+                [
+                    float(x)
+                    for s in range(n_sub)
+                    for x in index.codebooks[s] @ q[s * sub_d : (s + 1) * sub_d]
+                ],
+            )
+            for q in qm_n
+        ]
+    else:
+        mn = np.asarray(index.mins, dtype=np.float64)
+        sc = np.asarray(index.scales, dtype=np.float64)
+        payload = [
+            ([float(x) for x in q * sc], float(q @ mn), float(np.sqrt(q @ q)))
+            for q in qm
+        ]
+    qids = [int(r["vec_id"]) for r in qrows]
+    if index.coarse == "none":
+        return [(qid, *p) for qid, p in zip(qids, payload)], None
+    probe_idx = np.argsort(-(qm_n @ index.centroids.T), axis=1)[:, :n_probe]
+    rows = [
+        (qid, int(c), *p)
+        for qid, p, cells in zip(qids, payload, probe_idx)
+        for c in cells
+    ]
+    return rows, sorted({int(c) for cells in probe_idx for c in cells})
+
+
+def _score_col(index: VectorIndex):
+    """The codec's per-row score against the probe payload: exact
+    cosine (raw); ADC-dot / vnorm as a codegen'd fixed-length sum of
+    LUT lookups (pq); the dequantized cosine against the stored exact
+    ``vnorm`` (sq8). Pure Catalyst — no UDF in the scan."""
+    if index.codec == "raw":
+        return _cosine(F.col("qv"), F.col("embedding").cast("array<double>"))
+    if index.codec == "pq":
+        n_sub, n_codes, _ = index.codebooks.shape
+        adc = reduce(
+            operator.add,
+            [
+                F.element_at(
+                    F.col("lut"),
+                    (
+                        F.lit(s * n_codes) + F.element_at(F.col("codes"), s + 1) + 1
+                    ).cast("int"),
+                )
+                for s in range(n_sub)
+            ],
+        )
+        return adc / F.when(F.col("vnorm") > 0, F.col("vnorm")).otherwise(1.0)
+    dot = F.col("qmin") + F.aggregate(
+        F.zip_with(F.col("qs"), F.col("codes"), lambda x, c: x * c),
+        F.lit(0.0),
+        lambda s, x: s + x,
+    )
+    return dot / (F.col("qnorm") * F.col("vnorm"))
+
+
+_PAYLOAD_SCHEMA = {
+    "raw": "qv array<double>",
+    "pq": "lut array<double>",
+    "sq8": "qs array<double>, qmin double, qnorm double",
+}
+
+
+def _scan(
+    index: VectorIndex,
+    queries: DataFrame,
+    k: int,
+    n_probe: int = 4,
+    query_cap: int = QUERY_BATCH_CAP,
+) -> DataFrame:
+    """Top-k by the codec's score: ``(query_id, cand_id, rank,
+    <score>)``. The query batch is collected under the driver-side cap
+    and broadcast as probe rows; the index rows stream past it.
+
+    - ``ivf``: equi-join on ``cell``. The probed cell set is known
+      driver-side, so it is ALSO pushed as a literal ``IN`` filter on
+      the rows scan — against a cell-clustered parquet index this
+      prunes whole files/row groups via footer min-max stats: a batch
+      probing p of C cells reads ~p/C of the corpus.
+    - ``none`` + pq: the (tiny) query-id literal explodes onto each row
+      and the kilobyte ``(query_id, lut)`` frame joins as a BROADCAST
+      equi-join — one codegen span, never the NL-join a cross join
+      would plan, and no ~217 KB nested-array plan literal for
+      Catalyst to re-walk on every operation (r14).
+    - ``none`` otherwise: a cross join against the broadcast batch,
+      provably ≤ query_cap rows (audit_plans' BOUNDED_NL_OK).
+
+    A query never matches itself (every ANN tier's contract)."""
+    spark = queries.sparkSession
+    score = _SCORE[index.codec]
+    qrows = _collect_query_batch(queries, cap=query_cap)
+    if not qrows:
+        return spark.createDataFrame(
+            [], f"query_id long, cand_id long, rank int, {score} double"
+        )
+    rows, probed = _probe_rows(index, qrows, n_probe)
+    cell = ", cell int" if probed is not None else ""
+    probes = spark.createDataFrame(
+        rows, f"query_id long{cell}, {_PAYLOAD_SCHEMA[index.codec]}"
+    )
+    data = index.data
+    if probed is not None:
+        joined = F.broadcast(probes).join(
+            data.filter(F.col("cell").isin(probed)), "cell"
+        )
+    elif index.codec == "pq":
+        qids = F.lit([r[0] for r in rows]).cast("array<long>")
+        joined = data.select(
+            "cand_id", "codes", "vnorm", F.explode(qids).alias("query_id")
+        ).join(F.broadcast(probes), "query_id")
+    else:
+        joined = data.join(F.broadcast(probes), how="cross")
+    scored = joined.filter(F.col("query_id") != F.col("cand_id")).select(
+        "query_id", "cand_id", _score_col(index).alias(score)
+    )
+    return _rank_topk(scored, score, k)
+
+
+def _rerank(
+    shortlist: DataFrame, queries: DataFrame, candidates: DataFrame, k: int
+) -> DataFrame:
+    """Exact re-rank of a compressed scan's shortlist: ONLY the
+    shortlisted ``(query_id, cand_id)`` pairs re-join their raw vectors
+    for an exact cosine (the standard IVF-PQ accuracy recovery — the
+    corpus-wide scan reads codes; full vectors are read for |queries| ×
+    rerank·k rows, not the corpus)."""
+    e = candidates.select(
+        F.col("vec_id").alias("cand_id"),
+        F.col("embedding").cast("array<double>").alias("cv"),
+    )
+    q = queries.select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").cast("array<double>").alias("qv"),
+    )
+    exact = (
+        shortlist.select("query_id", "cand_id")
+        .join(e, "cand_id")
+        .join(F.broadcast(q), "query_id")
+        .select(
+            "query_id", "cand_id", _cosine(F.col("qv"), F.col("cv")).alias("cosine")
+        )
+    )
+    return _rank_topk(exact, "cosine", k)
+
+
+def search_index(
+    index: VectorIndex,
+    queries: DataFrame,
+    k: int = 10,
+    n_probe: int = 4,
+    rerank: int = 8,
+    candidates: DataFrame | None = None,
+    query_cap: int = QUERY_BATCH_CAP,
+) -> DataFrame:
+    """Top-k cosine neighbours of ``(vec_id, embedding)`` queries:
+    ``(query_id, cand_id, rank, cosine)`` — the output contract of
+    every ANN tier. Raw-vector indexes score exactly in the scan;
+    compressed ones shortlist ``rerank × k`` per query over the codes
+    and re-rank exactly against ``candidates`` (the raw vectors, which
+    must cover every indexed id, appended ones included). ``n_probe``
+    applies to ivf indexes. Ties break on ``cand_id``."""
+    if index.codec == "raw":
+        return _scan(index, queries, k, n_probe=n_probe, query_cap=query_cap)
+    if candidates is None:
+        raise ValueError(
+            f"a {index.codec} index re-ranks against raw vectors: pass "
+            f"candidates="
+        )
+    shortlist = _scan(
+        index, queries, rerank * k, n_probe=n_probe, query_cap=query_cap
+    )
+    return _rerank(shortlist, queries, candidates, k)
+
+
 def ivf_build(
     candidates: DataFrame,
     n_cells: int = 16,
     train_cap: int = 2048,
     _sample_rows: list | None = None,
 ) -> tuple[DataFrame, DataFrame]:
-    """Build a persistable IVF index: ``(centroids, cells)``.
+    """Build an IVF index as frames: ``(centroids, cells)``.
 
     - *Train* — a deterministic sample of candidates (the ``train_cap``
       lowest ``xxhash64(vec_id)`` values — a seedless pseudo-random draw
@@ -300,32 +593,26 @@ def ivf_build(
     - *Assign* — every candidate joins its nearest cell (one
       Arrow-batched argmax per batch, broadcast centroid matrix).
 
-    Both returns are plain DataFrames, so the index PERSISTS like any
-    table: write ``cells`` with ``TableManager.write_clustered(...,
-    cluster_by='cell')`` (probing then scans only the probed cells'
-    files) and ``centroids`` (kilobytes) next to it; reload and search
-    without re-training — the build cost amortizes over every query
-    batch, which is the point of IVF at 100 TB.
+    Both returns are plain DataFrames; the searchable, build-once form
+    of the same index is ``vector_index.ensure_index`` — the build cost
+    amortizes over every query batch, which is the point of IVF at
+    100 TB.
     """
-    return _ivf_build_collected(
-        candidates, n_cells=n_cells, train_cap=train_cap,
-        _sample_rows=_sample_rows,
-    )[1:]
+    cm = _ivf_train(
+        candidates, n_cells=n_cells, train_cap=train_cap, _sample_rows=_sample_rows
+    )
+    return _centroids_df(candidates.sparkSession, cm), _assign_cells_df(candidates, cm)
 
 
-def _ivf_build_collected(
+def _ivf_train(
     candidates: DataFrame,
     n_cells: int = 16,
     train_cap: int = 2048,
     _sample_rows: list | None = None,
-) -> tuple:
-    """:func:`ivf_build` plus the centroid MATRIX it just computed
-    driver-side — ``(cm, centroids, cells)`` with ``cm`` the
-    (n_cells × dim) unit numpy matrix. One-shot search paths hand
-    ``cm`` straight to :func:`ivf_search`/SQ8 training, saving the
-    collect-back of a frame that was CREATED from driver data one call
-    earlier (r14 — the PQ paths got the same treatment; the amortized
-    forms still collect, their centroids genuinely live in parquet)."""
+):
+    """The (n_cells × dim) unit centroid matrix :func:`ivf_build`
+    trains — driver-side numpy that indexes keep as is, never a frame
+    collected back (r14)."""
     import numpy as np
 
     # ``_sample_rows``: a pre-collected hash-ordered sample (internal —
@@ -353,81 +640,24 @@ def _ivf_build_collected(
                 norm = np.linalg.norm(m)
                 if norm > 0:
                     cents[c] = m / norm
-    cm = cents  # (n_cells, dim), unit rows
-    centroids = candidates.sparkSession.createDataFrame(
+    return cents
+
+
+def _centroids_df(spark, cm) -> DataFrame:
+    """The ``(cell, centroid)`` frame of a centroid matrix."""
+    return spark.createDataFrame(
         [(i, [float(x) for x in c]) for i, c in enumerate(cm)],
         "cell int, centroid array<double>",
     )
-    return cm, centroids, _assign_cells_df(candidates, cm)
 
 
-def ivf_search(
-    queries: DataFrame,
-    centroids: DataFrame,
-    cells: DataFrame,
-    k: int = 10,
-    n_probe: int = 4,
-    query_cap: int = QUERY_BATCH_CAP,
-    centroid_matrix=None,
-) -> DataFrame:
-    """Probe a built (possibly reloaded) IVF index: each query scores
-    only its ``n_probe`` nearest cells via an equi-join on ``cell`` —
-    the corpus shuffles once, keyed by cell id (zero times if ``cells``
-    was written clustered on ``cell``: file pruning serves the probes).
-
-    The probed cell set is known driver-side (the centroid matrix is
-    local), so it is ALSO pushed as a literal ``IN`` filter on the cells
-    scan — against a cell-clustered parquet index this prunes whole
-    files/row groups via footer min-max stats before any join runs,
-    which is the point of persisting the index clustered: a query batch
-    probing p of C cells reads ~p/C of the corpus, not all of it.
-
-    ``centroid_matrix``: the (n_cells × dim) numpy matrix from
-    :func:`_ivf_build_collected`, skipping the collect-back of a frame
-    the caller just created from driver data (one job saved on the
-    one-shot paths; reloaded indexes still collect — their centroids
-    genuinely live in parquet).
-    """
+def _centroid_matrix(centroids: DataFrame):
+    """The centroid matrix (rows in cell order) of a ``(cell,
+    centroid)`` frame."""
     import numpy as np
 
-    if centroid_matrix is not None:
-        cm = centroid_matrix
-    else:
-        crows = sorted(centroids.collect(), key=lambda r: r["cell"])
-        cm = np.array([r["centroid"] for r in crows], dtype=np.float64)
-
-    qrows = _collect_query_batch(queries, cap=query_cap)
-    qm = np.array([r["embedding"] for r in qrows], dtype=np.float64)
-    qm_n = qm / _safe_norms_np(qm)
-    probe_idx = np.argsort(-(qm_n @ cm.T), axis=1)[:, :n_probe]
-    probes = queries.sparkSession.createDataFrame(
-        [
-            (int(r["vec_id"]), [float(x) for x in r["embedding"]], int(c))
-            for r, cells_of_q in zip(qrows, probe_idx)
-            for c in cells_of_q
-        ],
-        "query_id long, qv array<double>, cell int",
-    )
-    probed = sorted({int(c) for row in probe_idx for c in row})
-
-    scored = (
-        F.broadcast(probes)
-        .join(cells.filter(F.col("cell").isin(probed)), "cell")
-        .filter(F.col("query_id") != F.col("cand_id"))
-        .select(
-            "query_id",
-            "cand_id",
-            _cosine(F.col("qv"), F.col("embedding").cast("array<double>")).alias(
-                "cosine"
-            ),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("cand_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "cand_id", "rank", "cosine")
-    )
+    crows = sorted(centroids.collect(), key=lambda r: r["cell"])
+    return np.array([r["centroid"] for r in crows], dtype=np.float64)
 
 
 def cosine_topk_ivf(
@@ -438,11 +668,10 @@ def cosine_topk_ivf(
     n_probe: int = 4,
     train_cap: int = 2048,
 ) -> DataFrame:
-    """Approximate top-k: IVF (inverted-file) coarse quantization —
-    :func:`ivf_build` + :func:`ivf_search` in one shot (the one-off
-    query-time form; long-lived deployments build once, persist the
-    cells table clustered on ``cell``, and call ``ivf_search`` per
-    batch).
+    """Approximate top-k: IVF (inverted-file) coarse quantization — an
+    in-memory ``("ivf", "raw")`` index + :func:`search_index` in one
+    shot (the one-off query-time form; long-lived deployments build
+    once with ``vector_index.ensure_index`` and search per batch).
 
     Scale shape: the centroid matrix is O(n_cells × dim) — kilobytes —
     broadcast inside the closures; the corpus never cross-joins. At
@@ -450,12 +679,10 @@ def cosine_topk_ivf(
     executor-sized; recall is tunable via ``n_probe``. Approximate by
     design ⇒ rows-only check; the recall floor is asserted in tests.
     """
-    cm, centroids, cells = _ivf_build_collected(
-        candidates, n_cells=n_cells, train_cap=train_cap
+    index = _build_index(
+        candidates, "ivf", "raw", n_cells=n_cells, train_cap=train_cap
     )
-    return ivf_search(
-        queries, centroids, cells, k=k, n_probe=n_probe, centroid_matrix=cm
-    )
+    return search_index(index, queries, k=k, n_probe=n_probe)
 
 
 def ivf_build_distributed(
@@ -475,8 +702,8 @@ def ivf_build_distributed(
     ``train_cap`` vectors; this trainer sees the WHOLE corpus (better
     cell balance on skewed distributions) at the cost of cluster jobs
     per Lloyd iteration and partitioning-dependent (seeded, but not
-    layout-independent) results. Same (centroids, cells) contract, so
-    index persistence and :func:`ivf_search` compose unchanged.
+    layout-independent) results. Same (centroids, cells) contract as
+    :func:`ivf_build`.
 
     Training on *normalized* vectors makes Euclidean k-means equivalent
     to spherical (cosine) k-means up to the centroid norm, matching the
@@ -511,15 +738,8 @@ def ivf_build_distributed(
 
     # centroid order is model-internal; canonicalize by first vector
     # component so saved indexes are comparable across rebuilds
-    order = np.lexsort(cm.T[::-1])
-    cm = cm[order]
-
-    centroids = candidates.sparkSession.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(cm)],
-        "cell int, centroid array<double>",
-    )
-    cells = _assign_cells_df(candidates, cm)
-    return centroids, cells
+    cm = cm[np.lexsort(cm.T[::-1])]
+    return _centroids_df(candidates.sparkSession, cm), _assign_cells_df(candidates, cm)
 
 
 def _assign_cells_df(candidates: DataFrame, cm) -> DataFrame:
@@ -622,230 +842,6 @@ def ivf_build_auto(
     if n_cells <= max(1, train_cap // 8):
         return ivf_build(candidates, n_cells=n_cells, train_cap=train_cap)
     return ivf_build_distributed(candidates, n_cells=n_cells, seed=seed)
-
-
-def ivf_index_save(
-    centroids: DataFrame, cells: DataFrame, index_dir: str, n_files: int = 16
-) -> None:
-    """Persist a built IVF index: ``cells`` range-clustered on ``cell``
-    (each parquet file covers a disjoint cell range, footer min-max
-    tight) + the kilobyte ``centroids`` table beside it. Reload with
-    :func:`ivf_index_load`; the build cost amortizes over every query
-    batch thereafter — the real IVF deployment shape at 100 TB."""
-    (
-        cells.repartitionByRange(n_files, "cell")
-        .sortWithinPartitions("cell")
-        .write.mode("overwrite")
-        .parquet(f"{index_dir}/cells")
-    )
-    centroids.coalesce(1).write.mode("overwrite").parquet(f"{index_dir}/centroids")
-
-
-def ivf_index_append(
-    spark,
-    new_vectors: DataFrame,
-    index_dir: str,
-    n_files: int = 4,
-    batch_tag: str | None = None,
-) -> None:
-    """Add a batch of vectors to a persisted IVF index WITHOUT
-    retraining: assign them to the existing (frozen) centroids and
-    append the new cell rows as additional clustered files.
-
-    This is how IVF grows under daily ingest — centroids stay fixed (so
-    existing cell files never rewrite and old results stay stable) and
-    only drift-retraining (a rebuild) moves them. Appended files are
-    range-clustered among themselves, so footer min-max pruning keeps
-    working per file; run a maintenance re-cluster when small appended
-    files accumulate (same policy as any clustered table).
-
-    ``batch_tag`` makes the append IDEMPOTENT for at-least-once
-    delivery (the streaming ingest path): the batch lands in its own
-    overwrite-mode directory ``cells_appends/<tag>``, so a replay of
-    the same tag rewrites the same files instead of duplicating rows.
-    ``ivf_index_load`` unions the appends area back into the cells
-    frame; a crash mid-overwrite leaves at worst a partial ``<tag>``
-    dir that the replay's overwrite replaces wholesale.
-    """
-    import numpy as np
-
-    centroids, _ = ivf_index_load(spark, index_dir)
-    crows = sorted(centroids.collect(), key=lambda r: r["cell"])
-    cm = np.array([r["centroid"] for r in crows], dtype=np.float64)
-    assigned = (
-        _assign_cells_df(new_vectors, cm)
-        .repartitionByRange(n_files, "cell")
-        .sortWithinPartitions("cell")
-    )
-    if batch_tag is None:
-        assigned.write.mode("append").parquet(f"{index_dir}/cells")
-    else:
-        assigned.write.mode("overwrite").parquet(
-            f"{index_dir}/cells_appends/{batch_tag}"
-        )
-
-
-def ivf_index_recluster(spark, index_dir: str, n_files: int = 16) -> None:
-    """Maintenance rewrite of a persisted index's cells table: after
-    many :func:`ivf_index_append` batches the per-append file sets
-    accumulate (each clustered within itself, but probe pruning reads
-    one file per probed cell PER APPEND). Rewrite the whole table
-    range-clustered once — same OPTIMIZE-style policy as any clustered
-    table; centroids are untouched so results cannot change.
-
-    Staged next to the live dir and swapped in (directory rename), so a
-    crash mid-rewrite leaves the old cells intact.
-    """
-    import os
-    import shutil
-
-    _, cells = ivf_index_load(spark, index_dir)  # base + appended batches
-    staging = f"{index_dir}/_tmp_cells"
-    shutil.rmtree(staging, ignore_errors=True)
-    (
-        cells.repartitionByRange(n_files, "cell")
-        .sortWithinPartitions("cell")
-        .write.mode("overwrite")
-        .parquet(staging)
-    )
-    old = f"{index_dir}/_old_cells"
-    shutil.rmtree(old, ignore_errors=True)
-    os.rename(f"{index_dir}/cells", old)
-    # the rewrite folded any per-batch append dirs into the base table;
-    # retire them WITH the old base (same crash-safety: appends are only
-    # removed after the swapped-in table already contains their rows)
-    appends = f"{index_dir}/cells_appends"
-    if os.path.isdir(appends):
-        os.rename(appends, f"{old}_appends")
-    os.rename(staging, f"{index_dir}/cells")
-    shutil.rmtree(old, ignore_errors=True)
-    shutil.rmtree(f"{old}_appends", ignore_errors=True)
-
-
-def ivf_index_retrain(
-    spark,
-    index_dir: str,
-    n_cells: int = 16,
-    train_cap: int = 2048,
-    n_files: int = 16,
-) -> None:
-    """Full re-train of a grown index — the cure
-    ``monitoring.ivf_retrain_trigger`` prescribes when drifted appends
-    have outrun the frozen centroids: new centroids are Lloyd-trained
-    on the CURRENT vector population (base + committed appends), every
-    vector re-assigned, and the new tables staged beside the live dir
-    then swapped in (the :func:`ivf_index_recluster` crash posture —
-    a crash mid-swap leaves a loudly-missing dir, never a silently
-    mismatched centroids/cells pair). Deterministic like
-    :func:`ivf_build` (hash-ordered train sample, fixed iterations).
-
-    Cost: one build over the grown population — the same price as the
-    original build at the new size, paid only when the TV-distance
-    trigger fires (drift is rare; recluster handles the routine
-    small-file accumulation)."""
-    import os
-    import shutil
-
-    _, cells = ivf_index_load(spark, index_dir)  # base + appended batches
-    centroids, new_cells = ivf_build(
-        cells.select(F.col("cand_id").alias("vec_id"), "embedding"),
-        n_cells=n_cells,
-        train_cap=train_cap,
-    )
-    staging_cells = f"{index_dir}/_tmp_cells"
-    staging_cent = f"{index_dir}/_tmp_centroids"
-    shutil.rmtree(staging_cells, ignore_errors=True)
-    shutil.rmtree(staging_cent, ignore_errors=True)
-    (
-        new_cells.repartitionByRange(n_files, "cell")
-        .sortWithinPartitions("cell")
-        .write.mode("overwrite")
-        .parquet(staging_cells)
-    )
-    centroids.coalesce(1).write.mode("overwrite").parquet(staging_cent)
-    old = f"{index_dir}/_old_retrain"
-    shutil.rmtree(old, ignore_errors=True)
-    os.makedirs(old)
-    os.rename(f"{index_dir}/cells", f"{old}/cells")
-    os.rename(f"{index_dir}/centroids", f"{old}/centroids")
-    appends = f"{index_dir}/cells_appends"
-    if os.path.isdir(appends):
-        # the rebuilt base contains every appended row — retire the
-        # batch dirs WITH the old base (only after the new table holds
-        # their rows, same as recluster)
-        os.rename(appends, f"{old}/cells_appends")
-    os.rename(staging_cells, f"{index_dir}/cells")
-    os.rename(staging_cent, f"{index_dir}/centroids")
-    shutil.rmtree(old, ignore_errors=True)
-
-
-def ivf_index_load(spark, index_dir: str) -> tuple[DataFrame, DataFrame]:
-    """(centroids, cells) from a saved index — hand straight to
-    :func:`ivf_search`. Cells = the base clustered table plus any
-    COMMITTED per-batch append dirs (``cells_appends/*`` — see
-    :func:`ivf_index_append`'s ``batch_tag``).
-
-    Only batch dirs carrying a ``_SUCCESS`` marker are unioned: a crash
-    mid-append leaves partial part-files that must stay INVISIBLE (not
-    read, not tripped over as corrupt footers) until the batch replay's
-    overwrite lands its own marker — the same "stale state never causes
-    wrong results" contract the rest of the index machinery keeps
-    (ADVICE r5)."""
-    import os
-
-    cells = spark.read.parquet(f"{index_dir}/cells")
-    appends = f"{index_dir}/cells_appends"
-    if os.path.isdir(appends):
-        committed = sorted(
-            os.path.join(appends, n)
-            for n in os.listdir(appends)
-            if not n.startswith((".", "_"))
-            and os.path.exists(os.path.join(appends, n, "_SUCCESS"))
-        )
-        if committed:
-            cells = cells.unionByName(spark.read.parquet(*committed))
-    return spark.read.parquet(f"{index_dir}/centroids"), cells
-
-
-def ivf_index_ensure(
-    spark,
-    candidates: DataFrame,
-    index_dir: str,
-    n_cells: int = 16,
-    train_cap: int = 2048,
-) -> tuple[DataFrame, DataFrame]:
-    """Load the IVF index at ``index_dir``, building and saving it first
-    if absent (build is deterministic — hash-ordered sample + fixed
-    Lloyd iterations — so rebuilds agree bit-for-bit). Callers key
-    ``index_dir`` to the corpus version; staleness is theirs to manage,
-    same as any persisted index."""
-    import os
-
-    if not os.path.exists(f"{index_dir}/centroids/_SUCCESS"):
-        centroids, cells = ivf_build(candidates, n_cells=n_cells, train_cap=train_cap)
-        ivf_index_save(centroids, cells, index_dir)
-    return ivf_index_load(spark, index_dir)
-
-
-def cosine_topk_ivf_amortized(
-    queries: DataFrame,
-    candidates: DataFrame,
-    index_dir: str,
-    k: int = 10,
-    n_cells: int = 16,
-    n_probe: int = 4,
-    train_cap: int = 2048,
-) -> DataFrame:
-    """IVF top-k against a persisted (built-on-first-use) index — the
-    amortized form of :func:`cosine_topk_ivf`: steady-state cost is the
-    SEARCH alone (probe-pruned clustered scan + one window top-k), with
-    the train/assign passes paid once per corpus version instead of per
-    query batch."""
-    centroids, cells = ivf_index_ensure(
-        queries.sparkSession, candidates, index_dir,
-        n_cells=n_cells, train_cap=train_cap,
-    )
-    return ivf_search(queries, centroids, cells, k=k, n_probe=n_probe)
 
 
 def embedding_near_dup_pairs(
@@ -1018,40 +1014,23 @@ def embedding_queries(spark, sf_dir: str) -> tuple[DataFrame, DataFrame]:
 
 # ---- product quantization (IVF-PQ-style compressed search) -----------
 
-def pq_train(
+def _pq_train(
     candidates: DataFrame,
     m: int = 16,
     n_codes: int = 32,
     train_cap: int = 2048,
-) -> DataFrame:
+):
     """Train PQ codebooks: split each vector into ``m`` equal
     subvectors and k-means each subspace into ``n_codes`` centroids
     (classic product quantization — the memory-compression layer under
-    IVF-PQ). Returns a persistable ``(sub, code, centroid)`` frame
-    (m × n_codes rows — kilobytes, parquet-able like the IVF centroid
-    table).
+    IVF-PQ). Returns the (m × n_codes × sub_d) codebook tensor —
+    kilobytes of driver-side numpy that indexes keep as is.
 
     Training mirrors :func:`ivf_build`: the ``train_cap`` lowest
     ``xxhash64(vec_id)`` vectors (deterministic seedless draw,
     TakeOrderedAndProject — no full-scan job), then driver-side Lloyd
     per subspace with first-rows init, so rebuilds agree bit-for-bit.
     """
-    return _pq_train_collected(candidates, m, n_codes, train_cap)[1]
-
-
-def _pq_train_collected(
-    candidates: DataFrame,
-    m: int = 16,
-    n_codes: int = 32,
-    train_cap: int = 2048,
-) -> tuple[list[dict], DataFrame]:
-    """:func:`pq_train` plus the codebook rows it just computed
-    driver-side — ``(rows, codebooks_df)``. One-shot search paths hand
-    the rows straight to :func:`pq_encode`/:func:`pq_adc_topk`, saving
-    the collect-back of a frame that was CREATED from driver data one
-    call earlier (r14: two whole jobs per query on the benched PQ
-    paths; the amortized form still collects, its codebooks genuinely
-    live in parquet)."""
     import numpy as np
 
     sample = (
@@ -1065,7 +1044,7 @@ def _pq_train_collected(
     if dim % m != 0:
         raise ValueError(f"dim {dim} not divisible by m={m} subspaces")
     sub_d = dim // m
-    rows: list[dict] = []
+    books = []
     for s in range(m):
         block = tm[:, s * sub_d : (s + 1) * sub_d]
         cents = block[: min(n_codes, len(block))].copy()
@@ -1076,37 +1055,11 @@ def _pq_train_collected(
                 members = block[assign == c]
                 if len(members):
                     cents[c] = members.mean(axis=0)
-        rows += [
-            {"sub": s, "code": c, "centroid": [float(x) for x in cents[c]]}
-            for c in range(len(cents))
-        ]
-    df = candidates.sparkSession.createDataFrame(
-        [(r["sub"], r["code"], r["centroid"]) for r in rows],
-        "sub int, code int, centroid array<double>",
-    )
-    return rows, df
+        books.append(cents)
+    return np.stack(books)
 
 
-def _pq_tensor(cb_rows) -> tuple:
-    """(tensor[m][n_codes][sub_d], m, n_codes, sub_d) from codebook rows
-    (pyspark Rows or the dicts :func:`_pq_train_collected` returns)."""
-    import numpy as np
-
-    cb = sorted(cb_rows, key=lambda r: (r["sub"], r["code"]))
-    m = max(r["sub"] for r in cb) + 1
-    n_codes = max(r["code"] for r in cb) + 1
-    sub_d = len(cb[0]["centroid"])
-    tensor = np.zeros((m, n_codes, sub_d), dtype=np.float64)
-    for r in cb:
-        tensor[r["sub"], r["code"]] = r["centroid"]
-    return tensor, m, n_codes, sub_d
-
-
-def pq_encode(
-    codebooks: DataFrame,
-    vectors: DataFrame,
-    codebook_rows: list | None = None,
-) -> DataFrame:
+def _pq_encode(tensor, vectors: DataFrame) -> DataFrame:
     """Encode every vector to ``m`` small codes (nearest codebook entry
     per subspace, L2): ``(cand_id, codes array<int>, vnorm double)``
     plus any ``cell`` column passed through (IVF-PQ layout).
@@ -1117,16 +1070,8 @@ def pq_encode(
     ~16× less data than the raw corpus, which is the entire point at
     100 TB (recall 1.0 at k=10 on the fixture with the default
     8×-rerank; m/n_codes trade compression against recall).
-
-    ``codebook_rows``: the driver-side rows from
-    :func:`_pq_train_collected`, skipping the collect-back of a frame
-    the same call chain just created (one job saved per encode on the
-    one-shot paths).
     """
-    tensor, m, n_codes, sub_d = _pq_tensor(
-        codebook_rows if codebook_rows is not None else codebooks.collect()
-    )
-
+    m, _, sub_d = tensor.shape
     has_cell = "cell" in vectors.columns
     id_col = "cand_id" if "cand_id" in vectors.columns else "vec_id"
 
@@ -1159,103 +1104,6 @@ def pq_encode(
     return vectors.mapInPandas(encode, schema=schema)
 
 
-def pq_adc_topk(
-    queries: DataFrame,
-    encoded: DataFrame,
-    codebooks: DataFrame,
-    k: int = 10,
-    query_cap: int = QUERY_BATCH_CAP,
-    codebook_rows: list | None = None,
-) -> DataFrame:
-    """Asymmetric-distance top-k over PQ codes: per query, a lookup
-    table ``LUT[sub][code] = dot(q_sub, centroid)`` (m × n_codes
-    doubles, built driver-side from the kilobyte codebook) approximates
-    ``dot(q, x) ≈ Σ_sub LUT[sub][codes[sub]]`` — the scored scan reads
-    ONLY the codes column (column pruning skips the raw vectors
-    entirely) and the scoring expression is a codegen'd fixed-length
-    sum of ``element_at`` lookups, no UDF.
-
-    The per-query LUTs attach via ``explode`` of the (tiny) query-id
-    literal + a BROADCAST equi-join on ``query_id`` against the
-    kilobyte ``(query_id, lut)`` frame (r14, guide §4 boundary /
-    verdict ask): the earlier ~217 KB nested-array plan LITERAL cost
-    ~1 s of driver-side analysis per run — Catalyst re-walks its ~10k
-    literal nodes on every downstream operation — while the broadcast
-    relation ships the same bytes once and keeps the scoring expression
-    in one whole-stage-codegen span (BroadcastHashJoin, never the
-    NL-join a ``crossJoin(luts)`` would plan).
-
-    ``codebook_rows``: driver-side rows from
-    :func:`_pq_train_collected` — skips re-collecting a codebook frame
-    the caller just built from driver data.
-
-    Approximate cosine = ADC-dot / vnorm (queries are normalized into
-    the LUT). Rank ties break on cand_id like every ANN path here.
-    """
-    import numpy as np
-
-    tensor, m, n_codes, sub_d = _pq_tensor(
-        codebook_rows if codebook_rows is not None else codebooks.collect()
-    )
-
-    qrows = _collect_query_batch(queries, cap=query_cap)
-    qm = np.array([r["embedding"] for r in qrows], dtype=np.float64)
-    qm = qm / _safe_norms_np(qm)
-    qids: list[int] = []
-    luts: list[list[float]] = []
-    for qi, q in enumerate(qm):
-        flat = []
-        for s in range(m):
-            flat += list(tensor[s] @ q[s * sub_d : (s + 1) * sub_d])
-        qids.append(int(qrows[qi]["vec_id"]))
-        luts.append([float(x) for x in flat])
-    if not qids:  # degenerate: literal array<void> would fail analysis
-        return queries.sparkSession.createDataFrame(
-            [], "query_id long, cand_id long, rank int, adc_cosine double"
-        )
-
-    # Σ_sub lut[sub*n_codes + codes[sub]] — generated fixed-length sum
-    adc = None
-    for s in range(m):
-        term = F.element_at(
-            F.col("lut"),
-            (F.lit(s * n_codes) + F.element_at(F.col("codes"), s + 1) + 1).cast(
-                "int"
-            ),
-        )
-        adc = term if adc is None else adc + term
-    # the LUTs ride as a broadcast (query_id, lut) relation — see the
-    # docstring; only the 8-byte query ids remain a plan literal
-    luts_df = queries.sparkSession.createDataFrame(
-        list(zip(qids, luts)), "query_id long, lut array<double>"
-    )
-    scored = (
-        encoded.select(
-            "cand_id",
-            "codes",
-            "vnorm",
-            F.explode(F.lit(qids).cast("array<long>")).alias("query_id"),
-        )
-        .join(F.broadcast(luts_df), "query_id")
-        .filter(F.col("query_id") != F.col("cand_id"))
-        .select(
-            "query_id",
-            "cand_id",
-            (adc / F.when(F.col("vnorm") > 0, F.col("vnorm")).otherwise(1.0)).alias(
-                "adc_cosine"
-            ),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("adc_cosine"), F.asc("cand_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "cand_id", "rank", "adc_cosine")
-    )
-
-
 def cosine_topk_pq(
     queries: DataFrame,
     candidates: DataFrame,
@@ -1268,43 +1116,18 @@ def cosine_topk_pq(
     """PQ-compressed top-k with exact re-ranking: ADC over the codes
     column shortlists ``rerank × k`` per query, then ONLY those
     shortlisted candidates re-join their raw vectors for an exact
-    cosine (the standard IVF-PQ accuracy recovery — the corpus-wide
-    scan touches 8 int codes per row; full vectors are read for
-    |queries| × rerank·k rows, not the corpus).
+    cosine (the corpus-wide scan touches 16 int codes per row; full
+    vectors are read for |queries| × rerank·k rows, not the corpus).
 
     Same output contract as every other ANN tier:
     ``(query_id, cand_id, rank, cosine)``. Approximate by design ⇒
     rows-only check; the recall floor vs exact brute force is asserted
     in tests.
     """
-    cb_rows, codebooks = _pq_train_collected(
-        candidates, m=m, n_codes=n_codes, train_cap=train_cap
+    index = _build_index(
+        candidates, "none", "pq", m=m, n_codes=n_codes, train_cap=train_cap
     )
-    encoded = pq_encode(codebooks, candidates, codebook_rows=cb_rows)
-    shortlist = pq_adc_topk(
-        queries, encoded, codebooks, k=rerank * k, codebook_rows=cb_rows
-    )
-    e = candidates.select(
-        F.col("vec_id").alias("cand_id"),
-        F.col("embedding").cast("array<double>").alias("cv"),
-    )
-    q = queries.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").cast("array<double>").alias("qv"),
-    )
-    exact = (
-        shortlist.join(e, "cand_id")
-        .join(F.broadcast(q), "query_id")
-        .select(
-            "query_id", "cand_id", _cosine(F.col("qv"), F.col("cv")).alias("cosine")
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("cand_id"))
-    return (
-        exact.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "cand_id", "rank", "cosine")
-    )
+    return search_index(index, queries, k=k, rerank=rerank, candidates=candidates)
 
 
 def cosine_topk_ivf_pq(
@@ -1327,168 +1150,16 @@ def cosine_topk_ivf_pq(
     cosines. At 100 TB: scan volume ≈ corpus × (n_probe/n_cells) ×
     (code_bytes/vector_bytes) — two multiplicative prunings the flat
     forms pay separately (:func:`cosine_topk_ivf` reads raw vectors in
-    probed cells; :func:`cosine_topk_pq` reads all codes).
-
-    Index parts (centroids, codebooks, encoded codes) are all plain
-    persistable DataFrames — the amortized layout mirrors
-    ``ivf_index_save``; this one-shot form builds per call.
+    probed cells; :func:`cosine_topk_pq` reads all codes). One-shot
+    form; ``vector_index`` persists the same ``("ivf", "pq")`` index.
     """
-    import numpy as np
-
-    centroids, cells = ivf_build(candidates, n_cells=n_cells, train_cap=train_cap)
-    cb_rows, codebooks = _pq_train_collected(
-        candidates, m=m, n_codes=n_codes, train_cap=train_cap
+    index = _build_index(
+        candidates, "ivf", "pq",
+        n_cells=n_cells, train_cap=train_cap, m=m, n_codes=n_codes,
     )
-    encoded = pq_encode(codebooks, cells, codebook_rows=cb_rows)
-
-    tensor, _, n_codes_eff, sub_d = _pq_tensor(cb_rows)
-
-    crows = sorted(centroids.collect(), key=lambda r: r["cell"])
-    cm = np.array([r["centroid"] for r in crows], dtype=np.float64)
-    qrows = _collect_query_batch(queries, cap=query_cap)
-    qm = np.array([r["embedding"] for r in qrows], dtype=np.float64)
-    qm_n = qm / _safe_norms_np(qm)
-    probe_idx = np.argsort(-(qm_n @ cm.T), axis=1)[:, :n_probe]
-
-    probes = []
-    for qi, q in enumerate(qm_n):
-        flat = []
-        for s in range(m):
-            flat += list(tensor[s] @ q[s * sub_d : (s + 1) * sub_d])
-        for c in probe_idx[qi]:
-            probes.append(
-                (int(qrows[qi]["vec_id"]), int(c), [float(x) for x in flat])
-            )
-    probes_df = queries.sparkSession.createDataFrame(
-        probes, "query_id long, cell int, lut array<double>"
-    )
-    probed = sorted({int(c) for row in probe_idx for c in row})
-
-    adc = None
-    for s in range(m):
-        term = F.element_at(
-            F.col("lut"),
-            (
-                F.lit(s * n_codes_eff) + F.element_at(F.col("codes"), s + 1) + 1
-            ).cast("int"),
-        )
-        adc = term if adc is None else adc + term
-    shortlist_w = Window.partitionBy("query_id").orderBy(
-        F.desc("adc_cosine"), F.asc("cand_id")
-    )
-    shortlist = (
-        F.broadcast(probes_df)
-        .join(encoded.filter(F.col("cell").isin(probed)), "cell")
-        .filter(F.col("query_id") != F.col("cand_id"))
-        .select(
-            "query_id",
-            "cand_id",
-            (adc / F.when(F.col("vnorm") > 0, F.col("vnorm")).otherwise(1.0)).alias(
-                "adc_cosine"
-            ),
-        )
-        .withColumn("r", F.row_number().over(shortlist_w))
-        .filter(F.col("r") <= rerank * k)
-        .select("query_id", "cand_id")
-    )
-
-    e = candidates.select(
-        F.col("vec_id").alias("cand_id"),
-        F.col("embedding").cast("array<double>").alias("cv"),
-    )
-    qdf = queries.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").cast("array<double>").alias("qv"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("cand_id"))
-    return (
-        shortlist.join(e, "cand_id")
-        .join(F.broadcast(qdf), "query_id")
-        .select(
-            "query_id", "cand_id", _cosine(F.col("qv"), F.col("cv")).alias("cosine")
-        )
-        .withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "cand_id", "rank", "cosine")
-    )
-
-
-def pq_index_save(
-    codebooks: DataFrame, encoded: DataFrame, index_dir: str, n_files: int = 16
-) -> None:
-    """Persist a PQ index: the kilobyte codebook table + the encoded
-    codes (clustered on ``cell`` when present, so a probe-pruned IVF-PQ
-    search also file-prunes the codes scan). Reload with
-    :func:`pq_index_load` — encode cost amortizes over every query
-    batch, and the codes table is ~16× smaller than the corpus it
-    stands in for."""
-    codes = encoded
-    if "cell" in encoded.columns:
-        codes = encoded.repartitionByRange(
-            n_files, "cell"
-        ).sortWithinPartitions("cell")
-    codes.write.mode("overwrite").parquet(f"{index_dir}/codes")
-    codebooks.coalesce(1).write.mode("overwrite").parquet(
-        f"{index_dir}/codebooks"
-    )
-
-
-def pq_index_load(spark, index_dir: str) -> tuple[DataFrame, DataFrame]:
-    """(codebooks, encoded codes) from a saved PQ index."""
-    return (
-        spark.read.parquet(f"{index_dir}/codebooks"),
-        spark.read.parquet(f"{index_dir}/codes"),
-    )
-
-
-def cosine_topk_pq_amortized(
-    queries: DataFrame,
-    candidates: DataFrame,
-    index_dir: str,
-    k: int = 10,
-    m: int = 16,
-    n_codes: int = 32,
-    rerank: int = 8,
-    train_cap: int = 2048,
-) -> DataFrame:
-    """PQ top-k against a persisted (built-on-first-use) codes index —
-    the amortized form of :func:`cosine_topk_pq`: steady state pays the
-    ADC scan of the compressed codes + the shortlist re-rank only;
-    training and encoding are paid once per corpus version (build is
-    deterministic, so concurrent rebuilds agree)."""
-    import os
-
-    spark = queries.sparkSession
-    if not os.path.exists(f"{index_dir}/codebooks/_SUCCESS"):
-        cb_rows, codebooks = _pq_train_collected(
-            candidates, m=m, n_codes=n_codes, train_cap=train_cap
-        )
-        pq_index_save(
-            codebooks,
-            pq_encode(codebooks, candidates, codebook_rows=cb_rows),
-            index_dir,
-        )
-    codebooks, encoded = pq_index_load(spark, index_dir)
-    shortlist = pq_adc_topk(queries, encoded, codebooks, k=rerank * k)
-    e = candidates.select(
-        F.col("vec_id").alias("cand_id"),
-        F.col("embedding").cast("array<double>").alias("cv"),
-    )
-    qdf = queries.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").cast("array<double>").alias("qv"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("cand_id"))
-    return (
-        shortlist.select("query_id", "cand_id")
-        .join(e, "cand_id")
-        .join(F.broadcast(qdf), "query_id")
-        .select(
-            "query_id", "cand_id", _cosine(F.col("qv"), F.col("cv")).alias("cosine")
-        )
-        .withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "cand_id", "rank", "cosine")
+    return search_index(
+        index, queries, k=k, n_probe=n_probe, rerank=rerank,
+        candidates=candidates, query_cap=query_cap,
     )
 
 
@@ -1556,80 +1227,6 @@ def sq8_encode(
     )
 
 
-def sq8_topk(
-    queries: DataFrame,
-    encoded: DataFrame,
-    mins: list,
-    scales: list,
-    k: int = 10,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    query_cap: int = QUERY_BATCH_CAP,
-) -> DataFrame:
-    """Approximate top-k over the compressed codes:
-    ``dot(q, dequant(c)) = dot(q, mins) + Σ (q_i·scale_i)·code_i`` —
-    ``dot(q, mins)``/``|q|`` are per-query constants and
-    ``q_i·scale_i`` a per-query vector, all computed DRIVER-side from
-    the :func:`_collect_query_batch`-capped batch (the module's loud
-    OOM guard), so the corpus-side work is one ``zip_with``/
-    ``aggregate`` over the int codes against a broadcast frame that is
-    PROVABLY ≤ query_cap rows (the audit's BOUNDED_NL_OK argument for
-    this tier). Ranked by the dequantized cosine against the stored
-    exact ``vnorm``."""
-    import numpy as np
-
-    spark = queries.sparkSession
-    qrows = _collect_query_batch(
-        queries.select(
-            F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding")
-        ),
-        cap=query_cap,
-    )
-    if not qrows:
-        return spark.createDataFrame(
-            [], "query_id long, cand_id long, rank int, approx_cosine double"
-        )
-    mn = np.asarray(mins, dtype=np.float64)
-    sc = np.asarray(scales, dtype=np.float64)
-    qdata = []
-    for r in qrows:
-        qv = np.asarray(r["embedding"], dtype=np.float64)
-        qdata.append(
-            (
-                int(r["vec_id"]),
-                [float(x) for x in qv * sc],
-                float(qv @ mn),
-                float(np.sqrt(qv @ qv)),
-            )
-        )
-    q = spark.createDataFrame(
-        qdata, "query_id long, qs array<double>, qmin double, qnorm double"
-    )
-    dot = F.col("qmin") + F.aggregate(
-        F.zip_with(F.col("qs"), F.col("codes"), lambda x, c: x * c),
-        F.lit(0.0),
-        lambda s, x: s + x,
-    )
-    scored = (
-        encoded.join(F.broadcast(q), how="cross")
-        # every ANN tier's contract: a query never matches itself
-        .filter(F.col("query_id") != F.col("cand_id"))
-        .select(
-            "query_id",
-            "cand_id",
-            (dot / (F.col("qnorm") * F.col("vnorm"))).alias("approx_cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("approx_cosine"), F.asc("cand_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "cand_id", "rank", "approx_cosine")
-    )
-
-
 def cosine_topk_sq8(
     queries: DataFrame,
     candidates: DataFrame,
@@ -1640,100 +1237,14 @@ def cosine_topk_sq8(
     compression tier beside IVF (probe pruning) and PQ (16× codes):
     int8-range scalar quantization keeps per-dim resolution (recall is
     near-exact at 256 levels, tested) while scanning ~4-8× less than
-    raw vectors. Shortlist ``rerank × k`` per query over the codes,
-    then ONLY those rows re-join their raw vectors for exact cosine.
-    Same output contract as every ANN tier:
-    ``(query_id, cand_id, rank, cosine)``."""
-    mins, scales = sq8_train(candidates)
-    encoded = sq8_encode(candidates, mins, scales)
-    shortlist = sq8_topk(queries, encoded, mins, scales, k=rerank * k)
-    e = candidates.select(
-        F.col("vec_id").alias("cand_id"),
-        F.col("embedding").cast("array<double>").alias("cv"),
-    )
-    q = queries.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").cast("array<double>").alias("qv"),
-    )
-    exact = (
-        shortlist.join(e, "cand_id")
-        .join(F.broadcast(q), "query_id")
-        .select(
-            "query_id",
-            "cand_id",
-            _cosine(F.col("qv"), F.col("cv")).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("cand_id"))
-    return (
-        exact.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "cand_id", "rank", "cosine")
-    )
-
-
-def sq8_index_save(
-    mins: list, scales: list, encoded: DataFrame, index_dir: str
-) -> None:
-    """Persist an SQ8 index: the (2·d)-float quantizer params + the
-    encoded codes table. Reload with :func:`sq8_index_load`; encode
-    cost amortizes over every query batch and the codes column scans
-    ~4-8× less than the raw vectors it stands in for."""
-    spark = encoded.sparkSession
-    encoded.write.mode("overwrite").parquet(f"{index_dir}/codes")
-    spark.createDataFrame(
-        [(mins, scales)], "mins array<double>, scales array<double>"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{index_dir}/params")
-
-
-def sq8_index_load(spark, index_dir: str) -> tuple:
-    """``(mins, scales, encoded)`` from a persisted SQ8 index."""
-    p = spark.read.parquet(f"{index_dir}/params").first()
-    encoded = spark.read.parquet(f"{index_dir}/codes")
-    return list(p["mins"]), list(p["scales"]), encoded
-
-
-def cosine_topk_sq8_amortized(
-    queries: DataFrame,
-    candidates: DataFrame,
-    index_dir: str,
-    k: int = 10,
-    rerank: int = 8,
-) -> DataFrame:
-    """SQ8 top-k against a persisted (built-on-first-use) codes index —
-    the amortized form of :func:`cosine_topk_sq8`, the same deployed
-    contract as the IVF/PQ tiers: steady state pays the compressed
-    scan + shortlist re-rank only; training and encoding are paid once
-    per corpus version (both are deterministic, so concurrent rebuilds
-    agree). Results are identical to the one-shot form (tested)."""
-    import os
-
-    spark = queries.sparkSession
-    if not os.path.exists(f"{index_dir}/codes/_SUCCESS"):
-        mins, scales = sq8_train(candidates)
-        sq8_index_save(mins, scales, sq8_encode(candidates, mins, scales), index_dir)
-    mins, scales, encoded = sq8_index_load(spark, index_dir)
-    shortlist = sq8_topk(queries, encoded, mins, scales, k=rerank * k)
-    e = candidates.select(
-        F.col("vec_id").alias("cand_id"),
-        F.col("embedding").cast("array<double>").alias("cv"),
-    )
-    qdf = queries.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").cast("array<double>").alias("qv"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("cand_id"))
-    return (
-        shortlist.select("query_id", "cand_id")
-        .join(e, "cand_id")
-        .join(F.broadcast(qdf), "query_id")
-        .select(
-            "query_id", "cand_id", _cosine(F.col("qv"), F.col("cv")).alias("cosine")
-        )
-        .withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "cand_id", "rank", "cosine")
-    )
+    raw vectors. The scan scores ``dot(q, dequant(c)) = dot(q, mins) +
+    Σ (q_i·scale_i)·code_i`` — per-query constants computed
+    driver-side, one ``zip_with``/``aggregate`` over the int codes per
+    row — and shortlists ``rerank × k`` per query; ONLY those rows
+    re-join their raw vectors for exact cosine. Same output contract as
+    every ANN tier: ``(query_id, cand_id, rank, cosine)``."""
+    index = _build_index(candidates, "none", "sq8")
+    return search_index(index, queries, k=k, rerank=rerank, candidates=candidates)
 
 
 # ---------------------------------------------------------------------------
@@ -1744,100 +1255,6 @@ def cosine_topk_sq8_amortized(
 # plain IVF's weakness is reading raw vectors inside probed cells. The
 # composition pays neither.
 # ---------------------------------------------------------------------------
-
-
-def _sq8_probe_frame(spark, qrows, mins, scales, cm, n_probe: int):
-    """Driver-side per-query probe rows for the IVF+SQ8 scan: one row
-    per (query, probed cell) carrying the SQ8 dot-product decomposition
-    ``dot(q, dequant(c)) = qmin + sum (q_i*scale_i)*code_i``. Bounded
-    by query_cap x n_probe rows -- broadcast-sized by construction."""
-    import numpy as np
-
-    mn = np.asarray(mins, dtype=np.float64)
-    sc = np.asarray(scales, dtype=np.float64)
-    qm = np.array([r["embedding"] for r in qrows], dtype=np.float64)
-    qm_n = qm / _safe_norms_np(qm)
-    probe_idx = np.argsort(-(qm_n @ cm.T), axis=1)[:, :n_probe]
-    probes = []
-    for qi, r in enumerate(qrows):
-        qv = qm[qi]
-        qs = [float(x) for x in qv * sc]
-        qmin = float(qv @ mn)
-        qnorm = float(np.sqrt(qv @ qv))
-        for c in probe_idx[qi]:
-            probes.append((int(r["vec_id"]), int(c), qs, qmin, qnorm))
-    probes_df = spark.createDataFrame(
-        probes,
-        "query_id long, cell int, qs array<double>, qmin double, qnorm double",
-    )
-    probed = sorted({int(c) for row in probe_idx for c in row})
-    return probes_df, probed
-
-
-def _ivf_sq8_search(
-    queries: DataFrame,
-    encoded: DataFrame,
-    candidates: DataFrame,
-    mins: list,
-    scales: list,
-    cm,
-    k: int,
-    n_probe: int,
-    rerank: int,
-    query_cap: int = QUERY_BATCH_CAP,
-) -> DataFrame:
-    """Shared search tail: equi-join the broadcast probe frame to the
-    cell-clustered codes (footer min-max prunes unprobed cells), score
-    the dequantized dot pure-Catalyst, shortlist ``rerank*k``, exact
-    re-rank on raw vectors. One shuffle (the shortlist window) -- same
-    shape as the IVF-PQ tier."""
-    spark = queries.sparkSession
-    qrows = _collect_query_batch(queries, cap=query_cap)
-    if not qrows:
-        return spark.createDataFrame(
-            [], "query_id long, cand_id long, rank int, cosine double"
-        )
-    probes_df, probed = _sq8_probe_frame(spark, qrows, mins, scales, cm, n_probe)
-    dot = F.col("qmin") + F.aggregate(
-        F.zip_with(F.col("qs"), F.col("codes"), lambda x, c: x * c),
-        F.lit(0.0),
-        lambda s, x: s + x,
-    )
-    shortlist_w = Window.partitionBy("query_id").orderBy(
-        F.desc("approx_cosine"), F.asc("cand_id")
-    )
-    shortlist = (
-        F.broadcast(probes_df)
-        .join(encoded.filter(F.col("cell").isin(probed)), "cell")
-        .filter(F.col("query_id") != F.col("cand_id"))
-        .select(
-            "query_id",
-            "cand_id",
-            (dot / (F.col("qnorm") * F.col("vnorm"))).alias("approx_cosine"),
-        )
-        .withColumn("r", F.row_number().over(shortlist_w))
-        .filter(F.col("r") <= rerank * k)
-        .select("query_id", "cand_id")
-    )
-    e = candidates.select(
-        F.col("vec_id").alias("cand_id"),
-        F.col("embedding").cast("array<double>").alias("cv"),
-    )
-    qdf = queries.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").cast("array<double>").alias("qv"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("cand_id"))
-    return (
-        shortlist.join(e, "cand_id")
-        .join(F.broadcast(qdf), "query_id")
-        .select(
-            "query_id", "cand_id", _cosine(F.col("qv"), F.col("cv")).alias("cosine")
-        )
-        .withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "cand_id", "rank", "cosine")
-    )
 
 
 def cosine_topk_ivf_sq8(
@@ -1860,100 +1277,14 @@ def cosine_topk_ivf_sq8(
     ``zip_with``/``aggregate``, no per-query LUT construction).
 
     One-shot form (train + assign + encode per call); the deployment
-    shape is :func:`cosine_topk_ivf_sq8_amortized`."""
-    cm, centroids, cells = _ivf_build_collected(
-        candidates, n_cells=n_cells, train_cap=train_cap
+    shape persists the same ``("ivf", "sq8")`` index through
+    ``vector_index.ensure_index``."""
+    index = _build_index(
+        candidates, "ivf", "sq8", n_cells=n_cells, train_cap=train_cap
     )
-    mins, scales = sq8_train(candidates, dim=cm.shape[1])
-    encoded = sq8_encode(cells, mins, scales, id_col="cand_id", extra_cols=("cell",))
-    return _ivf_sq8_search(
-        queries, encoded, candidates, mins, scales, cm,
-        k=k, n_probe=n_probe, rerank=rerank, query_cap=query_cap,
-    )
-
-
-def ivf_sq8_index_save(
-    centroids: DataFrame,
-    mins: list,
-    scales: list,
-    encoded: DataFrame,
-    index_dir: str,
-    n_files: int = 16,
-) -> None:
-    """Persist an IVF+SQ8 index: cell-range-clustered codes (footer
-    min-max tight per file, so probing reads only matching files) +
-    the kilobyte centroids and (2*d)-float quantizer params."""
-    (
-        encoded.repartitionByRange(n_files, "cell")
-        .sortWithinPartitions("cell")
-        .write.mode("overwrite")
-        .parquet(f"{index_dir}/codes")
-    )
-    centroids.coalesce(1).write.mode("overwrite").parquet(
-        f"{index_dir}/centroids"
-    )
-    centroids.sparkSession.createDataFrame(
-        [(mins, scales)], "mins array<double>, scales array<double>"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{index_dir}/params")
-
-
-def ivf_sq8_index_load(spark, index_dir: str) -> tuple:
-    """``(centroids, mins, scales, encoded)`` from a persisted IVF+SQ8
-    index."""
-    p = spark.read.parquet(f"{index_dir}/params").first()
-    return (
-        spark.read.parquet(f"{index_dir}/centroids"),
-        list(p["mins"]),
-        list(p["scales"]),
-        spark.read.parquet(f"{index_dir}/codes"),
-    )
-
-
-def cosine_topk_ivf_sq8_amortized(
-    queries: DataFrame,
-    candidates: DataFrame,
-    index_dir: str,
-    k: int = 10,
-    n_cells: int = 16,
-    n_probe: int = 4,
-    rerank: int = 8,
-    train_cap: int = 2048,
-) -> DataFrame:
-    """IVF+SQ8 against a persisted (built-on-first-use) index -- the
-    deployment shape: steady state pays the probe-pruned compressed
-    scan + shortlist re-rank only; centroid training, cell assignment
-    and SQ8 encoding are paid once per corpus version (all
-    deterministic, so concurrent rebuilds agree). Results identical to
-    the one-shot form (tested).
-
-    Committed :func:`ivf_sq8_index_append` batches are unioned into
-    the compressed scan (``ivf_sq8_index_load_all``), matching the
-    plain-IVF amortized contract: vectors ingested after the initial
-    build are retrievable. ``candidates`` must cover the appended ids
-    too -- the exact re-rank joins raw vectors from it."""
-    import os
-
-    import numpy as np
-
-    spark = queries.sparkSession
-    if not os.path.exists(f"{index_dir}/codes/_SUCCESS"):
-        centroids, cells = ivf_build(
-            candidates, n_cells=n_cells, train_cap=train_cap
-        )
-        mins, scales = sq8_train(candidates)
-        ivf_sq8_index_save(
-            centroids,
-            mins,
-            scales,
-            sq8_encode(cells, mins, scales, id_col="cand_id", extra_cols=("cell",)),
-            index_dir,
-        )
-    centroids, mins, scales, encoded = ivf_sq8_index_load_all(spark, index_dir)
-    crows = sorted(centroids.collect(), key=lambda r: r["cell"])
-    cm = np.array([r["centroid"] for r in crows], dtype=np.float64)
-    return _ivf_sq8_search(
-        queries, encoded, candidates, mins, scales, cm,
-        k=k, n_probe=n_probe, rerank=rerank,
+    return search_index(
+        index, queries, k=k, n_probe=n_probe, rerank=rerank,
+        candidates=candidates, query_cap=query_cap,
     )
 
 
@@ -1986,62 +1317,3 @@ def truncate_embeddings(
         )
         v = F.when(norm > 0, F.transform(v, lambda x: x / norm)).otherwise(v)
     return vectors.withColumn(vec_col, v)
-
-
-def ivf_sq8_index_append(
-    spark,
-    new_vectors: DataFrame,
-    index_dir: str,
-    n_files: int = 4,
-    batch_tag: str | None = None,
-) -> None:
-    """Grow a persisted IVF+SQ8 index without retraining (r8 — the
-    combined tier gets the same daily-ingest contract as the plain IVF
-    index): assign the batch to the FROZEN centroids, encode with the
-    FROZEN quantizer params, and append the new cell-clustered code
-    files. Existing files never rewrite, old results stay stable;
-    drift-retraining is a rebuild, same policy as ``ivf_index_append``.
-
-    ``batch_tag`` makes the append idempotent for at-least-once
-    delivery: the batch lands in its own overwrite-mode directory
-    ``codes_appends/<tag>`` that a replay rewrites wholesale;
-    :func:`ivf_sq8_index_load_all` unions only COMMITTED (_SUCCESS)
-    batch dirs back in — a crash mid-append stays invisible."""
-    import numpy as np
-
-    centroids, mins, scales, _ = ivf_sq8_index_load(spark, index_dir)
-    crows = sorted(centroids.collect(), key=lambda r: r["cell"])
-    cm = np.array([r["centroid"] for r in crows], dtype=np.float64)
-    assigned = _assign_cells_df(new_vectors, cm)
-    encoded = (
-        sq8_encode(assigned, mins, scales, id_col="cand_id", extra_cols=("cell",))
-        .repartitionByRange(n_files, "cell")
-        .sortWithinPartitions("cell")
-    )
-    if batch_tag is None:
-        encoded.write.mode("append").parquet(f"{index_dir}/codes")
-    else:
-        encoded.write.mode("overwrite").parquet(
-            f"{index_dir}/codes_appends/{batch_tag}"
-        )
-
-
-def ivf_sq8_index_load_all(spark, index_dir: str) -> tuple:
-    """``(centroids, mins, scales, encoded)`` including committed
-    per-batch append dirs — the read-side twin of
-    :func:`ivf_sq8_index_append` (same _SUCCESS-gated union contract
-    as ``ivf_index_load``)."""
-    import os
-
-    centroids, mins, scales, encoded = ivf_sq8_index_load(spark, index_dir)
-    appends = f"{index_dir}/codes_appends"
-    if os.path.isdir(appends):
-        committed = sorted(
-            os.path.join(appends, n)
-            for n in os.listdir(appends)
-            if not n.startswith((".", "_"))
-            and os.path.exists(os.path.join(appends, n, "_SUCCESS"))
-        )
-        if committed:
-            encoded = encoded.unionByName(spark.read.parquet(*committed))
-    return centroids, mins, scales, encoded

@@ -82,33 +82,15 @@ def hashing_vectorizer(
     )
 
 
-def build_chunk_index(
-    docs: DataFrame,
-    chunk_tokens: int = 64,
-    overlap_tokens: int = 8,
-    dim: int = 64,
-    n_cells: int | None = None,
-    train_cap: int | None = None,
-):
-    """Chunk → vectorize → IVF index over a documents table: returns
-    ``(centroids, cells, chunks)`` where cells carry
-    ``cand_id = doc_id·10⁶ + chunk_id`` (chunk ordinals are bounded far
-    below 10⁶ by construction — a chunk covers ≥ chunk−overlap tokens).
-    Both index parts are plain DataFrames: persist with
-    ``ivf_index_save`` and the build amortizes like any IVF index.
-
-    ``n_cells=None`` (the deployed default since r6) derives the cell
-    count from the corpus via ``similarity.ivf_build_auto`` — ≈√N cells
-    with the driver training sample auto-scaled to 16 vectors/cell — so
-    the same call is right at fixture scale and at 100 TB, and the
-    build stays bit-deterministic (one extra count job). Distributed
-    k-means|| remains the explicit escape hatch for cell counts beyond
-    the driver-sample budget (see ``ivf_build_auto``)."""
+def _chunk_vectors(
+    docs: DataFrame, chunk_tokens: int, overlap_tokens: int, dim: int
+) -> tuple[DataFrame, DataFrame]:
+    """``(vectors, chunks)`` of a documents table: the chunks with
+    ``vec_id = doc_id·10⁶ + chunk_id`` (chunk ordinals are bounded far
+    below 10⁶ by construction — a chunk covers ≥ chunk−overlap tokens)
+    and their hashed ``(vec_id, embedding)`` vectors."""
     from lakehouse_adventureworks2022_spark.operators.curation import (
         chunk_documents,
-    )
-    from lakehouse_adventureworks2022_spark.operators.similarity import (
-        ivf_build_auto,
     )
 
     chunks = chunk_documents(
@@ -120,17 +102,45 @@ def build_chunk_index(
     vectors = hashing_vectorizer(
         chunks, text_col="chunk_text", dim=dim, keep_cols=("vec_id",)
     )
-    centroids, cells = ivf_build_auto(
-        vectors, n_cells=n_cells, train_cap=train_cap
+    return vectors, chunks
+
+
+def build_chunk_index(
+    docs: DataFrame,
+    chunk_tokens: int = 64,
+    overlap_tokens: int = 8,
+    dim: int = 64,
+    n_cells: int | None = None,
+    train_cap: int | None = None,
+):
+    """Chunk → vectorize → IVF index over a documents table, in memory:
+    returns ``(index, chunks)`` — an ``("ivf", "raw")``
+    ``similarity.VectorIndex`` whose rows carry ``cand_id = doc_id·10⁶
+    + chunk_id``, and the chunks. :func:`chunk_index_ensure` persists
+    the same index so the build amortizes.
+
+    ``n_cells=None`` (the deployed default since r6) derives the cell
+    count from the corpus via ``similarity.ivf_build_auto`` — ≈√N cells
+    with the driver training sample auto-scaled to 16 vectors/cell — so
+    the same call is right at fixture scale and at 100 TB, and the
+    build stays bit-deterministic (one extra count job). Distributed
+    k-means|| remains the explicit escape hatch for cell counts beyond
+    the driver-sample budget (see ``ivf_build_auto``)."""
+    from lakehouse_adventureworks2022_spark.operators.similarity import (
+        _build_index,
     )
-    return centroids, cells, chunks
+
+    vectors, chunks = _chunk_vectors(docs, chunk_tokens, overlap_tokens, dim)
+    index = _build_index(
+        vectors, "ivf", "raw", n_cells=n_cells, train_cap=train_cap
+    )
+    return index, chunks
 
 
 def mine_hard_negatives(
     queries: DataFrame,
     positives: DataFrame,
-    centroids: DataFrame,
-    cells: DataFrame,
+    index,
     dim: int = 64,
     k: int = 20,
     n_neg: int = 5,
@@ -141,7 +151,8 @@ def mine_hard_negatives(
     labeled positives — the candidates the current encoder confuses with
     the answer, which is exactly what contrastive training wants.
 
-    ``positives`` is the ground-truth ``(query_id, cand_id)`` table.
+    ``positives`` is the ground-truth ``(query_id, cand_id)`` table;
+    ``index`` is the chunk index (:func:`chunk_index_ensure`).
     Returns ``(query_id, cand_id, rank, cosine)`` re-ranked 1..n_neg.
 
     Shape: one IVF top-k search (probe-pruned clustered scan), a
@@ -150,22 +161,7 @@ def mine_hard_negatives(
     size beyond the search itself."""
     from pyspark.sql import Window
 
-    from lakehouse_adventureworks2022_spark.operators.similarity import (
-        ivf_search,
-    )
-
-    hits = ivf_search(
-        hashing_vectorizer(
-            queries.withColumnRenamed("query_id", "vec_id"),
-            text_col="query_text",
-            dim=dim,
-            keep_cols=("vec_id",),
-        ),
-        centroids,
-        cells,
-        k=k,
-        n_probe=n_probe,
-    )
+    hits = retrieval_search(queries, index, dim=dim, k=k, n_probe=n_probe)
     negs = hits.join(
         F.broadcast(
             positives.select(
@@ -272,7 +268,6 @@ def retrieval_metrics(
 
 
 def chunk_index_ensure(
-    spark,
     docs: DataFrame,
     index_dir: str,
     chunk_tokens: int = 64,
@@ -281,35 +276,43 @@ def chunk_index_ensure(
     n_cells: int | None = None,
     train_cap: int | None = None,
 ):
-    """Load the persisted chunk index at ``index_dir``, building and
-    saving it first if absent — the deployed retrieval shape: chunking,
-    vectorization, and IVF training are paid once per corpus version
-    (the build is deterministic, so rebuilds agree bit-for-bit), and
-    steady-state queries pay probe-pruned search only. Callers key
-    ``index_dir`` to the corpus version, same contract as
-    ``similarity.ivf_index_ensure``."""
-    import os
+    """Open the persisted chunk index at ``index_dir``, building it
+    first if none is committed — the deployed retrieval shape:
+    chunking, vectorization, and IVF training are paid once per corpus
+    version (the build is deterministic, so rebuilds agree bit-for-bit),
+    and steady-state queries pay probe-pruned search only. Returns the
+    ``similarity.VectorIndex`` (base + committed appends).
 
-    from lakehouse_adventureworks2022_spark.operators.similarity import (
-        ivf_index_load,
-        ivf_index_save,
+    The manifest records ``chunk_tokens``/``overlap_tokens``/``dim``
+    beside the IVF params: reopening with other values raises
+    ``ValueError`` instead of mixing vector spaces."""
+    from lakehouse_adventureworks2022_spark.operators.vector_index import (
+        ensure_index,
     )
 
-    if not os.path.exists(f"{index_dir}/centroids/_SUCCESS"):
-        centroids, cells, _ = build_chunk_index(
-            docs,
-            chunk_tokens=chunk_tokens,
-            overlap_tokens=overlap_tokens,
-            dim=dim,
-            n_cells=n_cells,
-            train_cap=train_cap,
-        )
-        ivf_index_save(centroids, cells, index_dir)
-    return ivf_index_load(spark, index_dir)
+    vectors, _ = _chunk_vectors(docs, chunk_tokens, overlap_tokens, dim)
+    return ensure_index(
+        vectors,
+        index_dir,
+        "ivf",
+        "raw",
+        n_cells=n_cells,
+        train_cap=train_cap,
+        recipe=_chunk_recipe(chunk_tokens, overlap_tokens, dim),
+    )
+
+
+def _chunk_recipe(chunk_tokens: int, overlap_tokens: int, dim: int) -> dict:
+    """How the chunk index derives its vectors — they define cand_id
+    packing and the vector space, so appends must match the build."""
+    return {
+        "chunk_tokens": chunk_tokens,
+        "overlap_tokens": overlap_tokens,
+        "dim": dim,
+    }
 
 
 def chunk_index_append(
-    spark,
     new_docs: DataFrame,
     index_dir: str,
     chunk_tokens: int = 64,
@@ -320,57 +323,42 @@ def chunk_index_append(
 ) -> None:
     """Grow a persisted chunk index with NEW documents without
     rebuilding (r10 — the one >5× row in the r9 20× scaling ledger was
-    ``rag_retrieval``'s full chunk-index rebuild per corpus version;
-    this gives the chunk index the SAME daily-ingest contract the plain
-    IVF and IVF+SQ8 indexes already have): chunk the new docs with the
-    index's chunking recipe, vectorize with the same hashing
-    vectorizer, assign to the FROZEN centroids and append
-    cell-clustered files via :func:`similarity.ivf_index_append`.
+    ``rag_retrieval``'s full chunk-index rebuild per corpus version):
+    chunk and vectorize the new docs with the index's recipe, then
+    ``vector_index.append_index`` assigns them to the FROZEN centroids.
 
     Corpus growth therefore pays per-batch chunk+encode+append —
     linear in the BATCH — instead of a full rebuild linear in the
-    corpus. Centroids never move, so existing cell files never rewrite
-    and old query results stay stable; periodic drift-retraining is a
-    rebuild (new ``index_dir``), and
-    ``similarity.ivf_index_recluster`` folds accumulated small append
-    files back into the clustered base, same policy as any clustered
-    table.
+    corpus. Centroids never move, so existing rows never rewrite and
+    old query results stay stable; ``vector_index.recluster_index``
+    folds accumulated append batches back into the clustered base and
+    ``retrain_index`` re-trains a drifted one.
 
     ``batch_tag`` makes the append idempotent for at-least-once
-    delivery: the batch lands in its own overwrite-mode
-    ``cells_appends/<tag>`` dir that a replay rewrites wholesale, and
-    ``ivf_index_load`` (hence ``chunk_index_ensure`` and every
-    retrieval query over this index) unions only COMMITTED (_SUCCESS)
-    batches back in.
+    delivery: a replay replaces the tag's committed rows instead of
+    duplicating them, and only batches the manifest committed are
+    searched.
 
-    Caller contract: ``chunk_tokens/overlap_tokens/dim`` MUST match the
-    base build (they define cand_id packing and vector space); pass the
-    values the index was built with."""
-    from lakehouse_adventureworks2022_spark.operators.curation import (
-        chunk_documents,
-    )
-    from lakehouse_adventureworks2022_spark.operators.similarity import (
-        ivf_index_append,
+    ``chunk_tokens/overlap_tokens/dim`` must match the base build: the
+    append checks them against the manifest and raises ``ValueError``
+    on a mismatch."""
+    from lakehouse_adventureworks2022_spark.operators.vector_index import (
+        append_index,
     )
 
-    chunks = chunk_documents(
-        new_docs, chunk_tokens=chunk_tokens, overlap_tokens=overlap_tokens
-    ).withColumn(
-        "vec_id",
-        (F.col("doc_id") * F.lit(1_000_000) + F.col("chunk_id")).cast("long"),
-    )
-    vectors = hashing_vectorizer(
-        chunks, text_col="chunk_text", dim=dim, keep_cols=("vec_id",)
-    )
-    ivf_index_append(
-        spark, vectors, index_dir, n_files=n_files, batch_tag=batch_tag
+    vectors, _ = _chunk_vectors(new_docs, chunk_tokens, overlap_tokens, dim)
+    append_index(
+        vectors,
+        index_dir,
+        batch_tag=batch_tag,
+        n_files=n_files,
+        recipe=_chunk_recipe(chunk_tokens, overlap_tokens, dim),
     )
 
 
 def retrieval_search(
     queries: DataFrame,
-    centroids: DataFrame,
-    cells: DataFrame,
+    index,
     dim: int = 64,
     k: int = 5,
     n_probe: int = 4,
@@ -379,7 +367,9 @@ def retrieval_search(
     SAME hashing vectorizer and probe the chunk index: returns
     ``(query_id, cand_id, rank, cosine)`` — ``cand_id`` decodes as
     ``doc_id·10⁶ + chunk_id``."""
-    from lakehouse_adventureworks2022_spark.operators.similarity import ivf_search
+    from lakehouse_adventureworks2022_spark.operators.similarity import (
+        search_index,
+    )
 
     qv = hashing_vectorizer(
         queries.withColumnRenamed("query_id", "vec_id"),
@@ -387,4 +377,4 @@ def retrieval_search(
         dim=dim,
         keep_cols=("vec_id",),
     )
-    return ivf_search(qv, centroids, cells, k=k, n_probe=n_probe)
+    return search_index(index, qv, k=k, n_probe=n_probe)

@@ -490,8 +490,8 @@ def warc_incremental_ingest(
     itself stays the unit of parallelism inside the job (the
     :func:`read_warc` layout).
 
-    Idempotence (the ``sources/watermark.py`` + ``ivf_index_append``
-    posture): a crash between the parquet write and the checkpoint
+    Idempotence (the ``sources/watermark.py`` +
+    ``vector_index.append_index`` posture): a crash between the parquet write and the checkpoint
     update replays the same files into the SAME per-file partition
     dirs — dynamic overwrite replaces exactly the partitions it
     touches, never siblings; the checkpoint itself is atomic

@@ -68,13 +68,12 @@ def run_maintenance(tm: TableManager, plans: list[MaintenancePlan]) -> dict[str,
 
 @dataclass
 class IndexMaintenancePlan:
-    """Per-index maintenance directive for an ingest-grown IVF-family
-    index (``ivf_index_append`` batch dirs under ``index_dir``)."""
+    """Per-index maintenance directive for an ingest-grown ivf index
+    (``vector_index.append_index`` batches under ``index_dir``); a
+    retrain reuses the build params its manifest records."""
 
     index_dir: str
     tv_threshold: float = 0.25  # monitoring.ivf_retrain_trigger default
-    n_cells: int = 16  # retrain sizing (match the original build)
-    train_cap: int = 2048
     n_files: int = 16  # rewrite width for retrain/recluster
 
 
@@ -88,11 +87,11 @@ def run_index_maintenance(
     - ``retrain`` when the TV-distance trigger fires — appended mass is
       piling into cells out of proportion to the base, which is how
       recall decay under frozen centroids shows up long before recall
-      itself is measurable online (``similarity.ivf_index_retrain``:
+      itself is measurable online (``vector_index.retrain_index``:
       fresh centroids over the grown population);
     - ``recluster`` when appends exist but the distribution is healthy —
       the routine small-file fold-in, centroids untouched so results
-      cannot change (``similarity.ivf_index_recluster``);
+      cannot change (``vector_index.recluster_index``);
     - ``none`` when nothing has been appended.
 
     Returns ``{index_dir: {total_variation, max_cell_delta, n_appended,
@@ -103,9 +102,9 @@ def run_index_maintenance(
         ivf_ingest_drift,
         ivf_retrain_trigger,
     )
-    from lakehouse_adventureworks2022_spark.operators.similarity import (
-        ivf_index_recluster,
-        ivf_index_retrain,
+    from lakehouse_adventureworks2022_spark.operators.vector_index import (
+        recluster_index,
+        retrain_index,
     )
 
     done: dict[str, dict] = {}
@@ -114,16 +113,10 @@ def run_index_maintenance(
             ivf_ingest_drift(spark, p.index_dir), p.tv_threshold
         ).collect()[0]
         if row["retrain"]:
-            ivf_index_retrain(
-                spark,
-                p.index_dir,
-                n_cells=p.n_cells,
-                train_cap=p.train_cap,
-                n_files=p.n_files,
-            )
+            retrain_index(spark, p.index_dir, n_files=p.n_files)
             action = "retrain"
         elif row["n_appended"] > 0:
-            ivf_index_recluster(spark, p.index_dir, n_files=p.n_files)
+            recluster_index(spark, p.index_dir, n_files=p.n_files)
             action = "recluster"
         else:
             action = "none"

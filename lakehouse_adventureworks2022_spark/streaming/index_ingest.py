@@ -9,19 +9,20 @@ Semantics:
 
 - the index must already exist (train once on a representative seed
   corpus — the appended vectors are assigned to the FROZEN centroids
-  via ``similarity.ivf_index_append``, so existing cells never rewrite
-  and earlier search results stay stable; drift re-training is a
-  rebuild, by policy not by accident);
+  via ``vector_index.append_index``, so existing cells never rewrite
+  and earlier search results stay stable; drift re-training is
+  ``vector_index.retrain_index``, by policy not by accident);
 - each micro-batch: quality gate → chunk → hashing-vectorize →
   assign+append (one Arrow pass + one clustered write — no shuffle of
   the existing index);
-- idempotence: each batch appends through its own overwrite-mode
-  directory (``ivf_index_append(batch_tag=…)``), so a replayed batch
-  REWRITES its files instead of duplicating them — safe even when the
-  crash lands between the append and the applied-id record (the
-  recorded ids are only a fast-path skip);
+- idempotence: each batch appends under its batch tag
+  (``append_index(batch_tag=…)``), which the index manifest maps to the
+  dir of its committed attempt, so a replayed batch REPLACES its rows
+  instead of duplicating them — safe even when the crash lands between
+  the append and the applied-id record (the recorded ids are only a
+  fast-path skip), or in the middle of the replay itself;
 - accumulated small appended file sets are the documented maintenance
-  debt — run ``similarity.ivf_index_recluster`` on the usual compaction
+  debt — run ``vector_index.recluster_index`` on the usual compaction
   cadence (tested in ``test_training_ops``).
 
 Scale: per-batch work is linear in the batch; the index on disk is the
@@ -45,7 +46,6 @@ from lakehouse_adventureworks2022_spark.streaming.corpus import quality_gate
 
 
 def index_batch(
-    spark,
     batch_df: DataFrame,
     index_dir: str,
     chunk_tokens: int = 64,
@@ -59,12 +59,11 @@ def index_batch(
     chunk→vectorize→frozen-centroid-append the batch ingest query
     (``rag_index_ingest``) runs, rather than a parallel copy of it).
 
-    ``batch_tag`` routes the append through its own overwrite-mode
-    directory (``ivf_index_append``'s idempotent form) — REQUIRED for
-    at-least-once delivery, where a replayed batch must rewrite rather
-    than duplicate."""
+    ``batch_tag`` makes the append idempotent (``append_index``
+    replaces a committed tag's rows) — REQUIRED for at-least-once
+    delivery, where a replayed batch must replace rather than
+    duplicate."""
     chunk_index_append(
-        spark,
         quality_gate(batch_df),
         index_dir,
         chunk_tokens=chunk_tokens,
@@ -92,12 +91,11 @@ def stream_index_ingest(
             applied = set(json.loads(applied_path.read_text()))
         if batch_id in applied:
             return
-        # the batch-tagged append is IDEMPOTENT (overwrite of the same
-        # per-batch dir), so a crash between the append and the record
-        # below re-applies safely on replay — the applied set is a
-        # fast-path skip, not the correctness mechanism
+        # the batch-tagged append is IDEMPOTENT (a replay replaces the
+        # tag's committed rows), so a crash between the append and the
+        # record below re-applies safely on replay — the applied set is
+        # a fast-path skip, not the correctness mechanism
         index_batch(
-            batch_df.sparkSession,
             batch_df,
             index_dir,
             chunk_tokens,

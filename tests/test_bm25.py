@@ -194,12 +194,12 @@ def test_ltr_reranker_end_to_end(spark):
     )
 
     docs = read_table(spark, SF, "documents").limit(150)
-    centroids, cells, chunks = build_chunk_index(docs)
+    index, chunks = build_chunk_index(docs)
     queries = docs.limit(12).selectExpr(
         "doc_id + 5000000000 AS query_id",
         "substring(text, 1, 200) AS query_text",
     )
-    vec = retrieval_search(queries, centroids, cells, k=10)
+    vec = retrieval_search(queries, index, k=10)
     postings, stats = bm25.build_bm25_index(
         chunks.withColumn(
             "vec_id",

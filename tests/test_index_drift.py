@@ -10,9 +10,15 @@ import pytest
 from pyspark.sql import functions as F
 
 from lakehouse_adventureworks2022_spark.operators import similarity
+from lakehouse_adventureworks2022_spark.operators import vector_index
 from lakehouse_adventureworks2022_spark.operators.monitoring import (
     ivf_ingest_drift,
     ivf_retrain_trigger,
+)
+from lakehouse_adventureworks2022_spark.operators.vector_index import (
+    append_index,
+    ensure_index,
+    load_index,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -43,10 +49,7 @@ def _drifted(df):
 
 def _base_index(spark, emb, tmp_path, name):
     idx = str(tmp_path / name)
-    centroids, cells = similarity.ivf_build(
-        emb.filter(F.col("vec_id") % 2 == 0)
-    )
-    similarity.ivf_index_save(centroids, cells, idx)
+    ensure_index(emb.filter(F.col("vec_id") % 2 == 0), idx)
     return idx
 
 
@@ -61,9 +64,7 @@ def test_no_appends_reads_zero_drift(spark, tmp_path):
 def test_iid_appends_stay_under_trigger(spark, tmp_path):
     emb = _emb(spark)
     idx = _base_index(spark, emb, tmp_path, "idx_iid")
-    similarity.ivf_index_append(
-        spark, emb.filter(F.col("vec_id") % 2 == 1), idx, batch_tag="b1"
-    )
+    append_index(emb.filter(F.col("vec_id") % 2 == 1), idx, batch_tag="b1")
     drift = ivf_ingest_drift(spark, idx)
     row = ivf_retrain_trigger(drift).collect()[0]
     assert row["n_appended"] > 0
@@ -75,11 +76,8 @@ def test_iid_appends_stay_under_trigger(spark, tmp_path):
 def test_drifted_appends_fire_the_trigger(spark, tmp_path):
     emb = _emb(spark)
     idx = _base_index(spark, emb, tmp_path, "idx_drift")
-    similarity.ivf_index_append(
-        spark,
-        _drifted(emb.filter(F.col("vec_id") % 2 == 1)),
-        idx,
-        batch_tag="b1",
+    append_index(
+        _drifted(emb.filter(F.col("vec_id") % 2 == 1)), idx, batch_tag="b1"
     )
     drift = ivf_ingest_drift(spark, idx)
     row = ivf_retrain_trigger(drift).collect()[0]
@@ -91,35 +89,37 @@ def test_drifted_appends_fire_the_trigger(spark, tmp_path):
     assert worst["share_appended"] > worst["share_base"]
 
 
-def test_trigger_only_counts_committed_batches(spark, tmp_path):
-    """A crash-mid-append (no _SUCCESS) must stay invisible to the
-    monitor, same contract as the search path."""
-    import os
-    import shutil
+def test_trigger_only_counts_committed_batches(spark, tmp_path, monkeypatch):
+    """A crash-mid-append (batch rows written, manifest not yet
+    swapped) must stay invisible to the monitor, same contract as the
+    search path."""
+    import glob
 
     emb = _emb(spark)
     idx = _base_index(spark, emb, tmp_path, "idx_crash")
-    similarity.ivf_index_append(
-        spark, _drifted(emb.filter(F.col("vec_id") % 2 == 1)), idx,
-        batch_tag="b1",
-    )
-    os.remove(f"{idx}/cells_appends/b1/_SUCCESS")  # simulate the crash
+
+    def crash(*_):
+        raise OSError("simulated crash before the manifest swap")
+
+    monkeypatch.setattr(vector_index, "_write_manifest", crash)
+    with pytest.raises(OSError, match="simulated crash"):
+        append_index(
+            _drifted(emb.filter(F.col("vec_id") % 2 == 1)), idx, batch_tag="b1"
+        )
+    assert glob.glob(f"{idx}/gen-00001/appends/b1-*")  # rows did land
     row = ivf_retrain_trigger(ivf_ingest_drift(spark, idx)).collect()[0]
     assert row["n_appended"] == 0 and not row["retrain"]
-    shutil.rmtree(f"{idx}/cells_appends/b1")
 
 
 @pytest.mark.slow
 def test_codes_variant_for_sq8_indexes(spark, tmp_path):
     emb = _emb(spark)
-    q = emb.limit(3)
     idx = str(tmp_path / "sq8_idx")
-    similarity.cosine_topk_ivf_sq8_amortized(q, emb, idx, k=3).collect()
+    ensure_index(emb, idx, "ivf", "sq8")
     newv = emb.select((F.col("vec_id") + 500_000).alias("vec_id"), "embedding")
-    similarity.ivf_sq8_index_append(spark, newv, idx, batch_tag="b1")
-    row = ivf_retrain_trigger(
-        ivf_ingest_drift(spark, idx, table="codes")
-    ).collect()[0]
+    append_index(newv, idx, batch_tag="b1")
+    # the manifest knows the kind: no table/layout argument
+    row = ivf_retrain_trigger(ivf_ingest_drift(spark, idx)).collect()[0]
     assert row["n_appended"] > 0
     # identical vectors re-keyed: the appended distribution IS the base
     assert row["total_variation"] < 0.05
@@ -133,16 +133,25 @@ def _recall_at_k(spark, queries, corpus, idx, k=5, n_probe=2):
     """Mean overlap@k of the persisted index's probe search vs exact
     brute force over the CURRENT population."""
     exact = similarity.cosine_topk(queries, corpus, k=k)
-    centroids, cells = similarity.ivf_index_load(spark, idx)
-    approx = similarity.ivf_search(queries, centroids, cells, k=k, n_probe=n_probe)
+    approx = similarity.search_index(
+        load_index(spark, idx), queries, k=k, n_probe=n_probe
+    )
     hit = exact.join(approx, ["query_id", "cand_id"], "left_semi")
     n_q = queries.count()
     return hit.count() / float(k * n_q)
 
 
 def _grown_corpus(spark, idx):
-    _, cells = similarity.ivf_index_load(spark, idx)
-    return cells.select(F.col("cand_id").alias("vec_id"), "embedding")
+    return load_index(spark, idx).data.select(
+        F.col("cand_id").alias("vec_id"), "embedding"
+    )
+
+
+def _centroids(spark, idx):
+    return {
+        (cell, tuple(row))
+        for cell, row in enumerate(load_index(spark, idx).centroids.tolist())
+    }
 
 
 @pytest.mark.slow
@@ -161,10 +170,10 @@ def test_maintenance_retrains_drifted_not_iid(spark, tmp_path):
     batch = emb.filter(F.col("vec_id") % 2 == 1)
 
     idx_iid = _base_index(spark, emb, tmp_path, "m_iid")
-    similarity.ivf_index_append(spark, batch, idx_iid, batch_tag="b1")
+    append_index(batch, idx_iid, batch_tag="b1")
     idx_drift = _base_index(spark, emb, tmp_path, "m_drift")
     drifted = _drifted(batch)
-    similarity.ivf_index_append(spark, drifted, idx_drift, batch_tag="b1")
+    append_index(drifted, idx_drift, batch_tag="b1")
 
     # queries from the drifted region — where frozen centroids hurt
     q_drift = drifted.limit(8).select(
@@ -178,14 +187,8 @@ def test_maintenance_retrains_drifted_not_iid(spark, tmp_path):
         spark, q_drift, _grown_corpus(spark, idx_drift), idx_drift
     )
 
-    centroids_before = {
-        (r["cell"], tuple(r["centroid"]))
-        for r in similarity.ivf_index_load(spark, idx_drift)[0].collect()
-    }
-    iid_centroids_before = {
-        (r["cell"], tuple(r["centroid"]))
-        for r in similarity.ivf_index_load(spark, idx_iid)[0].collect()
-    }
+    centroids_before = _centroids(spark, idx_drift)
+    iid_centroids_before = _centroids(spark, idx_iid)
 
     report = run_index_maintenance(
         spark,
@@ -197,22 +200,15 @@ def test_maintenance_retrains_drifted_not_iid(spark, tmp_path):
     assert report[idx_iid]["total_variation"] < 0.25
 
     # recluster must NOT move centroids; retrain must
-    iid_centroids_after = {
-        (r["cell"], tuple(r["centroid"]))
-        for r in similarity.ivf_index_load(spark, idx_iid)[0].collect()
-    }
-    assert iid_centroids_after == iid_centroids_before
-    drift_centroids_after = {
-        (r["cell"], tuple(r["centroid"]))
-        for r in similarity.ivf_index_load(spark, idx_drift)[0].collect()
-    }
-    assert drift_centroids_after != centroids_before
+    assert _centroids(spark, idx_iid) == iid_centroids_before
+    assert _centroids(spark, idx_drift) != centroids_before
 
-    # append dirs folded into the base on both paths
+    # append batches folded into a new base generation on both paths
     import os
 
-    assert not os.path.isdir(f"{idx_iid}/cells_appends")
-    assert not os.path.isdir(f"{idx_drift}/cells_appends")
+    for idx in (idx_iid, idx_drift):
+        assert load_index(spark, idx).appended is None
+        assert not os.path.isdir(f"{idx}/gen-00001")  # old gen deleted
 
     # same population before/after (retrain/recluster never drop rows)
     assert _grown_corpus(spark, idx_drift).count() == emb.count()

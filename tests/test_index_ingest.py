@@ -11,9 +11,9 @@ import os
 
 from pyspark.sql import functions as F
 
-from lakehouse_adventureworks2022_spark.operators.similarity import (
-    ivf_index_load,
-    ivf_search,
+from lakehouse_adventureworks2022_spark.operators.vector_index import (
+    append_index,
+    load_index,
 )
 from lakehouse_adventureworks2022_spark.operators.vectorize import (
     chunk_index_ensure,
@@ -46,26 +46,25 @@ def test_streamed_docs_become_searchable_and_replay_is_idempotent(
     arriving = docs.filter("doc_id >= 300 AND doc_id < 400")
 
     idx = str(tmp_path / "idx")
-    chunk_index_ensure(spark, seed, idx)  # train+seed the index
-    _, cells0 = ivf_index_load(spark, idx)
-    cells_before = cells0.count()
-    files_before = set(glob.glob(f"{idx}/cells/*.parquet"))
+    chunk_index_ensure(seed, idx)  # train+seed the index
+    cells_before = load_index(spark, idx).data.count()
+    files_before = set(glob.glob(f"{idx}/gen-*/base/*.parquet"))
 
     src_dir = tmp_path / "arrivals"
     arriving.coalesce(1).write.mode("overwrite").parquet(str(src_dir))
     _run_ingest(spark, src_dir, idx, tmp_path / "ckpt")
 
-    centroids, cells = ivf_index_load(spark, idx)
-    assert cells.count() > cells_before  # new vectors landed
+    index = load_index(spark, idx)
+    assert index.data.count() > cells_before  # new vectors landed
     # existing cell files were NOT rewritten (frozen-centroid append)
-    assert files_before == set(glob.glob(f"{idx}/cells/*.parquet"))
+    assert files_before == set(glob.glob(f"{idx}/gen-*/base/*.parquet"))
 
     # a streamed doc's own text now retrieves its chunk at rank 1
     queries = arriving.limit(5).select(
         (F.col("doc_id") + F.lit(7_000_000_000)).alias("query_id"),
         F.substring("text", 1, 200).alias("query_text"),
     )
-    hits = retrieval_search(queries, centroids, cells, k=5)
+    hits = retrieval_search(queries, index, k=5)
     self_hits = hits.filter(
         (F.col("cand_id") / 1_000_000).cast("long")
         == F.col("query_id") - 7_000_000_000
@@ -73,19 +72,19 @@ def test_streamed_docs_become_searchable_and_replay_is_idempotent(
     assert self_hits.filter(F.col("rank") == 1).count() >= 4
 
     # replay via the recorded-ids fast path: nothing double-indexed
-    n1 = ivf_index_load(spark, idx)[1].count()
+    n1 = load_index(spark, idx).data.count()
     _run_ingest(spark, src_dir, idx, tmp_path / "ckpt")
-    assert ivf_index_load(spark, idx)[1].count() == n1
+    assert load_index(spark, idx).data.count() == n1
 
     # crash-window replay: re-apply the SAME batch tag directly (as a
     # restart would after crashing between append and record) — the
-    # overwrite-mode per-batch dir rewrites instead of duplicating
+    # tag's committed rows are replaced instead of duplicated
     from lakehouse_adventureworks2022_spark.streaming.index_ingest import (
         index_batch,
     )
 
-    index_batch(spark, arriving, idx, batch_tag="b0")
-    assert ivf_index_load(spark, idx)[1].count() == n1
+    index_batch(arriving, idx, batch_tag="b0")
+    assert load_index(spark, idx).data.count() == n1
 
 
 @pytest.mark.slow
@@ -93,8 +92,8 @@ def test_quality_gate_filters_before_indexing(spark, tmp_path):
     docs = read_table(spark, SF, "documents")
     seed = docs.filter("doc_id < 100")
     idx = str(tmp_path / "idx2")
-    chunk_index_ensure(spark, seed, idx)
-    n0 = ivf_index_load(spark, idx)[1].count()
+    chunk_index_ensure(seed, idx)
+    n0 = load_index(spark, idx).data.count()
 
     # junk batch: all docs fail the trainability gate (too short)
     junk = spark.createDataFrame(
@@ -104,26 +103,22 @@ def test_quality_gate_filters_before_indexing(spark, tmp_path):
     src_dir = tmp_path / "junk"
     junk.coalesce(1).write.mode("overwrite").parquet(str(src_dir))
     _run_ingest(spark, src_dir, idx, tmp_path / "ckpt2")
-    assert ivf_index_load(spark, idx)[1].count() == n0  # nothing added
+    assert load_index(spark, idx).data.count() == n0  # nothing added
 
 
 def test_uncommitted_append_batches_are_invisible(spark, tmp_path):
-    """A crash mid-append leaves a batch dir WITHOUT _SUCCESS (possibly
-    with partial/corrupt part-files): ivf_index_load must neither read
-    it nor fail on it — only committed batches join the cells frame
+    """A crash mid-append leaves a batch dir the manifest does not name
+    (possibly with partial/corrupt part-files): load_index must neither
+    read it nor fail on it — only committed batches join the index rows
     (ADVICE r5)."""
     import os
 
-    from lakehouse_adventureworks2022_spark.operators.similarity import (
-        ivf_index_append,
-    )
-
     docs = read_table(spark, SF, "documents")
     idx = str(tmp_path / "idx")
-    chunk_index_ensure(spark, docs.filter("doc_id < 200"), idx)
-    base = ivf_index_load(spark, idx)[1].count()
+    chunk_index_ensure(docs.filter("doc_id < 200"), idx)
+    base = load_index(spark, idx).data.count()
 
-    # committed append: normal path, _SUCCESS present
+    # committed append: normal path, tag recorded in the manifest
     from lakehouse_adventureworks2022_spark.operators.vectorize import (
         hashing_vectorizer,
     )
@@ -131,17 +126,17 @@ def test_uncommitted_append_batches_are_invisible(spark, tmp_path):
     newv = hashing_vectorizer(
         docs.filter("doc_id >= 200 AND doc_id < 220"), keep_cols=("doc_id",)
     ).selectExpr("doc_id AS vec_id", "embedding")
-    ivf_index_append(spark, newv, idx, batch_tag="b1")
-    committed = ivf_index_load(spark, idx)[1].count()
+    append_index(newv, idx, batch_tag="b1")
+    committed = load_index(spark, idx).data.count()
     assert committed == base + 20
 
-    # crashed append: partial dir, garbage part-file, NO _SUCCESS
-    crash = f"{idx}/cells_appends/b2"
+    # crashed append: partial dir, garbage part-file, not in the manifest
+    crash = f"{idx}/gen-00001/appends/b2-crashed"
     os.makedirs(crash)
     with open(f"{crash}/part-00000.parquet", "wb") as f:
         f.write(b"not a parquet footer")
-    assert ivf_index_load(spark, idx)[1].count() == committed
+    assert load_index(spark, idx).data.count() == committed
 
-    # the replay overwrites the same tag and commits — now visible
-    ivf_index_append(spark, newv, idx, batch_tag="b2")
-    assert ivf_index_load(spark, idx)[1].count() == committed + 20
+    # the replay writes a fresh dir and commits — now visible
+    append_index(newv, idx, batch_tag="b2")
+    assert load_index(spark, idx).data.count() == committed + 20

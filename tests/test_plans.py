@@ -162,14 +162,21 @@ def test_ivf_sq8_ingest_search_prunes_probed_cells(spark, sf_dir, tmp_path):
     the base index AND the committed batch dirs are cell-clustered, so
     footer min-max prunes unprobed files on each side)."""
     from lakehouse_adventureworks2022_spark.operators import similarity
+    from lakehouse_adventureworks2022_spark.operators.vector_index import (
+        append_index,
+        ensure_index,
+        load_index,
+    )
 
     q, c = similarity.embedding_queries(spark, sf_dir)
     idx = str(tmp_path / "ingest_idx")
-    similarity.cosine_topk_ivf_sq8_amortized(q, c, idx, k=5).collect()
+    ensure_index(c, idx, "ivf", "sq8")
     newv = c.select((F.col("vec_id") + 500_000).alias("vec_id"), "embedding")
-    similarity.ivf_sq8_index_append(spark, newv, idx, batch_tag="b")
+    append_index(newv, idx, batch_tag="b")
     all_cand = c.select("vec_id", "embedding").unionByName(newv)
-    out = similarity.cosine_topk_ivf_sq8_amortized(q, all_cand, idx, k=5)
+    out = similarity.search_index(
+        load_index(spark, idx), q, k=5, candidates=all_cand
+    )
     plan = plan_of(out)
     assert "In(cell" in plan  # probe pruning pushed to the codes scan
     assert "CartesianProduct" not in plan
@@ -191,16 +198,16 @@ def test_rag_ingest_search_prunes_probed_cells(spark, sf_dir, tmp_path):
 
     docs = read_table(spark, sf_dir, "documents").limit(60)
     idx = str(tmp_path / "rag_idx")
-    chunk_index_ensure(spark, docs, idx)
+    chunk_index_ensure(docs, idx)
     new_docs = spark.createDataFrame(
         [(9_000_000, "fresh ingest doc " * 30)], "doc_id long, text string"
     )
-    chunk_index_append(spark, new_docs, idx, batch_tag="b")
-    centroids, cells = chunk_index_ensure(spark, docs, idx)
+    chunk_index_append(new_docs, idx, batch_tag="b")
+    index = chunk_index_ensure(docs, idx)
     queries = spark.createDataFrame(
         [(1, "fresh ingest doc")], "query_id long, query_text string"
     )
-    out = retrieval_search(queries, centroids, cells, k=3)
+    out = retrieval_search(queries, index, k=3)
     plan = plan_of(out)
     assert "In(cell" in plan  # probe pruning pushed to the cells scan
     assert "CartesianProduct" not in plan

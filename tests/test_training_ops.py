@@ -11,6 +11,12 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from lakehouse_adventureworks2022_spark.operators import dedup, similarity
+from lakehouse_adventureworks2022_spark.operators.vector_index import (
+    append_index,
+    ensure_index,
+    load_index,
+    recluster_index,
+)
 from lakehouse_adventureworks2022_spark.sources.readers import read_table
 
 SF = "/root/testdata/sf0.001"
@@ -286,44 +292,17 @@ def test_ivf_index_persist_reload_search(spark, tmp_path):
         for r in similarity.cosine_topk_ivf(q, c, k=10).collect()
     }
 
-    centroids, cells = similarity.ivf_build(c)
+    index = similarity._build_index(c, "ivf", "raw")
     tm = TableManager(spark, str(tmp_path))
-    tm.write_clustered(cells, "ivf_cells", "cell", n_files=4)
-    tm.overwrite(centroids, "ivf_centroids")
+    tm.write_clustered(index.base, "ivf_cells", "cell", n_files=4)
+    reloaded_index = similarity.VectorIndex(
+        "ivf", "raw", base=tm.read("ivf_cells"), centroids=index.centroids
+    )
     reloaded = {
         (r["query_id"], r["cand_id"], r["rank"])
-        for r in similarity.ivf_search(
-            q, tm.read("ivf_centroids"), tm.read("ivf_cells"), k=10
-        ).collect()
+        for r in similarity.search_index(reloaded_index, q, k=10).collect()
     }
     assert reloaded == direct and len(direct) == 50
-
-
-@pytest.mark.slow
-def test_ivf_amortized_builds_once_then_searches(spark, tmp_path):
-    """cosine_topk_ivf_amortized: first call builds + persists the
-    clustered index, later calls reuse it (no rebuild — verified via the
-    index dir's mtime) and return the identical result."""
-    import os
-
-    q, c = similarity.embedding_queries(spark, SF)
-    idx = str(tmp_path / "ivf_idx")
-    one_shot = {
-        (r["query_id"], r["cand_id"], r["rank"])
-        for r in similarity.cosine_topk_ivf(q, c, k=10).collect()
-    }
-    first = {
-        (r["query_id"], r["cand_id"], r["rank"])
-        for r in similarity.cosine_topk_ivf_amortized(q, c, idx, k=10).collect()
-    }
-    assert first == one_shot  # deterministic build ⇒ same answer
-    stamp = os.path.getmtime(f"{idx}/centroids/_SUCCESS")
-    again = {
-        (r["query_id"], r["cand_id"], r["rank"])
-        for r in similarity.cosine_topk_ivf_amortized(q, c, idx, k=10).collect()
-    }
-    assert again == first
-    assert os.path.getmtime(f"{idx}/centroids/_SUCCESS") == stamp  # reused
 
 
 def test_ivf_search_prunes_unprobed_cells(spark, tmp_path):
@@ -332,9 +311,8 @@ def test_ivf_search_prunes_unprobed_cells(spark, tmp_path):
     pruning) — the scan reads ~n_probe/n_cells of the corpus, not all
     of it."""
     q, c = similarity.embedding_queries(spark, SF)
-    idx = str(tmp_path / "ivf_idx")
-    cents, cells = similarity.ivf_index_ensure(spark, c, idx)
-    df = similarity.ivf_search(q.limit(1), cents, cells, k=10, n_probe=2)
+    index = ensure_index(c, str(tmp_path / "ivf_idx"))
+    df = similarity.search_index(index, q.limit(1), k=10, n_probe=2)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters: [In(cell" in plan, plan[:2000]
 
@@ -343,8 +321,8 @@ def test_ivf_search_prunes_unprobed_cells(spark, tmp_path):
 def test_ivf_distributed_training_recall_and_compose(spark, tmp_path):
     """ivf_build_distributed trains on the WHOLE corpus via pyspark.ml
     KMeans (no driver-side sample) yet keeps the (centroids, cells)
-    contract: search recall holds and the index persists/reloads through
-    the same machinery as the sampled builder."""
+    contract: search recall holds and the frames persist/reload like
+    the sampled builder's."""
     q, c = similarity.embedding_queries(spark, SF)
     cents, cells = similarity.ivf_build_distributed(c, n_cells=16)
     assert dict(cents.dtypes) == {"cell": "int", "centroid": "array<double>"}
@@ -352,18 +330,23 @@ def test_ivf_distributed_training_recall_and_compose(spark, tmp_path):
         (r["query_id"], r["cand_id"])
         for r in similarity.cosine_topk(q, c, k=10).collect()
     }
-    pairs = {
-        (r["query_id"], r["cand_id"])
-        for r in similarity.ivf_search(q, cents, cells, k=10).collect()
-    }
+
+    def search(cents, cells):
+        index = similarity.VectorIndex(
+            "ivf", "raw", base=cells, centroids=similarity._centroid_matrix(cents)
+        )
+        return {
+            (r["query_id"], r["cand_id"])
+            for r in similarity.search_index(index, q, k=10).collect()
+        }
+
+    pairs = search(cents, cells)
     assert len(pairs & exact) / len(exact) >= 0.5  # 4 of 16 cells probed
-    similarity.ivf_index_save(cents, cells, str(tmp_path / "idx"))
-    c2, l2 = similarity.ivf_index_load(spark, str(tmp_path / "idx"))
-    again = {
-        (r["query_id"], r["cand_id"])
-        for r in similarity.ivf_search(q, c2, l2, k=10).collect()
-    }
-    assert again == pairs
+    cents.write.parquet(str(tmp_path / "centroids"))
+    cells.write.parquet(str(tmp_path / "cells"))
+    c2 = spark.read.parquet(str(tmp_path / "centroids"))
+    l2 = spark.read.parquet(str(tmp_path / "cells"))
+    assert search(c2, l2) == pairs
 
 
 def _union_find_components(edges):
@@ -492,29 +475,27 @@ def test_ivf_index_append_equals_same_centroid_assignment(spark, tmp_path):
     q, _ = similarity.embedding_queries(spark, SF)
 
     idx = str(tmp_path / "idx")
-    centroids, hist_cells = similarity.ivf_build(hist)
-    similarity.ivf_index_save(centroids, hist_cells, idx)
-    similarity.ivf_index_append(spark, batch, idx)
+    ensure_index(hist, idx)
+    append_index(batch, idx)
 
-    c2, cells2 = similarity.ivf_index_load(spark, idx)
+    grown = load_index(spark, idx)
     appended = {
         (r["query_id"], r["cand_id"], r["rank"])
-        for r in similarity.ivf_search(q, c2, cells2, k=10).collect()
+        for r in similarity.search_index(grown, q, k=10).collect()
     }
     # reference: same frozen centroids, all vectors assigned in one pass
-    all_cells = similarity._assign_cells_df(
-        emb,
-        __import__("numpy").array(
-            [r["centroid"] for r in sorted(centroids.collect(), key=lambda r: r["cell"])]
-        ),
+    reference = similarity.VectorIndex(
+        "ivf", "raw",
+        base=similarity._assign_cells_df(emb, grown.centroids),
+        centroids=grown.centroids,
     )
     want = {
         (r["query_id"], r["cand_id"], r["rank"])
-        for r in similarity.ivf_search(q, centroids, all_cells, k=10).collect()
+        for r in similarity.search_index(reference, q, k=10).collect()
     }
     assert appended == want
     # appended vectors are findable: every batch vec appears in the index
-    n_index = cells2.count()
+    n_index = grown.data.count()
     assert n_index == emb.count()
 
 
@@ -577,35 +558,31 @@ def test_incremental_dedup_invariants_property(spark, hist_texts, batch_spec):
 
 
 def test_ivf_index_recluster_compacts_without_changing_results(spark, tmp_path):
-    """After several appends the cells table fragments; maintenance
+    """After several appends the index rows fragment; maintenance
     re-clustering must shrink the file count and leave search results
     bit-identical (centroids untouched)."""
-    import os
+    import glob
 
     emb = read_table(spark, SF, "embeddings")
     q, _ = similarity.embedding_queries(spark, SF)
     idx = str(tmp_path / "idx")
-    centroids, cells = similarity.ivf_build(emb.filter("vec_id % 4 = 0"))
-    similarity.ivf_index_save(centroids, cells, idx, n_files=4)
+    ensure_index(emb.filter("vec_id % 4 = 0"), idx, n_files=4)
     for m in (1, 2, 3):  # three append batches -> fragmented files
-        similarity.ivf_index_append(
-            spark, emb.filter(f"vec_id % 4 = {m}"), idx, n_files=4
-        )
+        append_index(emb.filter(f"vec_id % 4 = {m}"), idx, n_files=4)
 
     def n_files():
-        return sum(
-            1 for f in os.listdir(f"{idx}/cells") if f.endswith(".parquet")
-        )
+        return len(glob.glob(f"{idx}/gen-*/**/*.parquet", recursive=True))
 
     def search():
-        c, l = similarity.ivf_index_load(spark, idx)
         return {
             (r["query_id"], r["cand_id"], r["rank"], r["cosine"])
-            for r in similarity.ivf_search(q, c, l, k=10).collect()
+            for r in similarity.search_index(
+                load_index(spark, idx), q, k=10
+            ).collect()
         }
 
     before_files, before = n_files(), search()
-    similarity.ivf_index_recluster(spark, idx, n_files=4)
+    recluster_index(spark, idx, n_files=4)
     assert n_files() < before_files  # 16 fragmented -> 4 clustered
     assert search() == before  # results bit-identical
 
@@ -631,52 +608,51 @@ def test_pq_recall_floor_and_contract(spark):
     for ranks in per_q.values():
         assert sorted(ranks) == list(range(1, len(ranks) + 1))
 
-    codebooks = similarity.pq_train(cand)
-    encoded = similarity.pq_encode(codebooks, cand)
-    adc = {
+    index = similarity._build_index(cand, "none", "pq")
+    adc = {  # the ADC scan alone, no exact re-rank
         (r["query_id"], r["cand_id"])
-        for r in similarity.pq_adc_topk(q, encoded, codebooks, k=10).collect()
+        for r in similarity._scan(index, q, 10).collect()
     }
     assert len(exact & adc) <= len(exact & pq)
 
 
 def test_pq_codebooks_deterministic_and_persistable(spark, tmp_path):
+    import numpy as np
+
     q, cand = similarity.embedding_queries(spark, SF)
-    cb1 = similarity.pq_train(cand)
-    cb2 = similarity.pq_train(cand.repartition(7))
-    a = sorted(map(tuple, cb1.collect()))
-    b = sorted(map(tuple, cb2.collect()))
-    assert a == b  # hash-order sample + fixed init → bit-identical
-    path = str(tmp_path / "codebooks")
-    cb1.write.parquet(path)
-    reloaded = spark.read.parquet(path)
-    enc1 = sorted(map(tuple, similarity.pq_encode(cb1, cand).collect()))
-    enc2 = sorted(map(tuple, similarity.pq_encode(reloaded, cand).collect()))
+    index = similarity._build_index(cand, "none", "pq")
+    again = similarity._build_index(cand.repartition(7), "none", "pq")
+    # hash-order sample + fixed init → bit-identical
+    assert np.array_equal(index.codebooks, again.codebooks)
+    idx = str(tmp_path / "pq_idx")
+    ensure_index(cand, idx, "none", "pq")
+    reloaded = load_index(spark, idx)
+    assert np.array_equal(reloaded.codebooks, index.codebooks)
+    enc1 = sorted(map(tuple, index.base.collect()))
+    enc2 = sorted(map(tuple, similarity._encode(reloaded, cand).collect()))
     assert enc1 == enc2
 
 
 def test_pq_codes_shape_and_compression(spark):
     _, cand = similarity.embedding_queries(spark, SF)
-    codebooks = similarity.pq_train(cand, m=16, n_codes=32)
-    encoded = similarity.pq_encode(codebooks, cand)
-    rows = encoded.collect()
+    index = similarity._build_index(cand, "none", "pq", m=16, n_codes=32)
+    rows = index.base.collect()
     assert len(rows) == cand.count()
     for r in rows[:20]:
         assert len(r["codes"]) == 16
         assert all(0 <= c < 32 for c in r["codes"])
         assert r["vnorm"] > 0
-    # codebook table is kilobytes: 16 subspaces x 32 codes
-    assert codebooks.count() == 16 * 32
+    # codebook tensor is kilobytes: 16 subspaces x 32 codes
+    assert index.codebooks.shape[:2] == (16, 32)
 
 
 def test_pq_adc_scan_reads_codes_not_vectors(spark):
     """The ADC stage's scan of the encoded frame must not drag the raw
     embedding column through the plan (the compression win)."""
     q, cand = similarity.embedding_queries(spark, SF)
-    codebooks = similarity.pq_train(cand)
-    encoded = similarity.pq_encode(codebooks, cand)
+    index = similarity._build_index(cand, "none", "pq")
     plan = (
-        similarity.pq_adc_topk(q, encoded, codebooks, k=10)
+        similarity._scan(index, q, 10)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -729,32 +705,52 @@ def test_ivf_pq_recall_grows_with_probes(spark):
     assert hi >= 0.8  # near-exhaustive probing recovers most of top-k
 
 
-def test_pq_amortized_matches_one_shot(spark, tmp_path):
-    """The persisted-index PQ form must return exactly the one-shot
-    result (deterministic train/encode), and the second call must reuse
-    the saved index (no re-encode: codes dir mtime stable)."""
+@pytest.mark.parametrize(
+    "coarse,codec,one_shot",
+    [
+        pytest.param(
+            "ivf", "raw", "cosine_topk_ivf", marks=pytest.mark.slow, id="ivf"
+        ),
+        pytest.param("none", "pq", "cosine_topk_pq", id="pq"),
+        pytest.param(
+            "none", "sq8", "cosine_topk_sq8", marks=pytest.mark.slow, id="sq8"
+        ),
+        pytest.param(
+            "ivf", "sq8", "cosine_topk_ivf_sq8", marks=pytest.mark.slow,
+            id="ivf_sq8",
+        ),
+    ],
+)
+def test_amortized_matches_one_shot_and_reuses_index(
+    spark, tmp_path, coarse, codec, one_shot
+):
+    """Every persisted kind: the first call builds and commits the
+    index, and its search returns exactly the one-shot result
+    (deterministic train/assign/encode); the second call REUSES the
+    index — same answer, manifest not rewritten."""
     import os
 
-    q, cand = similarity.embedding_queries(spark, SF)
-    idx = str(tmp_path / "pq_idx")
-    one_shot = sorted(
-        map(tuple, similarity.cosine_topk_pq(q, cand, k=10).collect())
-    )
-    a = sorted(
-        map(
-            tuple,
-            similarity.cosine_topk_pq_amortized(q, cand, idx, k=10).collect(),
+    q, c = similarity.embedding_queries(spark, SF)
+    idx = str(tmp_path / f"{coarse}_{codec}_idx")
+
+    def amortized():
+        index = ensure_index(c, idx, coarse, codec)
+        return sorted(
+            map(
+                tuple,
+                similarity.search_index(index, q, k=10, candidates=c).collect(),
+            )
         )
+
+    expected = sorted(
+        map(tuple, getattr(similarity, one_shot)(q, c, k=10).collect())
     )
-    stamp = os.path.getmtime(f"{idx}/codes/_SUCCESS")
-    b = sorted(
-        map(
-            tuple,
-            similarity.cosine_topk_pq_amortized(q, cand, idx, k=10).collect(),
-        )
-    )
-    assert a == one_shot and b == a
-    assert os.path.getmtime(f"{idx}/codes/_SUCCESS") == stamp
+    first = amortized()
+    assert first == expected  # deterministic build ⇒ same answer
+    stamp = os.path.getmtime(f"{idx}/manifest.json")
+    again = amortized()
+    assert again == first
+    assert os.path.getmtime(f"{idx}/manifest.json") == stamp  # not rebuilt
 
 
 def test_sq8_recall_and_determinism(spark):
@@ -790,35 +786,6 @@ def test_sq8_recall_and_determinism(spark):
         F.exists("codes", lambda x: (x < 0) | (x > 255))
     ).count()
     assert bad == 0
-
-
-@pytest.mark.slow
-def test_sq8_amortized_matches_one_shot_and_reuses_index(spark, tmp_path):
-    """The deployed SQ8 form: identical results to the one-shot tier,
-    and the second call must REUSE the persisted index (no re-encode —
-    verified by poisoning nothing and checking mtimes stay put)."""
-    import os
-
-    from lakehouse_adventureworks2022_spark.operators import similarity
-
-    q, c = similarity.embedding_queries(spark, "/root/testdata/sf0.001")
-    idx = str(tmp_path / "sq8_idx")
-    one_shot = {
-        (r["query_id"], r["cand_id"], r["rank"])
-        for r in similarity.cosine_topk_sq8(q, c, k=10).collect()
-    }
-    first = {
-        (r["query_id"], r["cand_id"], r["rank"])
-        for r in similarity.cosine_topk_sq8_amortized(q, c, idx, k=10).collect()
-    }
-    assert first == one_shot
-    stamp = os.path.getmtime(f"{idx}/codes/_SUCCESS")
-    again = {
-        (r["query_id"], r["cand_id"], r["rank"])
-        for r in similarity.cosine_topk_sq8_amortized(q, c, idx, k=10).collect()
-    }
-    assert again == one_shot
-    assert os.path.getmtime(f"{idx}/codes/_SUCCESS") == stamp  # not rebuilt
 
 
 # ---- IVF + SQ8 combined tier (r8) ------------------------------------
@@ -875,55 +842,14 @@ def test_ivf_sq8_scan_reads_codes_not_vectors(spark):
     plan must read the codes table (1 byte/dim), never a raw embedding
     column."""
     q, cand = similarity.embedding_queries(spark, SF)
-    centroids, cells = similarity.ivf_build(cand, n_cells=16)
-    mins, scales = similarity.sq8_train(cand)
-    encoded = similarity.sq8_encode(
-        cells, mins, scales, id_col="cand_id", extra_cols=("cell",)
-    )
-    import numpy as np
-
-    crows = sorted(centroids.collect(), key=lambda r: r["cell"])
-    cm = np.array([r["centroid"] for r in crows], dtype=np.float64)
+    index = similarity._build_index(cand, "ivf", "sq8", n_cells=16)
     plan = (
-        similarity._ivf_sq8_search(
-            q, encoded, cand, mins, scales, cm, k=10, n_probe=4, rerank=8
-        )
+        similarity.search_index(index, q, k=10, candidates=cand)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
     )
     assert "BatchEvalPython" not in plan  # scoring is codegen'd
-
-
-@pytest.mark.slow
-def test_ivf_sq8_amortized_matches_one_shot_and_reuses_index(spark, tmp_path):
-    """The deployed IVF+SQ8 form: identical results to the one-shot
-    tier (deterministic train/assign/encode), and the second call must
-    REUSE the persisted index (codes dir mtime stable)."""
-    import os
-
-    q, c = similarity.embedding_queries(spark, SF)
-    idx = str(tmp_path / "ivf_sq8_idx")
-    one_shot = {
-        (r["query_id"], r["cand_id"], r["rank"])
-        for r in similarity.cosine_topk_ivf_sq8(q, c, k=10).collect()
-    }
-    first = {
-        (r["query_id"], r["cand_id"], r["rank"])
-        for r in similarity.cosine_topk_ivf_sq8_amortized(
-            q, c, idx, k=10
-        ).collect()
-    }
-    assert first == one_shot
-    stamp = os.path.getmtime(f"{idx}/codes/_SUCCESS")
-    again = {
-        (r["query_id"], r["cand_id"], r["rank"])
-        for r in similarity.cosine_topk_ivf_sq8_amortized(
-            q, c, idx, k=10
-        ).collect()
-    }
-    assert again == one_shot
-    assert os.path.getmtime(f"{idx}/codes/_SUCCESS") == stamp  # not rebuilt
 
 
 # ---- Matryoshka-style embedding truncation (r8) ------------------------
@@ -997,18 +923,16 @@ def test_ivf_sq8_index_append_idempotent_and_searchable(spark, tmp_path):
     frozen centroids + frozen quantizer encode the batch, a replayed
     batch_tag rewrites instead of duplicating, and searches over the
     grown index surface the appended vectors."""
-    import numpy as np
-
     q, c = similarity.embedding_queries(spark, SF)
     idx = str(tmp_path / "ivf_sq8_grow")
-    base = similarity.cosine_topk_ivf_sq8_amortized(q, c, idx, k=10)
-    base.collect()  # builds + persists
+    ensure_index(c, idx, "ivf", "sq8")  # builds + persists
     newv = c.select(
         (F.col("vec_id") + 10_000).alias("vec_id"), "embedding"
     )
-    similarity.ivf_sq8_index_append(spark, newv, idx, batch_tag="b1")
-    similarity.ivf_sq8_index_append(spark, newv, idx, batch_tag="b1")  # replay
-    cents, mins, scales, enc = similarity.ivf_sq8_index_load_all(spark, idx)
+    append_index(newv, idx, batch_tag="b1")
+    append_index(newv, idx, batch_tag="b1")  # replay
+    grown = load_index(spark, idx)
+    enc = grown.data
     n = c.count()
     assert enc.count() == 2 * n  # replay did not duplicate
     # appended codes carry valid cells and byte-range values
@@ -1016,20 +940,16 @@ def test_ivf_sq8_index_append_idempotent_and_searchable(spark, tmp_path):
     assert row is not None and all(0 <= x <= 255 for x in row["codes"])
     # search over the grown index: the appended exact duplicates of the
     # corpus vectors must appear among results
-    crows = sorted(cents.collect(), key=lambda r: r["cell"])
-    cm = np.array([r["centroid"] for r in crows], dtype=np.float64)
     all_cand = c.select("vec_id", "embedding").unionByName(
         newv.select("vec_id", "embedding")
     )
-    got = similarity._ivf_sq8_search(
-        q, enc, all_cand, mins, scales, cm, k=10, n_probe=4, rerank=8
-    ).collect()
+    got = similarity.search_index(grown, q, k=10, candidates=all_cand).collect()
     assert any(r["cand_id"] >= 10_000 for r in got)
-    # and through the public amortized entry point (r9): the deployed
-    # search path itself must union committed appends — a grown index
-    # whose amortized search silently drops ingested vectors would
-    # violate the daily-ingest contract the append docstring promises
-    pub = similarity.cosine_topk_ivf_sq8_amortized(
-        q, all_cand, idx, k=10
+    # and through ensure_index (r9): the deployed open path itself must
+    # union committed appends — a grown index whose amortized search
+    # silently drops ingested vectors would violate the daily-ingest
+    # contract the append docstring promises
+    pub = similarity.search_index(
+        ensure_index(c, idx, "ivf", "sq8"), q, k=10, candidates=all_cand
     ).collect()
     assert any(r["cand_id"] >= 10_000 for r in pub)

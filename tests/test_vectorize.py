@@ -89,7 +89,7 @@ def test_self_retrieval_rank1_brute_force(spark):
     """A chunk's own text as the query must retrieve that chunk at
     rank 1 under exact search (cosine 1.0 by construction)."""
     docs = read_table(spark, SF, "documents").filter(F.col("doc_id") < 40)
-    _, _, chunks = build_chunk_index(docs)
+    _, chunks = build_chunk_index(docs)
     cand = hashing_vectorizer(chunks, text_col="chunk_text", keep_cols=("vec_id",))
     probe = chunks.filter(F.col("doc_id") % 7 == 0).select(
         (F.col("vec_id") + F.lit(10_000_000_000)).alias("vec_id"),
@@ -105,12 +105,12 @@ def test_self_retrieval_rank1_brute_force(spark):
 
 def test_retrieval_composite_end_to_end(spark):
     docs = read_table(spark, SF, "documents")
-    centroids, cells, chunks = build_chunk_index(docs)
+    index, chunks = build_chunk_index(docs)
     queries = docs.filter(F.col("doc_id") % 50 == 0).select(
         (F.col("doc_id") + F.lit(5_000_000_000)).alias("query_id"),
         F.substring("text", 1, 200).alias("query_text"),
     )
-    out = retrieval_search(queries, centroids, cells, k=5)
+    out = retrieval_search(queries, index, k=5)
     rows = out.collect()
     n_queries = queries.count()
     assert rows and len(rows) <= 5 * n_queries
@@ -141,29 +141,30 @@ def test_amortized_retrieval_reuses_index_and_matches_one_shot(spark, tmp_path):
         "substring(text, 1, 200) AS query_text",
     )
     idx = str(tmp_path / "rag_idx")
-    c1, cells1 = chunk_index_ensure(spark, docs, idx)
     got1 = sorted(
         (r["query_id"], r["rank"], r["cand_id"])
-        for r in retrieval_search(queries, c1, cells1).collect()
+        for r in retrieval_search(
+            queries, chunk_index_ensure(docs, idx)
+        ).collect()
     )
     # one-shot form over the same corpus must agree (build deterministic)
     from lakehouse_adventureworks2022_spark.operators.vectorize import (
         build_chunk_index,
     )
 
-    c0, cells0, _ = build_chunk_index(docs)
+    index0, _ = build_chunk_index(docs)
     got0 = sorted(
         (r["query_id"], r["rank"], r["cand_id"])
-        for r in retrieval_search(queries, c0, cells0).collect()
+        for r in retrieval_search(queries, index0).collect()
     )
     assert got1 == got0
     # second ensure() must NOT rewrite the index (reuse, not rebuild)
-    mtime = os.path.getmtime(f"{idx}/centroids/_SUCCESS")
-    c2, cells2 = chunk_index_ensure(spark, docs, idx)
-    assert os.path.getmtime(f"{idx}/centroids/_SUCCESS") == mtime
+    mtime = os.path.getmtime(f"{idx}/manifest.json")
+    index2 = chunk_index_ensure(docs, idx)
+    assert os.path.getmtime(f"{idx}/manifest.json") == mtime
     got2 = sorted(
         (r["query_id"], r["rank"], r["cand_id"])
-        for r in retrieval_search(queries, c2, cells2).collect()
+        for r in retrieval_search(queries, index2).collect()
     )
     assert got2 == got1
 
@@ -179,22 +180,20 @@ def test_hard_negative_mining(spark):
     from lakehouse_adventureworks2022_spark.sources.readers import read_table
 
     docs = read_table(spark, SF, "documents").limit(150)
-    centroids, cells, _ = build_chunk_index(docs)
+    index, _ = build_chunk_index(docs)
     queries = docs.limit(8).selectExpr(
         "doc_id + 5000000000 AS query_id",
         "substring(text, 1, 200) AS query_text",
     )
     # ground truth: every chunk of the query's own source doc
-    hits = retrieval_search(queries, centroids, cells, k=20)
+    hits = retrieval_search(queries, index, k=20)
     positives = hits.filter(
         (F.col("cand_id") / 1_000_000).cast("long")
         == F.col("query_id") - 5_000_000_000
     ).select("query_id", "cand_id")
     assert positives.count() > 0  # self-retrieval produces positives
 
-    negs = mine_hard_negatives(
-        queries, positives, centroids, cells, k=20, n_neg=5
-    )
+    negs = mine_hard_negatives(queries, positives, index, k=20, n_neg=5)
     rows = negs.collect()
     # no positive leaks into the negatives
     pos = {(r["query_id"], r["cand_id"]) for r in positives.collect()}
@@ -219,7 +218,7 @@ def test_hard_negative_mining(spark):
     again = sorted(
         (r["query_id"], r["rank"], r["cand_id"])
         for r in mine_hard_negatives(
-            queries, positives, centroids, cells, k=20, n_neg=5
+            queries, positives, index, k=20, n_neg=5
         ).collect()
     )
     assert again == sorted((r["query_id"], r["rank"], r["cand_id"]) for r in rows)
@@ -269,12 +268,12 @@ def test_retrieval_metrics_on_real_index(spark):
     from lakehouse_adventureworks2022_spark.sources.readers import read_table
 
     docs = read_table(spark, SF, "documents").limit(100)
-    centroids, cells, chunks = build_chunk_index(docs)
+    index, chunks = build_chunk_index(docs)
     queries = docs.limit(10).selectExpr(
         "doc_id + 5000000000 AS query_id",
         "substring(text, 1, 200) AS query_text",
     )
-    hits = retrieval_search(queries, centroids, cells, k=10)
+    hits = retrieval_search(queries, index, k=10)
     positives = chunks.select(
         (F.col("doc_id") + 5_000_000_000).alias("query_id"),
         F.col("vec_id").alias("cand_id"),
@@ -392,11 +391,11 @@ def test_ann_query_batch_cap_raises_readably(spark):
     )
     with _pytest.raises(ValueError, match="driver-side cap"):
         sim.cosine_topk_np(vecs, vecs, k=3, query_cap=10)
-    cents, cells = sim.ivf_build(vecs, n_cells=2, train_cap=32)
+    index = sim._build_index(vecs, "ivf", "raw", n_cells=2, train_cap=32)
     with _pytest.raises(ValueError, match="driver-side cap"):
-        sim.ivf_search(vecs, cents, cells, k=3, query_cap=10)
+        sim.search_index(index, vecs, k=3, query_cap=10)
     # under the cap everything works unchanged
-    assert sim.ivf_search(vecs.limit(5), cents, cells, k=3).count() > 0
+    assert sim.search_index(index, vecs.limit(5), k=3).count() > 0
 
 
 # ---- r10: incremental chunk-index growth (chunk_index_append) --------
@@ -405,8 +404,8 @@ def test_ann_query_batch_cap_raises_readably(spark):
 @pytest.mark.slow
 def test_chunk_index_append_makes_new_docs_retrievable(spark, tmp_path):
     """Appended documents must come back through the SAME load path
-    every retrieval query uses (chunk_index_ensure → ivf_index_load
-    unions committed batches)."""
+    every retrieval query uses (chunk_index_ensure → load_index unions
+    committed batches)."""
     from lakehouse_adventureworks2022_spark.operators.vectorize import (
         chunk_index_append,
         chunk_index_ensure,
@@ -414,7 +413,7 @@ def test_chunk_index_append_makes_new_docs_retrievable(spark, tmp_path):
 
     docs = read_table(spark, SF, "documents").limit(80)
     idx = str(tmp_path / "chunk_idx")
-    chunk_index_ensure(spark, docs, idx)
+    chunk_index_ensure(docs, idx)
     marker = (
         "zanzibar quokka paradox theorem "  # tokens absent from the fixture
         * 16
@@ -422,12 +421,12 @@ def test_chunk_index_append_makes_new_docs_retrievable(spark, tmp_path):
     new_docs = spark.createDataFrame(
         [(7_000_000, marker)], "doc_id long, text string"
     )
-    chunk_index_append(spark, new_docs, idx, batch_tag="b1")
-    centroids, cells = chunk_index_ensure(spark, docs, idx)
+    chunk_index_append(new_docs, idx, batch_tag="b1")
+    index = chunk_index_ensure(docs, idx)
     queries = spark.createDataFrame(
         [(1, marker[:200])], "query_id long, query_text string"
     )
-    hits = retrieval_search(queries, centroids, cells, k=3, n_probe=4).collect()
+    hits = retrieval_search(queries, index, k=3, n_probe=4).collect()
     assert hits, "appended doc not retrievable"
     top = hits[0]
     assert top["cand_id"] // 1_000_000 == 7_000_000  # decodes to the new doc
@@ -444,22 +443,19 @@ def test_chunk_index_append_replay_is_idempotent(spark, tmp_path):
 
     docs = read_table(spark, SF, "documents").limit(60)
     idx = str(tmp_path / "chunk_idx")
-    chunk_index_ensure(spark, docs, idx)
+    chunk_index_ensure(docs, idx)
     new_docs = read_table(spark, SF, "documents").limit(100).filter(
         F.col("doc_id") >= 60
     ).select((F.col("doc_id") + F.lit(1_000_000)).alias("doc_id"), "text")
-    chunk_index_append(spark, new_docs, idx, batch_tag="replay_me")
-    _, cells1 = chunk_index_ensure(spark, docs, idx)
-    n1 = cells1.count()
-    chunk_index_append(spark, new_docs, idx, batch_tag="replay_me")  # replay
-    _, cells2 = chunk_index_ensure(spark, docs, idx)
-    assert cells2.count() == n1  # rewrote, not duplicated
+    chunk_index_append(new_docs, idx, batch_tag="replay_me")
+    n1 = chunk_index_ensure(docs, idx).data.count()
+    chunk_index_append(new_docs, idx, batch_tag="replay_me")  # replay
+    assert chunk_index_ensure(docs, idx).data.count() == n1  # replaced, not duplicated
     # a DIFFERENT tag is a new batch and must grow the index
-    chunk_index_append(spark, new_docs.select(
+    chunk_index_append(new_docs.select(
         (F.col("doc_id") + F.lit(1_000_000)).alias("doc_id"), "text"
     ), idx, batch_tag="b2")
-    _, cells3 = chunk_index_ensure(spark, docs, idx)
-    assert cells3.count() > n1
+    assert chunk_index_ensure(docs, idx).data.count() > n1
 
 
 @pytest.mark.slow
@@ -474,27 +470,23 @@ def test_chunk_index_append_results_match_full_rebuild(spark, tmp_path):
         chunk_index_append,
         chunk_index_ensure,
     )
-    from lakehouse_adventureworks2022_spark.operators.similarity import (
-        ivf_search,
-    )
-
     base = read_table(spark, SF, "documents").select("doc_id", "text").limit(80)
     planted = spark.createDataFrame(
         [(8_000_000, "unique sentinel text for rebuild parity check " * 8)],
         "doc_id long, text string",
     )
     idx = str(tmp_path / "grown_idx")
-    chunk_index_ensure(spark, base, idx)
-    chunk_index_append(spark, planted, idx, batch_tag="b1")
-    grown_c, grown_cells = chunk_index_ensure(spark, base, idx)
+    chunk_index_ensure(base, idx)
+    chunk_index_append(planted, idx, batch_tag="b1")
+    grown = chunk_index_ensure(base, idx)
 
-    rebuilt_c, rebuilt_cells, _ = build_chunk_index(base.unionByName(planted))
+    rebuilt, _ = build_chunk_index(base.unionByName(planted))
 
     q = spark.createDataFrame(
         [(1, "unique sentinel text for rebuild parity check")],
         "query_id long, query_text string",
     )
-    top_grown = retrieval_search(q, grown_c, grown_cells, k=1).collect()[0]
-    top_rebuilt = retrieval_search(q, rebuilt_c, rebuilt_cells, k=1).collect()[0]
+    top_grown = retrieval_search(q, grown, k=1).collect()[0]
+    top_rebuilt = retrieval_search(q, rebuilt, k=1).collect()[0]
     assert top_grown["cand_id"] == top_rebuilt["cand_id"]
     assert top_grown["cand_id"] // 1_000_000 == 8_000_000

@@ -23,6 +23,11 @@ sys.path.insert(0, str(REPO))
 from pyspark.sql import functions as F  # noqa: E402
 
 from lakehouse_adventureworks2022_spark.operators import similarity  # noqa: E402
+from lakehouse_adventureworks2022_spark.operators.vector_index import (  # noqa: E402
+    append_index,
+    ensure_index,
+    load_index,
+)
 from lakehouse_adventureworks2022_spark.session import get_spark  # noqa: E402
 
 
@@ -38,23 +43,23 @@ def main() -> None:
     }
     n_q = len({a for a, _ in exact})
 
-    centroids, cells = similarity.ivf_build(cand)
-    cells = cells.persist()
-    cells.count()  # warm the index like a deployed search would
+    index = similarity._build_index(cand, "ivf", "raw")
+    index.base = index.base.persist()
+    index.base.count()  # warm the index like a deployed search would
 
     sweep = []
     for n_probe in (1, 2, 4, 8, 16):
         times = []
         for _ in range(3):
             t = time.perf_counter()
-            similarity.ivf_search(
-                q, centroids, cells, k=k, n_probe=n_probe
+            similarity.search_index(
+                index, q, k=k, n_probe=n_probe
             ).write.format("noop").mode("overwrite").save()
             times.append(time.perf_counter() - t)
         got = {
             (r["query_id"], r["cand_id"])
-            for r in similarity.ivf_search(
-                q, centroids, cells, k=k, n_probe=n_probe
+            for r in similarity.search_index(
+                index, q, k=k, n_probe=n_probe
             ).collect()
         }
         sweep.append(
@@ -139,7 +144,7 @@ def ingest_growth_sweep(
     geometry drifts away from the data as appends accumulate). For each
     append fraction f (appends / base), measures recall@k at fixed
     n_probe for (a) the grown index — base-trained centroids, appends
-    via ivf_index_append — and (b) a from-scratch rebuild over the same
+    via append_index — and (b) a from-scratch rebuild over the same
     corpus, the ceiling a re-train would restore. The gap (b)-(a) is
     the price of NOT re-training, which is what sets the re-cluster
     cadence: re-train when the gap crosses your recall budget.
@@ -159,12 +164,11 @@ def ingest_growth_sweep(
     h = (F.col("vec_id") / 2).cast("long")  # odd-half ordinal
 
     idx = tempfile.mkdtemp(prefix="ann_ingest_sweep_")
-    base_centroids, base_cells = similarity.ivf_build(half)
-    similarity.ivf_index_save(base_centroids, base_cells, idx)
+    ensure_index(half, idx)
 
     # DISJOINT daily-batch increments; cumulative coverage of the odd
     # half after each step: 0 → 1/8 (~12.5% of base) → 1/2 (~50%) →
-    # all (~100%). Each lands as its own ivf_index_append batch, the
+    # all (~100%). Each lands as its own append_index batch, the
     # exact ingest pattern the amortized queries use.
     steps = (
         (0, None),
@@ -178,26 +182,23 @@ def ingest_growth_sweep(
         if inc_pred is not None:
             increment = rest.filter(inc_pred)
             corpus = corpus.unionByName(increment)
-            similarity.ivf_index_append(
-                spark, increment, idx, batch_tag=f"sweep_{frac_pct}"
-            )
+            append_index(increment, idx, batch_tag=f"sweep_{frac_pct}")
         exact = {
             (r["query_id"], r["cand_id"])
             for r in similarity.cosine_topk(q, corpus, k=k).collect()
         }
-        centroids, cells = similarity.ivf_index_load(spark, idx)
         got = {
             (r["query_id"], r["cand_id"])
-            for r in similarity.ivf_search(
-                q, centroids, cells, k=k, n_probe=n_probe
+            for r in similarity.search_index(
+                load_index(spark, idx), q, k=k, n_probe=n_probe
             ).collect()
         }
         grown_recall = len(got & exact) / len(exact)
-        reb_c, reb_cells = similarity.ivf_build(corpus)
+        rebuilt = similarity._build_index(corpus, "ivf", "raw")
         got_reb = {
             (r["query_id"], r["cand_id"])
-            for r in similarity.ivf_search(
-                q, reb_c, reb_cells, k=k, n_probe=n_probe
+            for r in similarity.search_index(
+                rebuilt, q, k=k, n_probe=n_probe
             ).collect()
         }
         rebuilt_recall = len(got_reb & exact) / len(exact)

@@ -196,12 +196,12 @@ def main() -> None:
     )
 
     def _rag():
-        centroids, cells, _ = vectorize.build_chunk_index(big_docs)
+        index, _ = vectorize.build_chunk_index(big_docs)
         queries = big_docs.filter(F.col("doc_id") % 500 == 0).select(
             (F.col("doc_id") + F.lit(5_000_000_000)).alias("query_id"),
             F.substring("text", 1, 200).alias("query_text"),
         )
-        return vectorize.retrieval_search(queries, centroids, cells, k=5)
+        return vectorize.retrieval_search(queries, index, k=5)
 
     run("rag_retrieval", _rag)
 
@@ -211,7 +211,7 @@ def main() -> None:
     # workload growth with corpus growth. Fixed 32 queries isolates
     # index build + per-query search cost against corpus size only.
     def _rag_fixed_queries():
-        centroids, cells, _ = vectorize.build_chunk_index(big_docs)
+        index, _ = vectorize.build_chunk_index(big_docs)
         queries = (
             big_docs.orderBy("doc_id")
             .limit(32)
@@ -220,7 +220,7 @@ def main() -> None:
                 F.substring("text", 1, 200).alias("query_text"),
             )
         )
-        return vectorize.retrieval_search(queries, centroids, cells, k=5)
+        return vectorize.retrieval_search(queries, index, k=5)
 
     run("rag_fixed_queries", _rag_fixed_queries)
 
@@ -238,18 +238,14 @@ def main() -> None:
 
         _ingest_idx = tempfile.mkdtemp(prefix="stress_rag_ingest_")
         shutil.rmtree(_ingest_idx)
-        vectorize.chunk_index_ensure(spark, big_docs, _ingest_idx)
+        vectorize.chunk_index_ensure(big_docs, _ingest_idx)
         _batch = docs.limit(2000).select(
             (F.col("doc_id") + F.lit(900_000_000)).alias("doc_id"), "text"
         )
 
         def _rag_incremental_ingest():
-            vectorize.chunk_index_append(
-                spark, _batch, _ingest_idx, batch_tag="stress_b1"
-            )
-            centroids, cells = vectorize.chunk_index_ensure(
-                spark, big_docs, _ingest_idx
-            )
+            vectorize.chunk_index_append(_batch, _ingest_idx, batch_tag="stress_b1")
+            index = vectorize.chunk_index_ensure(big_docs, _ingest_idx)
             queries = (
                 big_docs.orderBy("doc_id")
                 .limit(32)
@@ -258,7 +254,7 @@ def main() -> None:
                     F.substring("text", 1, 200).alias("query_text"),
                 )
             )
-            return vectorize.retrieval_search(queries, centroids, cells, k=5)
+            return vectorize.retrieval_search(queries, index, k=5)
 
         run("rag_incremental_ingest", _rag_incremental_ingest)
 
