@@ -86,11 +86,9 @@ def _purge_amortized_state(sf_dir: str) -> list[str]:
     dirs: list[str] = []
     for table, prefix, recipe in tq.AMORTIZED_STATE:
         try:
-            d = tq.fixture_state_dir(sf_dir, table, prefix, recipe)
+            dirs.append(tq.fixture_state_dir(sf_dir, table, prefix, recipe))
         except OSError:
             continue  # fixture without this table: no such state
-        # the chunk index keeps its BM25 leg in a sibling dir
-        dirs += [d, d + "_bm25"] if prefix == "rag_index_" else [d]
     removed = []
     for d in dirs:
         if os.path.isdir(d):

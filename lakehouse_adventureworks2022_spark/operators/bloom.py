@@ -49,6 +49,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from lakehouse_adventureworks2022_spark.storage import commit
+
 _MAGIC = b"BLM1"
 _HEADER = struct.Struct(">4sIQ")  # magic, n_hashes, n_bits
 
@@ -242,40 +244,17 @@ def estimated_fpr(bloom: BloomFilter) -> float:
     return fill_ratio(bloom) ** bloom.n_hashes
 
 
-# ---- persisted state file (lives beside the dedup hash/sig tables) ----
+# ---- persisted sketch file (the dedup state names it in its manifest) ----
 
 
-def bloom_path(state_dir: str) -> str:
-    return os.path.join(state_dir, "bloom.bin")
+def save_bloom(path: str, bloom: BloomFilter) -> None:
+    """Atomic single-file write (``commit.replace_file``): a reader
+    never observes a torn bitmap, and replaying a save is idempotent."""
+    commit.replace_file(path, bloom.to_bytes())
 
 
-def save_bloom(state_dir: str, bloom: BloomFilter) -> None:
-    """Atomic single-file write (tmp + rename), the
-    ``sources/watermark.py`` checkpoint pattern: a reader never observes
-    a torn bitmap, and replaying a save is idempotent."""
-    os.makedirs(state_dir, exist_ok=True)
-    path = bloom_path(state_dir)
-    tmp = f"{path}.tmp.{os.getpid()}"
-    with open(tmp, "wb") as f:
-        f.write(bloom.to_bytes())
-    os.replace(tmp, path)
-
-
-def load_bloom(state_dir: str) -> BloomFilter | None:
-    path = bloom_path(state_dir)
+def load_bloom(path: str) -> BloomFilter | None:
     if not os.path.exists(path):
         return None
     with open(path, "rb") as f:
         return BloomFilter.from_bytes(f.read())
-
-
-def absorb_batch(state_dir: str, accepted_hashes: DataFrame, key_col: str) -> None:
-    """OR an accepted ingest batch into the persisted state bloom (no-op
-    when no bloom file exists — the gate is opt-in). Keeps the
-    no-false-negative invariant: the bloom always covers every hash the
-    state table holds."""
-    current = load_bloom(state_dir)
-    if current is None:
-        return
-    batch = bloom_build(accepted_hashes, key_col, current.n_bits, current.n_hashes)
-    save_bloom(state_dir, bloom_or(current, batch))

@@ -125,14 +125,16 @@ def bm25_index_ensure(
     max_df_ratio: float = 0.5,
 ) -> tuple[DataFrame, DataFrame]:
     """Load the persisted inverted index at ``index_dir``, building and
-    saving it first if absent — the deployed lexical-search shape
+    committing it first if absent — the deployed lexical-search shape
     (build once per corpus version; the build is deterministic). The
-    dir is keyed to the corpus version by the caller; unlike the
-    manifest-committed vector indexes (``vector_index.ensure_index``)
-    it records no build params."""
-    import os
+    dir is keyed to the corpus version by the caller; like the vector
+    indexes it is one manifest-committed generation
+    (``storage/commit.py``) whose manifest records ``max_df_ratio``,
+    ``text_col`` and ``id_col`` — opening it with others raises
+    ``ValueError`` naming both sets."""
+    from lakehouse_adventureworks2022_spark.storage import commit
 
-    if not os.path.exists(f"{index_dir}/stats/_SUCCESS"):
+    def build(base: str) -> None:
         from lakehouse_adventureworks2022_spark.operators.dedup import (
             release_cached_inputs,
         )
@@ -140,13 +142,18 @@ def bm25_index_ensure(
         postings, stats = build_bm25_index(
             docs, text_col=text_col, id_col=id_col, max_df_ratio=max_df_ratio
         )
-        bm25_index_save(postings, stats, index_dir)
+        bm25_index_save(postings, stats, base)
         # the save materialized the postings; drop the tokenized-corpus
         # cache explicitly (primary release path of the cache contract)
         release_cached_inputs(postings)
+
+    params = {"max_df_ratio": max_df_ratio, "text_col": text_col, "id_col": id_col}
+    base = commit.gen_path(
+        index_dir, commit.ensure(index_dir, params, build, kind="bm25 index"), "base"
+    )
     return (
-        spark.read.parquet(f"{index_dir}/postings"),
-        spark.read.parquet(f"{index_dir}/stats"),
+        spark.read.parquet(f"{base}/postings"),
+        spark.read.parquet(f"{base}/stats"),
     )
 
 

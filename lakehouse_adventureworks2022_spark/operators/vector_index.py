@@ -1,44 +1,26 @@
-"""Persisted ANN indexes: one manifest-committed layout for every
-``(coarse, codec)`` kind of :class:`similarity.VectorIndex`.
+"""Persisted ANN indexes: every ``(coarse, codec)`` kind of
+:class:`similarity.VectorIndex` in one manifest-committed generation
+dir (``storage/commit.py`` — the layout, the write-last manifest and the
+crash matrix live there).
 
-Layout of an index dir::
+``base/`` holds the encoded rows (cell-range-clustered when the kind is
+ivf), ``appends/<tag>-<id>/`` one dir per :func:`append_index`
+attempt. The manifest records the kind and build params (plus caller
+recipe keys, e.g. the chunk index's chunking) and the kilobyte
+driver-side state (centroid matrix, PQ codebooks, SQ8 mins/scales) —
+opening an index reads no parquet before the search itself.
+:func:`recluster_index`/:func:`retrain_index` commit generation N+1;
+a replayed append tag commits its new dir; what a manifest swap
+supersedes is deleted after it.
 
-    manifest.json                 the ONLY commit marker
-    gen-00001/base/               the encoded rows (cell-range-clustered
-                                  when the kind is ivf)
-    gen-00001/appends/<tag>-<id>/ one dir per append_index attempt
-
-The manifest holds the layout ``FORMAT``, the kind and build params
-(plus caller recipe keys, e.g. the chunk index's chunking), the current
-generation, the committed append tags (each mapped to the dir of its
-committed attempt), and the kilobyte driver-side state (centroid
-matrix, PQ codebooks, SQ8 mins/scales) — opening an index reads no
-parquet before the search itself. It is written LAST, via tmp +
-``os.replace`` (the ``WatermarkStore.put`` idiom), and committed data
-is never rewritten in place: every write goes to a dir no manifest
-names yet, so a crash anywhere leaves either no manifest (the next
-:func:`ensure_index` rebuilds) or the previous one, whose dirs are
-intact. A dir is deleted only after the manifest that supersedes it is
-in place: :func:`recluster_index`/:func:`retrain_index` write
-generation N+1, swap the manifest, then delete generation N; a replayed
-append tag swaps to its new dir, then deletes the old one. Dirs of
-crashed attempts are never read, and the next new generation sweeps
-them.
-
-A manifest in another ``FORMAT`` counts as missing (rebuilt by
-:func:`ensure_index`). An existing index opened with different build
-params raises ``ValueError`` instead of serving an index built with
-other settings. One writer per index dir: appends read-modify-write the
-manifest.
+A manifest in another ``commit.FORMAT`` counts as missing (rebuilt by
+:func:`ensure_index` unless it holds appended batches). An existing
+index opened with different build params raises ``ValueError``
+instead of serving an index built with other settings. One writer per
+index dir.
 """
 
 from __future__ import annotations
-
-import glob
-import json
-import os
-import shutil
-import uuid
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -48,54 +30,7 @@ from lakehouse_adventureworks2022_spark.operators.similarity import (
     _build_index,
     _encode,
 )
-
-#: Layout/recipe version recorded in every manifest; bump when the
-#: build maths or the on-disk layout change.
-FORMAT = 1
-
-
-def _manifest_path(index_dir: str) -> str:
-    return os.path.join(index_dir, "manifest.json")
-
-
-def _gen_dir(index_dir: str, gen: int) -> str:
-    return os.path.join(index_dir, f"gen-{gen:05d}")
-
-
-def _read_manifest(index_dir: str) -> dict | None:
-    try:
-        with open(_manifest_path(index_dir)) as f:
-            return json.load(f)
-    except FileNotFoundError:
-        return None
-
-
-def _write_manifest(index_dir: str, manifest: dict) -> None:
-    path = _manifest_path(index_dir)
-    with open(path + ".tmp", "w") as f:
-        json.dump(manifest, f)
-    os.replace(path + ".tmp", path)  # atomic on POSIX
-
-
-def _current(manifest: dict | None) -> bool:
-    return manifest is not None and manifest.get("format") == FORMAT
-
-
-def _committed(index_dir: str) -> dict:
-    manifest = _read_manifest(index_dir)
-    if not _current(manifest):
-        raise FileNotFoundError(
-            f"no committed index at {index_dir} in format {FORMAT}"
-        )
-    return manifest
-
-
-def _check_params(index_dir: str, built: dict, wanted: dict) -> None:
-    if built != wanted:
-        raise ValueError(
-            f"index at {index_dir} was built with {built}, not {wanted}: "
-            f"pass the recorded params or build into a new dir"
-        )
+from lakehouse_adventureworks2022_spark.storage import commit
 
 
 def _write_rows(rows: DataFrame, path: str, n_files: int) -> None:
@@ -104,30 +39,16 @@ def _write_rows(rows: DataFrame, path: str, n_files: int) -> None:
     rows.write.mode("overwrite").parquet(path)
 
 
-def _commit(
-    index_dir: str, index: VectorIndex, params: dict, gen: int, n_files: int
-) -> dict:
-    """Write ``index``'s rows as generation ``gen``, swap the manifest
-    to it (no appends: the new base holds every row), then delete every
-    other generation — superseded, or left by a crashed attempt."""
-    path = _gen_dir(index_dir, gen)
-    shutil.rmtree(path, ignore_errors=True)  # a crashed earlier attempt
-    _write_rows(index.data, os.path.join(path, "base"), n_files)
-    manifest = {
-        "format": FORMAT,
-        "params": params,
-        "gen": gen,
-        "appends": {},
+def _write_index(index: VectorIndex, base: str, n_files: int) -> dict:
+    """Write ``index``'s rows as a generation's base; its driver-side
+    state becomes manifest fields."""
+    _write_rows(index.data, base, n_files)
+    return {
         "centroids": None if index.centroids is None else index.centroids.tolist(),
         "codebooks": None if index.codebooks is None else index.codebooks.tolist(),
         "mins": index.mins,
         "scales": index.scales,
     }
-    _write_manifest(index_dir, manifest)
-    for old in glob.glob(os.path.join(index_dir, "gen-*")):
-        if old != path:
-            shutil.rmtree(old, ignore_errors=True)
-    return manifest
 
 
 def _array(values):
@@ -139,14 +60,11 @@ def _array(values):
 def _open(spark, index_dir: str, manifest: dict) -> VectorIndex:
     """The committed index: base rows, the appends the manifest names
     (one multi-path scan), and the driver-side state."""
-    gen = _gen_dir(index_dir, manifest["gen"])
-    appends = [
-        os.path.join(gen, "appends", name) for name in manifest["appends"].values()
-    ]
+    base, *appends = commit.data_paths(index_dir, manifest)
     return VectorIndex(
         manifest["params"]["coarse"],
         manifest["params"]["codec"],
-        base=spark.read.parquet(os.path.join(gen, "base")),
+        base=spark.read.parquet(base),
         appended=spark.read.parquet(*appends) if appends else None,
         centroids=_array(manifest["centroids"]),
         codebooks=_array(manifest["codebooks"]),
@@ -177,29 +95,29 @@ def ensure_index(
     ``n_cells``/``train_cap`` None = corpus-scaled cells), plus every
     ``recipe`` key — how the caller derived the candidates. A committed
     index recorded with other values raises ``ValueError``; one
-    committed in another ``FORMAT`` is rebuilt as a new generation."""
+    committed in another ``commit.FORMAT`` is rebuilt as a new generation."""
     params = {"coarse": coarse, "codec": codec}
     if coarse == "ivf":
         params.update(n_cells=n_cells, train_cap=train_cap)
     if codec == "pq":
         params.update(m=m, n_codes=n_codes, train_cap=train_cap)
     params.update(recipe or {})
-    manifest = _read_manifest(index_dir)
-    if not _current(manifest):
+
+    def build(base: str) -> dict:
         index = _build_index(
             candidates, coarse, codec,
             n_cells=n_cells, train_cap=train_cap, m=m, n_codes=n_codes,
         )
-        gen = 1 if manifest is None else manifest.get("gen", 0) + 1
-        manifest = _commit(index_dir, index, params, gen, n_files)
-    _check_params(index_dir, manifest["params"], params)
+        return _write_index(index, base, n_files)
+
+    manifest = commit.ensure(index_dir, params, build, "index")
     return _open(candidates.sparkSession, index_dir, manifest)
 
 
 def load_index(spark, index_dir: str) -> VectorIndex:
     """The index committed at ``index_dir`` (base + committed appends);
     ``FileNotFoundError`` if none is."""
-    return _open(spark, index_dir, _committed(index_dir))
+    return _open(spark, index_dir, commit.committed(index_dir, "index"))
 
 
 def append_index(
@@ -214,31 +132,24 @@ def append_index(
     FROZEN codec state, so existing rows never rewrite and old results
     stay stable (drift re-training is :func:`retrain_index`).
 
-    Each attempt writes a FRESH dir ``appends/<batch_tag>-<id>`` and
-    commits by mapping the tag to it in the manifest — a replay of a
-    committed tag replaces that tag's rows instead of duplicating them
-    (the old dir is deleted only after the swap), and a crash before
-    the manifest write leaves the committed index as it was. No tag =
-    a fresh one (not replay-safe). ``recipe`` keys must match the ones
-    the index was built with."""
-    manifest = _committed(index_dir)
+    One :func:`commit.append` under ``batch_tag``: a replay of a
+    committed tag replaces that tag's rows instead of duplicating them,
+    and a crash before the manifest write leaves the committed index as
+    it was. No tag = a fresh one (not replay-safe). ``recipe`` keys
+    must match the ones the index was built with."""
+    manifest = commit.committed(index_dir, "index")
     if recipe:
         built = {k: manifest["params"].get(k) for k in recipe}
-        _check_params(index_dir, built, dict(recipe))
-    tag = batch_tag if batch_tag is not None else uuid.uuid4().hex
+        commit.check_params(index_dir, built, dict(recipe), "index")
     index = _open(new_vectors.sparkSession, index_dir, manifest)
-    appends = os.path.join(_gen_dir(index_dir, manifest["gen"]), "appends")
-    name = f"{tag}-{uuid.uuid4().hex[:12]}"
-    _write_rows(_encode(index, new_vectors), os.path.join(appends, name), n_files)
-    replaced = manifest["appends"].get(tag)
-    manifest["appends"][tag] = name
-    _write_manifest(index_dir, manifest)
-    if replaced is not None:
-        shutil.rmtree(os.path.join(appends, replaced), ignore_errors=True)
+    commit.append(
+        index_dir, manifest, batch_tag,
+        lambda path: _write_rows(_encode(index, new_vectors), path, n_files),
+    )
 
 
 def _rewrite(spark, index_dir: str, retrain: bool, n_files: int) -> None:
-    manifest = _committed(index_dir)
+    manifest = commit.committed(index_dir, "index")
     index = _open(spark, index_dir, manifest)
     params = manifest["params"]
     if retrain:
@@ -252,7 +163,9 @@ def _rewrite(spark, index_dir: str, retrain: bool, n_files: int) -> None:
             "ivf", "raw",
             n_cells=params["n_cells"], train_cap=params["train_cap"],
         )
-    _commit(index_dir, index, params, manifest["gen"] + 1, n_files)
+    commit.new_generation(
+        index_dir, params, lambda base: _write_index(index, base, n_files)
+    )
 
 
 def recluster_index(spark, index_dir: str, n_files: int = 16) -> None:

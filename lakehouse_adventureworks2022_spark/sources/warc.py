@@ -490,23 +490,22 @@ def warc_incremental_ingest(
     itself stays the unit of parallelism inside the job (the
     :func:`read_warc` layout).
 
-    Idempotence (the ``sources/watermark.py`` +
-    ``vector_index.append_index`` posture): a crash between the parquet write and the checkpoint
-    update replays the same files into the SAME per-file partition
-    dirs — dynamic overwrite replaces exactly the partitions it
-    touches, never siblings; the checkpoint itself is atomic
-    (tmp + rename). Readers take ``spark.read.parquet(out_dir)`` (or
-    ``f"{out_dir}/*"``; records carry ``source_file`` either way) and
-    see only committed writes.
+    Idempotence (the ``storage/commit.py`` posture): a crash between
+    the parquet write and the checkpoint update replays the same files
+    into the SAME per-file partition dirs — dynamic overwrite replaces
+    exactly the partitions it touches, never siblings; the checkpoint
+    itself is one atomic ``commit.replace_file``. Readers take
+    ``spark.read.parquet(out_dir)`` (or ``f"{out_dir}/*"``; records
+    carry ``source_file`` either way) and see only committed writes.
 
     Scale: listing is one directory scan; per run the work is
     O(new files) inside one job."""
     import json
     import os
 
-    done: set[str] = set()
-    if os.path.exists(state_path):
-        done = set(json.loads(open(state_path).read()))
+    from lakehouse_adventureworks2022_spark.storage import commit
+
+    done = set(commit.read_json(state_path, []))
     names = sorted(
         n
         for n in os.listdir(crawl_dir)
@@ -524,11 +523,7 @@ def warc_incremental_ingest(
         ).option("partitionOverwriteMode", "dynamic").partitionBy(
             "file"
         ).parquet(out_dir)
-        os.makedirs(os.path.dirname(state_path) or ".", exist_ok=True)
-        tmp = f"{state_path}.tmp.{os.getpid()}"
-        with open(tmp, "w") as f:
-            json.dump(sorted(done | set(names)), f)
-        os.replace(tmp, state_path)
+        commit.replace_file(state_path, json.dumps(sorted(done | set(names))))
     return names
 
 

@@ -14,7 +14,8 @@ State schema matches the reference checkpoint doc fields
 (``extract_load_template.py:196-204``): ``table_name, last_id,
 last_event_time, last_ingestion_date, processed_at``. Stored as one JSON
 file per table (single-row metadata — the one place driver-side I/O is
-correct; the reference itself uses ``coalesce(1).write.json``).
+correct; the reference itself uses ``coalesce(1).write.json``),
+replaced atomically by ``commit.replace_file``.
 
 Scale: the only non-distributed data here is the one-row checkpoint; the
 incremental filter itself prunes at the source, so a 100 TB history scan
@@ -30,6 +31,8 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from lakehouse_adventureworks2022_spark.storage import commit
 
 
 @dataclass
@@ -69,16 +72,12 @@ class WatermarkStore:
     def get(self, table: str) -> Watermark | None:
         """Missing checkpoint ⇒ None ⇒ caller does a full load (reference
         ``extract_load_template.py:102-119``)."""
-        p = self._path(table)
-        if not p.exists():
-            return None
-        return Watermark(**json.loads(p.read_text()))
+        state = commit.read_json(self._path(table))
+        return None if state is None else Watermark(**state)
 
     def put(self, wm: Watermark) -> None:
         wm.processed_at = datetime.now(timezone.utc).isoformat()
-        tmp = self._path(wm.table_name).with_suffix(".json.tmp")
-        tmp.write_text(json.dumps(asdict(wm)))
-        tmp.rename(self._path(wm.table_name))  # atomic on POSIX
+        commit.replace_file(str(self._path(wm.table_name)), json.dumps(asdict(wm)))
 
 
 def incremental_filter(

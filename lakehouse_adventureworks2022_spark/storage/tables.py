@@ -15,9 +15,9 @@ way:
 - :meth:`TableManager.append` — bronze-style partitioned append
   (reference ``extract_load_template.py:171-175``);
 - :meth:`TableManager.overwrite` — silver/gold rebuild with schema
-  overwrite (``dags/product.py:126-130``), made atomic via
-  staging-dir + rename (the reference's overwrite is not atomic — its §4.2
-  anti-pattern);
+  overwrite (``dags/product.py:126-130``), made atomic by
+  ``commit.swap_dir`` (the reference's overwrite is not atomic — its
+  §4.2 anti-pattern);
 - :meth:`TableManager.replace_where` — idempotent partition replacement
   for fact loads (fixes the reference's duplicate-on-rerun append,
   ``dags/sales.py:102-106``, SURVEY.md §4.4) via Spark's *dynamic
@@ -33,10 +33,11 @@ pruned by ingestion date; bucketing for co-located joins is exposed via
 from __future__ import annotations
 
 import shutil
-import uuid
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
+
+from lakehouse_adventureworks2022_spark.storage import commit
 
 
 def delta_available() -> bool:
@@ -83,14 +84,21 @@ class TableManager:
         # one directory per table; dots allowed for layer.table naming
         return str(self.root / name)
 
+    def _live(self, name: str) -> str:
+        """The table's path, after restoring it if a crash interrupted
+        its last :meth:`overwrite` swap."""
+        path = self.path(name)
+        commit.recover_dir(path)
+        return path
+
     def exists(self, name: str) -> bool:
         if self._is_delta:
             # a half-initialized dir without a log is not a Delta table
             return (Path(self.path(name)) / "_delta_log").exists()
-        return Path(self.path(name)).exists()
+        return Path(self._live(name)).exists()
 
     def read(self, name: str) -> DataFrame:
-        return self.spark.read.format(self.fmt).load(self.path(name))
+        return self.spark.read.format(self.fmt).load(self._live(name))
 
     def append(
         self,
@@ -108,7 +116,7 @@ class TableManager:
         if partition_by:
             cols = [partition_by] if isinstance(partition_by, str) else partition_by
             w = w.partitionBy(*cols)
-        w.save(self.path(name))
+        w.save(self._live(name))
 
     def overwrite(
         self,
@@ -122,7 +130,9 @@ class TableManager:
 
         On Delta this is a transactional ``mode("overwrite")`` +
         ``overwriteSchema``; on plain parquet a naive overwrite leaves a
-        corrupt table if the job dies mid-write, so stage + rename.
+        corrupt table if the job dies mid-write, so ``commit.swap_dir``
+        stages the write and swaps it in (a crash between its renames is
+        undone by the next :meth:`exists`/:meth:`read`/write).
 
         ``bloom_filter_cols`` writes a parquet bloom filter per listed
         column (sized for ``bloom_ndv`` distinct values per row group):
@@ -136,8 +146,8 @@ class TableManager:
         if self._is_delta:
             # Delta's overwrite IS transactional (new snapshot commits
             # atomically in _delta_log; readers see old or new, never a
-            # mix) — the staging+rename dance below exists only to give
-            # plain parquet the same guarantee. overwriteSchema matches
+            # mix) — the staged swap below exists only to give plain
+            # parquet the same guarantee. overwriteSchema matches
             # this method's full-rebuild contract. Data files are still
             # parquet, so the bloom-filter options apply unchanged.
             w = df.write.format("delta").mode("overwrite").option(
@@ -156,8 +166,6 @@ class TableManager:
                 w = w.partitionBy(*cols)
             w.save(self.path(name))
             return
-        target = Path(self.path(name))
-        staging = target.parent / f"._staging_{target.name}_{uuid.uuid4().hex[:8]}"
         w = df.write.format(self.fmt).mode("overwrite")
         for c in bloom_filter_cols:
             w = w.option(f"parquet.bloom.filter.enabled#{c}", "true").option(
@@ -166,13 +174,7 @@ class TableManager:
         if partition_by:
             cols = [partition_by] if isinstance(partition_by, str) else partition_by
             w = w.partitionBy(*cols)
-        w.save(str(staging))
-        old = target.parent / f"._trash_{target.name}_{uuid.uuid4().hex[:8]}"
-        if target.exists():
-            target.rename(old)
-        staging.rename(target)
-        if old.exists():
-            shutil.rmtree(old, ignore_errors=True)
+        commit.swap_dir(self.path(name), w.save)
 
     def replace_where(
         self, df: DataFrame, name: str, partition_by: str | list[str]
@@ -293,7 +295,7 @@ class TableManager:
             df = (
                 self.spark.read.format(self.fmt)
                 .option("mergeSchema", "true")
-                .load(self.path(name))
+                .load(self._live(name))
             )
         if target is None:
             return df
@@ -331,7 +333,7 @@ class TableManager:
         )
 
     def drop(self, name: str) -> None:
-        p = Path(self.path(name))
+        p = Path(self._live(name))
         if p.exists():
             shutil.rmtree(p)
 

@@ -20,11 +20,12 @@ Layout::
 
 from __future__ import annotations
 
-import os
 import shutil
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
+
+from lakehouse_adventureworks2022_spark.storage import commit
 
 
 class VersionedTable:
@@ -54,11 +55,11 @@ class VersionedTable:
     def write(self, df: DataFrame, keep: int = 3) -> int:
         """Publish a new snapshot atomically; returns its version.
 
-        The snapshot lands in a ``_tmp_v`` staging dir and is renamed
-        into place only after the save completes, THEN the pointer moves
-        (write-temp + ``os.replace``, atomic on POSIX). A crash mid-write
+        The snapshot lands via ``commit.swap_dir`` (a staging sibling
+        renamed into place only after the save completes), THEN the
+        pointer moves (``commit.replace_file``). A crash mid-write
         therefore leaves the previous version current and only a
-        ``_tmp_v`` dir that ``versions()``/``read()`` never see — no
+        ``._staging_`` dir that ``versions()``/``read()`` never see — no
         window where a half-written snapshot is listed as valid history.
         """
         # Never reuse a snapshot directory: after rollback() the pointer
@@ -66,14 +67,11 @@ class VersionedTable:
         # overwrite a historical snapshot in place (non-atomic). Allocate
         # past everything that exists instead.
         version = max(self.versions() + [self.current_version()]) + 1
-        snap = self._snapshot_dir(version)
-        staging = self.dir / f"_tmp_v{version:05d}"
-        shutil.rmtree(staging, ignore_errors=True)  # stale crash debris
-        df.write.format(self.fmt).mode("overwrite").save(str(staging))
-        os.replace(staging, snap)
-        tmp = self.dir / "_CURRENT.tmp"
-        tmp.write_text(str(version))
-        os.replace(tmp, self._pointer())
+        commit.swap_dir(
+            str(self._snapshot_dir(version)),
+            lambda staging: df.write.format(self.fmt).save(staging),
+        )
+        commit.replace_file(str(self._pointer()), str(version))
         # retention: drop snapshots older than the kept window (never the
         # current one, even if keep=0 is passed)
         for v in self.versions():
@@ -108,9 +106,7 @@ class VersionedTable:
                 f"cannot roll back to missing version {version} "
                 f"(have {self.versions()})"
             )
-        tmp = self.dir / "_CURRENT.tmp"
-        tmp.write_text(str(version))
-        os.replace(tmp, self._pointer())
+        commit.replace_file(str(self._pointer()), str(version))
         if prune_newer:
             for v in self.versions():
                 if v > version:

@@ -20,15 +20,20 @@ choice for replay-dedup of an append-only feed.
 
 from __future__ import annotations
 
+import os
+import uuid
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from lakehouse_adventureworks2022_spark.operators import bloom, dedup
 from lakehouse_adventureworks2022_spark.operators.textops import (
     QUALITY_MAX_PUNCT_RATIO,
     QUALITY_MIN_TOKENS,
     QUALITY_MIN_TTR,
     tokens_col,
 )
+from lakehouse_adventureworks2022_spark.storage import commit
 
 
 def quality_gate(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -52,16 +57,16 @@ def quality_gate(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
 # one source of truth: stream and batch agree on what counts as a
 # duplicate because they share the literal same hash expression
-from lakehouse_adventureworks2022_spark.operators.dedup import (  # noqa: E402
-    content_hash_col,
-)
+content_hash_col = dedup.content_hash_col
 
 __all__ = [
     "quality_gate",
     "classifier_gate",
     "perplexity_gate",
     "content_hash_col",
-    "init_dedup_state",
+    "ensure_dedup_state",
+    "load_dedup_state",
+    "load_dedup_bloom",
     "append_dedup_state",
     "stream_ingest_with_history",
     "stream_clean_corpus",
@@ -127,61 +132,120 @@ def perplexity_gate(
     return gate
 
 
-def init_dedup_state(hist: DataFrame, state_dir: str, text_col: str = "text") -> None:
-    """Seed the persisted dedup state (hash + signature tables) from the
-    existing corpus — run once before :func:`stream_ingest_with_history`."""
-    from lakehouse_adventureworks2022_spark.operators import dedup
+def ensure_dedup_state(
+    hist: DataFrame, state_dir: str, text_col: str = "text"
+) -> tuple[DataFrame, DataFrame]:
+    """The persisted dedup state ``(hashes, sigs)`` at ``state_dir``,
+    seeded from the existing corpus ``hist`` when none is committed —
+    run before :func:`stream_ingest_with_history`. Both tables, the
+    bloom gate (:func:`ensure_dedup_bloom`) and every appended batch
+    live in ONE manifest-committed generation dir
+    (``storage/commit.py``): a crash anywhere in the seed build leaves
+    no manifest and the next call rebuilds; a state recorded with
+    another ``text_col`` raises ``ValueError``. A state in the
+    pre-manifest layout (``hashes/``, ``sigs/``, ``bloom.bin``) is
+    adopted — its appended batches are not in ``hist`` — never
+    reseeded."""
 
-    hashes, sigs = dedup.dedup_state(hist, text_col)
-    hashes.write.mode("overwrite").parquet(f"{state_dir}/hashes")
-    sigs.write.mode("overwrite").parquet(f"{state_dir}/sigs")
+    def build(base: str) -> dict | None:
+        if commit.adopt_tables(state_dir, base, ("hashes", "sigs")):
+            bf = bloom.load_bloom(os.path.join(state_dir, "bloom.bin"))
+            return None if bf is None else _with_bloom(os.path.dirname(base), {}, bf)
+        hashes, sigs = dedup.dedup_state(hist, text_col)
+        hashes.write.parquet(f"{base}/hashes")
+        sigs.write.parquet(f"{base}/sigs")
+
+    manifest = commit.ensure(
+        state_dir, {"text_col": text_col}, build, kind="dedup state"
+    )
+    return load_dedup_state(hist.sparkSession, state_dir, manifest)
+
+
+def load_dedup_state(
+    spark, state_dir: str, manifest: dict | None = None
+) -> tuple[DataFrame, DataFrame]:
+    """The committed ``(hashes, sigs)``: the seed plus every committed
+    appended batch, each table one multi-path scan."""
+    manifest = manifest or commit.committed(state_dir, kind="dedup state")
+    return tuple(
+        spark.read.parquet(*commit.data_paths(state_dir, manifest, table))
+        for table in ("hashes", "sigs")
+    )
+
+
+def load_dedup_bloom(state_dir: str, manifest: dict | None = None):
+    """The committed bloom gate of the dedup state, None when it has
+    none."""
+    manifest = manifest or commit.committed(state_dir, kind="dedup state")
+    name = manifest["files"].get("bloom")
+    return None if name is None else bloom.load_bloom(
+        commit.gen_path(state_dir, manifest, name)
+    )
+
+
+def _with_bloom(gen: str, files: dict, bf) -> dict:
+    """Manifest fields naming bloom ``bf``, saved to a fresh file in the
+    generation dir ``gen`` — it commits with the manifest swap that
+    names it."""
+    name = f"bloom-{uuid.uuid4().hex[:12]}.bin"
+    bloom.save_bloom(os.path.join(gen, name), bf)
+    return {"files": {**files, "bloom": name}}
 
 
 def append_dedup_state(
-    accepted: DataFrame, state_dir: str, text_col: str = "text"
+    accepted: DataFrame,
+    state_dir: str,
+    text_col: str = "text",
+    batch_tag: str | None = None,
 ) -> None:
     """Grow the persisted state with an accepted batch — the other half
     of every ingest loop (streaming or batch): after
     ``incremental_dedup`` says what survives, the survivors' hashes and
     signatures become history for the next batch.
 
-    The state rows are MATERIALIZED (eager ``localCheckpoint`` — plan
-    truncated to the computed partitions) before the first write:
-    ``accepted``'s plan READS ``{state_dir}/hashes``+``/sigs`` (the
-    vs-history joins), so appending to those paths triggers Spark's
-    recache-by-path and a lazy frame re-executes against the GROWN
-    state — the anti-join then drops every row and the later writes
-    append NOTHING. That exact hazard shipped silently for the sigs
-    table (hashes were consumed by the first write, sigs recomputed
-    empty after it): batch ≥ 2 of any multi-batch ingest was blind to
-    earlier batches' near-dup signatures. Regression-pinned by
-    ``test_append_dedup_state_grows_both_tables`` and the two-batch
-    stream≡batch test. localCheckpoint is batch-sized transient state;
-    on a real cluster a lost executor fails the micro-batch and the
-    replay contract re-runs it."""
-    from lakehouse_adventureworks2022_spark.operators import bloom as bloom_mod
-    from lakehouse_adventureworks2022_spark.operators import dedup
+    One :func:`commit.append` under ``batch_tag``: both tables land in
+    a fresh append dir and the bloom (when the state has one) is OR-ed
+    with the batch into a fresh file, and all of it commits in the same
+    manifest swap — a crash before it leaves state and bloom as they
+    were (the batch replays). A committed tag's replay is a no-op: its
+    rows are already history (a replayed ``accepted`` computed against
+    the state would come back empty, and must not replace them). No
+    tag = a fresh one (not replay-safe).
 
+    The batch state is materialized (eager ``localCheckpoint``) first:
+    the hashes feed both the write and the bloom, and ``accepted``'s
+    plan reads the state (the vs-history joins) — never re-run it.
+    localCheckpoint is batch-sized transient state; on a real cluster
+    a lost executor fails the micro-batch and the replay contract
+    re-runs it."""
+    manifest = commit.committed(state_dir, kind="dedup state")
+    if batch_tag in manifest["appends"]:
+        return  # replayed batch: its rows are committed
     new_hashes, new_sigs = dedup.dedup_state(accepted, text_col)
     new_hashes = new_hashes.localCheckpoint(eager=True)
     new_sigs = new_sigs.localCheckpoint(eager=True)
-    # the bloom absorbs BEFORE the state-table appends: a crash between
-    # the two leaves the bloom a SUPERSET of state (harmless — a few
-    # extra exact confirms) instead of a subset, which would break the
-    # no-false-negative invariant unrecoverably (the replayed batch
-    # recomputes `accepted` as empty against the grown state, so the
-    # missing hashes would never be absorbed and every future gated
-    # ingest silently admits their duplicates).
-    bloom_mod.absorb_batch(state_dir, new_hashes, "content_hash")
-    new_hashes.write.mode("append").parquet(f"{state_dir}/hashes")
-    new_sigs.write.mode("append").parquet(f"{state_dir}/sigs")
+    bf = load_dedup_bloom(state_dir, manifest)
+
+    def write(path: str) -> dict:
+        new_hashes.write.parquet(f"{path}/hashes")
+        new_sigs.write.parquet(f"{path}/sigs")
+        if bf is None:
+            return {}
+        batch = bloom.bloom_build(new_hashes, "content_hash", bf.n_bits, bf.n_hashes)
+        return _with_bloom(
+            commit.gen_path(state_dir, manifest),
+            manifest["files"],
+            bloom.bloom_or(bf, batch),
+        )
+
+    commit.append(state_dir, manifest, batch_tag, write)
 
 
 #: sizing floor for the state bloom: an empty/tiny initial state must
 #: not produce a toy bitmap that saturates after the first real batch
-#: (absorb never resizes — only a rebuild does). 2^20 items at 1% fpr
-#: is a ~1.2 MB bitmap: trivial to broadcast, survives a million
-#: ingested docs before the fpr monitor asks for a rebuild.
+#: (appends OR into it and never resize — only a rebuild does). 2^20
+#: items at 1% fpr is a ~1.2 MB bitmap: trivial to broadcast, survives a
+#: million ingested docs before the fpr monitor asks for a rebuild.
 BLOOM_MIN_ITEMS = 1 << 20
 
 #: rebuild trigger: when the live bloom's estimated fpr exceeds the
@@ -199,31 +263,34 @@ def ensure_dedup_bloom(
     growth_headroom: int = 4,
     min_items: int = BLOOM_MIN_ITEMS,
 ) -> "object":
-    """Build (once) and return the persisted bloom gate for a dedup
-    state dir. Sized from ``max(current hash count × growth_headroom,
+    """Build (once) and return the persisted bloom gate of a committed
+    dedup state. Sized from ``max(current hash count × growth_headroom,
     min_items)`` — the floor keeps a gate seeded from an empty or tiny
     state from degrading to everything-maybe-dup after one real batch
-    (correct but useless; ``absorb_batch`` ORs in place and never
-    resizes). When the loaded bloom's :func:`~operators.bloom.
-    estimated_fpr` exceeds ``fpr × BLOOM_REBUILD_FPR_FACTOR`` it is
-    rebuilt from the grown hash table with fresh sizing (count job runs
-    only on build/rebuild paths — amortized, like index training).
-    Returns the loaded :class:`~operators.bloom.BloomFilter`.
+    (correct but useless; appends OR into it and never resize). When
+    the committed bloom's :func:`~operators.bloom.estimated_fpr`
+    exceeds ``fpr × BLOOM_REBUILD_FPR_FACTOR`` it is rebuilt from the
+    grown hash table with fresh sizing (count job runs only on
+    build/rebuild paths — amortized, like index training). Returns the
+    :class:`~operators.bloom.BloomFilter`; it commits in the state's
+    manifest, so it always covers every committed hash.
     """
-    from lakehouse_adventureworks2022_spark.operators import bloom as bloom_mod
-
-    bf = bloom_mod.load_bloom(state_dir)
-    if bf is not None and bloom_mod.estimated_fpr(bf) > (
+    manifest = commit.committed(state_dir, kind="dedup state")
+    bf = load_dedup_bloom(state_dir, manifest)
+    if bf is not None and bloom.estimated_fpr(bf) > (
         fpr * BLOOM_REBUILD_FPR_FACTOR
     ):
         bf = None  # saturated: fall through to a fresh-sized rebuild
     if bf is None:
-        hashes = spark.read.parquet(f"{state_dir}/hashes")
-        n_bits, n_hashes = bloom_mod.bloom_params(
+        hashes, _ = load_dedup_state(spark, state_dir, manifest)
+        n_bits, n_hashes = bloom.bloom_params(
             max(hashes.count() * growth_headroom, min_items), fpr
         )
-        bf = bloom_mod.bloom_build(hashes, "content_hash", n_bits, n_hashes)
-        bloom_mod.save_bloom(state_dir, bf)
+        bf = bloom.bloom_build(hashes, "content_hash", n_bits, n_hashes)
+        gen = commit.gen_path(state_dir, manifest)
+        commit.publish(
+            state_dir, {**manifest, **_with_bloom(gen, manifest["files"], bf)}
+        )
     return bf
 
 
@@ -247,38 +314,32 @@ def stream_ingest_with_history(
     output directory, and their state rows append — so the next batch
     (and any other reader) sees them as history.
 
-    Idempotence on re-delivery: a replayed batch id is skipped once
-    recorded; before recording, the per-batch output dir is written
-    with ``overwrite`` (a crash between output and state writes replays
-    into the SAME dir — no duplicate landed rows) and duplicate state
-    rows from a partial replay are harmless (hash membership is a set;
-    candidate pairs are ``.distinct()``-ed).
+    Idempotence on re-delivery: each batch appends its state under its
+    stream-scoped tag (``commit.stream_tag`` — Spark numbers batches
+    per checkpoint, and the state outlives any one stream), and the
+    state's committed tags are the applied-batch ledger — a batch whose
+    tag is committed is skipped, output write included.
+    Before the commit, the per-batch output dir is written with
+    ``overwrite`` (a crash between output and state commit replays into
+    the SAME dir — no duplicate landed rows) and the replay appends its
+    state once.
 
     Scale: everything inherits incremental_dedup's broadcast-batch /
-    stream-state shape; the driver touches only the applied-batch set.
+    stream-state shape; the driver touches only the manifest.
     ``use_bloom=True`` adds the persisted bloom gate
     (:func:`ensure_dedup_bloom`, built on the first batch if absent):
     each micro-batch reloads the CURRENT bloom — grown by every prior
-    batch's ``append_dedup_state``/``absorb_batch`` — so the exact
-    vs-history probe touches the state table only for maybe-dup rows.
-    Results are identical with or without the gate (stream≡batch test).
+    batch's ``append_dedup_state`` — so the exact vs-history probe
+    touches the state table only for maybe-dup rows. Results are
+    identical with or without the gate (stream≡batch test).
     """
-    import json
-    from pathlib import Path
-
-    from lakehouse_adventureworks2022_spark.operators import dedup
-
-    applied_path = Path(checkpoint_dir) / "_applied_batches.json"
-
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        applied: set[int] = set()
-        if applied_path.exists():
-            applied = set(json.loads(applied_path.read_text()))
-        if batch_id in applied:
-            return
+        tag = commit.stream_tag(checkpoint_dir, batch_id)
+        manifest = commit.committed(state_dir, kind="dedup state")
+        if tag in manifest["appends"]:
+            return  # re-delivered batch: its state append is committed
         spark = batch_df.sparkSession
-        state_hashes = spark.read.parquet(f"{state_dir}/hashes")
-        state_sigs = spark.read.parquet(f"{state_dir}/sigs")
+        state_hashes, state_sigs = load_dedup_state(spark, state_dir, manifest)
         gated = quality_gate(batch_df, text_col)
         if extra_gate is not None:
             # model-based gate (classifier_gate / perplexity_gate):
@@ -294,14 +355,9 @@ def stream_ingest_with_history(
         accepted.write.mode("overwrite").parquet(
             f"{out_dir}/batch={batch_id}"
         )
-        append_dedup_state(accepted, state_dir, text_col)
+        append_dedup_state(accepted, state_dir, text_col, batch_tag=tag)
         dedup.release_cached_inputs(accepted)
         accepted.unpersist()
-        applied.add(batch_id)
-        applied_path.parent.mkdir(parents=True, exist_ok=True)
-        tmp = applied_path.with_suffix(".tmp")
-        tmp.write_text(json.dumps(sorted(applied)))
-        tmp.rename(applied_path)
 
     return (
         docs.writeStream.foreachBatch(process)

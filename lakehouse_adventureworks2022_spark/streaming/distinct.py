@@ -9,11 +9,11 @@ state is BYTE-EQUAL to the batch sketch of everything ingested
 Same skeleton and commit protocol as ``streaming/frequent.py`` /
 ``streaming/quantiles.py``: per batch (``foreachBatch``), sketch the
 batch with the bounded two-phase KMV build, merge into the persisted
-per-group state with ``theta.kmv_merge``, and commit state +
-applied-batch-id meta in ONE rename via ``state_commit`` (crash-safe:
-see that module's crash matrix). Re-delivered batches are skipped by
-batch id, so at-least-once delivery never double-counts — and the
-sketch union is idempotent anyway (a double-merge of the same hashes
+per-group state with ``theta.kmv_merge``, and commit the state with its
+applied batch ids in ONE manifest swap via ``commit.fold`` (crash-safe:
+see ``storage/commit.py``'s crash matrix). Re-delivered batches are
+skipped by batch id, so at-least-once delivery never double-counts — and
+the sketch union is idempotent anyway (a double-merge of the same hashes
 is a no-op), giving this state TWO independent exactly-once layers.
 
 Scale: state is one ≤ k-hash array per group — kilobytes at any
@@ -25,8 +25,6 @@ pairs of states answer union/intersection/difference via
 
 from __future__ import annotations
 
-from pathlib import Path
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
@@ -37,21 +35,17 @@ from lakehouse_adventureworks2022_spark.operators.theta import (
     kmv_merge,
     kmv_sketches,
 )
-from lakehouse_adventureworks2022_spark.streaming import state_commit
+from lakehouse_adventureworks2022_spark.storage import commit
 
-_NAME = "kmv"
-
-
-def _read_meta(state_dir: str) -> dict:
-    return state_commit.read_meta(state_dir, _NAME)
+_KIND = "distinct state"
 
 
 def load_state(
     spark: SparkSession, state_dir: str, template: DataFrame, keys: list
 ) -> DataFrame:
-    frame = state_commit.load_frame(spark, state_dir, _NAME)
-    if frame is not None:
-        return frame
+    manifest = commit.read_committed(state_dir, kind=_KIND, rebuildable=False)
+    if manifest is not None:
+        return spark.read.parquet(commit.gen_path(state_dir, manifest, "base"))
     return spark.createDataFrame([], _kmv_schema(template, keys))
 
 
@@ -65,27 +59,18 @@ def apply_distinct_batch(
 ) -> None:
     """Merge ONE micro-batch into the persisted KMV state (shared by
     the streaming sink and any batch backfill — one code path)."""
-    meta = _read_meta(state_dir)
-    if batch_id in meta["applied"]:
-        return  # re-delivered batch: already merged
-    if meta.get("k", k) != k:
-        raise ValueError(
-            f"distinct-sketch state at {state_dir} was built with "
-            f"k={meta['k']}; changing the sketch size mid-stream breaks "
-            f"mergeability — start a fresh state_dir"
-        )
-    meta["k"] = k
-    spark = batch_df.sparkSession
-    batch_sketch = kmv_sketches(batch_df, keys, value_col, k=k).persist()
-    try:
-        n_batch = batch_df.count()
-        state = load_state(spark, state_dir, batch_df, keys)
-        merged = kmv_merge(state, batch_sketch, keys=keys, k=k)
-        meta["applied"].append(batch_id)
-        meta["n_total"] += n_batch
-        state_commit.commit(merged, state_dir, _NAME, meta)
-    finally:
-        batch_sketch.unpersist()
+
+    def step(base: str) -> int:
+        batch_sketch = kmv_sketches(batch_df, keys, value_col, k=k).persist()
+        try:
+            state = load_state(batch_df.sparkSession, state_dir, batch_df, keys)
+            merged = kmv_merge(state, batch_sketch, keys=keys, k=k)
+            merged.coalesce(1).write.parquet(base)
+            return batch_df.count()
+        finally:
+            batch_sketch.unpersist()
+
+    commit.fold(state_dir, batch_id, {"k": k}, step, _KIND)
 
 
 def stream_distinct_counts(
@@ -97,8 +82,6 @@ def stream_distinct_counts(
     k: int = DEFAULT_K,
 ) -> StreamingQuery:
     """Maintain the per-group distinct-sketch state over a stream."""
-    Path(state_dir).mkdir(parents=True, exist_ok=True)
-
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
         apply_distinct_batch(batch_df, batch_id, state_dir, value_col, keys, k=k)
 
@@ -115,7 +98,6 @@ def distinct_counts_from_state(
 ) -> DataFrame:
     """Current ``(keys..., est_distinct, is_exact)`` from the state —
     reads kilobytes, never the stream."""
-    frame = state_commit.load_frame(spark, state_dir, _NAME)
-    if frame is None:
-        raise FileNotFoundError(f"no committed distinct state at {state_dir}")
+    manifest = commit.committed(state_dir, kind=_KIND, rebuildable=False)
+    frame = spark.read.parquet(commit.gen_path(state_dir, manifest, "base"))
     return kmv_estimate(frame, keys, k=k)

@@ -7,11 +7,10 @@ Shape per batch (``foreachBatch``): summarize the batch with
 ``sketches.mg_summarize`` (bounded, one tiny shuffle), merge it into
 the persisted state with ``sketches.mg_merge`` (Agarwal et al. 2013 —
 the merged summary is a valid MG summary of EVERYTHING ingested), and
-commit state + applied-batch-id meta in ONE rename via
-``state_commit`` (crash-safe: see that module's crash matrix).
-Re-delivered batches are skipped by batch id (the same idempotence
-contract as ``streaming/sink.py``), so at-least-once delivery never
-double-counts.
+commit the state with its applied batch ids in ONE manifest swap via
+``commit.fold`` (crash-safe: see ``storage/commit.py``'s crash
+matrix). Re-delivered batches are skipped by batch id, so
+at-least-once delivery never double-counts.
 
 Guarantee carried in the state (and tested): with summary size ``m``
 and ``n_total`` ingested rows, every stored weight satisfies
@@ -21,14 +20,12 @@ reports top-k with the current error bound attached — the consumer
 decides whether the bound is tight enough or the batch form should
 re-verify exactly.
 
-Scale: state is ≤ m rows + one metadata JSON — kilobytes at any stream
+Scale: state is ≤ m rows + one manifest — kilobytes at any stream
 volume; per batch the only corpus-sized work is the batch's own MG
 pass. Nothing driver-side exceeds m+1 rows.
 """
 
 from __future__ import annotations
-
-from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -38,19 +35,17 @@ from lakehouse_adventureworks2022_spark.operators.sketches import (
     mg_merge,
     mg_summarize,
 )
-from lakehouse_adventureworks2022_spark.streaming import state_commit
+from lakehouse_adventureworks2022_spark.storage import commit
 
-_NAME = "summary"
-
-
-def _read_meta(state_dir: str) -> dict:
-    return state_commit.read_meta(state_dir, _NAME)
+_KIND = "frequent-items state"
 
 
-def load_state(spark: SparkSession, state_dir: str, value_type: str = "string") -> DataFrame:
-    frame = state_commit.load_frame(spark, state_dir, _NAME)
-    if frame is not None:
-        return frame
+def load_state(
+    spark: SparkSession, state_dir: str, value_type: str = "string"
+) -> DataFrame:
+    manifest = commit.read_committed(state_dir, kind=_KIND, rebuildable=False)
+    if manifest is not None:
+        return spark.read.parquet(commit.gen_path(state_dir, manifest, "base"))
     return spark.createDataFrame([], f"value {value_type}, weight long")
 
 
@@ -63,37 +58,24 @@ def apply_frequent_batch(
 ) -> None:
     """Merge ONE micro-batch into the persisted MG state (shared by the
     streaming sink and any batch backfill — one code path)."""
-    meta = _read_meta(state_dir)
-    if batch_id in meta["applied"]:
-        return  # re-delivered batch: already counted
-    if meta.get("m", m) != m:
-        raise ValueError(
-            f"frequent-items state at {state_dir} was built with "
-            f"m={meta['m']}; changing the summary size mid-stream breaks "
-            f"the error bound — start a fresh state_dir"
-        )
-    meta["m"] = m
     spark = batch_df.sparkSession
     vtype = dict(batch_df.dtypes)[key_col]
-    # persist the (≤ m·partitions)-row batch summary: mg_merge's bounded
-    # driver collect and the state write are two separate actions, and
-    # without the persist each re-runs the batch's full Arrow MG pass —
-    # measured 2× the per-batch cost at 10× stress volume
-    batch_summary = mg_summarize(batch_df, key_col, m).persist()
-    try:
-        n_batch = batch_df.count()
-        state = load_state(spark, state_dir, vtype)
-        merged = mg_merge(state, batch_summary, m=m)
-        # crash-safe: the updated meta (batch id now recorded) rides
-        # inside the staged state dir, so state + idempotence marker
-        # commit in the same rename — a crash leaves either the old
-        # state (batch replays idempotently) or the new state (replay
-        # skipped), never a mix
-        meta["applied"].append(batch_id)
-        meta["n_total"] += n_batch
-        state_commit.commit(merged, state_dir, _NAME, meta)
-    finally:
-        batch_summary.unpersist()
+
+    def step(base: str) -> int:
+        # persist the (≤ m·partitions)-row batch summary: mg_merge's
+        # bounded driver collect and the state write are two separate
+        # actions, and without the persist each re-runs the batch's full
+        # Arrow MG pass — measured 2× the per-batch cost at 10× stress
+        # volume
+        batch_summary = mg_summarize(batch_df, key_col, m).persist()
+        try:
+            state = load_state(spark, state_dir, vtype)
+            mg_merge(state, batch_summary, m=m).coalesce(1).write.parquet(base)
+            return batch_df.count()
+        finally:
+            batch_summary.unpersist()
+
+    commit.fold(state_dir, batch_id, {"m": m}, step, _KIND)
 
 
 def stream_frequent_items(
@@ -104,8 +86,6 @@ def stream_frequent_items(
     m: int = 256,
 ) -> StreamingQuery:
     """Maintain the frequent-items state over a streaming source."""
-    Path(state_dir).mkdir(parents=True, exist_ok=True)
-
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
         apply_frequent_batch(batch_df, batch_id, state_dir, key_col, m=m)
 
@@ -124,9 +104,9 @@ def frequent_values(
     max_undercount)`` — ``weight`` lower-bounds the true count and the
     true count is ≤ weight + max_undercount (= n_total/(m+1) ingested
     so far, by the MG merge guarantee)."""
-    meta = _read_meta(state_dir)
+    manifest = commit.read_committed(state_dir, kind=_KIND, rebuildable=False)
     state = load_state(spark, state_dir, value_type)
-    bound = meta["n_total"] // (meta["m"] + 1) if meta.get("m") else meta["n_total"]
+    bound = manifest["n_total"] // (manifest["params"]["m"] + 1) if manifest else 0
     return (
         state.orderBy(F.desc("weight"), F.asc(F.col("value").cast("string")))
         .limit(k)

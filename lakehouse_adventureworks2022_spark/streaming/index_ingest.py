@@ -16,11 +16,13 @@ Semantics:
   assign+append (one Arrow pass + one clustered write — no shuffle of
   the existing index);
 - idempotence: each batch appends under its batch tag
-  (``append_index(batch_tag=…)``), which the index manifest maps to the
-  dir of its committed attempt, so a replayed batch REPLACES its rows
-  instead of duplicating them — safe even when the crash lands between
-  the append and the applied-id record (the recorded ids are only a
-  fast-path skip), or in the middle of the replay itself;
+  (``append_index(batch_tag=…)``; ``commit.stream_tag`` scopes the
+  batch id to the stream's checkpoint, so two streams can feed one
+  index), which the index manifest maps to the dir of its committed
+  attempt — the committed tags are the applied-batch ledger, so a
+  re-delivered batch whose tag is committed is skipped, and a crash
+  before the manifest swap (or in the middle of a replay) leaves the
+  tag uncommitted and the replay appends it once;
 - accumulated small appended file sets are the documented maintenance
   debt — run ``vector_index.recluster_index`` on the usual compaction
   cadence (tested in ``test_training_ops``).
@@ -33,15 +35,13 @@ until the next re-cluster.
 
 from __future__ import annotations
 
-import json
-from pathlib import Path
-
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
 from lakehouse_adventureworks2022_spark.operators.vectorize import (
     chunk_index_append,
 )
+from lakehouse_adventureworks2022_spark.storage import commit
 from lakehouse_adventureworks2022_spark.streaming.corpus import quality_gate
 
 
@@ -83,31 +83,20 @@ def stream_index_ingest(
 ) -> StreamingQuery:
     """Document stream → searchable IVF chunk index, exactly-once per
     batch id."""
-    applied_path = Path(checkpoint_dir) / "_applied_batches.json"
 
     def ingest(batch_df: DataFrame, batch_id: int) -> None:
-        applied: set[int] = set()
-        if applied_path.exists():
-            applied = set(json.loads(applied_path.read_text()))
-        if batch_id in applied:
-            return
-        # the batch-tagged append is IDEMPOTENT (a replay replaces the
-        # tag's committed rows), so a crash between the append and the
-        # record below re-applies safely on replay — the applied set is
-        # a fast-path skip, not the correctness mechanism
+        tag = commit.stream_tag(checkpoint_dir, batch_id)
+        manifest = commit.committed(index_dir, "index")
+        if tag in manifest["appends"]:
+            return  # re-delivered batch: its append is committed
         index_batch(
             batch_df,
             index_dir,
             chunk_tokens,
             overlap_tokens,
             dim,
-            batch_tag=f"b{batch_id}",
+            batch_tag=tag,
         )
-        applied.add(batch_id)
-        applied_path.parent.mkdir(parents=True, exist_ok=True)
-        tmp = applied_path.with_suffix(".tmp")
-        tmp.write_text(json.dumps(sorted(applied)))
-        tmp.rename(applied_path)
 
     return (
         docs.writeStream.foreachBatch(ingest)

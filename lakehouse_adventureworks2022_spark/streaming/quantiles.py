@@ -5,10 +5,10 @@ keeps the mergeable sketch instead). Same skeleton as
 ``streaming/frequent.py``: per batch (``foreachBatch``), sketch the
 batch with the bounded two-phase KLL build, merge into the persisted
 per-group state with ``sketches.kll_merge`` (sketch of the stream ==
-merge of the batch sketches — tested), and commit state +
-applied-batch-id meta in ONE rename via ``state_commit`` (crash-safe:
-see that module's crash matrix). Re-delivered batches are skipped by
-batch id, so at-least-once delivery never double-counts.
+merge of the batch sketches — tested), and commit the state with its
+applied batch ids in ONE manifest swap via ``commit.fold`` (crash-safe:
+see ``storage/commit.py``'s crash matrix). Re-delivered batches are
+skipped by batch id, so at-least-once delivery never double-counts.
 
 Guarantee carried in the state (and tested): each group's sketch
 answers any quantile within the KLL rank bound (~1/k normalized rank
@@ -24,8 +24,6 @@ driver-side exceeds the applied-batch-id list.
 
 from __future__ import annotations
 
-from pathlib import Path
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
@@ -35,13 +33,9 @@ from lakehouse_adventureworks2022_spark.operators.sketches import (
     kll_quantiles,
     kll_sketches,
 )
-from lakehouse_adventureworks2022_spark.streaming import state_commit
+from lakehouse_adventureworks2022_spark.storage import commit
 
-_NAME = "sketches"
-
-
-def _read_meta(state_dir: str) -> dict:
-    return state_commit.read_meta(state_dir, _NAME)
+_KIND = "quantile state"
 
 
 def load_state(
@@ -49,9 +43,9 @@ def load_state(
 ) -> DataFrame:
     """Stored sketch frame, or an empty frame with the right schema
     (key types taken from the batch template) before the first batch."""
-    frame = state_commit.load_frame(spark, state_dir, _NAME)
-    if frame is not None:
-        return frame
+    manifest = commit.read_committed(state_dir, kind=_KIND, rebuildable=False)
+    if manifest is not None:
+        return spark.read.parquet(commit.gen_path(state_dir, manifest, "base"))
     return spark.createDataFrame([], _kll_schema(template, keys))
 
 
@@ -65,28 +59,15 @@ def apply_quantile_batch(
 ) -> None:
     """Merge ONE micro-batch into the persisted KLL state (shared by
     the streaming sink and any batch backfill — one code path)."""
-    meta = _read_meta(state_dir)
-    if batch_id in meta["applied"]:
-        return  # re-delivered batch: already sketched
-    if meta.get("k", k) != k:
-        raise ValueError(
-            f"quantile state at {state_dir} was built with k={meta['k']}; "
-            f"changing the sketch size mid-stream breaks mergeability — "
-            f"start a fresh state_dir"
-        )
-    meta["k"] = k
-    spark = batch_df.sparkSession
-    batch_sketch = kll_sketches(batch_df, keys, value_col, k=k)
-    n_batch = batch_df.count()
-    state = load_state(spark, state_dir, batch_df, keys)
-    merged = kll_merge(state, batch_sketch, keys=keys, k=k)
-    # crash-safe: the updated meta (batch id now recorded) rides inside
-    # the staged state dir, so state + idempotence marker commit in the
-    # same rename — a crash leaves either the old state (batch replays
-    # idempotently) or the new state (replay skipped), never a mix
-    meta["applied"].append(batch_id)
-    meta["n_total"] += n_batch
-    state_commit.commit(merged, state_dir, _NAME, meta)
+
+    def step(base: str) -> int:
+        batch_sketch = kll_sketches(batch_df, keys, value_col, k=k)
+        state = load_state(batch_df.sparkSession, state_dir, batch_df, keys)
+        merged = kll_merge(state, batch_sketch, keys=keys, k=k)
+        merged.coalesce(1).write.parquet(base)
+        return batch_df.count()
+
+    commit.fold(state_dir, batch_id, {"k": k}, step, _KIND)
 
 
 def stream_quantiles(
@@ -98,8 +79,6 @@ def stream_quantiles(
     k: int = 200,
 ) -> StreamingQuery:
     """Maintain the per-group quantile state over a streaming source."""
-    Path(state_dir).mkdir(parents=True, exist_ok=True)
-
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
         apply_quantile_batch(
             batch_df, batch_id, state_dir, value_col, keys, k=k
@@ -121,7 +100,6 @@ def quantiles_from_state(
 ) -> DataFrame:
     """Current quantile estimates from the stored sketches:
     ``(keys..., q, value, n)`` — reads kilobytes, never the stream."""
-    frame = state_commit.load_frame(spark, state_dir, _NAME)
-    if frame is None:
-        raise FileNotFoundError(f"no committed quantile state at {state_dir}")
+    manifest = commit.committed(state_dir, kind=_KIND, rebuildable=False)
+    frame = spark.read.parquet(commit.gen_path(state_dir, manifest, "base"))
     return kll_quantiles(frame, qs, keys=keys)

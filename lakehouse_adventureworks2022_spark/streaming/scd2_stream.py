@@ -15,10 +15,10 @@ streaming logic to diverge):
 - the snapshot swap is the engine's atomic staging+rename overwrite, so
   a crash mid-batch leaves the previous snapshot intact;
 - idempotence: applied ``batch_id``s are recorded in the checkpoint dir
-  (single-file atomic JSON, the ``sink.py`` pattern) AFTER the swap —
-  a re-delivered batch after restart is skipped, so the merge never
-  double-applies. Record-then-swap would be the wrong order: a crash
-  between the two must re-apply, not skip.
+  (``sink.once_per_batch``) AFTER the swap — a re-delivered batch after
+  restart is skipped, so the merge never double-applies. Record-then-
+  swap would be the wrong order: a crash between the two must
+  re-apply, not skip.
 
 Scale: each micro-batch shuffles only on the business key (batch side
 small → broadcast, see ``operators/scd2.py``); the snapshot rewrite is
@@ -28,15 +28,13 @@ apply logic is factored out of the sink."""
 
 from __future__ import annotations
 
-import json
-from pathlib import Path
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from lakehouse_adventureworks2022_spark.operators.scd2 import scd2_apply
 from lakehouse_adventureworks2022_spark.storage.tables import TableManager
+from lakehouse_adventureworks2022_spark.streaming.sink import once_per_batch
 
 
 def apply_scd2_batch(
@@ -82,14 +80,8 @@ def stream_scd2(
 ) -> StreamingQuery:
     """CDC stream → SCD2 dimension: every micro-batch runs the batch
     merge; re-delivered batches skip via the recorded batch ids."""
-    applied_path = Path(checkpoint_dir) / "_applied_batches.json"
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
-        applied: set[int] = set()
-        if applied_path.exists():
-            applied = set(json.loads(applied_path.read_text()))
-        if batch_id in applied:
-            return
         apply_scd2_batch(
             tables,
             table,
@@ -99,14 +91,9 @@ def stream_scd2(
             change_date_col,
             order_col,
         )
-        applied.add(batch_id)
-        applied_path.parent.mkdir(parents=True, exist_ok=True)
-        tmp = applied_path.with_suffix(".tmp")
-        tmp.write_text(json.dumps(sorted(applied)))
-        tmp.rename(applied_path)
 
     return (
-        changes.writeStream.foreachBatch(merge)
+        changes.writeStream.foreachBatch(once_per_batch(checkpoint_dir, merge))
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("update")
         .start()

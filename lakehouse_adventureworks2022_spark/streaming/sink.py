@@ -14,7 +14,8 @@ with Structured Streaming's own exactly-once machinery:
   :class:`TableManager` table for sinks the file sink can't express
   (partition overwrite, MERGE on Delta). Idempotence comes from the
   ``batch_id``: re-delivered batches skip when the recorded id is
-  already applied (the checkpoint stores the offset→batch mapping).
+  already applied (the checkpoint stores the offset→batch mapping;
+  :func:`once_per_batch` keeps the applied ids).
 
 Scale: checkpoints/offsets are tiny metadata; data flows
 executor→files; state never passes the driver.
@@ -23,13 +24,35 @@ executor→files; state never passes the driver.
 from __future__ import annotations
 
 import json
-from pathlib import Path
+import os
+from typing import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from lakehouse_adventureworks2022_spark.storage import commit
 from lakehouse_adventureworks2022_spark.storage.tables import TableManager
+
+
+def once_per_batch(
+    checkpoint_dir: str, apply: Callable[[DataFrame, int], None]
+) -> Callable[[DataFrame, int], None]:
+    """The ``foreachBatch`` function that runs ``apply`` once per batch
+    id: applied ids are recorded in the checkpoint dir AFTER ``apply``
+    (one atomic file replace), so a re-delivered batch is skipped and a
+    crash between the two re-applies it — record-then-apply would skip
+    a batch that never landed."""
+    path = os.path.join(checkpoint_dir, "_applied_batches.json")
+
+    def run(batch_df: DataFrame, batch_id: int) -> None:
+        applied = set(commit.read_json(path, []))
+        if batch_id in applied:
+            return  # re-delivery after restart: already applied
+        apply(batch_df, batch_id)
+        commit.replace_file(path, json.dumps(sorted(applied | {batch_id})))
+
+    return run
 
 
 def stream_to_bronze(
@@ -57,26 +80,15 @@ def stream_to_bronze_foreach_batch(
 ) -> StreamingQuery:
     """foreachBatch ingestion into a managed table with explicit
     batch-id idempotence (re-delivered batches are skipped)."""
-    applied_path = Path(checkpoint_dir) / "_applied_batches.json"
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        applied: set[int] = set()
-        if applied_path.exists():
-            applied = set(json.loads(applied_path.read_text()))
-        if batch_id in applied:
-            return  # re-delivery after restart: already applied
         batch = batch_df.withColumn(
             "ingestion_date", F.to_date(F.current_timestamp())
         )
         tables.append(batch, table, partition_by="ingestion_date")
-        applied.add(batch_id)
-        applied_path.parent.mkdir(parents=True, exist_ok=True)
-        tmp = applied_path.with_suffix(".tmp")
-        tmp.write_text(json.dumps(sorted(applied)))
-        tmp.rename(applied_path)
 
     return (
-        events.writeStream.foreachBatch(upsert)
+        events.writeStream.foreachBatch(once_per_batch(checkpoint_dir, upsert))
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
         .start()

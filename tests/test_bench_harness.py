@@ -122,6 +122,9 @@ def test_bench_purges_amortized_state_and_records_reps(
         tq.fixture_state_dir(str(sf_dir), "embeddings", "pq_index_"),
         tq.fixture_state_dir(str(sf_dir), "documents", "dedup_state_"),
         tq.fixture_state_dir(str(sf_dir), "documents", "warc_archive_"),
+        tq.fixture_state_dir(
+            str(sf_dir), "documents", "bm25_index_", tq.BM25_INDEX_RECIPE
+        ),
     ]
     for d in fake_state:
         os.makedirs(d, exist_ok=True)
@@ -178,6 +181,7 @@ def test_amortized_state_dirs_keep_their_fingerprint_paths(sf_dir):
         old("documents", "dedup_state_"),
         old("documents", "mp4_corpus_", "|mjpeg-4f-v1"),
         old("documents", "warc_archive_"),
+        old("documents", "bm25_index_", "|chunk-64-8-v1"),
     ]
 
 

@@ -30,9 +30,11 @@ from lakehouse_adventureworks2022_spark.operators.dedup import (
     release_cached_inputs,
 )
 from lakehouse_adventureworks2022_spark.sources.readers import read_table
+from lakehouse_adventureworks2022_spark.storage import commit
+from lakehouse_adventureworks2022_spark.streaming import corpus
 from lakehouse_adventureworks2022_spark.streaming.corpus import (
     ensure_dedup_bloom,
-    init_dedup_state,
+    ensure_dedup_state,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -101,20 +103,21 @@ def test_param_mismatch_refused(spark):
 
 
 def test_roundtrip_save_load_absorb(spark, tmp_path):
-    state = str(tmp_path / "state")
+    path = str(tmp_path / "bloom.bin")
     keys = _md5s("seed", 300)
     n_bits, n_hashes = B.bloom_params(1200, fpr=0.01)
     bf = B.bloom_build(_hash_df(spark, keys), "content_hash", n_bits, n_hashes)
     assert B.BloomFilter.from_bytes(bf.to_bytes()) == bf
-    assert B.load_bloom(state) is None
-    B.save_bloom(state, bf)
-    assert B.load_bloom(state) == bf
-    B.save_bloom(state, bf)  # idempotent replay
-    assert B.load_bloom(state) == bf
+    assert B.load_bloom(path) is None
+    B.save_bloom(path, bf)
+    assert B.load_bloom(path) == bf
+    B.save_bloom(path, bf)  # idempotent replay
+    assert B.load_bloom(path) == bf
 
     extra = _md5s("extra", 300)
-    B.absorb_batch(state, _hash_df(spark, extra), "content_hash")
-    grown = B.load_bloom(state)
+    batch = B.bloom_build(_hash_df(spark, extra), "content_hash", n_bits, n_hashes)
+    B.save_bloom(path, B.bloom_or(B.load_bloom(path), batch))
+    grown = B.load_bloom(path)
     hits = (
         B.contains_col(_hash_df(spark, extra), "content_hash", grown, "hit")
         .agg(F.sum(F.col("hit").cast("int")))
@@ -144,9 +147,7 @@ def _split_docs(spark):
 def _state(spark, tmp_path):
     hist, batch = _split_docs(spark)
     state = str(tmp_path / "dstate")
-    init_dedup_state(hist, state)
-    hashes = spark.read.parquet(f"{state}/hashes")
-    sigs = spark.read.parquet(f"{state}/sigs")
+    hashes, sigs = ensure_dedup_state(hist, state)
     return state, hashes, sigs, batch
 
 
@@ -206,7 +207,9 @@ def test_all_new_batch_never_scans_state(spark, tmp_path):
     # replaces the ad-hoc _gate_stage attribute, r13 ADVICE)
     gate = incremental_dedup_gate_stage(fresh_batch, hashes, sigs, bloom=bf)
     plan = gate._jdf.queryExecution().executedPlan().toString()
-    assert "dstate/hashes" not in plan
+    # the state hashes table is the only parquet scan of content_hash
+    # (plan Location strings truncate long state paths)
+    assert "ReadSchema: struct<content_hash:string>" not in plan
     assert out.count() == 40
     release_cached_inputs(out)
 
@@ -229,6 +232,7 @@ def test_candidates_push_in_filter_into_state_scan(spark, tmp_path):
     gate = incremental_dedup_gate_stage(planted, hashes, sigs, bloom=bf)
     plan = gate._jdf.queryExecution().executedPlan().toString()
     assert "In(content_hash" in plan or "content_hash IN" in plan
+    assert "ReadSchema: struct<content_hash:string>" in plan  # the state scan
     got = {r[0] for r in out.select("doc_id").collect()}
     release_cached_inputs(out)
     assert got == {9_999_999}  # copies dropped, new doc survives
@@ -247,50 +251,59 @@ def test_content_hash_matches_python_md5(spark):
     assert len(row[0]) == 32
 
 
-def test_bloom_absorbs_before_state_append(spark, tmp_path, monkeypatch):
-    """Crash-ordering invariant (r10 ADVICE, medium): if the state-table
-    append fails AFTER the bloom absorb, the bloom is a SUPERSET of
-    state (harmless — extra exact confirms). The reverse order would
-    leave a subset, permanently breaking no-false-negatives: the
-    replayed batch recomputes `accepted` empty against the grown state,
-    so the missing hashes would never be absorbed."""
+def test_crash_during_state_append_keeps_state_and_bloom_together(
+    spark, tmp_path, monkeypatch
+):
+    """State tables and bloom commit in ONE manifest swap: an append
+    that dies mid-write leaves both exactly as committed (no ordering
+    between them to get wrong), and the replay of the same tag grows
+    both — the bloom then covers every committed hash. Each attempt
+    appends what the ingest loop accepts against the CURRENT state, so
+    a replay after the commit (which accepts nothing new) must leave
+    the committed rows alone."""
     from pyspark.sql.readwriter import DataFrameWriter
 
-    from lakehouse_adventureworks2022_spark.streaming.corpus import (
-        append_dedup_state,
-    )
-
     state, hashes, sigs, batch = _state(spark, tmp_path)
-    ensure_dedup_bloom(spark, state)  # gate present
-    before_hashes = spark.read.parquet(f"{state}/hashes").count()
+    before_bloom = ensure_dedup_bloom(spark, state)  # gate present
+    before_hashes = hashes.count()
+
+    def append_accepted():
+        hashes, sigs = corpus.load_dedup_state(spark, state)
+        bf = corpus.load_dedup_bloom(state)
+        accepted = incremental_dedup(batch, hashes, sigs, bloom=bf)
+        n_new = accepted.select(content_hash_col("text")).distinct().count()
+        corpus.append_dedup_state(accepted, state, batch_tag="b1")
+        release_cached_inputs(accepted)
+        return n_new
 
     real_parquet = DataFrameWriter.parquet
 
     def crash(self, path, *a, **kw):
-        if path.startswith(state):
+        if path.startswith(state) and path.endswith("sigs"):
             raise OSError("simulated crash during state append")
         return real_parquet(self, path, *a, **kw)
 
-    monkeypatch.setattr(DataFrameWriter, "parquet", crash)
-    with pytest.raises(OSError, match="simulated crash"):
-        append_dedup_state(batch, state)
-    monkeypatch.setattr(DataFrameWriter, "parquet", real_parquet)
+    with monkeypatch.context() as mp:
+        mp.setattr(DataFrameWriter, "parquet", crash)
+        with pytest.raises(OSError, match="simulated crash"):
+            append_accepted()
 
-    # state table unchanged, but the bloom already covers the batch —
-    # superset, so the invariant (bloom ⊇ state hashes) still holds and
-    # the eventual replay only costs extra confirms
-    assert spark.read.parquet(f"{state}/hashes").count() == before_hashes
-    bf = B.load_bloom(state)
-    batch_hashes = batch.select(
-        content_hash_col("text").alias("content_hash")
-    )
-    n_batch = batch_hashes.count()
+    hashes, _ = corpus.load_dedup_state(spark, state)
+    assert hashes.count() == before_hashes
+    assert corpus.load_dedup_bloom(state) == before_bloom
+
+    n_new = append_accepted()  # the replay
+    assert n_new > 0
+    append_accepted()  # replayed again, after the commit
+    hashes, _ = corpus.load_dedup_state(spark, state)
+    assert hashes.count() == before_hashes + n_new
+    bf = corpus.load_dedup_bloom(state)
     hits = (
-        B.contains_col(batch_hashes, "content_hash", bf, "hit")
+        B.contains_col(hashes, "content_hash", bf, "hit")
         .agg(F.sum(F.col("hit").cast("int")))
         .head()[0]
     )
-    assert hits == n_batch
+    assert bf.n_bits == before_bloom.n_bits and hits == hashes.count()
 
 
 def test_ensure_bloom_sizing_floor(spark, tmp_path):
@@ -305,7 +318,7 @@ def test_ensure_bloom_sizing_floor(spark, tmp_path):
     tiny = spark.createDataFrame(
         [(1, "only doc in history")], "doc_id long, text string"
     )
-    init_dedup_state(tiny, state)
+    ensure_dedup_state(tiny, state)
     bf = ensure_dedup_bloom(spark, state)
     floor_bits, _ = B.bloom_params(BLOOM_MIN_ITEMS, fpr=0.01)
     assert bf.n_bits >= floor_bits
@@ -318,12 +331,14 @@ def test_ensure_bloom_rebuilds_when_saturated(spark, tmp_path):
     degraded-but-correct → re-train posture."""
     state, hashes, sigs, _ = _state(spark, tmp_path)
     toy = B.bloom_build(hashes, "content_hash", 64, 1)
-    B.save_bloom(state, toy)
+    manifest = commit.committed(state)
+    gen = commit.gen_path(state, manifest)
+    commit.publish(state, {**manifest, **corpus._with_bloom(gen, manifest["files"], toy)})
     assert B.estimated_fpr(toy) > 0.04  # 4× the 1% target
     bf = ensure_dedup_bloom(spark, state)
     assert bf.n_bits > toy.n_bits
     assert B.estimated_fpr(bf) < 0.04
-    assert B.load_bloom(state) == bf  # rebuild persisted
+    assert corpus.load_dedup_bloom(state) == bf  # rebuild persisted
     # and every historical hash still answers maybe (no false negatives
     # across the rebuild)
     n_hist = hashes.count()

@@ -173,14 +173,75 @@ def test_bm25_index_persist_reuse(spark, tmp_path):
     )
     assert got1 == got0
     # second ensure() reuses, not rebuilds
-    mtime = os.path.getmtime(f"{idx}/stats/_SUCCESS")
+    mtime = os.path.getmtime(f"{idx}/manifest.json")
     p2, s2 = bm25.bm25_index_ensure(spark, docs, idx)
-    assert os.path.getmtime(f"{idx}/stats/_SUCCESS") == mtime
+    assert os.path.getmtime(f"{idx}/manifest.json") == mtime
     got2 = sorted(
         (r["cand_id"], r["score"])
         for r in bm25.bm25_search(queries, p2, s2, k=10).collect()
     )
     assert got2 == got1
+
+
+@pytest.mark.parametrize(
+    "built,asked",
+    [
+        ({"max_df_ratio": 1.0}, {"max_df_ratio": 0.5}),
+        ({"id_col": "doc_id"}, {"id_col": "text_id"}),
+    ],
+    ids=["max_df_ratio", "id_col"],
+)
+def test_bm25_index_changed_params_raise_naming_dir_and_both_sets(
+    spark, tmp_path, built, asked
+):
+    """The manifest records max_df_ratio/text_col/id_col: reopening the
+    index with other values raises instead of serving postings built
+    with other settings."""
+    docs = spark.createDataFrame(
+        [(d, d, t) for d, t in CORPUS.items()],
+        "doc_id long, text_id long, text string",
+    )
+    idx = str(tmp_path / "bm25")
+    bm25.bm25_index_ensure(spark, docs, idx, **built)
+    bm25.bm25_index_ensure(spark, docs, idx, **built)  # same params: reopens
+    (key, old), new = next(iter(built.items())), next(iter(asked.values()))
+    with pytest.raises(ValueError) as err:
+        bm25.bm25_index_ensure(spark, docs, idx, **asked)
+    msg = str(err.value)
+    assert idx in msg
+    assert f"{key}={old!r}" in msg and f"{key}={new!r}" in msg
+
+
+def test_bm25_index_crash_before_manifest_rebuilds(spark, tmp_path, monkeypatch):
+    """A build that dies after writing its postings but before the
+    manifest leaves no commit: the next ensure() rebuilds and searches
+    exactly like a fresh in-memory index."""
+    from lakehouse_adventureworks2022_spark.storage import commit
+
+    docs = spark.createDataFrame(
+        [(d, t) for d, t in CORPUS.items()], "doc_id long, text string"
+    )
+    idx = str(tmp_path / "bm25")
+
+    def crash(*_):
+        raise OSError("simulated crash before the manifest write")
+
+    with monkeypatch.context() as mp:
+        mp.setattr(commit, "publish", crash)
+        with pytest.raises(OSError, match="simulated crash"):
+            bm25.bm25_index_ensure(spark, docs, idx)
+    assert commit.read_manifest(idx) is None
+    queries = spark.createDataFrame(
+        [(1, "spark fast")], "query_id long, query_text string"
+    )
+
+    def top(postings, stats):
+        hits = bm25.bm25_search(queries, postings, stats, k=10)
+        return sorted(map(tuple, hits.collect()))
+
+    assert top(*bm25.bm25_index_ensure(spark, docs, idx)) == top(
+        *bm25.build_bm25_index(docs)
+    )
 
 
 # ---- learned re-ranking (round 5) ------------------------------------

@@ -10,7 +10,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from lakehouse_adventureworks2022_spark.operators import similarity
-from lakehouse_adventureworks2022_spark.operators import vector_index
 from lakehouse_adventureworks2022_spark.operators.monitoring import (
     ivf_ingest_drift,
     ivf_retrain_trigger,
@@ -20,6 +19,7 @@ from lakehouse_adventureworks2022_spark.operators.vector_index import (
     ensure_index,
     load_index,
 )
+from lakehouse_adventureworks2022_spark.storage import commit
 
 SF = "/root/testdata/sf0.001"
 
@@ -101,7 +101,7 @@ def test_trigger_only_counts_committed_batches(spark, tmp_path, monkeypatch):
     def crash(*_):
         raise OSError("simulated crash before the manifest swap")
 
-    monkeypatch.setattr(vector_index, "_write_manifest", crash)
+    monkeypatch.setattr(commit, "publish", crash)
     with pytest.raises(OSError, match="simulated crash"):
         append_index(
             _drifted(emb.filter(F.col("vec_id") % 2 == 1)), idx, batch_tag="b1"

@@ -21,6 +21,7 @@ from lakehouse_adventureworks2022_spark.operators.vectorize import (
     retrieval_search,
 )
 from lakehouse_adventureworks2022_spark.sources.readers import read_table
+from lakehouse_adventureworks2022_spark.storage import commit
 from lakehouse_adventureworks2022_spark.streaming.index_ingest import (
     stream_index_ingest,
 )
@@ -83,8 +84,28 @@ def test_streamed_docs_become_searchable_and_replay_is_idempotent(
         index_batch,
     )
 
-    index_batch(arriving, idx, batch_tag="b0")
+    index_batch(
+        arriving, idx, batch_tag=commit.stream_tag(str(tmp_path / "ckpt"), 0)
+    )
     assert load_index(spark, idx).data.count() == n1
+
+
+def test_two_streams_feed_one_index(spark, tmp_path):
+    """Spark numbers batches per checkpoint: a second stream with a
+    fresh checkpoint (its batch 0 again) must land its chunks in the
+    shared index, not be skipped as a replay of the first stream's."""
+    docs = read_table(spark, SF, "documents")
+    idx = str(tmp_path / "idx")
+    chunk_index_ensure(docs.filter("doc_id < 100"), idx)
+    counts = [load_index(spark, idx).data.count()]
+    for i, lo in enumerate((100, 130)):
+        src_dir = tmp_path / f"arrivals{i}"
+        docs.filter(f"doc_id >= {lo} AND doc_id < {lo + 30}").coalesce(
+            1
+        ).write.parquet(str(src_dir))
+        _run_ingest(spark, src_dir, idx, tmp_path / f"ckpt{i}")
+        counts.append(load_index(spark, idx).data.count())
+    assert counts[0] < counts[1] < counts[2]
 
 
 @pytest.mark.slow

@@ -350,7 +350,8 @@ def test_stream_ingest_with_history_matches_batch(spark, tmp_path):
     from lakehouse_adventureworks2022_spark.operators import dedup
     from lakehouse_adventureworks2022_spark.sources.readers import read_table
     from lakehouse_adventureworks2022_spark.streaming.corpus import (
-        init_dedup_state,
+        ensure_dedup_state,
+        load_dedup_state,
         quality_gate,
         stream_ingest_with_history,
     )
@@ -362,17 +363,13 @@ def test_stream_ingest_with_history_matches_batch(spark, tmp_path):
     state_dir = str(tmp_path / "state")
     out_dir = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
-    init_dedup_state(hist, state_dir)
+    hashes, sigs = ensure_dedup_state(hist, state_dir)
 
     # batch-mode expectation against the SEEDED state (read before the
     # stream appends to it)
     want = {
         r["doc_id"]
-        for r in dedup.incremental_dedup(
-            quality_gate(batch),
-            spark.read.parquet(f"{state_dir}/hashes"),
-            spark.read.parquet(f"{state_dir}/sigs"),
-        ).collect()
+        for r in dedup.incremental_dedup(quality_gate(batch), hashes, sigs).collect()
     }
 
     src_dir = str(tmp_path / "src")
@@ -385,7 +382,7 @@ def test_stream_ingest_with_history_matches_batch(spark, tmp_path):
     got = {r["doc_id"] for r in spark.read.parquet(out_dir).collect()}
     assert got == want and got  # non-trivial survivors
     # accepted docs entered history
-    n_hashes = spark.read.parquet(f"{state_dir}/hashes").distinct().count()
+    n_hashes = load_dedup_state(spark, state_dir)[0].distinct().count()
     assert n_hashes > hist.count() - 10  # grew past the seeded state
 
     # restart: same checkpoint, no new files -> nothing re-applied
@@ -397,6 +394,37 @@ def test_stream_ingest_with_history_matches_batch(spark, tmp_path):
     q2.stop()
     again = {r["doc_id"] for r in spark.read.parquet(out_dir).collect()}
     assert again == got
+
+
+def test_two_streams_feed_one_dedup_state(spark, sf_dir, tmp_path):
+    """The dedup state outlives any one stream, while Spark numbers
+    batches per checkpoint: a second stream with a fresh checkpoint
+    (its batch 0 again) must land its output and grow the state, not be
+    skipped as a replay of the first stream's batch 0."""
+    from lakehouse_adventureworks2022_spark.sources.readers import read_table
+    from lakehouse_adventureworks2022_spark.streaming.corpus import (
+        ensure_dedup_state,
+        load_dedup_state,
+        stream_ingest_with_history,
+    )
+
+    docs = read_table(spark, sf_dir, "documents")
+    state_dir = str(tmp_path / "state")
+    ensure_dedup_state(docs.filter("doc_id % 3 = 0"), state_dir)
+    counts = [load_dedup_state(spark, state_dir)[0].count()]
+    for i in (1, 2):
+        part = docs.filter(f"doc_id % 3 = {i}")
+        src_dir = str(tmp_path / f"src{i}")
+        part.coalesce(1).write.parquet(src_dir)
+        q = stream_ingest_with_history(
+            spark.readStream.schema(part.schema).parquet(src_dir),
+            state_dir, str(tmp_path / f"out{i}"), str(tmp_path / f"ckpt{i}"),
+        )
+        q.processAllAvailable()
+        q.stop()
+        assert spark.read.parquet(str(tmp_path / f"out{i}")).count() > 0
+        counts.append(load_dedup_state(spark, state_dir)[0].count())
+    assert counts[0] < counts[1] < counts[2]
 
 
 def test_append_dedup_state_grows_both_tables(spark, tmp_path):
@@ -411,27 +439,26 @@ def test_append_dedup_state_grows_both_tables(spark, tmp_path):
     from lakehouse_adventureworks2022_spark.sources.readers import read_table
     from lakehouse_adventureworks2022_spark.streaming.corpus import (
         append_dedup_state,
-        init_dedup_state,
+        ensure_dedup_state,
+        load_dedup_state,
         quality_gate,
     )
 
     docs = read_table(spark, "/root/testdata/sf0.001", "documents")
     state = str(tmp_path / "state")
-    init_dedup_state(docs.filter("doc_id % 2 = 0"), state)
-    h0 = spark.read.parquet(f"{state}/hashes").count()
-    s0 = spark.read.parquet(f"{state}/sigs").count()
+    hashes, sigs = ensure_dedup_state(docs.filter("doc_id % 2 = 0"), state)
+    h0, s0 = hashes.count(), sigs.count()
     accepted = dedup.incremental_dedup(
-        quality_gate(docs.filter("doc_id % 4 = 1")),
-        spark.read.parquet(f"{state}/hashes"),
-        spark.read.parquet(f"{state}/sigs"),
+        quality_gate(docs.filter("doc_id % 4 = 1")), hashes, sigs
     )
     accepted.persist()
     n = accepted.count()
     append_dedup_state(accepted, state)
     dedup.release_cached_inputs(accepted)
     accepted.unpersist()
-    assert spark.read.parquet(f"{state}/hashes").count() == h0 + n
-    assert spark.read.parquet(f"{state}/sigs").count() == s0 + n
+    hashes, sigs = load_dedup_state(spark, state)
+    assert hashes.count() == h0 + n
+    assert sigs.count() == s0 + n
 
 
 @pytest.mark.slow
@@ -442,7 +469,9 @@ def test_stream_ingest_bloom_gate_matches_ungated(spark, tmp_path):
     from lakehouse_adventureworks2022_spark.operators import bloom as B
     from lakehouse_adventureworks2022_spark.sources.readers import read_table
     from lakehouse_adventureworks2022_spark.streaming.corpus import (
-        init_dedup_state,
+        ensure_dedup_state,
+        load_dedup_bloom,
+        load_dedup_state,
         stream_ingest_with_history,
     )
 
@@ -454,7 +483,7 @@ def test_stream_ingest_bloom_gate_matches_ungated(spark, tmp_path):
     for tag, use_bloom in (("plain", False), ("gated", True)):
         state_dir = str(tmp_path / f"state_{tag}")
         out_dir = str(tmp_path / f"out_{tag}")
-        init_dedup_state(hist, state_dir)
+        ensure_dedup_state(hist, state_dir)
         src_dir = str(tmp_path / f"src_{tag}")
         # two files -> two micro-batches: the second batch must see a
         # bloom grown by the first batch's absorb
@@ -477,9 +506,9 @@ def test_stream_ingest_bloom_gate_matches_ungated(spark, tmp_path):
     assert landed["gated"] == landed["plain"] and landed["gated"]
     # the gated run's bloom covers the ENTIRE grown state table
     state_dir = str(tmp_path / "state_gated")
-    bf = B.load_bloom(state_dir)
+    bf = load_dedup_bloom(state_dir)
     assert bf is not None
-    hashes = spark.read.parquet(f"{state_dir}/hashes")
+    hashes, _ = load_dedup_state(spark, state_dir)
     n = hashes.count()
     from pyspark.sql import functions as F
 
@@ -498,7 +527,7 @@ def test_stream_ingest_with_model_gates(spark, tmp_path):
     from lakehouse_adventureworks2022_spark.operators import lm
     from lakehouse_adventureworks2022_spark.sources.readers import read_table
     from lakehouse_adventureworks2022_spark.streaming.corpus import (
-        init_dedup_state,
+        ensure_dedup_state,
         perplexity_gate,
         stream_ingest_with_history,
     )
@@ -521,7 +550,7 @@ def test_stream_ingest_with_model_gates(spark, tmp_path):
     max_ppl = ppls[len(ppls) // 2]  # median: gate drops roughly half
 
     state_dir = str(tmp_path / "state")
-    init_dedup_state(hist, state_dir)
+    ensure_dedup_state(hist, state_dir)
     src_dir = str(tmp_path / "src")
     batch.coalesce(1).write.parquet(src_dir)
     q = stream_ingest_with_history(
@@ -559,7 +588,7 @@ def test_stream_classifier_gate_matches_batch_predictions(spark, tmp_path):
     from lakehouse_adventureworks2022_spark.sources.readers import read_table
     from lakehouse_adventureworks2022_spark.streaming.corpus import (
         classifier_gate,
-        init_dedup_state,
+        ensure_dedup_state,
         quality_gate,
         stream_ingest_with_history,
     )
@@ -577,7 +606,7 @@ def test_stream_classifier_gate_matches_batch_predictions(spark, tmp_path):
     model = classifier.train_quality_classifier(labeled)
 
     state_dir = str(tmp_path / "state")
-    init_dedup_state(hist, state_dir)
+    ensure_dedup_state(hist, state_dir)
     src_dir = str(tmp_path / "src")
     batch.coalesce(1).write.parquet(src_dir)
     q = stream_ingest_with_history(

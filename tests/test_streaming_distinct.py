@@ -14,6 +14,7 @@ from lakehouse_adventureworks2022_spark.sources.readers import read_table
 from lakehouse_adventureworks2022_spark.streaming.distinct import (
     apply_distinct_batch,
     distinct_counts_from_state,
+    load_state,
     stream_distinct_counts,
 )
 
@@ -45,11 +46,7 @@ def test_stream_state_equals_batch_sketch(spark, tmp_path):
     )
     q.processAllAvailable()
     q.stop()
-    from lakehouse_adventureworks2022_spark.streaming import state_commit
-
-    streamed = _state_map(
-        state_commit.load_frame(spark, state, "kmv")
-    )
+    streamed = _state_map(load_state(spark, state, events, ["event_type"]))
     batch = _state_map(kmv_sketches(events, ["event_type"], "user_id", k=K))
     assert streamed == batch
     # the estimate read agrees with exact counts where groups are < k
@@ -74,15 +71,15 @@ def test_replayed_batch_is_noop(spark, tmp_path):
     events = read_table(spark, SF, "events")
     state = str(tmp_path / "state")
     apply_distinct_batch(events, 0, state, "user_id", ["event_type"], k=K)
-    from lakehouse_adventureworks2022_spark.streaming import state_commit
+    from lakehouse_adventureworks2022_spark.storage import commit
 
-    before = _state_map(state_commit.load_frame(spark, state, "kmv"))
-    n_before = state_commit.read_meta(state, "kmv")["n_total"]
+    before = _state_map(load_state(spark, state, events, ["event_type"]))
+    n_before = commit.read_manifest(state)["n_total"]
     apply_distinct_batch(events, 0, state, "user_id", ["event_type"], k=K)
-    after = _state_map(state_commit.load_frame(spark, state, "kmv"))
-    meta = state_commit.read_meta(state, "kmv")
+    after = _state_map(load_state(spark, state, events, ["event_type"]))
+    manifest = commit.read_manifest(state)
     assert after == before
-    assert meta["applied"] == [0] and meta["n_total"] == n_before
+    assert manifest["applied"] == [0] and manifest["n_total"] == n_before
 
 
 def test_mid_stream_k_change_is_refused(spark, tmp_path):

@@ -20,6 +20,7 @@ from lakehouse_adventureworks2022_spark.operators.vector_index import (
     load_index,
 )
 from lakehouse_adventureworks2022_spark.sources.readers import read_table
+from lakehouse_adventureworks2022_spark.storage import commit
 
 
 def _rows(df):
@@ -47,7 +48,7 @@ def test_crash_before_manifest_rebuilds_instead_of_wedging(
         raise OSError("simulated crash before the manifest write")
 
     with monkeypatch.context() as mp:
-        mp.setattr(vector_index, "_write_manifest", crash)
+        mp.setattr(commit, "publish", crash)
         with pytest.raises(OSError, match="simulated crash"):
             ensure_index(c, idx, coarse, codec)
     with pytest.raises(FileNotFoundError):
@@ -78,7 +79,7 @@ def test_changed_build_params_raise_naming_dir_and_both_sets(
         ensure_index(c, idx, coarse, codec, **asked)
     msg = str(err.value)
     assert idx in msg
-    assert f"'{key}': {old}" in msg and f"'{key}': {new}" in msg
+    assert f"{key}={old!r}" in msg and f"{key}={new!r}" in msg
 
 
 def test_chunk_index_append_checks_the_build_recipe(spark, sf_dir, tmp_path):
@@ -159,16 +160,17 @@ def test_crash_during_replay_of_a_committed_tag_keeps_the_index(
     assert _rows(load_index(spark, idx).data.select("cand_id", "cell")) == committed
 
 
-def test_manifest_in_another_format_is_rebuilt(
-    spark, sf_dir, tmp_path, monkeypatch
-):
+def test_manifest_in_another_format_is_rebuilt(spark, sf_dir, tmp_path):
     """A manifest written in another FORMAT counts as missing: load and
     append refuse it, ensure rebuilds into a new generation and deletes
     the old one — never a ValueError for a layout change."""
     _, c = similarity.embedding_queries(spark, sf_dir)
     idx = str(tmp_path / "idx")
     built = _rows(ensure_index(c, idx, "none", "raw").data)
-    monkeypatch.setattr(vector_index, "FORMAT", vector_index.FORMAT + 1)
+    manifest = commit.read_manifest(idx)
+    commit.replace_file(
+        os.path.join(idx, commit.MANIFEST), json.dumps({**manifest, "format": 99})
+    )
     with pytest.raises(FileNotFoundError, match="no committed index"):
         load_index(spark, idx)
     assert _rows(ensure_index(c, idx, "none", "raw").data) == built

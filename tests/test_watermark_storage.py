@@ -198,15 +198,16 @@ def test_versioned_rollback_keep_forensics_then_write_skips(spark, tmp_path):
 
 
 def test_versioned_partial_write_never_listed(spark, tmp_path):
-    """A crash mid-write leaves only a _tmp_v staging dir — versions()
-    and read() must never expose it as apparently-valid history."""
+    """A crash mid-write leaves only a ._staging_ sibling of the
+    snapshot dir — versions() and read() must never expose it as
+    apparently-valid history."""
     from lakehouse_adventureworks2022_spark.storage.versioned import (
         VersionedTable,
     )
 
     vt = VersionedTable(spark, str(tmp_path), "gold.dim_c")
     vt.write(spark.range(5))
-    (vt.dir / "_tmp_v00002").mkdir()  # simulated crash debris
+    (vt.dir / "._staging__v00002").mkdir()  # simulated crash debris
     assert vt.versions() == [1]
     assert vt.read().count() == 5
     v2 = vt.write(spark.range(7))  # stale staging debris is cleared

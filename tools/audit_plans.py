@@ -221,33 +221,17 @@ def main() -> None:
     # queries read.
     gate_rows: list[str] = []
     try:
-        import os as _os
-
         from lakehouse_adventureworks2022_spark.operators.dedup import (
             incremental_dedup_gate_stage,
         )
         from lakehouse_adventureworks2022_spark.plans.text_queries import (
-            fixture_state_dir,
-        )
-        from lakehouse_adventureworks2022_spark.sources.readers import (
-            read_table,
-        )
-        from lakehouse_adventureworks2022_spark.streaming.corpus import (
-            ensure_dedup_bloom,
-            init_dedup_state,
+            dedup_fixture,
         )
 
-        docs = read_table(spark, sf_dir, "documents")
-        hist = docs.filter("doc_id % 10 != 0")
-        batch = docs.filter("doc_id % 10 == 0")
-        state_dir = fixture_state_dir(sf_dir, "documents", "dedup_state_")
-        if not _os.path.exists(f"{state_dir}/hashes/_SUCCESS"):
-            init_dedup_state(hist, state_dir)
-        hashes = spark.read.parquet(f"{state_dir}/hashes")
-        sigs = spark.read.parquet(f"{state_dir}/sigs")
+        batch, hashes, sigs, bloom = dedup_fixture(spark, sf_dir, with_bloom=True)
         for gname, bf in (
             ("incremental_dedup[gate]", None),
-            ("incremental_dedup_bloom[gate]", ensure_dedup_bloom(spark, state_dir)),
+            ("incremental_dedup_bloom[gate]", bloom),
         ):
             gate = incremental_dedup_gate_stage(batch, hashes, sigs, bloom=bf)
             gplan = gate._jdf.queryExecution().executedPlan().toString()
