@@ -18,12 +18,27 @@ Scale notes: a parquet scan of a 100 TB table stays efficient because every
 query in ``plans/`` selects explicit columns (column pruning reaches the
 footer) and filters early (predicate/partition pruning). Nothing here ever
 collects to the driver.
+
+Schemas are resolved once per file (:func:`source_schema`). Without a
+given schema, every ``spark.read.parquet`` runs a schema-inference job;
+on small data that job is most of a read's cost, and a dashboard refresh
+reads the same tables again and again. So the inferred schema is kept
+per file identity, and every later read of the unchanged file passes it
+in and runs no job.
 """
 
 from __future__ import annotations
 
+import logging
+import os
+import stat
+import time
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+log = logging.getLogger(__name__)
 
 #: All driver-fixture tables (TESTDATA.md).
 TABLES = (
@@ -56,6 +71,70 @@ def _ensure_session_confs(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
 
+#: Confs that change the schema parquet inference returns; part of the
+#: memo key, so a session that sets another value infers again.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+)
+
+#: realpath -> (key, schema): the last schema inferred for each source.
+#: Process-wide like the files it describes; an entry is used only while
+#: its full key still matches, so no caller sees another's stale schema,
+#: and two threads racing on one path at worst infer it twice.
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+
+
+def _file_identity(real: str) -> tuple:
+    """(inode, size, mtime_ns) of a file; for a directory (a table Spark
+    wrote, as ``tools/stress_scale.py`` does) the same of every file under
+    it, so a rewritten part file changes the identity even where the
+    directory's own mtime does not."""
+    st = os.stat(real)
+    if not stat.S_ISDIR(st.st_mode):
+        return (st.st_ino, st.st_size, st.st_mtime_ns)
+    files = []
+    for root, dirs, names in os.walk(real):
+        dirs.sort()
+        for n in sorted(names):
+            f = os.path.join(root, n)
+            s = os.stat(f)
+            files.append((os.path.relpath(f, real), s.st_ino, s.st_size, s.st_mtime_ns))
+    return tuple(files)
+
+
+def source_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema Spark infers for the parquet source at ``path``, inferred
+    once per file identity.
+
+    The key is the file's realpath, inode, size and ``mtime_ns`` plus the
+    :data:`_INFERENCE_CONFS` values, so a file rewritten in place (even
+    with another schema) or a session with other inference confs infers
+    again. Only the schema is kept, never a DataFrame: every read builds a
+    fresh relation with its own attribute ids, which self-joining plans
+    (tpch q21) need. A path that cannot be stat'ed here (an object-store
+    URI, a missing file) is inferred on every call, so Spark reports a
+    missing source the usual way. The returned schema is shared between
+    callers: pass it on, do not mutate it.
+    """
+    try:
+        real = os.path.realpath(path)
+        key = (_file_identity(real), tuple(spark.conf.get(c) for c in _INFERENCE_CONFS))
+    except OSError:
+        real = key = None
+    hit = _SCHEMAS.get(real)
+    if hit is not None and hit[0] == key:
+        return hit[1]
+    t0 = time.perf_counter()
+    schema = spark.read.parquet(path).schema
+    log.debug("schema inference %s: %.3f s", path, time.perf_counter() - t0)
+    if real is not None:
+        _SCHEMAS[real] = (key, schema)
+    return schema
+
+
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one fixture table, normalizing physical quirks to engine types.
 
@@ -76,9 +155,13 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ``tests/test_fixture_contract.py`` pins the post-read dtypes of every
     fixture table so the NEXT physical drift fails one readable test
     instead of scattering failures downstream.
+
+    The schema comes from :func:`source_schema`: the first read of a file
+    runs Spark's inference job, later reads of the unchanged file run none.
     """
     _ensure_session_confs(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    df = spark.read.schema(source_schema(spark, path)).parquet(path)
     if name == "events":
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "bigint":
@@ -91,7 +174,9 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def load_tables(
     spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES
 ) -> dict[str, DataFrame]:
-    """Scan several tables at once (lazy — no jobs run here)."""
+    """Scan several tables at once, lazily: the only jobs are the schema
+    inferences of files not read before (:func:`source_schema`), so
+    repeated loads of unchanged files run no jobs."""
     return {name: read_table(spark, sf_dir, name) for name in names}
 
 

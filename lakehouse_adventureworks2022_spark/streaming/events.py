@@ -28,11 +28,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lakehouse_adventureworks2022_spark.functions.dialect import money
-from lakehouse_adventureworks2022_spark.sources.readers import read_table
+from lakehouse_adventureworks2022_spark.sources.readers import read_table, source_schema
 
 #: Streaming-source schema templates by the fixture's physical ts type
 #: (the readStream file source requires an explicit schema — no
-#: inference). The physical type is probed from the parquet footer at
+#: inference). The physical type is probed from the parquet schema at
 #: stream-build time so fixture drift (ns-long ↔ µs-timestamp, seen
 #: between rounds) cannot silently corrupt the stream.
 _EVENTS_SCHEMA_TEMPLATE = (
@@ -42,9 +42,10 @@ _EVENTS_SCHEMA_TEMPLATE = (
 
 
 def _events_ts_physical_type(spark: SparkSession, path: str) -> str:
-    """Spark dtype of the raw ``ts`` column in the parquet file (footer
-    read only — no job)."""
-    return dict(spark.read.parquet(path).dtypes)["ts"]
+    """Spark dtype of the raw ``ts`` column in the parquet file, from the
+    readers' schema memo: Spark's inference job runs the first time this
+    file is seen (by this or the batch reader), not on later calls."""
+    return source_schema(spark, path)["ts"].dataType.simpleString()
 
 
 def stream_events_source(spark: SparkSession, sf_dir: str) -> DataFrame:
