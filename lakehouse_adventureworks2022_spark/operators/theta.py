@@ -128,11 +128,40 @@ def kmv_merge(*sketches: DataFrame, keys: list, k: int = DEFAULT_K) -> DataFrame
     )
 
 
-def _estimate(hashes: list, k: int) -> float:
-    if len(hashes) < k:
-        return float(len(hashes))  # below k distinct: exact
-    theta = hashes[k - 1]
-    return (k - 1) / theta if theta > 0 else float(k)
+def _build_kmv_ops():
+    """By-value factory for the KMV estimators (worker portability: the
+    mapInPandas closures capture these nested functions, which
+    cloudpickle ships by value; module-level helpers would be pickled by
+    reference and need the package importable on the worker)."""
+
+    def estimate(hashes: list, k: int) -> float:
+        if len(hashes) < k:
+            return float(len(hashes))  # below k distinct: exact
+        theta = hashes[k - 1]
+        return (k - 1) / theta if theta > 0 else float(k)
+
+    def set_estimates(ha: list, hb: list, k: int) -> dict:
+        """Theta-style set estimates from two bottom-k hash lists."""
+        sa, sb = set(ha), set(hb)
+        theta_a = ha[k - 1] if len(ha) >= k else 1.0
+        theta_b = hb[k - 1] if len(hb) >= k else 1.0
+        theta = min(theta_a, theta_b)
+        inter_below = sum(1 for h in sa & sb if h < theta)
+        est_inter = inter_below / theta if theta > 0 else 0.0
+        union_k = sorted(sa | sb)[:k]
+        est_a, est_b = estimate(ha, k), estimate(hb, k)
+        est_union = estimate(union_k, k)
+        est_union = max(est_union, est_a, est_b, est_inter)
+        return {
+            "est_a": est_a,
+            "est_b": est_b,
+            "est_union": est_union,
+            "est_intersection": est_inter,
+            "est_difference": max(est_a - est_inter, 0.0),
+            "est_jaccard": (est_inter / est_union) if est_union > 0 else 0.0,
+        }
+
+    return estimate, set_estimates
 
 
 def kmv_estimate(sketches: DataFrame, keys: list, k: int = DEFAULT_K) -> DataFrame:
@@ -140,11 +169,13 @@ def kmv_estimate(sketches: DataFrame, keys: list, k: int = DEFAULT_K) -> DataFra
     one Arrow projection over kilobyte rows."""
     import pandas as pd
 
+    estimate, _ = _build_kmv_ops()
+
     def fn(batches):
         for pdf in batches:
             out = pdf[keys].copy() if keys else pd.DataFrame(index=pdf.index)
             out["est_distinct"] = [
-                _estimate(list(hs), k) for hs in pdf["hashes"]
+                estimate(list(hs), k) for hs in pdf["hashes"]
             ]
             out["is_exact"] = [len(hs) < k for hs in pdf["hashes"]]
             yield out
@@ -158,28 +189,6 @@ def kmv_estimate(sketches: DataFrame, keys: list, k: int = DEFAULT_K) -> DataFra
         "est_distinct double, is_exact boolean"
     )
     return sketches.mapInPandas(fn, schema=schema)
-
-
-def _set_estimates(ha: list, hb: list, k: int) -> dict:
-    """Theta-style set estimates from two bottom-k hash lists."""
-    sa, sb = set(ha), set(hb)
-    theta_a = ha[k - 1] if len(ha) >= k else 1.0
-    theta_b = hb[k - 1] if len(hb) >= k else 1.0
-    theta = min(theta_a, theta_b)
-    inter_below = sum(1 for h in sa & sb if h < theta)
-    est_inter = inter_below / theta if theta > 0 else 0.0
-    union_k = sorted(sa | sb)[:k]
-    est_a, est_b = _estimate(ha, k), _estimate(hb, k)
-    est_union = _estimate(union_k, k)
-    est_union = max(est_union, est_a, est_b, est_inter)
-    return {
-        "est_a": est_a,
-        "est_b": est_b,
-        "est_union": est_union,
-        "est_intersection": est_inter,
-        "est_difference": max(est_a - est_inter, 0.0),
-        "est_jaccard": (est_inter / est_union) if est_union > 0 else 0.0,
-    }
 
 
 _OVERLAP_COLS = (
@@ -209,11 +218,13 @@ def kmv_pairwise_overlap(
 
     import pandas as pd
 
+    _, set_estimates = _build_kmv_ops()
+
     def fn(batches):
         for pdf in batches:
             rows = []
             for _, r in pdf.iterrows():
-                est = _set_estimates(list(r["_ha"]), list(r["_hb"]), k)
+                est = set_estimates(list(r["_ha"]), list(r["_hb"]), k)
                 rows.append(
                     {"label_a": r["label_a"], "label_b": r["label_b"], **est}
                 )

@@ -38,6 +38,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from lakehouse_adventureworks2022_spark.storage.tables import data_files
+
 log = logging.getLogger(__name__)
 
 #: All driver-fixture tables (TESTDATA.md).
@@ -87,22 +89,15 @@ _INFERENCE_CONFS = (
 _SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
 
 
-def _file_identity(real: str) -> tuple:
+def _file_identity(real: str) -> tuple | list:
     """(inode, size, mtime_ns) of a file; for a directory (a table Spark
-    wrote, as ``tools/stress_scale.py`` does) the same of every file under
-    it, so a rewritten part file changes the identity even where the
-    directory's own mtime does not."""
+    wrote, as ``tools/stress_scale.py`` does) the same of every file Spark
+    reads under it, so a rewritten part file changes the identity even
+    where the directory's own mtime does not."""
     st = os.stat(real)
     if not stat.S_ISDIR(st.st_mode):
         return (st.st_ino, st.st_size, st.st_mtime_ns)
-    files = []
-    for root, dirs, names in os.walk(real):
-        dirs.sort()
-        for n in sorted(names):
-            f = os.path.join(root, n)
-            s = os.stat(f)
-            files.append((os.path.relpath(f, real), s.st_ino, s.st_size, s.st_mtime_ns))
-    return tuple(files)
+    return data_files(real)
 
 
 def source_schema(spark: SparkSession, path: str) -> StructType:

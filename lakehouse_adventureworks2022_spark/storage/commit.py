@@ -40,6 +40,15 @@ Crash matrix:
   restores it (the staged write is discarded; its batch replays).
 - swap, between rename(staging → live) and the trash delete — live
   holds the new data; :func:`recover_dir` drops the stale trash.
+- a path table's write-key sidecar (``storage/tables.py``), which
+  records the key of the last write with the files it left:
+  - overwrite, before the swap — the sidecar sits in staging beside
+    the data it describes; live keeps its old data and old record, so
+    a repeat of the crashed write (another key) writes again;
+  - partition replace, between the data write and the sidecar's
+    :func:`replace_file` — the old record stays, but the table's files
+    no longer match it, so the next write happens whatever its key;
+  - sidecar's own replace — old record or new, never a torn one.
 - generation build, before the manifest write — no manifest (first
   build: :func:`ensure` rebuilds) or the previous one, whose dirs are
   intact (the next new generation clears the partial dir first).

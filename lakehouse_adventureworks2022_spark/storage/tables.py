@@ -28,16 +28,176 @@ Scale notes: every write goes through the normal distributed writer (no
 driver collect, no coalesce(1)); `partition_by` keeps bronze/fact data
 pruned by ingestion date; bucketing for co-located joins is exposed via
 ``bucket_by`` on :meth:`overwrite` (saveAsTable path).
+
+Kept writes. On the parquet backend, :meth:`TableManager.overwrite` and
+:meth:`TableManager.replace_where` commit a *write key* with the table
+(:func:`write_key`): a hash of how the table is written, the frame's
+output schema, its canonicalized optimized plan (current-date literals
+folded in, attribute ids and names normalized away) and the
+``(dev, inode, size, mtime_ns)`` of every file each leaf relation lists.
+The key and the identity of the table's own files go into the
+``_write_key.json`` sidecar (:data:`WRITE_KEY`). A write whose key and
+table files both match that record is skipped: the table already holds
+what it would write. A refresh over unchanged (or hard-linked) sources
+then rewrites only the tables its delta reaches. A write gets no key,
+and always happens, when its plan is nondeterministic, runs user code
+the plan string does not show (a Python or JVM UDF), reads anything but
+local files, ``range`` or a one-row relation (a ``createDataFrame``
+frame, a cached or checkpointed one, JDBC, an object store), or on a
+Connect session or ``fmt="delta"``. Like ``make``, the key trusts
+``mtime_ns``: a file rewritten in place to the same size within one
+timestamp tick reads as unchanged.
 """
 
 from __future__ import annotations
 
+import hashlib
+import json
+import logging
+import os
+import re
 import shutil
 from pathlib import Path
+from urllib.parse import unquote, urlsplit
 
 from pyspark.sql import DataFrame, SparkSession
 
 from lakehouse_adventureworks2022_spark.storage import commit
+
+log = logging.getLogger(__name__)
+
+#: The sidecar committing a table's write key with its files; ``_``-prefixed,
+#: so Spark's file listing skips it like ``_SUCCESS``.
+WRITE_KEY = "_write_key.json"
+
+#: Tree patterns of functions whose code the plan string names but does
+#: not show: a changed closure or jar would read as an unchanged plan.
+_OPAQUE_CODE = ("PYTHON_UDF", "EVAL_PYTHON_UDF", "EVAL_PYTHON_UDTF", "SCALA_UDF")
+
+#: Leaves the plan string describes in full; a ``LogicalRelation`` over
+#: local files is keyed by its file identities too.
+_SELF_DESCRIBED_LEAVES = ("Range", "OneRowRelation")
+
+#: ``maxFields`` for the plan string: no argument list is cut short.
+_ALL_FIELDS = 2**31 - 1
+
+
+def _cols(partition_by: str | list[str] | None) -> list[str]:
+    if not partition_by:
+        return []
+    return [partition_by] if isinstance(partition_by, str) else list(partition_by)
+
+
+def _local_path(uri: str) -> str | None:
+    """The local path of a ``file:`` URI as Hadoop lists it; None for
+    any other scheme."""
+    parts = urlsplit(uri)
+    return unquote(parts.path) if parts.scheme in ("", "file") else None
+
+
+def _leaf_inputs(relation) -> list | str:
+    """What a file relation reads: its format, options, schemas and the
+    ``(relpath, dev, inode, size, mtime_ns)`` of every file it lists
+    (relpath under its root, which carries partition values); or the
+    reason it cannot be keyed."""
+    location = relation.location()
+    roots = location.rootPaths()
+    roots = [_local_path(roots.apply(i).toUri().toString()) for i in range(roots.size())]
+    files = [_local_path(u) for u in location.inputFiles()]
+    if None in roots or None in files:
+        return "a non-local path"
+    inputs = []
+    for f in sorted(files):
+        root = next((r for r in roots if f == r or f.startswith(r.rstrip("/") + "/")), f)
+        try:
+            st = os.stat(f)
+        except OSError:
+            return "a missing input file"
+        inputs.append([os.path.relpath(f, root), st.st_dev, st.st_ino, st.st_size, st.st_mtime_ns])
+    return [
+        relation.fileFormat().toString(),
+        # the paths read are named by the file identities above
+        relation.options().removed("path").removed("paths").toString(),
+        relation.dataSchema().json(),
+        relation.partitionSchema().json(),
+        inputs,
+    ]
+
+
+#: JVM view -> the :data:`_OPAQUE_CODE` pattern objects (each lookup
+#: through the view is a round trip per name segment)
+_PATTERNS: dict = {}
+
+
+def _opaque_patterns(jvm) -> list:
+    if jvm not in _PATTERNS:
+        tree_pattern = jvm.org.apache.spark.sql.catalyst.trees.TreePattern
+        _PATTERNS[jvm] = [(p, getattr(tree_pattern, p)()) for p in _OPAQUE_CODE]
+    return _PATTERNS[jvm]
+
+
+def write_key(df: DataFrame, how: dict) -> tuple[str | None, str]:
+    """``(key, "")`` for a write of ``df`` described by ``how`` (the
+    write's kind and options), or ``(None, reason)`` when the write must
+    always happen. Costs one optimizer pass over ``df``'s plan and a
+    ``stat`` per input file; runs no Spark job."""
+    jdf = getattr(df, "_jdf", None)
+    if jdf is None:
+        return None, "Connect session"
+    plan = jdf.queryExecution().optimizedPlan()
+    if not plan.deterministic():
+        return None, "nondeterministic plan"
+    for name, pattern in _opaque_patterns(df.sparkSession._jvm):
+        if plan.containsPattern(pattern):
+            return None, f"user-defined function ({name})"
+    inputs = []
+    leaves = plan.collectLeaves()
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        kind = leaf.getClass().getSimpleName()
+        if kind in _SELF_DESCRIBED_LEAVES:
+            continue
+        if kind != "LogicalRelation":
+            return None, f"{kind} leaf"
+        relation = leaf.relation()
+        rel_kind = relation.getClass().getSimpleName()
+        if rel_kind != "HadoopFsRelation":
+            return None, f"{rel_kind} leaf"
+        leaf_inputs = _leaf_inputs(relation)
+        if isinstance(leaf_inputs, str):
+            return None, f"{kind} leaf over {leaf_inputs}"
+        inputs.append(leaf_inputs)
+    text = plan.canonicalized().treeString(True, False, _ALL_FIELDS, False, False)
+    # expression arguments are cut at spark.sql.debug.maxToStringFields
+    if re.search(r"\.\.\. \d+ more fields", text):
+        return None, "truncated plan string"
+    material = json.dumps([how, df.schema.json(), text, inputs])
+    return hashlib.sha256(material.encode()).hexdigest(), ""
+
+
+def data_files(path: str) -> list:
+    """``[relpath, inode, size, mtime_ns]`` of every file Spark reads
+    under the directory ``path``: names its listing skips (``_``/``.``)
+    are left out, the write-key sidecar among them."""
+    out = []
+    for root, dirs, names in os.walk(path):
+        dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
+        for n in sorted(names):
+            if n.startswith(("_", ".")):
+                continue
+            f = os.path.join(root, n)
+            st = os.stat(f)
+            out.append([os.path.relpath(f, path), st.st_ino, st.st_size, st.st_mtime_ns])
+    return out
+
+
+def _key_record(path: str, key: str) -> str:
+    return json.dumps({"key": key, "files": data_files(path)})
+
+
+def _commit_key(path: str, key: str) -> None:
+    """Record ``key`` for the live table at ``path``, after its write."""
+    commit.replace_file(os.path.join(path, WRITE_KEY), _key_record(path, key))
 
 
 def delta_available() -> bool:
@@ -114,8 +274,7 @@ class TableManager:
             # read_evolved unions them)
             w = w.option("mergeSchema", "true")
         if partition_by:
-            cols = [partition_by] if isinstance(partition_by, str) else partition_by
-            w = w.partitionBy(*cols)
+            w = w.partitionBy(*_cols(partition_by))
         w.save(self._live(name))
 
     def overwrite(
@@ -132,7 +291,10 @@ class TableManager:
         ``overwriteSchema``; on plain parquet a naive overwrite leaves a
         corrupt table if the job dies mid-write, so ``commit.swap_dir``
         stages the write and swaps it in (a crash between its renames is
-        undone by the next :meth:`exists`/:meth:`read`/write).
+        undone by the next :meth:`exists`/:meth:`read`/write). The
+        staged dir carries the write key (module docstring), so the
+        swap commits the data and its key together; a write whose key
+        the table already holds is skipped.
 
         ``bloom_filter_cols`` writes a parquet bloom filter per listed
         column (sized for ``bloom_ndv`` distinct values per row group):
@@ -143,6 +305,25 @@ class TableManager:
         the whole key range. Pure write-side metadata: readers that
         ignore it see a normal parquet table.
         """
+        cols = _cols(partition_by)
+        bloom = [list(bloom_filter_cols), bloom_ndv] if bloom_filter_cols else None
+        key = self._key(
+            df, name, {"op": "overwrite", "fmt": self.fmt, "cols": cols, "bloom": bloom}
+        )
+        self._overwrite(df, name, cols, bloom_filter_cols, bloom_ndv, key)
+
+    def _overwrite(
+        self,
+        df: DataFrame,
+        name: str,
+        cols: list[str],
+        bloom_filter_cols: tuple[str, ...] = (),
+        bloom_ndv: int = 100_000,
+        key: str | None = None,
+    ) -> None:
+        if self._kept(name, key):
+            return
+        w = df.write.format(self.fmt).mode("overwrite")
         if self._is_delta:
             # Delta's overwrite IS transactional (new snapshot commits
             # atomically in _delta_log; readers see old or new, never a
@@ -150,31 +331,25 @@ class TableManager:
             # parquet the same guarantee. overwriteSchema matches
             # this method's full-rebuild contract. Data files are still
             # parquet, so the bloom-filter options apply unchanged.
-            w = df.write.format("delta").mode("overwrite").option(
-                "overwriteSchema", "true"
-            )
-            for c in bloom_filter_cols:
-                w = w.option(f"parquet.bloom.filter.enabled#{c}", "true").option(
-                    f"parquet.bloom.filter.expected.ndv#{c}", str(bloom_ndv)
-                )
-            if partition_by:
-                cols = (
-                    [partition_by]
-                    if isinstance(partition_by, str)
-                    else partition_by
-                )
-                w = w.partitionBy(*cols)
-            w.save(self.path(name))
-            return
-        w = df.write.format(self.fmt).mode("overwrite")
+            w = w.option("overwriteSchema", "true")
         for c in bloom_filter_cols:
             w = w.option(f"parquet.bloom.filter.enabled#{c}", "true").option(
                 f"parquet.bloom.filter.expected.ndv#{c}", str(bloom_ndv)
             )
-        if partition_by:
-            cols = [partition_by] if isinstance(partition_by, str) else partition_by
+        if cols:
             w = w.partitionBy(*cols)
-        commit.swap_dir(self.path(name), w.save)
+        if self._is_delta:
+            w.save(self.path(name))
+            return
+
+        def write(staging: str) -> None:
+            w.save(staging)
+            if key is not None:
+                # no reader opens staging: the swap commits data and key
+                with open(os.path.join(staging, WRITE_KEY), "w") as f:
+                    f.write(_key_record(staging, key))
+
+        commit.swap_dir(self.path(name), write)
 
     def replace_where(
         self, df: DataFrame, name: str, partition_by: str | list[str]
@@ -184,18 +359,51 @@ class TableManager:
         partitions present in ``df`` and leaves the rest untouched.
         The same write works against Delta (dynamic partition overwrite
         is supported there since 2.0), where it additionally commits as
-        one transaction."""
-        cols = [partition_by] if isinstance(partition_by, str) else partition_by
+        one transaction. On parquet the write key (module docstring) is
+        committed after the write; a crash in between leaves the old
+        record, whose files no longer match, so the next call writes."""
+        cols = _cols(partition_by)
+        key = self._key(df, name, {"op": "replace_where", "fmt": self.fmt, "cols": cols})
         if not self.exists(name):
-            self.overwrite(df, name, partition_by=cols)
+            # into no table, the replacement IS the full rebuild: its key
+            # is this call's, so a repeat of it is kept
+            self._overwrite(df, name, cols, key=key)
             return
+        if self._kept(name, key):
+            return
+        path = self.path(name)
         (
             df.write.format(self.fmt)
             .mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy(*cols)
-            .save(self.path(name))
+            .save(path)
         )
+        if key is not None:
+            _commit_key(path, key)
+
+    def _key(self, df: DataFrame, name: str, how: dict) -> str | None:
+        """The write key of ``df`` written to ``name`` as ``how`` says;
+        None (logged with the reason) when the write must happen."""
+        if self._is_delta:
+            key, reason = None, "delta backend"
+        else:
+            key, reason = write_key(df, how)
+        if key is None:
+            log.debug("no write key for %s: %s", name, reason)
+        return key
+
+    def _kept(self, name: str, key: str | None) -> bool:
+        """True when the table already holds the write keyed ``key``:
+        its sidecar records that key and the files it has now."""
+        if key is None:
+            return False
+        path = self._live(name)
+        record = commit.read_json(os.path.join(path, WRITE_KEY))
+        if record is None or record["key"] != key or record["files"] != data_files(path):
+            return False
+        log.info("kept %s: inputs unchanged (write key %s)", name, key[:12])
+        return True
 
     # ---- schema evolution (Delta mergeSchema-append analog) ----------
 
@@ -248,9 +456,7 @@ class TableManager:
         # is whatever partition inference assigns (a "2024-01-01" dir
         # comes back DATE) — the write round-trips through the same
         # string either way, so they are exempt from reconciliation
-        part_cols = (
-            {partition_by} if isinstance(partition_by, str) else set(partition_by or ())
-        )
+        part_cols = set(_cols(partition_by))
         conflicts = []
         for col, new_t in incoming.items():
             old_t = current.get(col)
@@ -365,11 +571,11 @@ class TableManager:
         if loc.exists():
             shutil.rmtree(loc, ignore_errors=True)
 
-        bc = [bucket_cols] if isinstance(bucket_cols, str) else list(bucket_cols)
-        w = df.write.format(self.fmt).mode("overwrite").bucketBy(n_buckets, *bc)
+        w = df.write.format(self.fmt).mode("overwrite").bucketBy(
+            n_buckets, *_cols(bucket_cols)
+        )
         if sort_cols:
-            sc = [sort_cols] if isinstance(sort_cols, str) else list(sort_cols)
-            w = w.sortBy(*sc)
+            w = w.sortBy(*_cols(sort_cols))
         w.saveAsTable(table)
 
     def write_clustered(
@@ -393,7 +599,7 @@ class TableManager:
         implemented as a Morton curve in ``storage/zorder.py``
         (``write_zordered``); beyond that, Delta clustering.
         """
-        cols = [cluster_by] if isinstance(cluster_by, str) else list(cluster_by)
+        cols = _cols(cluster_by)
         parted = (
             df.repartitionByRange(n_files, *cols)
             if n_files
@@ -434,7 +640,7 @@ class TableManager:
         """
         from pyspark.sql import functions as F
 
-        key_cols = [keys] if isinstance(keys, str) else list(keys)
+        key_cols = _cols(keys)
         dup = (
             source.groupBy(*key_cols)
             .count()

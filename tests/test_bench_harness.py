@@ -30,7 +30,16 @@ class _NoStop:
         pass
 
 
-def _run(spark, monkeypatch, capsys, tmp_path, queries, headline, reps):
+def _quiet(monkeypatch, reading=(0.0, 0.0)):
+    """Stub the wait-for-quiet gate: it sleeps until host CPU steal
+    drops, which would make these tests' wall time follow the host."""
+    monkeypatch.setattr(bench, "_wait_for_quiet", lambda *a, **k: reading)
+
+
+def _run(
+    spark, monkeypatch, capsys, tmp_path, queries, headline, reps, quiet=(0.0, 0.0)
+):
+    _quiet(monkeypatch, quiet)
     monkeypatch.setattr(bench, "QUERIES", queries)
     monkeypatch.setattr(bench, "HEADLINE", headline)
     monkeypatch.setattr(
@@ -135,6 +144,7 @@ def test_bench_purges_amortized_state_and_records_reps(
     monkeypatch.setattr(bench, "QUERIES", {"top_products": ok})
     monkeypatch.setattr(bench, "HEADLINE", ["top_products"])
     monkeypatch.setattr(bench, "get_spark", lambda name, **kw: _NoStop(spark))
+    _quiet(monkeypatch)
     monkeypatch.setenv("SPARK_GRAFT_BENCH_REPS", "2")
     monkeypatch.delenv("SPARK_GRAFT_PURGE_AMORTIZED", raising=False)
     detail = tmp_path / "detail.json"
@@ -291,9 +301,6 @@ def test_bench_retry_pass_adjudicates_all_dirty(
         return (2.0, 50.0) if calls["n"] <= 5 else (0.5, 0.0)
 
     monkeypatch.setattr(bench, "_run_once", fake_run_once)
-    monkeypatch.setattr(
-        bench, "_wait_for_quiet", lambda *a, **k: (0.0, 0.0)
-    )
     line, d, side = _run(
         spark, monkeypatch, capsys, tmp_path, {"q": ok}, ["q"], 3,
     )
@@ -322,11 +329,9 @@ def test_bench_retry_keeps_original_when_retry_also_dirty(
         return (2.0, 50.0)
 
     monkeypatch.setattr(bench, "_run_once", always_dirty)
-    monkeypatch.setattr(
-        bench, "_wait_for_quiet", lambda *a, **k: (0.0, 99.0)
-    )
     line, d, side = _run(
         spark, monkeypatch, capsys, tmp_path, {"q": ok}, ["q"], 2,
+        quiet=(0.0, 99.0),
     )
     st = side["query_stats"]["q"]
     assert st["retry"]["reason"] == "all_dirty" and st["retry"]["dirty"] > 0

@@ -56,14 +56,24 @@ from lakehouse_adventureworks2022_spark.operators import curation
 docs = read_table(spark, "/root/testdata/sf0.001", "documents").limit(20)
 packed = curation.pack_documents(docs, budget=300).collect()
 assert len(packed) == 20
+# KMV estimator closures (audience_overlap failed here while they called
+# module-level helpers, pickled by reference)
+sf_dir = sys.argv[1]
+n = e.queries()["audience_overlap"](spark, sf_dir).count()
+assert n > 0, n
+from lakehouse_adventureworks2022_spark.operators import theta
+events = read_table(spark, sf_dir, "events")
+est = theta.kmv_estimate(
+    theta.kmv_sketches(events, ["event_type"], "user_id"), ["event_type"]).collect()
+assert len(est) > 0 and all(r["est_distinct"] > 0 for r in est)
 print("PORTABLE-OK")
 spark.stop()
 """
 
 
-def test_python_udf_queries_run_with_foreign_cwd():
+def test_python_udf_queries_run_with_foreign_cwd(sf_dir):
     proc = subprocess.run(
-        [sys.executable, "-c", SCRIPT],
+        [sys.executable, "-c", SCRIPT, sf_dir],
         cwd="/tmp",
         capture_output=True,
         text=True,
