@@ -2,31 +2,21 @@
 columns with typed metadata, processed by Arrow-batched ``mapInPandas``
 stages (beyond-reference scope, BASELINE.json north star).
 
-What is REAL here (and tested): the Spark-side architecture — the typed
-asset schema, the mapInPandas batch contract (iterator of pandas frames,
-bounded batch memory), partition-count preservation — AND two actual
-codecs that need nothing beyond numpy/stdlib: **PPM (P6) image decode /
-nearest-neighbor resize / channel+grid features** and **WAV (PCM16)
-audio decode / envelope features** (``wave`` is stdlib). ``fake=False``
-dispatches on the content's magic bytes and runs those for real. Since
-r6 **PNG decodes for real too**: stdlib ``zlib`` inflate + per-scanline
-unfilter (gray/RGB/palette/alpha variants; r7 adds Adam7 interlace and
-16-bit depth), and **JPEG, both baseline AND progressive** (SOF0/SOF2
-Huffman, grayscale/4:4:4/4:2:0, restart markers, spectral selection +
-successive approximation — ``operators/jpeg.py``, numpy + stdlib per
-ITU-T T.81). Since r7 **MP4 frame extraction is real too**: pure-stdlib
-ISO-BMFF sample-table parsing (``operators/mp4.py``) pulls each frame's
-encoded bytes + timestamp, and MJPEG tracks decode end-to-end through
-the real JPEG path. Since r8 **lossless
-(SOF3) and 12-bit JPEG decode for real too** (predictive Annex H +
-extended sequential, each with an encoder twin). What remains STUBBED:
-non-MJPEG video codecs (H.264/H.265 — bytes and timing extract, pixels
-don't; keyframe-BYTES near-dup covers them — see
-``video_keyframe_hashes``) and the JPEG corners without a twin to test
-against (arithmetic coding, differential modes, other precisions),
-which raise a clearly-marked ``NotImplementedError`` naming the format.
-``fake=True`` keeps the md5-derived deterministic stand-in features
-for fixtures without real assets.
+Every operator decodes for real, dispatching on the content's magic
+bytes, with codecs that need nothing beyond numpy/stdlib: **PPM (P6)**
+decode / nearest-neighbor resize / channel+grid features, **PCM16 WAV**
+decode / envelope features / fingerprint (``wave`` is stdlib), **PNG**
+(stdlib ``zlib`` inflate + per-scanline unfilter: gray/RGB/palette/alpha
+variants, Adam7 interlace, 16-bit depth), **JPEG** baseline,
+progressive, lossless (SOF3) and 12-bit (``operators/jpeg.py``, numpy +
+stdlib per ITU-T T.81) and **MP4** frame extraction (pure-stdlib
+ISO-BMFF sample tables, ``operators/mp4.py``; MJPEG tracks decode
+end-to-end through the JPEG path). What remains STUBBED: non-MJPEG
+video codecs (H.264/H.265 — bytes and timing extract, pixels don't;
+keyframe-BYTES near-dup covers them — see ``video_keyframe_hashes``)
+and the JPEG corners without a twin to test against (arithmetic coding,
+differential modes, other precisions). Those, and content in no
+supported format, raise a ``NotImplementedError`` naming the format.
 
 Scale notes: binary payloads never pass through the driver; each Arrow
 batch holds ``spark.sql.execution.arrow.maxRecordsPerBatch`` assets, so
@@ -38,7 +28,6 @@ extraction emits fixed-width ``array<float>`` ready for
 
 from __future__ import annotations
 
-import hashlib
 from typing import Iterator
 
 import pandas as pd
@@ -60,21 +49,6 @@ ASSET_SCHEMA = T.StructType(
 )
 
 
-def attach_fake_assets(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Derive a deterministic binary asset column from a text column —
-    the fixture generator for the multimodal path (no binary fixture
-    exists). Content = utf-8 bytes; metadata from md5-derived ints."""
-    h = F.md5(F.col(text_col))
-    return df.select(
-        F.col(id_col).alias("asset_id"),
-        F.encode(F.col(text_col), "utf-8").alias("content"),
-        F.lit("image/fake").alias("mime"),
-        (F.conv(F.substring(h, 1, 4), 16, 10).cast("int") % 1920).alias("width"),
-        (F.conv(F.substring(h, 5, 4), 16, 10).cast("int") % 1080).alias("height"),
-        F.lit(None).cast("int").alias("duration_ms"),
-    )
-
-
 def attach_real_assets(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -82,9 +56,8 @@ def attach_real_assets(
     partitions: int | None = None,
 ) -> DataFrame:
     """Derive deterministic REAL binary assets from a text column — the
-    fixture generator for the fake=False pipeline (r6 verdict stretch:
-    the catalog composite should exercise the actual codecs, not md5
-    stand-ins). Modality cycles on ``id % 4``: baseline JPEG, PNG, PPM,
+    fixture generator for the multimodal operators (no binary fixture
+    exists). Modality cycles on ``id % 4``: baseline JPEG, PNG, PPM,
     PCM16 WAV — every byte decodable by the in-container codecs.
 
     Content derives ONLY from md5(text): identical texts yield
@@ -101,14 +74,11 @@ def attach_real_assets(
     stages at bench scale). Bounded memory = batch × asset size."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # self-contained closure (worker portability — see
-        # extract_features); encode_jpeg is a by-value factory product,
-        # the tiny PNG/PPM/WAV encoders are inlined
+        # the encoders are by-value factory products (see the codec
+        # section below); to_wav renders its own structured tone
         import hashlib as _hl
         import io as _io
-        import struct as _struct
         import wave as _wave
-        import zlib as _zlib
 
         import numpy as _np
 
@@ -139,31 +109,6 @@ def attach_real_assets(
             )
             a = luma[:, :, None] * tint[None, None, :]
             return _np.clip(a, 0, 255).astype(_np.uint8)
-
-        def to_png(a) -> bytes:
-            hh, ww, _ = a.shape
-
-            def chunk(tag: bytes, payload: bytes) -> bytes:
-                crc = _zlib.crc32(tag + payload) & 0xFFFFFFFF
-                return (
-                    _struct.pack(">I", len(payload))
-                    + tag
-                    + payload
-                    + _struct.pack(">I", crc)
-                )
-
-            ihdr = _struct.pack(">IIBBBBB", ww, hh, 8, 2, 0, 0, 0)
-            raw = b"".join(b"\x00" + a[r].tobytes() for r in range(hh))
-            return (
-                b"\x89PNG\r\n\x1a\n"
-                + chunk(b"IHDR", ihdr)
-                + chunk(b"IDAT", _zlib.compress(raw))
-                + chunk(b"IEND", b"")
-            )
-
-        def to_ppm(a) -> bytes:
-            hh, ww, _ = a.shape
-            return b"P6\n%d %d\n255\n" % (ww, hh) + a.tobytes()
 
         def to_wav(seed: bytes) -> bytes:
             rate, n = 8000, 400  # 50 ms mono PCM16
@@ -197,8 +142,8 @@ def attach_real_assets(
             if m == 0:
                 return bytearray(encode_jpeg(a, quality=85)), "image/jpeg", W, H, None
             if m == 1:
-                return bytearray(to_png(a)), "image/png", W, H, None
-            return bytearray(to_ppm(a)), "image/x-portable-pixmap", W, H, None
+                return bytearray(encode_png(a)), "image/png", W, H, None
+            return bytearray(encode_ppm(a)), "image/x-portable-pixmap", W, H, None
 
         for pdf in batches:
             made = [
@@ -235,83 +180,85 @@ _FEATURE_SCHEMA = "asset_id long, n_bytes int, content_md5 string, features arra
 
 # ---- real codecs (numpy + stdlib only — no PIL/ffmpeg) ---------------
 #
-# Driver-side reference implementations; the mapInPandas closures carry
-# identical nested copies (worker-shipped closures must not reference
-# module globals — pickled by reference, breaks on workers that can't
-# import this package; see tests/test_worker_portability.py).
-
-def encode_ppm(arr) -> bytes:
-    """uint8 (h, w, 3) array → binary PPM (P6)."""
-    import numpy as np
-
-    a = np.asarray(arr, dtype=np.uint8)
-    h, w, _ = a.shape
-    return b"P6\n%d %d\n255\n" % (w, h) + a.tobytes()
+# Worker-called helpers are factory products. A function nested in a
+# ``_build_*`` factory has a ``<locals>`` qualname, so cloudpickle ships
+# it BY VALUE inside every mapInPandas closure that calls it; a plain
+# module-level function pickles by reference and dies with
+# ModuleNotFoundError on a Python worker that cannot import this package
+# (tests/test_worker_portability.py). Driver code calls the same objects
+# under the same names, so each codec has one implementation.
 
 
-def decode_ppm(data: bytes):
-    """Binary PPM (P6) → uint8 (h, w, 3). Raises ValueError on a
-    malformed header (magic already dispatched before calling)."""
-    import numpy as np
+def _build_ppm_codec():
+    def encode_ppm(arr) -> bytes:
+        """uint8 (h, w, 3) array → binary PPM (P6)."""
+        import numpy as np
 
-    fields: list[bytes] = []
-    pos = 2  # past b"P6"
-    while len(fields) < 3:
-        while pos < len(data) and data[pos : pos + 1].isspace():
-            pos += 1
-        start = pos
-        while pos < len(data) and not data[pos : pos + 1].isspace():
-            pos += 1
-        fields.append(data[start:pos])
-    pos += 1  # single whitespace after maxval
-    w, h, maxval = (int(f) for f in fields)
-    if maxval != 255:
-        raise ValueError(f"only 8-bit PPM supported, maxval={maxval}")
-    px = np.frombuffer(data, dtype=np.uint8, count=w * h * 3, offset=pos)
-    return px.reshape(h, w, 3)
+        a = np.asarray(arr, dtype=np.uint8)
+        h, w, _ = a.shape
+        return b"P6\n%d %d\n255\n" % (w, h) + a.tobytes()
+
+    def decode_ppm(data: bytes):
+        """Binary PPM (P6) → uint8 (h, w, 3). Raises ValueError on a
+        malformed header (magic already dispatched before calling)."""
+        import numpy as np
+
+        fields: list[bytes] = []
+        pos = 2  # past b"P6"
+        while len(fields) < 3:
+            while pos < len(data) and data[pos : pos + 1].isspace():
+                pos += 1
+            start = pos
+            while pos < len(data) and not data[pos : pos + 1].isspace():
+                pos += 1
+            fields.append(data[start:pos])
+        pos += 1  # single whitespace after maxval
+        w, h, maxval = (int(f) for f in fields)
+        if maxval != 255:
+            raise ValueError(f"only 8-bit PPM supported, maxval={maxval}")
+        px = np.frombuffer(data, dtype=np.uint8, count=w * h * 3, offset=pos)
+        return px.reshape(h, w, 3)
+
+    return encode_ppm, decode_ppm
+
+
+encode_ppm, decode_ppm = _build_ppm_codec()
 
 
 #: PNG signature (dispatch magic).
 PNG_MAGIC = b"\x89PNG\r\n\x1a\n"
 
-# baseline JPEG codec (r6): by-value closures, same portability contract
-# as the PNG/image-feature factories below.
+# JPEG codec and MP4 frame extraction: by-value factory products, same
+# portability contract.
 from .jpeg import JPEG_MAGIC, decode_jpeg, encode_jpeg  # noqa: E402
+from .mp4 import extract_mjpeg_frames  # noqa: E402
 
 
-def encode_png(arr) -> bytes:
-    """uint8 (h, w, 3) array → minimal non-interlaced RGB PNG (filter 0
-    rows, one zlib IDAT). Stdlib-only; the test-side twin of
-    :func:`decode_png`."""
-    import struct
-    import zlib
+def _build_png_codec():
+    def encode_png(arr) -> bytes:
+        """uint8 (h, w, 3) array → minimal non-interlaced RGB PNG
+        (filter 0 rows, one zlib IDAT). Stdlib-only; the encoder twin of
+        :func:`decode_png`."""
+        import struct
+        import zlib
 
-    import numpy as np
+        import numpy as np
 
-    a = np.asarray(arr, dtype=np.uint8)
-    h, w, _ = a.shape
+        a = np.asarray(arr, dtype=np.uint8)
+        h, w, _ = a.shape
 
-    def chunk(tag: bytes, payload: bytes) -> bytes:
-        crc = zlib.crc32(tag + payload) & 0xFFFFFFFF
-        return struct.pack(">I", len(payload)) + tag + payload + struct.pack(">I", crc)
+        def chunk(tag: bytes, payload: bytes) -> bytes:
+            crc = zlib.crc32(tag + payload) & 0xFFFFFFFF
+            return struct.pack(">I", len(payload)) + tag + payload + struct.pack(">I", crc)
 
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)  # 8-bit RGB
-    raw = b"".join(b"\x00" + a[r].tobytes() for r in range(h))
-    return (
-        PNG_MAGIC
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(raw))
-        + chunk(b"IEND", b"")
-    )
-
-
-def _build_png_decoder():
-    """Factory returning the PNG decoder as a NESTED function. Worker
-    closures (``extract_features``/``image_hashes`` with ``fake=False``)
-    call the decoder, and module-level functions pickle BY REFERENCE —
-    a Python worker without the package on its import path would die
-    with ModuleNotFoundError (tests/test_worker_portability.py). A
-    closure with a non-importable qualname ships by value instead."""
+        ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)  # 8-bit RGB
+        raw = b"".join(b"\x00" + a[r].tobytes() for r in range(h))
+        return (
+            PNG_MAGIC
+            + chunk(b"IHDR", ihdr)
+            + chunk(b"IDAT", zlib.compress(raw))
+            + chunk(b"IEND", b"")
+        )
 
     def _unfilter(raw: bytes, h: int, stride: int, bpp: int) -> bytes:
         # Reverse the per-scanline PNG filters (types 0-4). Sequential
@@ -463,33 +410,53 @@ def _build_png_decoder():
             return np.repeat(px[:, :, :1], 3, axis=2)
         return np.repeat(px, 3, axis=2)  # color 0: grayscale
 
-    return decode_png
+    return encode_png, decode_png
 
 
-#: PNG decode — a by-value-picklable closure (see _build_png_decoder);
-#: call it like any function, driver- or worker-side.
-decode_png = _build_png_decoder()
+encode_png, decode_png = _build_png_codec()
 
 
-def resize_nearest(arr, max_px: int):
-    """Nearest-neighbor downscale so max(h, w) <= max_px (aspect kept);
-    no-op when already small enough. Pure index arithmetic — identical
-    results on any platform."""
-    import numpy as np
+def _build_image_decoder():
+    def decode_image(content: bytes):
+        """Encoded image bytes → uint8 (h, w, 3), dispatched on magic
+        bytes: PPM, PNG, JPEG, or an MJPEG MP4's representative middle
+        frame (video rides the image machinery). Anything else raises
+        ``NotImplementedError`` naming its leading bytes."""
+        if content[:2] == b"P6":
+            return decode_ppm(content)
+        if content[:8] == PNG_MAGIC:
+            return decode_png(content)
+        if content[:3] == JPEG_MAGIC:
+            return decode_jpeg(content)
+        if content[4:8] == b"ftyp":  # ISO-BMFF: decode the middle frame
+            frames = extract_mjpeg_frames(content)
+            return decode_jpeg(frames[len(frames) // 2][1])
+        raise NotImplementedError(
+            f"no image codec for content starting {content[:4]!r}: only "
+            "PPM, PNG, JPEG and MJPEG MP4 decode in-container"
+        )
 
-    h, w, _ = arr.shape
-    if max(h, w) <= max_px:
-        return arr
-    scale = max_px / max(h, w)
-    nh, nw = max(int(h * scale), 1), max(int(w * scale), 1)
-    rows = (np.arange(nh) * (h / nh)).astype(int)
-    cols = (np.arange(nw) * (w / nw)).astype(int)
-    return arr[rows][:, cols]
+    return decode_image
 
 
-def _build_image_features():
-    """By-value factory (same worker-portability rationale as
-    ``_build_png_decoder``: the fake=False closures call this)."""
+decode_image = _build_image_decoder()
+
+
+def _build_image_ops():
+    def resize_nearest(arr, max_px: int):
+        """Nearest-neighbor downscale so max(h, w) <= max_px (aspect
+        kept); no-op when already small enough. Pure index arithmetic —
+        identical results on any platform."""
+        import numpy as np
+
+        h, w, _ = arr.shape
+        if max(h, w) <= max_px:
+            return arr
+        scale = max_px / max(h, w)
+        nh, nw = max(int(h * scale), 1), max(int(w * scale), 1)
+        rows = (np.arange(nh) * (h / nh)).astype(int)
+        cols = (np.arange(nw) * (w / nw)).astype(int)
+        return arr[rows][:, cols]
 
     def image_features(arr) -> list[float]:
         """FEATURE_DIM floats in [-1, 1) from a decoded image:
@@ -511,239 +478,6 @@ def _build_image_features():
                 out.append(float(cell.mean()) / 127.5 - 1.0)
         out.append(w / (w + h) * 2 - 1.0)
         return [min(max(v, -1.0), 0.9999999) for v in out]
-
-    return image_features
-
-
-#: image feature vector — by-value-picklable closure.
-image_features = _build_image_features()
-
-
-def decode_wav(data: bytes):
-    """WAV (PCM) bytes → (float64 mono samples in [-1, 1], rate, channels,
-    duration_ms). Stdlib ``wave`` + numpy — no external audio lib."""
-    import io
-    import wave
-
-    import numpy as np
-
-    with wave.open(io.BytesIO(data), "rb") as f:
-        rate, nch, sw = f.getframerate(), f.getnchannels(), f.getsampwidth()
-        frames = f.readframes(f.getnframes())
-    if sw != 2:
-        raise ValueError(f"only PCM16 WAV supported, sampwidth={sw}")
-    x = np.frombuffer(frames, dtype="<i2").astype(np.float64) / 32768.0
-    if nch > 1:
-        x = x.reshape(-1, nch).mean(axis=1)
-    return x, rate, nch, int(len(x) * 1000 / rate)
-
-
-def audio_features(samples, rate: int, nch: int) -> list[float]:
-    """FEATURE_DIM floats in [-1, 1): 12-segment RMS envelope, overall
-    RMS, peak, zero-crossing rate, channel count."""
-    import numpy as np
-
-    x = np.asarray(samples, dtype=np.float64)
-    if len(x) == 0:
-        x = np.zeros(1)
-    segs = np.array_split(x, 12)
-    out = [float(np.sqrt((s**2).mean())) * 2 - 1.0 for s in segs]
-    out.append(float(np.sqrt((x**2).mean())) * 2 - 1.0)
-    out.append(float(np.abs(x).max()) * 2 - 1.0)
-    out.append(float((np.diff(np.signbit(x)) != 0).mean()) * 2 - 1.0)
-    out.append(min(nch / 8.0, 0.9999) * 2 - 1.0)
-    return [min(max(v, -1.0), 0.9999999) for v in out]
-
-
-def synth_ppm(width: int, height: int, seed: int = 0) -> bytes:
-    """Deterministic test image: hash-seeded gradient + pattern."""
-    import numpy as np
-
-    yy, xx = np.mgrid[0:height, 0:width]
-    r = (xx * 255 // max(width - 1, 1)).astype(np.uint8)
-    g = (yy * 255 // max(height - 1, 1)).astype(np.uint8)
-    b = ((xx * 7 + yy * 13 + seed) % 256).astype(np.uint8)
-    return encode_ppm(np.stack([r, g, b], axis=2))
-
-
-def synth_wav(duration_ms: int, rate: int = 8000, freq: float = 440.0) -> bytes:
-    """Deterministic test audio: PCM16 mono sine."""
-    import io
-    import wave
-
-    import numpy as np
-
-    n = int(rate * duration_ms / 1000)
-    t = np.arange(n) / rate
-    pcm = (np.sin(2 * np.pi * freq * t) * 0.5 * 32767).astype("<i2")
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as f:
-        f.setnchannels(1)
-        f.setsampwidth(2)
-        f.setframerate(rate)
-        f.writeframes(pcm.tobytes())
-    return buf.getvalue()
-
-
-def _fake_features(content: bytes) -> list[float]:
-    """Deterministic pseudo-embedding: FEATURE_DIM floats in [-1, 1) from
-    the md5 stream of the content (stands in for a CNN/CLIP encoder).
-
-    Driver-side reference implementation; ``extract_features`` carries an
-    identical nested copy because worker-shipped closures must not
-    reference module globals (pickled by reference)."""
-    out: list[float] = []
-    seed = content
-    while len(out) < FEATURE_DIM:
-        seed = hashlib.md5(seed).digest()
-        for i in range(0, 16, 4):
-            if len(out) >= FEATURE_DIM:
-                break
-            v = int.from_bytes(seed[i : i + 4], "big")
-            out.append((v / 2**31) - 1.0)
-    return out
-
-
-def extract_features(assets: DataFrame, fake: bool = True) -> DataFrame:
-    """Decode + feature-extract each asset in Arrow batches.
-
-    ``fake=False`` dispatches on magic bytes: PPM (``P6``), PNG,
-    JPEG (baseline + progressive), WAV (``RIFF..WAVE``) and MJPEG MP4
-    (ISO-BMFF ``ftyp``; features of the REPRESENTATIVE middle frame,
-    decoded through the real JPEG path — one 16-float summary per
-    video, same contract as images) decode for REAL (numpy/stdlib
-    codecs — see module doc); the remaining formats (H.264 video,
-    arithmetic/lossless/12-bit JPEG) raise ``NotImplementedError``
-    naming the format. ``fake=True`` is
-    the md5-derived stand-in encoder for text-backed fixtures. Plumbing
-    (batching, schema, memory shape) is identical either way.
-    """
-    from .mp4 import build_frame_extractor
-
-    feature_dim = FEATURE_DIM
-    extract_mjpeg = build_frame_extractor()  # by-value closure
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # self-contained closure: no references to module-level helpers.
-        # cloudpickle serializes those BY REFERENCE, which breaks on
-        # Python workers whose cwd/path can't import this package (e.g.
-        # a driver running from another directory) — see
-        # tests/test_worker_portability.py. The codec bodies mirror the
-        # module-level reference implementations, which the tests assert
-        # equal.
-        import hashlib as _hl
-        import io as _io
-        import wave as _wave
-
-        import numpy as _np
-
-        def fake_feats(content: bytes) -> list[float]:
-            out: list[float] = []
-            seed = content
-            while len(out) < feature_dim:
-                seed = _hl.md5(seed).digest()
-                for i in range(0, 16, 4):
-                    if len(out) >= feature_dim:
-                        break
-                    v = int.from_bytes(seed[i : i + 4], "big")
-                    out.append((v / 2**31) - 1.0)
-            return out
-
-        def ppm_feats(data: bytes) -> list[float]:
-            fields: list[bytes] = []
-            pos = 2
-            while len(fields) < 3:
-                while pos < len(data) and data[pos : pos + 1].isspace():
-                    pos += 1
-                start = pos
-                while pos < len(data) and not data[pos : pos + 1].isspace():
-                    pos += 1
-                fields.append(data[start:pos])
-            pos += 1
-            w, h, maxval = (int(f) for f in fields)
-            if maxval != 255:
-                raise ValueError(f"only 8-bit PPM supported, maxval={maxval}")
-            a = (
-                _np.frombuffer(data, dtype=_np.uint8, count=w * h * 3, offset=pos)
-                .reshape(h, w, 3)
-                .astype(_np.float64)
-            )
-            out = [m / 127.5 - 1.0 for m in a.mean(axis=(0, 1))]
-            out += [min(s / 128.0, 0.9999) * 2 - 1.0 for s in a.std(axis=(0, 1))]
-            gray = a.mean(axis=2)
-            for i in range(3):
-                for j in range(3):
-                    cell = gray[
-                        i * h // 3 : max((i + 1) * h // 3, i * h // 3 + 1),
-                        j * w // 3 : max((j + 1) * w // 3, j * w // 3 + 1),
-                    ]
-                    out.append(float(cell.mean()) / 127.5 - 1.0)
-            out.append(w / (w + h) * 2 - 1.0)
-            return [min(max(v, -1.0), 0.9999999) for v in out]
-
-        def wav_feats(data: bytes) -> list[float]:
-            with _wave.open(_io.BytesIO(data), "rb") as f:
-                rate, nch, sw = (
-                    f.getframerate(),
-                    f.getnchannels(),
-                    f.getsampwidth(),
-                )
-                frames = f.readframes(f.getnframes())
-            if sw != 2:
-                raise ValueError(f"only PCM16 WAV supported, sampwidth={sw}")
-            x = _np.frombuffer(frames, dtype="<i2").astype(_np.float64) / 32768.0
-            if nch > 1:
-                x = x.reshape(-1, nch).mean(axis=1)
-            if len(x) == 0:
-                x = _np.zeros(1)
-            segs = _np.array_split(x, 12)
-            out = [float(_np.sqrt((s**2).mean())) * 2 - 1.0 for s in segs]
-            out.append(float(_np.sqrt((x**2).mean())) * 2 - 1.0)
-            out.append(float(_np.abs(x).max()) * 2 - 1.0)
-            out.append(float((_np.diff(_np.signbit(x)) != 0).mean()) * 2 - 1.0)
-            out.append(min(nch / 8.0, 0.9999) * 2 - 1.0)
-            return [min(max(v, -1.0), 0.9999999) for v in out]
-
-        def real_feats(content: bytes) -> list[float]:
-            if content[:2] == b"P6":
-                return ppm_feats(content)
-            if content[:8] == PNG_MAGIC:
-                return image_features(decode_png(content))
-            if content[:3] == JPEG_MAGIC:
-                return image_features(decode_jpeg(content))
-            if content[:4] == b"RIFF" and content[8:12] == b"WAVE":
-                return wav_feats(content)
-            if content[4:8] == b"ftyp":  # ISO-BMFF: MJPEG decodes for real
-                frames = extract_mjpeg(content)
-                return image_features(
-                    decode_jpeg(frames[len(frames) // 2][1])
-                )
-            raise NotImplementedError(
-                f"no codec for content starting {content[:4]!r}: only PPM, "
-                "PNG, baseline JPEG, PCM16 WAV and MJPEG MP4 decode "
-                "in-container; use fake=True for the stand-in encoder"
-            )
-
-        feats = fake_feats if fake else real_feats
-        for pdf in batches:
-            contents = pdf["content"]
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["asset_id"],
-                    "n_bytes": contents.map(len).astype("int32"),
-                    "content_md5": contents.map(
-                        lambda b: _hl.md5(bytes(b)).hexdigest()
-                    ),
-                    "features": contents.map(lambda b: feats(bytes(b))),
-                }
-            )
-
-    return assets.mapInPandas(run, schema=_FEATURE_SCHEMA)
-
-
-def _build_dhash64():
-    """By-value factory (same worker-portability rationale as
-    ``_build_png_decoder``: the fake=False hash closures call this)."""
 
     def dhash64(arr) -> int:
         """64-bit difference hash (dHash) of a decoded image: grayscale →
@@ -776,99 +510,160 @@ def _build_dhash64():
                     bits |= 1 << (i * 8 + j)
         return bits - (1 << 64) if bits >= 1 << 63 else bits
 
-    return dhash64
+    return resize_nearest, image_features, dhash64
 
 
-#: 64-bit dHash — by-value-picklable closure.
-dhash64 = _build_dhash64()
+resize_nearest, image_features, dhash64 = _build_image_ops()
+
+
+def _build_wav_codec():
+    def decode_wav(data: bytes):
+        """WAV (PCM) bytes → (float64 mono samples in [-1, 1], rate,
+        channels, duration_ms). Stdlib ``wave`` + numpy — no external
+        audio lib."""
+        import io
+        import wave
+
+        import numpy as np
+
+        with wave.open(io.BytesIO(data), "rb") as f:
+            rate, nch, sw = f.getframerate(), f.getnchannels(), f.getsampwidth()
+            frames = f.readframes(f.getnframes())
+        if sw != 2:
+            raise ValueError(f"only PCM16 WAV supported, sampwidth={sw}")
+        x = np.frombuffer(frames, dtype="<i2").astype(np.float64) / 32768.0
+        if nch > 1:
+            x = x.reshape(-1, nch).mean(axis=1)
+        return x, rate, nch, int(len(x) * 1000 / rate)
+
+    def audio_features(samples, rate: int, nch: int) -> list[float]:
+        """FEATURE_DIM floats in [-1, 1): 12-segment RMS envelope,
+        overall RMS, peak, zero-crossing rate, channel count."""
+        import numpy as np
+
+        x = np.asarray(samples, dtype=np.float64)
+        if len(x) == 0:
+            x = np.zeros(1)
+        segs = np.array_split(x, 12)
+        out = [float(np.sqrt((s**2).mean())) * 2 - 1.0 for s in segs]
+        out.append(float(np.sqrt((x**2).mean())) * 2 - 1.0)
+        out.append(float(np.abs(x).max()) * 2 - 1.0)
+        out.append(float((np.diff(np.signbit(x)) != 0).mean()) * 2 - 1.0)
+        out.append(min(nch / 8.0, 0.9999) * 2 - 1.0)
+        return [min(max(v, -1.0), 0.9999999) for v in out]
+
+    def audio_fingerprint64(samples, rate: int) -> int:
+        """64-bit robust audio fingerprint (Haitsma-Kalker shape): 9 time
+        frames × 9 log-spaced spectral bands (200-3600 Hz, absolute Hz
+        so the hash survives resampling), bit(t, b) = sign of the
+        time-delta of the band-energy gradient. Log-energy differences
+        cancel any volume scalar, so the hash is amplitude-invariant by
+        construction. Returned signed for LongType storage."""
+        import numpy as np
+
+        x = np.asarray(samples, dtype=np.float64)
+        if len(x) < 18:
+            x = np.pad(x, (0, 18 - len(x)))
+        frames = np.array_split(x, 9)
+        edges = np.geomspace(200.0, 3600.0, 10)
+        eps = 1e-12
+        logE = np.empty((9, 9))
+        for t, fr in enumerate(frames):
+            spec = np.abs(np.fft.rfft(fr)) ** 2
+            freqs = np.fft.rfftfreq(len(fr), d=1.0 / rate)
+            for b in range(9):
+                m = (freqs >= edges[b]) & (freqs < edges[b + 1])
+                logE[t, b] = np.log(spec[m].sum() + eps)
+        bits = 0
+        for t in range(1, 9):
+            for b in range(8):
+                d = (logE[t, b] - logE[t, b + 1]) - (logE[t - 1, b] - logE[t - 1, b + 1])
+                if d > 0:
+                    bits |= 1 << ((t - 1) * 8 + b)
+        return bits - (1 << 64) if bits >= 1 << 63 else bits
+
+    return decode_wav, audio_features, audio_fingerprint64
+
+
+decode_wav, audio_features, audio_fingerprint64 = _build_wav_codec()
+
+
+def synth_ppm(width: int, height: int, seed: int = 0) -> bytes:
+    """Deterministic test image: hash-seeded gradient + pattern."""
+    import numpy as np
+
+    yy, xx = np.mgrid[0:height, 0:width]
+    r = (xx * 255 // max(width - 1, 1)).astype(np.uint8)
+    g = (yy * 255 // max(height - 1, 1)).astype(np.uint8)
+    b = ((xx * 7 + yy * 13 + seed) % 256).astype(np.uint8)
+    return encode_ppm(np.stack([r, g, b], axis=2))
+
+
+def synth_wav(duration_ms: int, rate: int = 8000, freq: float = 440.0) -> bytes:
+    """Deterministic test audio: PCM16 mono sine."""
+    import io
+    import wave
+
+    import numpy as np
+
+    n = int(rate * duration_ms / 1000)
+    t = np.arange(n) / rate
+    pcm = (np.sin(2 * np.pi * freq * t) * 0.5 * 32767).astype("<i2")
+    buf = io.BytesIO()
+    with wave.open(buf, "wb") as f:
+        f.setnchannels(1)
+        f.setsampwidth(2)
+        f.setframerate(rate)
+        f.writeframes(pcm.tobytes())
+    return buf.getvalue()
+
+
+def extract_features(assets: DataFrame) -> DataFrame:
+    """Decode + feature-extract each asset in Arrow batches:
+    ``(asset_id, n_bytes, content_md5, features)``.
+
+    Dispatches on magic bytes: PPM (``P6``), PNG, JPEG (baseline,
+    progressive, lossless SOF3 and 12-bit), WAV (``RIFF..WAVE``) and
+    MJPEG MP4 (ISO-BMFF ``ftyp``; features of the REPRESENTATIVE middle
+    frame, decoded through the JPEG path — one 16-float summary per
+    video, same contract as images). Anything else (H.264 video,
+    arithmetic-coded or differential JPEG, bytes in no supported format)
+    raises ``NotImplementedError`` naming the format.
+    """
+
+    def feats(content: bytes) -> list[float]:
+        if content[:4] == b"RIFF" and content[8:12] == b"WAVE":
+            x, rate, nch, _ = decode_wav(content)
+            return audio_features(x, rate, nch)
+        return image_features(decode_image(content))
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        import hashlib as _hl
+
+        for pdf in batches:
+            contents = pdf["content"]
+            yield pd.DataFrame(
+                {
+                    "asset_id": pdf["asset_id"],
+                    "n_bytes": contents.map(len).astype("int32"),
+                    "content_md5": contents.map(
+                        lambda b: _hl.md5(bytes(b)).hexdigest()
+                    ),
+                    "features": contents.map(lambda b: feats(bytes(b))),
+                }
+            )
+
+    return assets.mapInPandas(run, schema=_FEATURE_SCHEMA)
+
 
 _HASH_SCHEMA = "asset_id long, dhash long"
 
 
-def image_hashes(assets: DataFrame, fake: bool = True) -> DataFrame:
-    """Perceptual 64-bit dHash per asset: ``(asset_id, dhash)``.
-
-    ``fake=False`` decodes PPM/PNG/JPEG for real, and an MJPEG MP4
-    hashes its representative middle frame — video near-dup rides the
-    image machinery (unsupported codecs raise the named
-    ``NotImplementedError``, as everywhere in this module);
-    ``fake=True`` derives a deterministic md5-based stand-in hash for
-    text-backed fixture assets (identical bytes ⇒ identical hash, so
-    exact-dup detection stays meaningful). Zero shuffle — one Arrow
-    projection."""
-    from .mp4 import build_frame_extractor
-
-    extract_mjpeg = build_frame_extractor()  # by-value closure
+def _hash_assets(assets: DataFrame, hash_fn) -> DataFrame:
+    """``(asset_id, dhash)`` with ``hash_fn(content)`` mapped over Arrow
+    batches; ``hash_fn`` must be a by-value closure. Zero shuffle."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # self-contained closure (worker portability — see extract_features)
-        import hashlib as _hl
-
-        import numpy as _np
-
-        def fake_hash(content: bytes) -> int:
-            v = int.from_bytes(_hl.md5(content).digest()[:8], "big")
-            return v - (1 << 64) if v >= 1 << 63 else v
-
-        def ppm_dhash(data: bytes) -> int:
-            fields: list[bytes] = []
-            pos = 2
-            while len(fields) < 3:
-                while pos < len(data) and data[pos : pos + 1].isspace():
-                    pos += 1
-                start = pos
-                while pos < len(data) and not data[pos : pos + 1].isspace():
-                    pos += 1
-                fields.append(data[start:pos])
-            pos += 1
-            w, h, maxval = (int(f) for f in fields)
-            if maxval != 255:
-                raise ValueError(f"only 8-bit PPM supported, maxval={maxval}")
-            gray = (
-                _np.frombuffer(data, dtype=_np.uint8, count=w * h * 3, offset=pos)
-                .reshape(h, w, 3)
-                .astype(_np.float64)
-                .mean(axis=2)
-            )
-            rows = [
-                gray[(i * h) // 8 : max(((i + 1) * h) // 8, (i * h) // 8 + 1)]
-                for i in range(8)
-            ]
-            grid = _np.array(
-                [
-                    [
-                        r[
-                            :, (j * w) // 9 : max(((j + 1) * w) // 9, (j * w) // 9 + 1)
-                        ].mean()
-                        for j in range(9)
-                    ]
-                    for r in rows
-                ]
-            )
-            bits = 0
-            for i in range(8):
-                for j in range(8):
-                    if grid[i, j] > grid[i, j + 1]:
-                        bits |= 1 << (i * 8 + j)
-            return bits - (1 << 64) if bits >= 1 << 63 else bits
-
-        def real_hash(content: bytes) -> int:
-            if content[:2] == b"P6":
-                return ppm_dhash(content)
-            if content[:8] == PNG_MAGIC:
-                return dhash64(decode_png(content))
-            if content[:3] == JPEG_MAGIC:
-                return dhash64(decode_jpeg(content))
-            if content[4:8] == b"ftyp":  # MJPEG MP4: hash the middle frame
-                frames = extract_mjpeg(content)
-                return dhash64(decode_jpeg(frames[len(frames) // 2][1]))
-            raise NotImplementedError(
-                f"no image codec for content starting {content[:4]!r}: only "
-                "PPM, PNG, baseline JPEG and MJPEG MP4 decode in-container; "
-                "use fake=True for the stand-in hash"
-            )
-
-        hash_fn = fake_hash if fake else real_hash
         for pdf in batches:
             yield pd.DataFrame(
                 {
@@ -882,160 +677,74 @@ def image_hashes(assets: DataFrame, fake: bool = True) -> DataFrame:
     return assets.mapInPandas(run, schema=_HASH_SCHEMA)
 
 
-def image_near_dup_pairs(
-    assets: DataFrame, max_hamming: int = 6, fake: bool = True
-) -> DataFrame:
+def _hash_pairs(hashes: DataFrame, max_hamming: int) -> DataFrame:
+    """``(asset_a, asset_b, hamming)`` for 64-bit hashes within
+    ``max_hamming`` bits, through the text-SimHash pigeonhole machinery
+    (``dedup.fingerprint_pairs``, 64-bit mode): one equi-shuffle on
+    (block, value) — never an all-pairs join."""
+    from lakehouse_adventureworks2022_spark.operators.dedup import (
+        fingerprint_pairs,
+    )
+
+    return fingerprint_pairs(
+        hashes, max_hamming, bits=64, id_col="asset_id", hash_col="dhash"
+    ).select(
+        F.col("doc_a").alias("asset_a"),
+        F.col("doc_b").alias("asset_b"),
+        "hamming",
+    )
+
+
+def image_hashes(assets: DataFrame) -> DataFrame:
+    """Perceptual 64-bit dHash per asset: ``(asset_id, dhash)``.
+
+    Decodes PPM/PNG/JPEG, and an MJPEG MP4 hashes its representative
+    middle frame — video near-dup rides the image machinery
+    (unsupported codecs raise the named ``NotImplementedError``, as
+    everywhere in this module). Zero shuffle — one Arrow projection."""
+
+    def dhash(content: bytes) -> int:
+        return dhash64(decode_image(content))
+
+    return _hash_assets(assets, dhash)
+
+
+def image_near_dup_pairs(assets: DataFrame, max_hamming: int = 6) -> DataFrame:
     """Image near-duplicate pairs by perceptual-hash proximity:
     ``(asset_a, asset_b, hamming)`` for pairs within ``max_hamming`` of
     64 dHash bits — resized/re-brightened copies land within a few bits
-    (tested), unrelated images ~32 bits apart.
-
-    Candidate generation reuses the text-SimHash pigeonhole machinery
-    (``dedup.fingerprint_pairs``, 64-bit mode): one hash projection, one
-    equi-shuffle on (block, value) — never an all-pairs image join."""
-    from lakehouse_adventureworks2022_spark.operators.dedup import (
-        fingerprint_pairs,
-    )
-
-    hashes = image_hashes(assets, fake=fake)
-    return fingerprint_pairs(
-        hashes, max_hamming, bits=64, id_col="asset_id", hash_col="dhash"
-    ).select(
-        F.col("doc_a").alias("asset_a"),
-        F.col("doc_b").alias("asset_b"),
-        "hamming",
-    )
+    (tested), unrelated images ~32 bits apart. One hash projection, then
+    the pigeonhole candidate join (:func:`_hash_pairs`)."""
+    return _hash_pairs(image_hashes(assets), max_hamming)
 
 
-def audio_fingerprint64(samples, rate: int) -> int:
-    """64-bit robust audio fingerprint (Haitsma-Kalker shape): 9 time
-    frames × 9 log-spaced spectral bands (200-3600 Hz, absolute Hz so
-    the hash survives resampling), bit(t, b) = sign of the time-delta of
-    the band-energy gradient. Log-energy differences cancel any volume
-    scalar, so the hash is amplitude-invariant by construction.
-    Returned signed for LongType storage."""
-    import numpy as np
-
-    x = np.asarray(samples, dtype=np.float64)
-    if len(x) < 18:
-        x = np.pad(x, (0, 18 - len(x)))
-    frames = np.array_split(x, 9)
-    edges = np.geomspace(200.0, 3600.0, 10)
-    eps = 1e-12
-    logE = np.empty((9, 9))
-    for t, fr in enumerate(frames):
-        spec = np.abs(np.fft.rfft(fr)) ** 2
-        freqs = np.fft.rfftfreq(len(fr), d=1.0 / rate)
-        for b in range(9):
-            m = (freqs >= edges[b]) & (freqs < edges[b + 1])
-            logE[t, b] = np.log(spec[m].sum() + eps)
-    bits = 0
-    for t in range(1, 9):
-        for b in range(8):
-            d = (logE[t, b] - logE[t, b + 1]) - (logE[t - 1, b] - logE[t - 1, b + 1])
-            if d > 0:
-                bits |= 1 << ((t - 1) * 8 + b)
-    return bits - (1 << 64) if bits >= 1 << 63 else bits
-
-
-def audio_hashes(assets: DataFrame, fake: bool = True) -> DataFrame:
+def audio_hashes(assets: DataFrame) -> DataFrame:
     """Robust 64-bit audio fingerprint per asset: ``(asset_id, dhash)``
     (same column contract as :func:`image_hashes`, so the pairing and
-    canonicalization machinery is shared). Real path decodes PCM16 WAV;
-    compressed audio raises the named error; ``fake=True`` md5-derives a
-    stand-in. Zero shuffle."""
+    canonicalization machinery is shared). Decodes PCM16 WAV;
+    compressed audio raises the named error. Zero shuffle."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib as _hl
-        import io as _io
-        import wave as _wave
+    def fingerprint(content: bytes) -> int:
+        if content[:4] == b"RIFF" and content[8:12] == b"WAVE":
+            x, rate, _, _ = decode_wav(content)
+            return audio_fingerprint64(x, rate)
+        raise NotImplementedError(
+            f"no audio codec for content starting {content[:4]!r}: only "
+            "PCM16 WAV decodes in-container (compressed formats need "
+            "ffmpeg)"
+        )
 
-        import numpy as _np
-
-        def fake_hash(content: bytes) -> int:
-            v = int.from_bytes(_hl.md5(b"audio|" + content).digest()[:8], "big")
-            return v - (1 << 64) if v >= 1 << 63 else v
-
-        def wav_fp(data: bytes) -> int:
-            with _wave.open(_io.BytesIO(data), "rb") as f:
-                rate, nch, sw = (
-                    f.getframerate(),
-                    f.getnchannels(),
-                    f.getsampwidth(),
-                )
-                frames_b = f.readframes(f.getnframes())
-            if sw != 2:
-                raise ValueError(f"only PCM16 WAV supported, sampwidth={sw}")
-            x = _np.frombuffer(frames_b, dtype="<i2").astype(_np.float64) / 32768.0
-            if nch > 1:
-                x = x.reshape(-1, nch).mean(axis=1)
-            if len(x) < 18:
-                x = _np.pad(x, (0, 18 - len(x)))
-            frames = _np.array_split(x, 9)
-            edges = _np.geomspace(200.0, 3600.0, 10)
-            logE = _np.empty((9, 9))
-            for t, fr in enumerate(frames):
-                spec = _np.abs(_np.fft.rfft(fr)) ** 2
-                freqs = _np.fft.rfftfreq(len(fr), d=1.0 / rate)
-                for b in range(9):
-                    m = (freqs >= edges[b]) & (freqs < edges[b + 1])
-                    logE[t, b] = _np.log(spec[m].sum() + 1e-12)
-            bits = 0
-            for t in range(1, 9):
-                for b in range(8):
-                    d = (logE[t, b] - logE[t, b + 1]) - (
-                        logE[t - 1, b] - logE[t - 1, b + 1]
-                    )
-                    if d > 0:
-                        bits |= 1 << ((t - 1) * 8 + b)
-            return bits - (1 << 64) if bits >= 1 << 63 else bits
-
-        def real_hash(content: bytes) -> int:
-            if content[:4] == b"RIFF" and content[8:12] == b"WAVE":
-                return wav_fp(content)
-            raise NotImplementedError(
-                f"no audio codec for content starting {content[:4]!r}: only "
-                "PCM16 WAV decodes in-container (compressed formats need "
-                "ffmpeg); use fake=True for the stand-in hash"
-            )
-
-        hash_fn = fake_hash if fake else real_hash
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["asset_id"],
-                    "dhash": pdf["content"]
-                    .map(lambda b: hash_fn(bytes(b)))
-                    .astype("int64"),
-                }
-            )
-
-    return assets.mapInPandas(run, schema=_HASH_SCHEMA)
+    return _hash_assets(assets, fingerprint)
 
 
-def audio_near_dup_pairs(
-    assets: DataFrame, max_hamming: int = 6, fake: bool = True
-) -> DataFrame:
+def audio_near_dup_pairs(assets: DataFrame, max_hamming: int = 6) -> DataFrame:
     """Audio near-duplicate pairs by fingerprint proximity — the audio
     face of :func:`image_near_dup_pairs`, same pigeonhole candidate
     machinery, never an all-pairs join."""
-    from lakehouse_adventureworks2022_spark.operators.dedup import (
-        fingerprint_pairs,
-    )
-
-    hashes = audio_hashes(assets, fake=fake)
-    return fingerprint_pairs(
-        hashes, max_hamming, bits=64, id_col="asset_id", hash_col="dhash"
-    ).select(
-        F.col("doc_a").alias("asset_a"),
-        F.col("doc_b").alias("asset_b"),
-        "hamming",
-    )
+    return _hash_pairs(audio_hashes(assets), max_hamming)
 
 
-def clean_assets(
-    assets: DataFrame, max_hamming: int = 6, fake: bool = True
-) -> DataFrame:
+def clean_assets(assets: DataFrame, max_hamming: int = 6) -> DataFrame:
     """End-to-end multimodal asset dedup (the binary-column twin of
     ``dedup.clean_corpus``):
 
@@ -1083,10 +792,8 @@ def clean_assets(
     ).startswith("video/")
     is_audio = F.col("mime").startswith("audio/")
     pairs = image_near_dup_pairs(
-        uniques.filter(is_visual), max_hamming, fake=fake
-    ).unionByName(
-        audio_near_dup_pairs(uniques.filter(is_audio), max_hamming, fake=fake)
-    )
+        uniques.filter(is_visual), max_hamming
+    ).unionByName(audio_near_dup_pairs(uniques.filter(is_audio), max_hamming))
     return dedup_keep_canonical(
         uniques.withColumnRenamed("asset_id", "doc_id"),
         pairs.select(
@@ -1095,65 +802,21 @@ def clean_assets(
     ).withColumnRenamed("doc_id", "asset_id")
 
 
-def resize_images(assets: DataFrame, max_px: int = 512, fake: bool = True) -> DataFrame:
-    """Resize stage. Fake mode: metadata-only projection (content
-    untouched — the metadata math and plumbing are what's exercised).
-    Real mode: nearest-neighbor PPM resize in Arrow batches — content is
-    re-encoded and width/height updated from the actual decoded pixels;
-    non-PPM content raises (compressed codecs not in container)."""
-    if fake:
-        scale = F.when(
-            F.greatest("width", "height") > max_px,
-            max_px / F.greatest("width", "height").cast("double"),
-        ).otherwise(F.lit(1.0))
-        # one projection: chaining withColumn would re-derive the scale
-        # from the already-resized width
-        return assets.select(
-            *[c for c in assets.columns if c not in ("width", "height")],
-            (F.col("width") * scale).cast("int").alias("width"),
-            (F.col("height") * scale).cast("int").alias("height"),
-        )
+def resize_images(assets: DataFrame, max_px: int = 512) -> DataFrame:
+    """Nearest-neighbor PPM resize in Arrow batches (aspect kept): content
+    is re-encoded and width/height updated from the decoded pixels;
+    non-PPM content raises ``NotImplementedError`` naming it."""
+
+    def shrink(data: bytes) -> tuple[bytes, int, int]:
+        if data[:2] != b"P6":
+            raise NotImplementedError(
+                f"no resize codec for content starting {data[:2]!r}: "
+                "only PPM decodes in-container"
+            )
+        a = resize_nearest(decode_ppm(data), max_px)
+        return encode_ppm(a), a.shape[0], a.shape[1]
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # self-contained for worker portability (see extract_features)
-        import numpy as _np
-
-        def decode(data: bytes):
-            fields: list[bytes] = []
-            pos = 2
-            while len(fields) < 3:
-                while pos < len(data) and data[pos : pos + 1].isspace():
-                    pos += 1
-                start = pos
-                while pos < len(data) and not data[pos : pos + 1].isspace():
-                    pos += 1
-                fields.append(data[start:pos])
-            pos += 1
-            w, h, maxval = (int(f) for f in fields)
-            if maxval != 255:
-                raise ValueError(f"only 8-bit PPM supported, maxval={maxval}")
-            return (
-                _np.frombuffer(data, dtype=_np.uint8, count=w * h * 3, offset=pos)
-                .reshape(h, w, 3)
-            )
-
-        def shrink(data: bytes) -> tuple[bytes, int, int]:
-            if data[:2] != b"P6":
-                raise NotImplementedError(
-                    f"no resize codec for content starting {data[:2]!r}: "
-                    "only PPM decodes in-container"
-                )
-            a = decode(data)
-            h, w, _ = a.shape
-            if max(h, w) > max_px:
-                s = max_px / max(h, w)
-                nh, nw = max(int(h * s), 1), max(int(w * s), 1)
-                rows = (_np.arange(nh) * (h / nh)).astype(int)
-                cols = (_np.arange(nw) * (w / nw)).astype(int)
-                a = a[rows][:, cols]
-                h, w = nh, nw
-            return b"P6\n%d %d\n255\n" % (w, h) + a.tobytes(), h, w
-
         for pdf in batches:
             out = pdf.copy()
             resized = out["content"].map(lambda b: shrink(bytes(b)))
@@ -1179,66 +842,27 @@ FRAME_SCHEMA = T.StructType(
 )
 
 
-def sample_frames(assets: DataFrame, every_ms: int = 1000, fake: bool = True) -> DataFrame:
-    """Frame-sampling stage for video assets.
-
-    Fake mode: one output row per sampled frame offset (explode over
-    the duration spine) — the row-explosion shape that matters for
-    partition sizing, no decode.
-
-    Real mode (r7, closing the r6 named stub): MP4 container parsing in
+def sample_frames(assets: DataFrame, every_ms: int = 1000) -> DataFrame:
+    """Frame-sampling stage for video assets: MP4 container parsing in
     pure stdlib (``operators/mp4.py``, ISO/IEC 14496-12 sample tables)
     extracts the latest frame at or before each ``every_ms`` offset as
     its own encoded image. MJPEG tracks yield standalone baseline JPEGs
     — rename ``frame_offset_ms`` into a frame id and the rows flow
-    through the existing real ``extract_features``/``image_hashes``
-    paths (video near-dup = frame extraction + the image machinery).
-    Non-MJPEG codecs (H.264 …) raise a named ``NotImplementedError``
-    from the extractor: frame bytes and timing parse fine, pixel decode
-    needs the codec. Arrow-batched ``mapInPandas``; per-asset cost,
-    no shuffle."""
+    through :func:`extract_features`/:func:`image_hashes` (video
+    near-dup = frame extraction + the image machinery). Non-MJPEG codecs
+    (H.264 …) raise a named ``NotImplementedError`` from the extractor:
+    frame bytes and timing parse fine, pixel decode needs the codec.
+    Non-video assets yield no rows. Arrow-batched ``mapInPandas``;
+    per-asset cost, no shuffle."""
     if every_ms <= 0:
         raise ValueError(f"every_ms must be positive, got {every_ms}")
-    if fake:
-        offsets = F.sequence(
-            F.lit(0),
-            F.greatest(
-                F.coalesce(F.col("duration_ms"), F.lit(0)) - 1, F.lit(0)
-            ),
-            F.lit(every_ms),
-        )
-        # same FRAME_SCHEMA as real mode (null content — no decode) so a
-        # caller toggling fake→real keeps its downstream column refs
-        return (
-            assets.filter(F.col("duration_ms").isNotNull())
-            .select(
-                "asset_id",
-                F.explode(offsets).alias("_off"),
-                "mime",
-                "width",
-                "height",
-            )
-            .select(
-                "asset_id",
-                F.col("_off").cast("int").alias("frame_offset_ms"),
-                F.lit(None).cast("binary").alias("content"),
-                "mime",
-                F.col("width").cast("int").alias("width"),
-                F.col("height").cast("int").alias("height"),
-            )
-        )
-
-    from .mp4 import build_frame_extractor
-
-    extract = build_frame_extractor()  # by-value closure
-
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
             for _, r in pdf.iterrows():
                 if not str(r["mime"]).startswith("video/"):
                     continue
-                for ms, payload in extract(bytes(r["content"]), every_ms):
+                for ms, payload in extract_mjpeg_frames(bytes(r["content"]), every_ms):
                     rows.append(
                         (
                             r["asset_id"],

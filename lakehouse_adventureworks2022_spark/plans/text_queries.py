@@ -1035,23 +1035,22 @@ def q_rag_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_clean_assets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal asset dedup composite over REAL binary assets derived
-    deterministically from the documents table (r7: modality cycles
-    JPEG/PNG/PPM/WAV, every byte produced and decoded by the
-    in-container codecs — the fake-hash plumbing is retired here; named
-    stubs remain only for MP4/exotic variants): exact md5 dedup →
-    per-modality perceptual near-dup (real dHash decode / audio
-    fingerprint) → connected-components canonicalization. Rows-only
-    (binary fixtures don't exist in the oracle tables); planted-dup
-    composite + codec round-trip tests in tests/test_multimodal.py."""
+    """Multimodal asset dedup composite over binary assets derived
+    deterministically from the documents table by
+    ``multimodal.attach_real_assets`` (modality cycles JPEG/PNG/PPM/WAV,
+    every byte encoded and decoded by the in-container codecs): exact
+    md5 dedup → per-modality perceptual near-dup (dHash of the decoded
+    image / audio fingerprint of the decoded WAV) →
+    connected-components canonicalization. Rows-only (binary fixtures
+    don't exist in the oracle tables); planted-dup composite + codec
+    round-trip tests in tests/test_multimodal.py."""
     from lakehouse_adventureworks2022_spark.operators.multimodal import (
         attach_real_assets,
         clean_assets,
     )
 
     docs = read_table(spark, sf_dir, "documents")
-    assets = attach_real_assets(docs)
-    return clean_assets(assets, fake=False).select(
+    return clean_assets(attach_real_assets(docs)).select(
         "asset_id", "mime", "width", "height"
     )
 
@@ -1112,7 +1111,7 @@ def _harvest_frames(videos: DataFrame) -> DataFrame:
         sample_frames,
     )
 
-    frames = sample_frames(videos, every_ms=100, fake=False)
+    frames = sample_frames(videos, every_ms=100)
     hashed = image_hashes(
         frames.select(
             # composite frame id keeps image_hashes' one-row-per-asset
@@ -1126,7 +1125,6 @@ def _harvest_frames(videos: DataFrame) -> DataFrame:
             "height",
             F.lit(None).cast("int").alias("duration_ms"),
         ),
-        fake=False,
     )
     return (
         hashed.groupBy(
@@ -2639,6 +2637,35 @@ def _build_oracle_url_canonicalize() -> str:
 ORACLE_URL_CANONICALIZE = _build_oracle_url_canonicalize()
 
 
+def _warc_blobs(spark: SparkSession, sf_dir: str, records) -> DataFrame:
+    """The documents corpus muxed IN-PLAN into spec-shaped WARC files
+    (the mp4_corpus pattern: the fixture has no binary crawl files, so
+    the WARC queries synthesize spec-valid ones): one ``(grp, content)``
+    blob per ``doc_id % 16`` group, records in doc_id order, per-record
+    gzip members. ``records(doc_id, body)`` returns one document's
+    record dicts (the keys of ``sources.warc.build_warc_codec()["write"]``);
+    it must be a nested function so it ships by value inside the
+    ``applyInPandas`` closure. One groupBy on the 16-key group id."""
+    from lakehouse_adventureworks2022_spark.sources.warc import build_warc_codec
+
+    docs = read_table(spark, sf_dir, "documents").select(
+        "doc_id", "text", (F.col("doc_id") % 16).cast("int").alias("grp")
+    )
+    write = build_warc_codec()["write"]
+
+    def mux(pdf: pd.DataFrame) -> pd.DataFrame:
+        rows = pdf.sort_values("doc_id")
+        recs = [
+            rec
+            for d, t in zip(rows["doc_id"], rows["text"])
+            for rec in records(int(d), str(t).encode("utf-8"))
+        ]
+        blob = write(recs, gzip_members=True)
+        return pd.DataFrame({"grp": [int(pdf["grp"].iloc[0])], "content": [blob]})
+
+    return docs.groupBy("grp").applyInPandas(mux, schema="grp int, content binary")
+
+
 def q_warc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WARC container ingestion (r11): the documents corpus is muxed
     IN-PLAN into spec-shaped multi-record WARC files (one blob per
@@ -2653,38 +2680,20 @@ def q_warc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash. Arrow-batched mux+parse, one groupBy on the 16-key group id,
     no other shuffle."""
     from lakehouse_adventureworks2022_spark.sources.warc import (
-        build_warc_codec,
         parse_warc_frame,
         warc_pages,
     )
 
-    docs = read_table(spark, sf_dir, "documents").select(
-        "doc_id",
-        "text",
-        F.concat(
-            F.lit("http://crawl.example.org/doc/"),
-            F.col("doc_id").cast("string"),
-        ).alias("uri"),
-        (F.col("doc_id") % 16).cast("int").alias("grp"),
-    )
-    write = build_warc_codec()["write"]
+    def records(doc_id: int, body: bytes) -> list[dict]:
+        return [
+            {
+                "uri": f"http://crawl.example.org/doc/{doc_id}",
+                "record_id": f"<urn:uuid:doc-{doc_id}>",
+                "body": body,
+            }
+        ]
 
-    def mux(pdf: pd.DataFrame) -> pd.DataFrame:
-        rows = pdf.sort_values("doc_id")
-        blob = write(
-            [
-                {
-                    "uri": r["uri"],
-                    "record_id": f"<urn:uuid:doc-{r['doc_id']}>",
-                    "body": str(r["text"]).encode("utf-8"),
-                }
-                for _, r in rows.iterrows()
-            ],
-            gzip_members=True,
-        )
-        return pd.DataFrame({"grp": [int(pdf["grp"].iloc[0])], "content": [blob]})
-
-    blobs = docs.groupBy("grp").applyInPandas(mux, schema="grp int, content binary")
+    blobs = _warc_blobs(spark, sf_dir, records)
     pages = warc_pages(parse_warc_frame(blobs, "content", path_col=None))
     return pages.select(
         F.col("url").alias("target_uri"),
@@ -2716,45 +2725,25 @@ def q_crawl_health(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``documents`` — a parser that drops a record, misreads a status or
     a header, or an agg that miscounts a band diverges the hash."""
     from lakehouse_adventureworks2022_spark.sources.warc import (
-        build_warc_codec,
         crawl_health_report,
         parse_warc_frame,
     )
 
-    docs = read_table(spark, sf_dir, "documents").select(
-        "doc_id",
-        "text",
-        (F.col("doc_id") % 16).cast("int").alias("grp"),
-    )
-    write = build_warc_codec()["write"]
     statuses = (200, 200, 200, 200, 200, 301, 404, 503)
     cts = ("text/html; charset=utf-8", "image/jpeg", None)
 
-    def mux(pdf: pd.DataFrame) -> pd.DataFrame:
-        rows = pdf.sort_values("doc_id")
-        blob = write(
-            [
-                {
-                    "uri": (
-                        f"http://h{int(r['doc_id']) % 5}.crawl.io/p/"
-                        f"{int(r['doc_id'])}"
-                    ),
-                    "record_id": f"<urn:uuid:hc-{int(r['doc_id'])}>",
-                    "body": str(r["text"]).encode("utf-8"),
-                    "status": statuses[int(r["doc_id"]) % 8],
-                    "http_content_type": cts[int(r["doc_id"]) % 3],
-                }
-                for _, r in rows.iterrows()
-            ],
-            gzip_members=True,
-        )
-        return pd.DataFrame(
-            {"grp": [int(pdf["grp"].iloc[0])], "content": [blob]}
-        )
+    def records(doc_id: int, body: bytes) -> list[dict]:
+        return [
+            {
+                "uri": f"http://h{doc_id % 5}.crawl.io/p/{doc_id}",
+                "record_id": f"<urn:uuid:hc-{doc_id}>",
+                "body": body,
+                "status": statuses[doc_id % 8],
+                "http_content_type": cts[doc_id % 3],
+            }
+        ]
 
-    blobs = docs.groupBy("grp").applyInPandas(
-        mux, schema="grp int, content binary"
-    )
+    blobs = _warc_blobs(spark, sf_dir, records)
     return crawl_health_report(parse_warc_frame(blobs, "content", path_col=None))
 
 
@@ -2884,45 +2873,24 @@ def q_warc_revisit_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash. Shape: one 16-key mux agg, then uniform-short-key aggs on the
     digest (payloads never ride a shuffle in the dedup)."""
     from lakehouse_adventureworks2022_spark.sources.warc import (
-        build_warc_codec,
         dedup_payload_digest,
         parse_warc_frame,
     )
 
-    docs = read_table(spark, sf_dir, "documents").select(
-        "doc_id",
-        "text",
-        F.concat(
-            F.lit("http://crawl.example.org/doc/"),
-            F.col("doc_id").cast("string"),
-        ).alias("uri"),
-        (F.col("doc_id") % 16).cast("int").alias("grp"),
-    )
-    write = build_warc_codec()["write"]
-
-    def mux(pdf: pd.DataFrame) -> pd.DataFrame:
-        recs = []
-        for _, r in pdf.sort_values("doc_id").iterrows():
-            body = str(r["text"]).encode("utf-8")
+    def doc_records(doc_id: int, body: bytes) -> list[dict]:
+        uri = f"http://crawl.example.org/doc/{doc_id}"
+        recs = [
+            {"uri": uri, "record_id": f"<urn:uuid:doc-{doc_id}>", "body": body}
+        ]
+        if doc_id % 3 == 0:
             recs.append(
-                {"uri": r["uri"],
-                 "record_id": f"<urn:uuid:doc-{r['doc_id']}>",
-                 "body": body}
+                {"uri": f"{uri}?recrawl",
+                 "record_id": f"<urn:uuid:rev-{doc_id}>",
+                 "body": body, "revisit": True}
             )
-            if int(r["doc_id"]) % 3 == 0:
-                recs.append(
-                    {"uri": f"{r['uri']}?recrawl",
-                     "record_id": f"<urn:uuid:rev-{r['doc_id']}>",
-                     "body": body, "revisit": True}
-                )
-        blob = write(recs, gzip_members=True)
-        return pd.DataFrame(
-            {"grp": [int(pdf["grp"].iloc[0])], "content": [blob]}
-        )
+        return recs
 
-    blobs = docs.groupBy("grp").applyInPandas(
-        mux, schema="grp int, content binary"
-    )
+    blobs = _warc_blobs(spark, sf_dir, doc_records)
     records = parse_warc_frame(blobs, "content", path_col=None)
     captures = records.filter(
         F.col("warc_type").isin("response", "revisit")
@@ -2960,43 +2928,21 @@ def q_wet_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     truncates or mis-decodes any record diverges the hash. One 16-key
     mux agg, no other shuffle."""
     from lakehouse_adventureworks2022_spark.sources.warc import (
-        build_warc_codec,
         parse_warc_frame,
         wet_pages,
     )
 
-    docs = read_table(spark, sf_dir, "documents").select(
-        "doc_id",
-        "text",
-        F.concat(
-            F.lit("http://crawl.example.org/doc/"),
-            F.col("doc_id").cast("string"),
-        ).alias("uri"),
-        (F.col("doc_id") % 16).cast("int").alias("grp"),
-    )
-    write = build_warc_codec()["write"]
+    def records(doc_id: int, body: bytes) -> list[dict]:
+        return [
+            {
+                "uri": f"http://crawl.example.org/doc/{doc_id}",
+                "record_id": f"<urn:uuid:wet-{doc_id}>",
+                "body": body,
+                "conversion": True,
+            }
+        ]
 
-    def mux(pdf: pd.DataFrame) -> pd.DataFrame:
-        rows = pdf.sort_values("doc_id")
-        blob = write(
-            [
-                {
-                    "uri": r["uri"],
-                    "record_id": f"<urn:uuid:wet-{r['doc_id']}>",
-                    "body": str(r["text"]).encode("utf-8"),
-                    "conversion": True,
-                }
-                for _, r in rows.iterrows()
-            ],
-            gzip_members=True,
-        )
-        return pd.DataFrame(
-            {"grp": [int(pdf["grp"].iloc[0])], "content": [blob]}
-        )
-
-    blobs = docs.groupBy("grp").applyInPandas(
-        mux, schema="grp int, content binary"
-    )
+    blobs = _warc_blobs(spark, sf_dir, records)
     pages = wet_pages(parse_warc_frame(blobs, "content", path_col=None))
     return pages.select(
         "url",

@@ -3,7 +3,7 @@ sampling/restart/grayscale variants, spec conformance via an
 independently hand-packed bitstream (the `_filtered_png` analog: the
 decoder must agree with ITU-T T.81 as the test understands it, not just
 with the module's own encoder), named stubs for the unimplemented JPEG
-modes, and the fake=False mapInPandas dispatch."""
+modes, and the mapInPandas magic-byte dispatch."""
 
 from __future__ import annotations
 
@@ -204,7 +204,7 @@ def test_named_stubs_and_malformed_input():
 
 
 def test_jpeg_assets_flow_through_real_feature_and_hash_paths(spark):
-    """JPEG joins PPM/PNG in the fake=False dispatch: same pixels as
+    """JPEG joins PPM/PNG in the magic-byte dispatch: same pixels as
     lossless PPM and as JPEG must land within lossy tolerance on
     features and within a few dHash bits (near-dup robustness)."""
     arr = _gradient(40, 30)
@@ -225,13 +225,13 @@ def test_jpeg_assets_flow_through_real_feature_and_hash_paths(spark):
     )
     feats = {
         r["asset_id"]: np.array(r["features"])
-        for r in multimodal.extract_features(assets, fake=False).collect()
+        for r in multimodal.extract_features(assets).collect()
     }
     assert np.abs(feats[1] - feats[2]).max() < 0.05
     assert np.abs(feats[1] - feats[3]).max() < 0.08
     hashes = {
         r["asset_id"]: r["dhash"]
-        for r in multimodal.image_hashes(assets, fake=False).collect()
+        for r in multimodal.image_hashes(assets).collect()
     }
     for other in (2, 3):
         ham = bin((hashes[1] ^ hashes[other]) & (2**64 - 1)).count("1")
@@ -443,7 +443,7 @@ def test_hand_packed_progressive_matches_spec_math():
 
 
 def test_progressive_files_flow_through_real_asset_paths(spark):
-    """A progressive JPEG asset decodes through the fake=False feature
+    """A progressive JPEG asset decodes through the feature
     and dHash paths identically to its baseline twin — format variants
     must not perturb the perceptual pipeline."""
     arr = _gradient(24, 32)
@@ -463,12 +463,12 @@ def test_progressive_files_flow_through_real_asset_paths(spark):
     )
     feats = {
         r["asset_id"]: r["features"]
-        for r in multimodal.extract_features(assets, fake=False).collect()
+        for r in multimodal.extract_features(assets).collect()
     }
     assert np.allclose(feats[1], feats[2])
     hashes = {
         r["asset_id"]: r["dhash"]
-        for r in multimodal.image_hashes(assets, fake=False).collect()
+        for r in multimodal.image_hashes(assets).collect()
     }
     assert hashes[1] == hashes[2]
 

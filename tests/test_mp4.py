@@ -183,7 +183,7 @@ def test_sample_frames_real_path(spark):
         multimodal.ASSET_SCHEMA,
     )
     rows = sorted(
-        multimodal.sample_frames(assets, every_ms=200, fake=False).collect(),
+        multimodal.sample_frames(assets, every_ms=200).collect(),
         key=lambda r: (r["asset_id"], r["frame_offset_ms"]),
     )
     # non-video rows dropped; offsets = latest sample ≤ each 200 ms tick
@@ -197,16 +197,16 @@ def test_sample_frames_real_path(spark):
 
 def test_video_assets_flow_through_real_feature_and_hash_paths(spark):
     """An MJPEG MP4's features/dHash equal those of its decoded middle
-    frame — video is first-class in the fake=False image machinery."""
+    frame — video is first-class in the image machinery."""
     v = mp4.synth_mp4(5, 32, 24, seed=4)
     mid = decode_jpeg(mp4.extract_mjpeg_frames(v)[2][1])
     assets = spark.createDataFrame(
         [(7, bytearray(v), "video/mp4", 32, 24, 500)],
         multimodal.ASSET_SCHEMA,
     )
-    (feat_row,) = multimodal.extract_features(assets, fake=False).collect()
+    (feat_row,) = multimodal.extract_features(assets).collect()
     assert np.allclose(feat_row["features"], multimodal.image_features(mid))
-    (hash_row,) = multimodal.image_hashes(assets, fake=False).collect()
+    (hash_row,) = multimodal.image_hashes(assets).collect()
     assert hash_row["dhash"] == multimodal.dhash64(mid)
 
 
@@ -225,7 +225,7 @@ def test_clean_assets_collapses_duplicate_videos(spark):
     )
     kept = sorted(
         r["asset_id"]
-        for r in multimodal.clean_assets(assets, fake=False).collect()
+        for r in multimodal.clean_assets(assets).collect()
     )
     assert kept == [1, 3]
 

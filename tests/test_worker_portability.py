@@ -21,12 +21,9 @@ n = e.queries()["ann_cosine_topk_np"](spark, "/root/testdata/sf0.001").count()
 assert n == 50, n
 from lakehouse_adventureworks2022_spark.operators import multimodal
 from lakehouse_adventureworks2022_spark.sources.readers import read_table
-assets = multimodal.attach_fake_assets(
-    read_table(spark, "/root/testdata/sf0.001", "documents").limit(5))
-rows = multimodal.extract_features(assets).collect()
-assert len(rows) == 5 and len(rows[0]["features"]) == multimodal.FEATURE_DIM
-# real-codec path (PPM/PNG/WAV decode closures — PNG regressed once in
-# r6 when its decoder was a module-level function, pickled by reference)
+# real-codec closures: every codec they call is a by-value factory
+# product (PNG regressed once in r6 when its decoder was a module-level
+# function, pickled by reference)
 arr = multimodal.decode_ppm(multimodal.synth_ppm(32, 16, seed=1))
 media = spark.createDataFrame(
     [(1, bytearray(multimodal.synth_ppm(32, 16, seed=1)),
@@ -36,15 +33,25 @@ media = spark.createDataFrame(
      (4, bytearray(multimodal.encode_jpeg(arr, quality=95)),
       "image/jpeg", 32, 16, None)],
     schema=multimodal.ASSET_SCHEMA)
-real = multimodal.extract_features(media, fake=False).collect()
+real = multimodal.extract_features(media).collect()
 assert len(real) == 4 and all(len(r["features"]) == 16 for r in real)
-hashes = multimodal.image_hashes(
-    media.filter("asset_id != 2"), fake=False).collect()
+hashes = multimodal.image_hashes(media.filter("asset_id != 2")).collect()
 # PPM and PNG hash identically (lossless); JPEG within near-dup range
 assert len(hashes) == 3
 hs = {r["asset_id"]: r["dhash"] for r in hashes}
 assert hs[1] == hs[3]
 assert bin((hs[1] ^ hs[4]) & (2**64 - 1)).count("1") <= 6
+(audio,) = multimodal.audio_hashes(media.filter("asset_id = 2")).collect()
+x, rate, _, _ = multimodal.decode_wav(multimodal.synth_wav(50))
+assert audio["dhash"] == multimodal.audio_fingerprint64(x, rate)
+(small,) = multimodal.resize_images(
+    media.filter("asset_id = 1"), max_px=8).collect()
+assert (small["width"], small["height"]) == (8, 4)
+assert multimodal.decode_ppm(bytes(small["content"])).shape == (4, 8, 3)
+# generated JPEG/PNG/PPM/WAV assets through the dedup composite
+docs = read_table(spark, sys.argv[1], "documents").limit(12)
+kept = multimodal.clean_assets(multimodal.attach_real_assets(docs)).collect()
+assert 0 < len(kept) <= 12, len(kept)
 # unigram Viterbi encode closure (by-value piece table)
 from lakehouse_adventureworks2022_spark.operators import unigram
 useg = unigram.unigram_segment(

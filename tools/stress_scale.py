@@ -355,7 +355,7 @@ def main() -> None:
 
     # multimodal real-decode throughput: rep×500 distinct synthetic
     # JPEGs (content varies per asset — no codec result reuse) through
-    # the Arrow-batched fake=False dHash path; linear in assets, zero
+    # the Arrow-batched real-decode dHash path; linear in assets, zero
     # shuffle, bounded executor memory = batch × asset size
     from lakehouse_adventureworks2022_spark.operators import (  # noqa: E402
         multimodal,
@@ -380,7 +380,7 @@ def main() -> None:
             for i in range(n_assets)
         ]
         assets = spark.createDataFrame(rows, multimodal.ASSET_SCHEMA)
-        return multimodal.image_hashes(assets.repartition(32), fake=False)
+        return multimodal.image_hashes(assets.repartition(32))
 
     run("jpeg_decode_dhash", _jpeg_assets)
 
@@ -407,7 +407,7 @@ def main() -> None:
             for i in range(n_assets)
         ]
         assets = spark.createDataFrame(rows, multimodal.ASSET_SCHEMA)
-        return multimodal.image_hashes(assets.repartition(32), fake=False)
+        return multimodal.image_hashes(assets.repartition(32))
 
     run("progressive_jpeg_decode_dhash", _progressive_assets)
 
@@ -428,9 +428,7 @@ def main() -> None:
             for i in range(n_videos)
         ]
         assets = spark.createDataFrame(rows, multimodal.ASSET_SCHEMA)
-        frames = multimodal.sample_frames(
-            assets.repartition(32), every_ms=100, fake=False
-        )
+        frames = multimodal.sample_frames(assets.repartition(32), every_ms=100)
         return multimodal.image_hashes(
             frames.select(
                 (F.col("asset_id") * 10_000 + F.col("frame_offset_ms") / 100)
@@ -442,7 +440,6 @@ def main() -> None:
                 "height",
                 F.lit(None).cast("int").alias("duration_ms"),
             ),
-            fake=False,
         )
 
     run("mp4_frame_extract_dhash", _video_frames)
@@ -454,7 +451,7 @@ def main() -> None:
     # all four codecs (JPEG/PNG/PPM/WAV) in the encode+decode path.
     def _clean_assets_full():
         assets = multimodal.attach_real_assets(big_docs)
-        return multimodal.clean_assets(assets, fake=False)
+        return multimodal.clean_assets(assets)
 
     run("clean_assets_full_composite", _clean_assets_full)
 
