@@ -13,16 +13,22 @@ restart markers since r13) and 12-BIT DCT, both extended
 sequential AND progressive (r8 — level shift 2048, uint16 output
 0..4095; the progressive encoder twin takes ``precision=12`` and the
 tests pin decode(progressive-12) == decode(sequential-12) exactly).
-Encoders: 4:4:4/4:2:0 baseline with the Annex K example quant tables
-(IJG quality scaling) and Annex K typical Huffman tables, a progressive
-encoder twin (libjpeg-like scan script) whose quantized coefficients
-are bit-identical to the baseline's — the tests pin
-decode(progressive) == decode(baseline) exactly — a lossless encoder
-twin whose round-trip the tests pin EXACT for every predictor across
-the full 2-16-bit precision range (r13; ≤8-bit keeps the Annex K DC
-table byte-identically, wider precisions switch to a flat 17-category
-table because their diffs reach SSSS 16), and a 12-bit SOF1 twin (flat
-16-category DC table: 12-bit DC diffs exceed Annex K's 11 categories).
+Encoders: one sequential DCT encoder, a progressive and a lossless
+twin, all over one entropy coder, one marker writer and one transform
+set. ``encode_jpeg`` is 4:4:4/4:2:0/grayscale baseline with the
+Annex K example quant tables (IJG quality scaling) and Annex K typical
+Huffman tables. ``encode_jpeg_12bit`` is the same sequential encoder
+fed 12-bit samples: level shift 2048, 16-bit DQT entries, a flat
+16-category DC table (12-bit DC diffs exceed Annex K's 11 categories),
+a flat 256-symbol AC table and the SOF1 marker. The progressive
+encoder twin (libjpeg-like scan script) quantizes bit-identically to
+the sequential one — the tests pin decode(progressive) ==
+decode(baseline) exactly. The lossless encoder twin's round-trip is
+pinned EXACT for every predictor across the full 2-16-bit precision
+range (r13; ≤8-bit keeps the Annex K DC table byte-identically, wider
+precisions switch to a flat 17-category table because their diffs
+reach SSSS 16). tests/test_jpeg.py also pins every encoder's output
+bytes over a fixed input matrix.
 
 Arithmetic coding, differential modes, DCT precisions other than 8/12,
 and the one lossless corner without an encoder twin to test against
@@ -30,10 +36,11 @@ and the one lossless corner without an encoder twin to test against
 ``NotImplementedError`` — the same honesty contract as the other
 codecs in ``operators/multimodal.py``.
 
-Worker portability: the public ``decode_jpeg``/``encode_jpeg`` are
-closures built by factories (non-importable qualnames ⇒ cloudpickle
-ships them BY VALUE), so ``mapInPandas`` stages can call them on
-workers that cannot import this package — see
+Worker portability: one factory, ``_build_jpeg_codec``, returns the
+public ``decode_jpeg`` and the four encoders as closures over its
+shared helpers. Their qualnames are not importable, so cloudpickle
+ships them and every helper they call BY VALUE, and ``mapInPandas``
+stages can call them on workers that cannot import this package — see
 tests/test_worker_portability.py and the memory of the r6 PNG
 regression.
 
@@ -110,47 +117,167 @@ AC_CHROMA_VALS = [
 JPEG_MAGIC = b"\xff\xd8\xff"
 
 
-def build_jpeg_decoder():
-    """Factory returning the baseline JPEG decoder as a by-value
-    closure (see module doc for why it must not be a module-level
-    function)."""
+def _build_jpeg_codec():
+    """The JPEG decoder and the four encoders as by-value closures over
+    one set of T.81 helpers (see the module doc for why they must not
+    be module-level functions): ``(decode_jpeg, encode_jpeg,
+    encode_jpeg_progressive, encode_jpeg_12bit, encode_jpeg_lossless)``."""
+    import struct
+
+    import numpy as np
+
     zigzag = list(ZIGZAG)
+    zz_idx = np.array(zigzag)
+    quant_base = (list(QUANT_LUMA), list(QUANT_CHROMA))
+    # Annex K (DC, AC) tables per table id: 0 luminance, 1 chrominance
+    annex_k = {
+        0: ((list(DC_LUMA_BITS), list(DC_LUMA_VALS)),
+            (list(AC_LUMA_BITS), list(AC_LUMA_VALS))),
+        1: ((list(DC_CHROMA_BITS), list(DC_CHROMA_VALS)),
+            (list(AC_CHROMA_BITS), list(AC_CHROMA_VALS))),
+    }
+    # flat canonical (bits, vals) tables where Annex K falls short:
+    # every run/size byte (128 len-8 + 128 len-9 codes, so EOBn run
+    # symbols are codable); 12-bit DC categories 0-15 (15 len-4 + 1
+    # len-5, never the all-ones len-4 code); lossless SSSS 0-16 above
+    # 8 bits (seventeen 5-bit codes)
+    flat_ac = ([0] * 7 + [128, 128] + [0] * 7, list(range(256)))
+    flat_dc12 = ([0, 0, 0, 15, 1] + [0] * 11, list(range(16)))
+    flat_dc17 = ([0, 0, 0, 0, 17] + [0] * 11, list(range(17)))
 
+    # orthonormal DCT-II basis: X = M.T @ x @ M, inverse x = M @ X @ M.T
+    k = np.arange(8)
+    alpha = np.full(8, np.sqrt(2.0 / 8.0))
+    alpha[0] = np.sqrt(1.0 / 8.0)
+    dct_m = np.cos((2 * k[:, None] + 1) * k[None, :] * np.pi / 16) * alpha
+
+    # ---- shared T.81 pieces ---------------------------------------------
+    def huffman_codes(bits, vals):
+        """Canonical codes (T.81 C.2): ``[(value, (length, code))]``."""
+        pairs, code, i = [], 0, 0
+        for ln in range(1, 17):
+            for _ in range(bits[ln - 1]):
+                pairs.append((vals[i], (ln, code)))
+                code += 1
+                i += 1
+            code <<= 1
+        return pairs
+
+    def comp_blocks(h, w, ch, cv, hmax, vmax):
+        """(rows, cols) of a component's own block grid — the MCUs of a
+        non-interleaved scan (T.81 A.2.2)."""
+        comp_h, comp_w = -(-h * cv // vmax), -(-w * ch // hmax)
+        return -(-comp_h // 8), -(-comp_w // 8)
+
+    def predict(p, y, x, sy, sx, default, sel):
+        """Lossless prediction of sample (y, x) from the reconstructed
+        samples ``p`` (T.81 H.1.2.1): the default 2^(P-Pt-1) where the
+        scan or restart interval began at (sy, sx), Ra along the rest of
+        that line, Rb down column 0, else predictor ``sel``."""
+        if y == sy:
+            return default if x == sx else p[y][x - 1]
+        if x == 0:
+            return p[y - 1][0]
+        ra, rb, rc = p[y][x - 1], p[y - 1][x], p[y - 1][x - 1]
+        if sel == 1:
+            return ra
+        if sel == 2:
+            return rb
+        if sel == 3:
+            return rc
+        if sel == 4:
+            return ra + rb - rc
+        if sel == 5:
+            return ra + ((rb - rc) >> 1)
+        if sel == 6:
+            return rb + ((ra - rc) >> 1)
+        return (ra + rb) >> 1
+
+    def bit_writer(out):
+        """Entropy-coded segment writer appending to ``out`` (T.81
+        F.1.2.3): MSB-first bits, 0x00 stuffed after every 0xFF byte,
+        1-padded flush, raw (never stuffed) RSTn markers."""
+        bitbuf = nbits = n_rst = 0
+
+        def put(ln, code):
+            nonlocal bitbuf, nbits
+            bitbuf = (bitbuf << ln) | code
+            nbits += ln
+            while nbits >= 8:
+                nbits -= 8
+                byte = (bitbuf >> nbits) & 0xFF
+                out.append(byte)
+                if byte == 0xFF:
+                    out.append(0x00)
+            bitbuf &= (1 << nbits) - 1  # keep only the bits not yet written
+
+        def put_coded(codes, run, v):
+            """Symbol ``run << 4 | SSSS`` for v's magnitude category,
+            then v's SSSS extend bits (T.81 F.1.2.1)."""
+            s = abs(v).bit_length()
+            put(*codes[(run << 4) | s])
+            if s:
+                put(s, v if v >= 0 else v + (1 << s) - 1)
+
+        def flush():
+            if nbits:
+                put(8 - nbits, (1 << (8 - nbits)) - 1)
+
+        def restart():
+            nonlocal n_rst
+            flush()
+            out.extend((0xFF, 0xD0 + n_rst))
+            n_rst = (n_rst + 1) % 8
+
+        return put, put_coded, flush, restart
+
+    def seg(marker, payload):
+        return bytes([0xFF, marker]) + struct.pack(">H", len(payload) + 2) + payload
+
+    def dqt(tq, qnat, wide):
+        """DQT of a natural-order table, entries in zigzag order;
+        16-bit (Pq=1) when ``wide``."""
+        tab = [int(qnat[z]) for z in zigzag]
+        if wide:
+            return seg(0xDB, bytes([0x10 | tq]) + struct.pack(">64H", *tab))
+        return seg(0xDB, bytes([tq, *tab]))
+
+    def dht(tc, th, table):
+        bits, vals = table
+        return seg(0xC4, bytes([(tc << 4) | th, *bits, *vals]))
+
+    def sof(marker, precision, h, w, comps):
+        """SOFn; ``comps`` are (id, h_samp << 4 | v_samp, tq)."""
+        return seg(
+            marker,
+            bytes([precision]) + struct.pack(">HH", h, w)
+            + bytes([len(comps), *(b for c in comps for b in c)]),
+        )
+
+    def sos(comps, ss, se, ah, al):
+        """SOS; ``comps`` are (id, dc table << 4 | ac table)."""
+        return seg(
+            0xDA,
+            bytes([len(comps), *(b for c in comps for b in c), ss, se,
+                   (ah << 4) | al]),
+        )
+
+    def dri(interval):
+        return seg(0xDD, struct.pack(">H", interval))
+
+    # ---- decoder -----------------------------------------------------------
     def decode_jpeg(data: bytes):
-        import struct
-
-        import numpy as np
-
         if data[:3] != b"\xff\xd8\xff":
             raise ValueError("not a JPEG (bad SOI)")
-
-        # DCT-III (IDCT) basis matrix, orthonormal
-        k = np.arange(8)
-        basis = np.cos((2 * k[:, None] + 1) * k[None, :] * np.pi / 16)
-        alpha = np.full(8, np.sqrt(2.0 / 8.0))
-        alpha[0] = np.sqrt(1.0 / 8.0)
-        idct_m = basis * alpha[None, :]  # x = M @ X @ M.T
 
         qt: dict = {}
         huff: dict = {}  # (class, id) -> (length, code) -> value
         frame = None
         progressive = False
         lossless = False
-        loss_px: dict = {}  # component id -> (h, w) int32 sample grid
+        loss_px: dict = {}  # component id -> [row][col] sample lists
         loss_pt = 0  # point transform Al of the lossless scan
         restart_interval = 0
-
-        def build_huff(bits, vals):
-            table = {}
-            code = 0
-            i = 0
-            for ln in range(1, 17):
-                for _ in range(bits[ln - 1]):
-                    table[(ln, code)] = vals[i]
-                    code += 1
-                    i += 1
-                code <<= 1
-            return table
 
         # --- entropy bit reader (stuffing stripped lazily) -------------
         bitpos = 0
@@ -386,10 +513,10 @@ def build_jpeg_decoder():
                 arr = coefs[cs]
                 # non-interleaved: MCU = one block over the component's
                 # OWN (unpadded-to-MCU) block grid, T.81 A.2.2
-                comp_w = -(-frame["w"] * comp["h"] // geom["hmax"])
-                comp_h = -(-frame["h"] * comp["v"] // geom["vmax"])
-                bw = -(-comp_w // 8)
-                bh = -(-comp_h // 8)
+                bh, bw = comp_blocks(
+                    frame["h"], frame["w"], comp["h"], comp["v"],
+                    geom["hmax"], geom["vmax"],
+                )
                 for byy in range(bh):
                     for bxx in range(bw):
                         if (
@@ -454,31 +581,8 @@ def build_jpeg_decoder():
                         s = decode_sym(huff[(0, tdc)])
                         diff = 32768 if s == 16 else receive_extend(s)
                         arr = loss_px[cs]
-                        if y == sy and x == sx:
-                            px = default
-                        elif y == sy:
-                            px = int(arr[y, x - 1])
-                        elif x == 0:
-                            px = int(arr[y - 1, 0])
-                        else:
-                            ra = int(arr[y, x - 1])
-                            rb = int(arr[y - 1, x])
-                            rc = int(arr[y - 1, x - 1])
-                            if pred_sel == 1:
-                                px = ra
-                            elif pred_sel == 2:
-                                px = rb
-                            elif pred_sel == 3:
-                                px = rc
-                            elif pred_sel == 4:
-                                px = ra + rb - rc
-                            elif pred_sel == 5:
-                                px = ra + ((rb - rc) >> 1)
-                            elif pred_sel == 6:
-                                px = rb + ((ra - rc) >> 1)
-                            else:  # 7
-                                px = (ra + rb) >> 1
-                        arr[y, x] = (px + diff) & 0xFFFF
+                        px = predict(arr, y, x, sy, sx, default, pred_sel)
+                        arr[y][x] = (px + diff) & 0xFFFF
             return next_marker()
 
         # --- marker loop: execute every scan up to EOI ------------------
@@ -502,27 +606,27 @@ def build_jpeg_decoder():
             if pos + 2 > len(data):
                 raise ValueError("truncated JPEG (no segment length)")
             (seglen,) = struct.unpack(">H", data[pos : pos + 2])
-            seg = data[pos + 2 : pos + seglen]
+            body = data[pos + 2 : pos + seglen]
             if marker == 0xDB:  # DQT
                 p = 0
-                while p < len(seg):
-                    pq, tq = seg[p] >> 4, seg[p] & 0xF
+                while p < len(body):
+                    pq, tq = body[p] >> 4, body[p] & 0xF
                     p += 1
                     if pq:  # 16-bit table entries, big-endian
                         qt[tq] = np.array(
-                            struct.unpack(">64H", seg[p : p + 128]),
+                            struct.unpack(">64H", body[p : p + 128]),
                             dtype=np.int32,
                         )
                         p += 128
                     else:
                         qt[tq] = np.array(
-                            list(seg[p : p + 64]), dtype=np.int32
+                            list(body[p : p + 64]), dtype=np.int32
                         )
                         p += 64
             elif marker in (0xC0, 0xC1, 0xC2, 0xC3):  # SOF0/1/2 DCT, SOF3 lossless
-                if len(seg) < 6 or len(seg) < 6 + seg[5] * 3:
+                if len(body) < 6 or len(body) < 6 + body[5] * 3:
                     raise ValueError("truncated SOF segment")
-                prec, h, w, nc = seg[0], *struct.unpack(">HH", seg[1:5]), seg[5]
+                prec, h, w, nc = body[0], *struct.unpack(">HH", body[1:5]), body[5]
                 lossless = marker == 0xC3
                 # DCT processes: 8-bit baseline + 12-bit extended
                 # sequential/progressive (r8). Lossless (r13): the full
@@ -539,7 +643,7 @@ def build_jpeg_decoder():
                     raise NotImplementedError(f"{prec}-bit JPEG")
                 comps = []
                 for c in range(nc):
-                    cid, hv, tq = seg[6 + c * 3 : 9 + c * 3]
+                    cid, hv, tq = body[6 + c * 3 : 9 + c * 3]
                     comps.append(
                         {"id": cid, "h": hv >> 4, "v": hv & 0xF, "tq": tq}
                     )
@@ -551,7 +655,7 @@ def build_jpeg_decoder():
                             "lossless JPEG (SOF3) with subsampled components"
                         )
                     for c in comps:
-                        loss_px[c["id"]] = np.zeros((h, w), dtype=np.int32)
+                        loss_px[c["id"]] = [[0] * w for _ in range(h)]
                 else:
                     alloc_coefs()
             elif marker in (0xC5, 0xC6, 0xC7):
@@ -562,24 +666,26 @@ def build_jpeg_decoder():
                 raise NotImplementedError("arithmetic-coded JPEG")
             elif marker == 0xC4:  # DHT
                 p = 0
-                while p < len(seg):
-                    tc, th = seg[p] >> 4, seg[p] & 0xF
-                    bits = list(seg[p + 1 : p + 17])
+                while p < len(body):
+                    tc, th = body[p] >> 4, body[p] & 0xF
+                    bits = list(body[p + 1 : p + 17])
                     nvals = sum(bits)
-                    vals = list(seg[p + 17 : p + 17 + nvals])
-                    huff[(tc, th)] = build_huff(bits, vals)
+                    vals = list(body[p + 17 : p + 17 + nvals])
+                    huff[(tc, th)] = {
+                        lc: v for v, lc in huffman_codes(bits, vals)
+                    }
                     p += 17 + nvals
             elif marker == 0xDD:  # DRI
-                (restart_interval,) = struct.unpack(">H", seg[:2])
+                (restart_interval,) = struct.unpack(">H", body[:2])
             elif marker == 0xDA:  # SOS
                 if frame is None:
                     raise ValueError("SOS before SOF")
-                ns = seg[0]
+                ns = body[0]
                 scan_comps = []
                 for c in range(ns):
-                    cs, tsel = seg[1 + c * 2 : 3 + c * 2]
+                    cs, tsel = body[1 + c * 2 : 3 + c * 2]
                     scan_comps.append((cs, tsel >> 4, tsel & 0xF))
-                ss, se, a = seg[1 + ns * 2 : 4 + ns * 2]
+                ss, se, a = body[1 + ns * 2 : 4 + ns * 2]
                 if lossless:
                     pos = decode_lossless_scan(
                         scan_comps, ss, a & 0xF, pos + seglen
@@ -606,9 +712,11 @@ def build_jpeg_decoder():
             lmaxv = (1 << frame["prec"]) - 1
             ldtype = np.uint8 if frame["prec"] <= 8 else np.uint16
             planes = [
-                np.clip(loss_px[c["id"]] << loss_pt, 0, lmaxv).astype(
-                    ldtype
-                )
+                np.clip(
+                    np.array(loss_px[c["id"]], dtype=np.int64) << loss_pt,
+                    0,
+                    lmaxv,
+                ).astype(ldtype)
                 for c in frame["comps"]
             ]
             if len(planes) == 1:
@@ -638,7 +746,7 @@ def build_jpeg_decoder():
             nat[:, zigzag] = deq  # unzigzag into natural order
             blocks = nat.reshape(-1, 8, 8)
             px = (
-                np.einsum("ij,njk,lk->nil", idct_m, blocks, idct_m) + center
+                np.einsum("ij,njk,lk->nil", dct_m, blocks, dct_m) + center
             )
             plane = (
                 px.reshape(bh, bw, 8, 8)
@@ -658,21 +766,155 @@ def build_jpeg_decoder():
         b = y + 1.772 * cb
         return np.clip(np.dstack([r, g, b]), 0, maxv).astype(out_dtype)
 
-    return decode_jpeg
+    # ---- DCT encoder front end ---------------------------------------
+    def samples(arr, grayscale, precision=None):
+        """float64 HxWx3 samples and the grayscale flag (a 2-D input is
+        grayscale); with a ``precision``, out-of-range samples raise."""
+        a = np.asarray(arr, dtype=np.float64)
+        if a.ndim == 2:
+            a, grayscale = a[:, :, None].repeat(3, axis=2), True
+        if precision and (a.max() > (1 << precision) - 1 or a.min() < 0):
+            raise ValueError(
+                f"{precision}-bit samples must be in 0..{(1 << precision) - 1}"
+            )
+        return a, grayscale
 
+    def quant_tables(quality, qmax):
+        """IJG quality scaling of the Annex K tables: (luma, chroma) in
+        natural order, clipped to 1..qmax."""
+        q = max(1, min(100, quality))
+        scale = 5000 // q if q < 50 else 200 - 2 * q
+        return [
+            np.clip((np.array(b, dtype=np.int64) * scale + 50) // 100, 1, qmax)
+            for b in quant_base
+        ]
 
-def build_jpeg_encoder():
-    """Factory returning a minimal baseline 4:4:4 encoder (Annex K
-    tables, IJG quality scaling) as a by-value closure."""
-    zigzag = list(ZIGZAG)
-    ql, qc = list(QUANT_LUMA), list(QUANT_CHROMA)
-    tables = {
-        "dc0": (list(DC_LUMA_BITS), list(DC_LUMA_VALS)),
-        "ac0": (list(AC_LUMA_BITS), list(AC_LUMA_VALS)),
-        "dc1": (list(DC_CHROMA_BITS), list(DC_CHROMA_VALS)),
-        "ac1": (list(AC_CHROMA_BITS), list(AC_CHROMA_VALS)),
-    }
+    def half(p):
+        """4:2:0 chroma: 2×2 means over the edge-padded plane."""
+        p2 = np.pad(p, ((0, p.shape[0] % 2), (0, p.shape[1] % 2)), mode="edge")
+        return (p2[0::2, 0::2] + p2[0::2, 1::2] + p2[1::2, 0::2] + p2[1::2, 1::2]) / 4.0
 
+    def component_plan(a, grayscale, subsampling, center):
+        """``([(plane, h_samp, v_samp, tq)], mcux, mcuy)``: YCbCr with
+        chroma centred at ``center``, grayscale / 4:4:4 / 4:2:0, every
+        plane edge-padded to whole MCUs."""
+        if subsampling not in ("444", "420"):
+            raise ValueError(f"subsampling must be 444 or 420, got {subsampling}")
+        h, w, _ = a.shape
+        r, g, b = a[:, :, 0], a[:, :, 1], a[:, :, 2]
+        y = 0.299 * r + 0.587 * g + 0.114 * b
+        if grayscale:
+            plan = [(y, 1, 1, 0)]
+        else:
+            cb = -0.168736 * r - 0.331264 * g + 0.5 * b + center
+            cr = 0.5 * r - 0.418688 * g - 0.081312 * b + center
+            if subsampling == "420":
+                plan = [(y, 2, 2, 0), (half(cb), 1, 1, 1), (half(cr), 1, 1, 1)]
+            else:
+                plan = [(y, 1, 1, 0), (cb, 1, 1, 1), (cr, 1, 1, 1)]
+        mcux = -(-w // (8 * max(p[1] for p in plan)))
+        mcuy = -(-h // (8 * max(p[2] for p in plan)))
+        padded = [
+            (np.pad(p, ((0, mcuy * cv * 8 - p.shape[0]),
+                        (0, mcux * ch * 8 - p.shape[1])), mode="edge"),
+             ch, cv, tq)
+            for p, ch, cv, tq in plan
+        ]
+        return padded, mcux, mcuy
+
+    def quantize(plane, qnat, center):
+        """Forward DCT + quantization of every block of ``plane``:
+        ``[row][col]`` lists of 64 zigzag-ordered ints. The per-block
+        ``M.T @ (block - center) @ M`` and ``np.round`` are deliberate:
+        a batched einsum changes the float summation order and flips
+        coefficients sitting exactly on a .5 rounding boundary, which
+        breaks the tests' decode(progressive) == decode(sequential)
+        exact equality."""
+        nat_q = np.asarray(qnat, dtype=np.float64).reshape(8, 8)
+        bh, bw = plane.shape[0] // 8, plane.shape[1] // 8
+        qz = np.zeros((bh, bw, 64), dtype=np.int64)
+        for by in range(bh):
+            for bx in range(bw):
+                block = plane[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8]
+                co = dct_m.T @ (block - center) @ dct_m
+                qz[by, bx] = np.round(co / nat_q).reshape(64)
+        return qz[:, :, zz_idx].tolist()
+
+    def frame_header(marker, precision, h, w, plan, qnat, wide):
+        """SOI, a DQT per quant table the plan uses, and the SOFn."""
+        out = bytearray(b"\xff\xd8")
+        for tq in sorted({tq for *_, tq in plan}):
+            out += dqt(tq, qnat[tq], wide)
+        return out + sof(marker, precision, h, w,
+                         [(ci + 1, (ch << 4) | cv, tq)
+                          for ci, (_, ch, cv, tq) in enumerate(plan)])
+
+    def mcu_blocks(plan, coefs, mcux, mcuy):
+        """Interleaved scan order (T.81 A.2.3): per MCU, the
+        ``(component, block)`` pairs of each component's v×h blocks."""
+        for my in range(mcuy):
+            for mx in range(mcux):
+                yield [
+                    (ci, coefs[ci][my * cv + by][mx * ch + bx])
+                    for ci, (_, ch, cv, _) in enumerate(plan)
+                    for by in range(cv)
+                    for bx in range(ch)
+                ]
+
+    def encode_block(zz, pred, dc_codes, ac_codes, put_coded):
+        """One sequential block (T.81 F.1.2): the DC difference, AC
+        run/size symbols with ZRLs, and EOB unless coefficient 63 is
+        nonzero. Returns the block's DC, the next predictor."""
+        put_coded(dc_codes, 0, zz[0] - pred)
+        last = 63
+        while last > 0 and zz[last] == 0:
+            last -= 1
+        run = 0
+        for v in zz[1 : last + 1]:
+            if v == 0:
+                run += 1
+                continue
+            while run > 15:
+                put_coded(ac_codes, 15, 0)
+                run -= 16
+            put_coded(ac_codes, run, v)
+            run = 0
+        if last < 63:
+            put_coded(ac_codes, 0, 0)
+        return zz[0]
+
+    def sequential(a, grayscale, quality, subsampling, restart_interval, precision):
+        """Sequential DCT encode: 8-bit baseline (SOF0, Annex K tables
+        per component class, 8-bit DQT) or 12-bit extended (SOF1,
+        16-bit DQT, the flat DC/AC tables for every component)."""
+        center = float(1 << (precision - 1))
+        plan, mcux, mcuy = component_plan(a, grayscale, subsampling, center)
+        wide = precision == 12
+        qnat = quant_tables(quality, 65535 if wide else 255)
+        tables = {0: (flat_dc12, flat_ac)} if wide else annex_k
+        ths = [0 if wide else tq for *_, tq in plan]
+        out = frame_header(0xC1 if wide else 0xC0, precision, *a.shape[:2],
+                           plan, qnat, wide)
+        for th in sorted(set(ths)):
+            out += dht(0, th, tables[th][0]) + dht(1, th, tables[th][1])
+        if restart_interval:
+            out += dri(restart_interval)
+        out += sos([(ci + 1, (th << 4) | th) for ci, th in enumerate(ths)],
+                   0, 63, 0, 0)
+        codes = {th: [dict(huffman_codes(*t)) for t in tables[th]] for th in set(ths)}
+        coefs = [quantize(p, qnat[tq], center) for p, _, _, tq in plan]
+        _, put_coded, flush, restart = bit_writer(out)
+        preds = [0] * len(plan)
+        for n_mcu, mcu in enumerate(mcu_blocks(plan, coefs, mcux, mcuy)):
+            if restart_interval and n_mcu and n_mcu % restart_interval == 0:
+                restart()
+                preds = [0] * len(plan)
+            for ci, zz in mcu:
+                preds[ci] = encode_block(zz, preds[ci], *codes[ths[ci]], put_coded)
+        flush()
+        return bytes(out + b"\xff\xd9")
+
+    # ---- the codecs ----------------------------------------------------
     def encode_jpeg(
         arr,
         quality: int = 85,
@@ -680,237 +922,18 @@ def build_jpeg_encoder():
         restart_interval: int = 0,
         grayscale: bool = False,
     ) -> bytes:
-        import struct
+        """Baseline (SOF0) encode: Annex K tables, IJG ``quality``,
+        4:4:4 or 4:2:0 ``subsampling``, optional restart markers. A 2-D
+        input is grayscale."""
+        a, grayscale = samples(arr, grayscale)
+        return sequential(a, grayscale, quality, subsampling, restart_interval, 8)
 
-        import numpy as np
-
-        a = np.asarray(arr, dtype=np.float64)
-        if a.ndim == 2:
-            a, grayscale = a[:, :, None].repeat(3, axis=2), True
-        h, w, _ = a.shape
-        if subsampling not in ("444", "420"):
-            raise ValueError(f"subsampling must be 444 or 420, got {subsampling}")
-
-        # IJG quality scaling; tables kept in NATURAL order for the
-        # math, emitted in zigzag order in the DQT payload (per spec)
-        q = max(1, min(100, quality))
-        scale = 5000 // q if q < 50 else 200 - 2 * q
-        def scaled(base):
-            t = (np.array(base, dtype=np.int64) * scale + 50) // 100
-            return np.clip(t, 1, 255).astype(np.int32)
-        qly_nat, qlc_nat = scaled(ql), scaled(qc)
-        zz_idx = np.array(zigzag)
-        qly_payload = qly_nat[zz_idx]
-        qlc_payload = qlc_nat[zz_idx]
-
-        # forward DCT matrix (orthonormal DCT-II): X = M.T @ x @ M
-        k = np.arange(8)
-        basis = np.cos((2 * k[:, None] + 1) * k[None, :] * np.pi / 16)
-        alpha = np.full(8, np.sqrt(2.0 / 8.0))
-        alpha[0] = np.sqrt(1.0 / 8.0)
-        m = basis * alpha[None, :]
-
-        # RGB → YCbCr
-        r, g, b = a[:, :, 0], a[:, :, 1], a[:, :, 2]
-        y = 0.299 * r + 0.587 * g + 0.114 * b
-        cb = -0.168736 * r - 0.331264 * g + 0.5 * b + 128.0
-        cr = 0.5 * r - 0.418688 * g - 0.081312 * b + 128.0
-
-        def enc_table(bits, vals):
-            codes = {}
-            code = 0
-            i = 0
-            for ln in range(1, 17):
-                for _ in range(bits[ln - 1]):
-                    codes[vals[i]] = (ln, code)
-                    code += 1
-                    i += 1
-                code <<= 1
-            return codes
-
-        enc = {kk: enc_table(*vv) for kk, vv in tables.items()}
-
-        out = bytearray()
-        bitbuf = 0
-        nbits = 0
-
-        def put(ln, code):
-            nonlocal bitbuf, nbits
-            bitbuf = (bitbuf << ln) | code
-            nbits += ln
-            while nbits >= 8:
-                nbits -= 8
-                byte = (bitbuf >> nbits) & 0xFF
-                out.append(byte)
-                if byte == 0xFF:
-                    out.append(0x00)
-
-        def magnitude(v):
-            av, s = abs(v), 0
-            while av:
-                av >>= 1
-                s += 1
-            return s
-
-        def encode_block(blockf, qtab, dc_codes, ac_codes, pred):
-            coeffs = m.T @ (blockf - 128.0) @ m
-            # quantize with the table laid out in NATURAL order, then
-            # emit in zigzag order (the DQT payload is zigzag per spec)
-            nat_q = np.zeros(64)
-            nat_q[zigzag] = qtab
-            qz = np.round(coeffs.reshape(64) / nat_q).astype(np.int64)
-            zz = qz[zigzag]
-            diff = int(zz[0]) - pred
-            s = magnitude(diff)
-            ln, code = dc_codes[s]
-            put(ln, code)
-            if s:
-                d = diff if diff >= 0 else diff + (1 << s) - 1
-                put(s, d & ((1 << s) - 1))
-            run = 0
-            last = 63
-            while last > 0 and zz[last] == 0:
-                last -= 1
-            for i in range(1, last + 1):
-                v = int(zz[i])
-                if v == 0:
-                    run += 1
-                    continue
-                while run > 15:
-                    ln, code = ac_codes[0xF0]
-                    put(ln, code)
-                    run -= 16
-                s = magnitude(v)
-                ln, code = ac_codes[(run << 4) | s]
-                put(ln, code)
-                d = v if v >= 0 else v + (1 << s) - 1
-                put(s, d & ((1 << s) - 1))
-                run = 0
-            if last < 63:
-                ln, code = ac_codes[0x00]
-                put(ln, code)
-            return int(zz[0])
-
-        # component plan: (plane, h_samp, v_samp, quant payload, dc/ac keys)
-        def downsample2(p):
-            p2 = np.pad(
-                p, ((0, p.shape[0] % 2), (0, p.shape[1] % 2)), mode="edge"
-            )
-            return (
-                p2[0::2, 0::2] + p2[0::2, 1::2] + p2[1::2, 0::2] + p2[1::2, 1::2]
-            ) / 4.0
-
-        if grayscale:
-            plan = [(y, 1, 1, qly_payload, "dc0", "ac0")]
-        elif subsampling == "420":
-            plan = [
-                (y, 2, 2, qly_payload, "dc0", "ac0"),
-                (downsample2(cb), 1, 1, qlc_payload, "dc1", "ac1"),
-                (downsample2(cr), 1, 1, qlc_payload, "dc1", "ac1"),
-            ]
-        else:
-            plan = [
-                (y, 1, 1, qly_payload, "dc0", "ac0"),
-                (cb, 1, 1, qlc_payload, "dc1", "ac1"),
-                (cr, 1, 1, qlc_payload, "dc1", "ac1"),
-            ]
-        hmax = max(p[1] for p in plan)
-        vmax = max(p[2] for p in plan)
-        mcux = -(-w // (8 * hmax))
-        mcuy = -(-h // (8 * vmax))
-
-        # pad each plane to its full MCU-grid extent by edge replication
-        def pad_to(p, rows, cols):
-            return np.pad(
-                p,
-                ((0, rows - p.shape[0]), (0, cols - p.shape[1])),
-                mode="edge",
-            )
-
-        plan = [
-            (pad_to(p, mcuy * cv * 8, mcux * ch * 8), ch, cv, qp, dk, ak)
-            for p, ch, cv, qp, dk, ak in plan
-        ]
-
-        def flush_bits():
-            nonlocal nbits
-            if nbits:
-                put(8 - nbits, (1 << (8 - nbits)) - 1)  # pad with 1s
-
-        preds = [0] * len(plan)
-        n_mcu = 0
-        for my in range(mcuy):
-            for mx in range(mcux):
-                if restart_interval and n_mcu and n_mcu % restart_interval == 0:
-                    flush_bits()
-                    out += bytes(
-                        [0xFF, 0xD0 + ((n_mcu // restart_interval - 1) % 8)]
-                    )
-                    preds = [0] * len(plan)
-                n_mcu += 1
-                for ci, (p, ch, cv, qp, dk, ak) in enumerate(plan):
-                    for by in range(cv):
-                        for bx in range(ch):
-                            y0 = (my * cv + by) * 8
-                            x0 = (mx * ch + bx) * 8
-                            preds[ci] = encode_block(
-                                p[y0 : y0 + 8, x0 : x0 + 8],
-                                qp,
-                                enc[dk],
-                                enc[ak],
-                                preds[ci],
-                            )
-        flush_bits()
-
-        def seg(marker, payload):
-            return bytes([0xFF, marker]) + struct.pack(">H", len(payload) + 2) + payload
-
-        def dqt(tid, tab):
-            return seg(0xDB, bytes([tid]) + bytes(int(x) for x in tab))
-
-        def dht(tc, th, bits, vals):
-            return seg(0xC4, bytes([(tc << 4) | th]) + bytes(bits) + bytes(vals))
-
-        sof_body = bytes([8]) + struct.pack(">HH", h, w) + bytes([len(plan)])
-        sos_body = bytes([len(plan)])
-        for ci, (_, ch, cv, _, dk, ak) in enumerate(plan):
-            tq = 0 if dk == "dc0" else 1
-            sof_body += bytes([ci + 1, (ch << 4) | cv, tq])
-            sos_body += bytes([ci + 1, (tq << 4) | tq])
-        sos_body += bytes([0, 63, 0])
-
-        header = b"\xff\xd8" + dqt(0, qly_payload)
-        if not grayscale:
-            header += dqt(1, qlc_payload)
-        header += seg(0xC0, sof_body)
-        header += dht(0, 0, *tables["dc0"]) + dht(1, 0, *tables["ac0"])
-        if not grayscale:
-            header += dht(0, 1, *tables["dc1"]) + dht(1, 1, *tables["ac1"])
-        if restart_interval:
-            header += seg(0xDD, struct.pack(">H", restart_interval))
-        return header + seg(0xDA, sos_body) + bytes(out) + b"\xff\xd9"
-
-    return encode_jpeg
-
-
-def build_progressive_encoder():
-    """Factory returning a progressive (SOF2) encoder as a by-value
-    closure — the encode-side twin that makes the progressive decode
-    path testable without libjpeg (same role as mux_mjpeg for MP4).
-
-    Scan script mirrors the libjpeg default: an interleaved DC-first
-    scan at Al=1, per-component AC-first scans with spectral selection
-    (luma split 1-5 / 6-63), then successive-approximation refinement
-    scans (AC Ah=2→Al=1 where used, DC Ah=1→Al=0, AC Ah=1→Al=0). Uses
-    ONE flat 256-symbol Huffman table (128 len-8 + 128 len-9 canonical
-    codes) for every class/id so EOBn run symbols (0x10, 0x20, …) —
-    which the Annex K tables lack — are codable; EOB runs batch across
-    blocks exactly as T.81 G.1.2.2 allows. Quantized coefficients are
-    IDENTICAL to the baseline encoder's at the same quality, so
-    ``decode(progressive(img)) == decode(baseline(img))`` exactly — the
-    cross-check the tests pin."""
-    zigzag = list(ZIGZAG)
-    ql, qc = list(QUANT_LUMA), list(QUANT_CHROMA)
+    def encode_jpeg_12bit(arr, quality: int = 95, grayscale: bool = False) -> bytes:
+        """12-bit extended sequential (SOF1) encode of 0..4095 samples,
+        grayscale or 4:4:4: the baseline encoder with the flat tables,
+        whose quant tables scale past 255 into 16-bit DQT entries."""
+        a, grayscale = samples(arr, grayscale, 12)
+        return sequential(a, grayscale, quality, "444", 0, 12)
 
     def encode_jpeg_progressive(
         arr,
@@ -919,219 +942,49 @@ def build_progressive_encoder():
         grayscale: bool = False,
         precision: int = 8,
     ) -> bytes:
-        import struct
+        """Progressive (SOF2) encode, 8- or 12-bit, the encode-side twin
+        that makes the progressive decode path testable without libjpeg.
 
-        import numpy as np
-
+        The scan script mirrors the libjpeg default: an interleaved
+        DC-first scan at Al=1, per-component AC-first scans with
+        spectral selection (luma split 1-5 / 6-63), then
+        successive-approximation refinement scans. ONE flat 256-symbol
+        Huffman table serves every class and id, so the EOBn run
+        symbols the Annex K tables lack are codable. Coefficients are
+        quantized exactly as the sequential encoder does, so
+        ``decode(progressive(img)) == decode(baseline(img))``."""
         if precision not in (8, 12):
             raise ValueError(f"precision must be 8 or 12, got {precision}")
         center = float(1 << (precision - 1))
-        a = np.asarray(arr, dtype=np.float64)
-        if a.ndim == 2:
-            a, grayscale = a[:, :, None].repeat(3, axis=2), True
-        if a.max() > (1 << precision) - 1 or a.min() < 0:
-            raise ValueError(
-                f"{precision}-bit samples must be in 0..{(1 << precision) - 1}"
-            )
-        h, w, _ = a.shape
-        if subsampling not in ("444", "420"):
-            raise ValueError(f"subsampling must be 444 or 420, got {subsampling}")
-
-        q = max(1, min(100, quality))
-        scale = 5000 // q if q < 50 else 200 - 2 * q
-
-        def scaled(base):
-            t = (np.array(base, dtype=np.int64) * scale + 50) // 100
-            return np.clip(t, 1, 255).astype(np.int32)
-
-        qly_nat, qlc_nat = scaled(ql), scaled(qc)
-        zz_idx = np.array(zigzag)
-
-        k = np.arange(8)
-        basis = np.cos((2 * k[:, None] + 1) * k[None, :] * np.pi / 16)
-        alpha = np.full(8, np.sqrt(2.0 / 8.0))
-        alpha[0] = np.sqrt(1.0 / 8.0)
-        m = basis * alpha[None, :]
-
-        r_, g_, b_ = a[:, :, 0], a[:, :, 1], a[:, :, 2]
-        y = 0.299 * r_ + 0.587 * g_ + 0.114 * b_
-        cb = -0.168736 * r_ - 0.331264 * g_ + 0.5 * b_ + center
-        cr = 0.5 * r_ - 0.418688 * g_ - 0.081312 * b_ + center
-
-        def downsample2(p):
-            p2 = np.pad(
-                p, ((0, p.shape[0] % 2), (0, p.shape[1] % 2)), mode="edge"
-            )
-            return (
-                p2[0::2, 0::2] + p2[0::2, 1::2] + p2[1::2, 0::2] + p2[1::2, 1::2]
-            ) / 4.0
-
-        if grayscale:
-            plan = [(y, 1, 1, qly_nat, 0)]
-        elif subsampling == "420":
-            plan = [
-                (y, 2, 2, qly_nat, 0),
-                (downsample2(cb), 1, 1, qlc_nat, 1),
-                (downsample2(cr), 1, 1, qlc_nat, 1),
-            ]
-        else:
-            plan = [
-                (y, 1, 1, qly_nat, 0),
-                (cb, 1, 1, qlc_nat, 1),
-                (cr, 1, 1, qlc_nat, 1),
-            ]
+        a, grayscale = samples(arr, grayscale, precision)
+        h, w = a.shape[:2]
+        plan, mcux, mcuy = component_plan(a, grayscale, subsampling, center)
         hmax = max(p[1] for p in plan)
         vmax = max(p[2] for p in plan)
-        mcux = -(-w // (8 * hmax))
-        mcuy = -(-h // (8 * vmax))
+        qnat = quant_tables(quality, 255)
+        coefs = [quantize(p, qnat[tq], center) for p, _, _, tq in plan]
+        codes = dict(huffman_codes(*flat_ac))
+        out = frame_header(0xC2, precision, h, w, plan, qnat, False)
+        for tc in (0, 1):
+            for th in (0,) if grayscale else (0, 1):
+                out += dht(tc, th, flat_ac)
+        put, put_coded, flush, _ = bit_writer(out)
 
-        # quantized zigzag coefficients per component, MCU-padded grid.
-        # BIT-IDENTICAL math to the baseline encoder (same per-block
-        # `m.T @ (block-128) @ m` expression, same np.round): a batched
-        # einsum changes float summation order and flips coefficients
-        # sitting exactly on a .5 rounding boundary, breaking the
-        # decode(progressive) == decode(baseline) exact-equality test
-        comp_coefs = []
-        for p, ch, cv, qnat, _tq in plan:
-            rows, cols = mcuy * cv * 8, mcux * ch * 8
-            p = np.pad(
-                p,
-                ((0, rows - p.shape[0]), (0, cols - p.shape[1])),
-                mode="edge",
-            )
-            bh, bw = rows // 8, cols // 8
-            nat_q = qnat.reshape(8, 8).astype(np.float64)
-            qz = np.zeros((bh, bw, 64), dtype=np.int64)
-            for byy in range(bh):
-                for bxx in range(bw):
-                    blockf = p[byy * 8 : byy * 8 + 8, bxx * 8 : bxx * 8 + 8]
-                    co = m.T @ (blockf - center) @ m
-                    qz[byy, bxx] = np.round(co / nat_q).reshape(64)
-            comp_coefs.append(qz[:, :, zz_idx])
+        def dc_scan(ah, al):
+            preds = [0] * len(plan)
+            for mcu in mcu_blocks(plan, coefs, mcux, mcuy):
+                for ci, zz in mcu:
+                    dc = zz[0] >> al
+                    if ah:
+                        put(1, dc & 1)
+                    else:
+                        put_coded(codes, 0, dc - preds[ci])
+                        preds[ci] = dc
 
-        # flat 256-symbol canonical Huffman table (len 8 ×128 + len 9 ×128)
-        flat_bits = [0] * 7 + [128, 128] + [0] * 7
-        flat_vals = list(range(256))
-        codes = {}
-        code = 0
-        i = 0
-        for ln in range(1, 17):
-            for _ in range(flat_bits[ln - 1]):
-                codes[flat_vals[i]] = (ln, code)
-                code += 1
-                i += 1
-            code <<= 1
-
-        out = bytearray()
-        bitbuf = 0
-        nbits = 0
-
-        def put(ln, c):
-            nonlocal bitbuf, nbits
-            bitbuf = (bitbuf << ln) | c
-            nbits += ln
-            while nbits >= 8:
-                nbits -= 8
-                byte = (bitbuf >> nbits) & 0xFF
-                out.append(byte)
-                if byte == 0xFF:
-                    out.append(0x00)
-
-        def put_sym(sym):
-            ln, c = codes[sym]
-            put(ln, c)
-
-        def flush_bits():
-            nonlocal nbits, bitbuf
-            if nbits:
-                put(8 - nbits, (1 << (8 - nbits)) - 1)
-            bitbuf = 0
-
-        def magnitude(v):
-            av, s = abs(v), 0
-            while av:
-                av >>= 1
-                s += 1
-            return s
-
-        # ---- scan emitters (T.81 G.1.2) ----
-        def dc_first_scan(scan_plan, al):
-            preds = {ci: 0 for ci, _ in scan_plan}
-            for my in range(mcuy):
-                for mx in range(mcux):
-                    for ci, (ch, cv) in scan_plan:
-                        for by in range(cv):
-                            for bx in range(ch):
-                                dc = int(
-                                    comp_coefs[ci][my * cv + by, mx * ch + bx, 0]
-                                ) >> al
-                                diff = dc - preds[ci]
-                                preds[ci] = dc
-                                s = magnitude(diff)
-                                put_sym(s)
-                                if s:
-                                    d = diff if diff >= 0 else diff + (1 << s) - 1
-                                    put(s, d & ((1 << s) - 1))
-
-        def dc_refine_scan(scan_plan, al):
-            for my in range(mcuy):
-                for mx in range(mcux):
-                    for ci, (ch, cv) in scan_plan:
-                        for by in range(cv):
-                            for bx in range(ch):
-                                dc = int(
-                                    comp_coefs[ci][my * cv + by, mx * ch + bx, 0]
-                                )
-                                put(1, (dc >> al) & 1)
-
-        def comp_grid(ci):
-            ch, cv = plan[ci][1], plan[ci][2]
-            comp_w = -(-w * ch // hmax)
-            comp_h = -(-h * cv // vmax)
-            return -(-comp_h // 8), -(-comp_w // 8)
-
-        def ac_first_scan(ci, ss, se, al):
-            eobrun = 0
-
-            def emit_eobrun():
-                nonlocal eobrun
-                if eobrun:
-                    n = eobrun.bit_length() - 1
-                    put_sym(n << 4)
-                    if n:
-                        put(n, eobrun - (1 << n))
-                    eobrun = 0
-
-            bh, bw = comp_grid(ci)
-            for byy in range(bh):
-                for bxx in range(bw):
-                    block = comp_coefs[ci][byy, bxx]
-                    run = 0
-                    wrote = False
-                    for kk in range(ss, se + 1):
-                        v = int(block[kk])
-                        av = abs(v) >> al  # AC point transform: trunc to 0
-                        if av == 0:
-                            run += 1
-                            continue
-                        emit_eobrun()
-                        while run > 15:
-                            put_sym(0xF0)
-                            run -= 16
-                        s = magnitude(av)
-                        put_sym((run << 4) | s)
-                        vv = av if v > 0 else -av
-                        d = vv if vv >= 0 else vv + (1 << s) - 1
-                        put(s, d & ((1 << s) - 1))
-                        run = 0
-                        wrote = True
-                    if run or not wrote:
-                        eobrun += 1
-                        if eobrun == 0x7FFF:
-                            emit_eobrun()
-            emit_eobrun()
-
-        def ac_refine_scan(ci, ss, se, al):
+        def ac_scan(ci, ss, se, ah, al):
+            """Band ss..se of component ``ci`` over its own block grid:
+            first pass (T.81 G.1.2.2) or successive-approximation
+            refinement (G.1.2.3); EOB runs batch across blocks."""
             eobrun = 0
             pending: list[int] = []  # correction bits owed after EOBn
 
@@ -1139,7 +992,7 @@ def build_progressive_encoder():
                 nonlocal eobrun
                 if eobrun:
                     n = eobrun.bit_length() - 1
-                    put_sym(n << 4)
+                    put_coded(codes, n, 0)
                     if n:
                         put(n, eobrun - (1 << n))
                     eobrun = 0
@@ -1147,329 +1000,77 @@ def build_progressive_encoder():
                     put(1, bit)
                 pending.clear()
 
-            bh, bw = comp_grid(ci)
-            for byy in range(bh):
-                for bxx in range(bw):
-                    block = comp_coefs[ci][byy, bxx]
-                    absv = [abs(int(block[kk])) >> al for kk in range(ss, se + 1)]
-                    # last index (in-band) that is newly significant
-                    eob = -1
-                    for idx, av in enumerate(absv):
-                        if av == 1:
-                            eob = idx
-                    run = 0
-                    # correction bits owed after the NEXT symbol, each
-                    # tagged with how many zero-history coefficients
-                    # precede it since that symbol: a ZRL's 16-zero
-                    # window only carries the corrections INSIDE it
-                    # (the decoder stops reading at the 16th zero)
-                    br: list[tuple[int, int]] = []
-                    for idx, av in enumerate(absv):
-                        if av == 0:
-                            run += 1
-                            continue
-                        if av > 1:  # already significant: correction bit
-                            br.append((run, av & 1))
-                            continue
-                        # newly significant (av == 1)
-                        emit_eobrun()
-                        while run > 15 and idx <= eob:
-                            put_sym(0xF0)
-                            for tag, bit in [t for t in br if t[0] < 16]:
-                                put(1, bit)
-                            br = [(tag - 16, bit) for tag, bit in br if tag >= 16]
-                            run -= 16
-                        put_sym((run << 4) | 1)
-                        put(1, 1 if int(block[ss + idx]) > 0 else 0)
-                        for _tag, bit in br:
+            def first(block, absv):
+                run, wrote = 0, False
+                for v, av in zip(block[ss : se + 1], absv):
+                    if av == 0:  # the point transform truncates to 0
+                        run += 1
+                        continue
+                    emit_eobrun()
+                    while run > 15:
+                        put_coded(codes, 15, 0)
+                        run -= 16
+                    put_coded(codes, run, av if v > 0 else -av)
+                    run, wrote = 0, True
+                return [] if run or not wrote else None
+
+            def refine(block, absv):
+                # correction bits owed after the NEXT symbol, each tagged
+                # with how many zero-history coefficients precede it
+                # since that symbol: a ZRL's 16-zero window only carries
+                # the corrections INSIDE it (the decoder stops reading
+                # at the 16th zero)
+                run, br = 0, []
+                for idx, av in enumerate(absv):
+                    if av == 0:
+                        run += 1
+                        continue
+                    if av > 1:  # already significant: correction bit
+                        br.append((run, av & 1))
+                        continue
+                    emit_eobrun()  # newly significant (av == 1)
+                    while run > 15:
+                        put_coded(codes, 15, 0)
+                        for _tag, bit in [t for t in br if t[0] < 16]:
                             put(1, bit)
-                        br = []
-                        run = 0
-                    if run or br:
+                        br = [(tag - 16, bit) for tag, bit in br if tag >= 16]
+                        run -= 16
+                    put_coded(codes, run, 1 if block[ss + idx] > 0 else -1)
+                    for _tag, bit in br:
+                        put(1, bit)
+                    run, br = 0, []
+                return [bit for _tag, bit in br] if run or br else None
+
+            bh, bw = comp_blocks(h, w, plan[ci][1], plan[ci][2], hmax, vmax)
+            for row in coefs[ci][:bh]:
+                for block in row[:bw]:
+                    absv = [abs(v) >> al for v in block[ss : se + 1]]
+                    owed = (refine if ah else first)(block, absv)
+                    if owed is not None:  # the block ends in an EOB run
                         eobrun += 1
-                        pending.extend(bit for _tag, bit in br)
+                        pending.extend(owed)
                         if eobrun == 0x7FFF:
                             emit_eobrun()
             emit_eobrun()
 
-        # ---- headers ----
-        def seg(marker, payload):
-            return (
-                bytes([0xFF, marker])
-                + struct.pack(">H", len(payload) + 2)
-                + payload
-            )
-
-        header = bytearray(b"\xff\xd8")
-        header += seg(0xDB, bytes([0]) + bytes(int(x) for x in qly_nat[zz_idx]))
-        if not grayscale:
-            header += seg(
-                0xDB, bytes([1]) + bytes(int(x) for x in qlc_nat[zz_idx])
-            )
-        sof = bytes([precision]) + struct.pack(">HH", h, w) + bytes([len(plan)])
-        for ci, (_, ch, cv, _, tq) in enumerate(plan):
-            sof += bytes([ci + 1, (ch << 4) | cv, tq])
-        header += seg(0xC2, sof)
-        for tc in (0, 1):
-            for th in (0, 1) if not grayscale else (0,):
-                header += seg(
-                    0xC4,
-                    bytes([(tc << 4) | th])
-                    + bytes(flat_bits)
-                    + bytes(flat_vals),
-                )
-
-        def sos(comp_ids, ss, se, ah, al):
-            body = bytes([len(comp_ids)])
-            for cid in comp_ids:
-                body += bytes([cid, 0])  # table 0 for both classes
-            body += bytes([ss, se, (ah << 4) | al])
-            return seg(0xDA, body)
-
-        result = bytearray(header)
-
-        def run_scan(emit, comp_ids, ss, se, ah, al):
-            nonlocal out
-            out = bytearray()
-            emit()
-            flush_bits()
-            result.extend(sos(comp_ids, ss, se, ah, al) + out)
-
-        all_ids = [ci + 1 for ci in range(len(plan))]
-        scan_plan = [(ci, (plan[ci][1], plan[ci][2])) for ci in range(len(plan))]
-        # the libjpeg-like script
-        run_scan(lambda: dc_first_scan(scan_plan, 1), all_ids, 0, 0, 0, 1)
-        if grayscale:
-            run_scan(lambda: ac_first_scan(0, 1, 63, 1), [1], 1, 63, 0, 1)
-            run_scan(lambda: dc_refine_scan(scan_plan, 0), all_ids, 0, 0, 1, 0)
-            run_scan(lambda: ac_refine_scan(0, 1, 63, 0), [1], 1, 63, 1, 0)
-        else:
-            run_scan(lambda: ac_first_scan(0, 1, 5, 2), [1], 1, 5, 0, 2)
-            run_scan(lambda: ac_first_scan(1, 1, 63, 1), [2], 1, 63, 0, 1)
-            run_scan(lambda: ac_first_scan(2, 1, 63, 1), [3], 1, 63, 0, 1)
-            run_scan(lambda: ac_first_scan(0, 6, 63, 2), [1], 6, 63, 0, 2)
-            run_scan(lambda: ac_refine_scan(0, 1, 63, 1), [1], 1, 63, 2, 1)
-            run_scan(lambda: dc_refine_scan(scan_plan, 0), all_ids, 0, 0, 1, 0)
-            run_scan(lambda: ac_refine_scan(0, 1, 63, 0), [1], 1, 63, 1, 0)
-            run_scan(lambda: ac_refine_scan(1, 1, 63, 0), [2], 1, 63, 1, 0)
-            run_scan(lambda: ac_refine_scan(2, 1, 63, 0), [3], 1, 63, 1, 0)
-        result += b"\xff\xd9"
-        return bytes(result)
-
-    return encode_jpeg_progressive
-
-
-#: by-value-picklable codec closures.
-def build_extended_encoder():
-    """Factory returning a 12-bit extended-sequential (SOF1) encoder as
-    a by-value closure — the encode-side twin that makes the 12-bit
-    decode path testable without libjpeg (the third twin after the
-    progressive and lossless ones; r8, shrinking the stub list again).
-
-    Grayscale or 4:4:4 RGB, level shift 2048 (T.81 A.3.1), YCbCr
-    centered at 2048, Annex K quant tables under IJG quality scaling
-    emitted as 16-bit DQT entries (low qualities scale past 255), ONE
-    flat 16-symbol DC table (SSSS categories 0-15 — 12-bit DC diffs
-    exceed the Annex K tables' 11) and the progressive encoder's flat
-    256-symbol AC table (every run/size byte codable)."""
-    zigzag = list(ZIGZAG)
-    ql, qc = list(QUANT_LUMA), list(QUANT_CHROMA)
-
-    def encode_jpeg_12bit(arr, quality: int = 95, grayscale: bool = False) -> bytes:
-        import struct
-
-        import numpy as np
-
-        a = np.asarray(arr, dtype=np.float64)
-        if a.ndim == 2:
-            a, grayscale = a[:, :, None].repeat(3, axis=2), True
-        if a.max() > 4095 or a.min() < 0:
-            raise ValueError("12-bit samples must be in 0..4095")
-        h, w, _ = a.shape
-
-        q = max(1, min(100, quality))
-        scale = 5000 // q if q < 50 else 200 - 2 * q
-
-        def scaled(base):
-            return [max(1, min(65535, (v * scale + 50) // 100)) for v in base]
-
-        # like the baseline encoder: quality-scale in NATURAL order,
-        # hand encode_block (and the DQT payload) the ZIGZAG layout —
-        # encode_block's nat_q[zigzag] = qtab unscatters it back
-        qly, qlc = scaled(ql), scaled(qc)
-        qly = [qly[z] for z in zigzag]
-        qlc = [qlc[z] for z in zigzag]
-
-        # flat canonical tables: DC = 15 len-4 + 1 len-5 codes over
-        # categories 0-15 (never the all-ones len-4 code); AC = the
-        # progressive twin's 128 len-8 + 128 len-9 over all 256 bytes
-        dc_bits = [0, 0, 0, 15, 1] + [0] * 11
-        dc_vals = list(range(16))
-        ac_bits = [0] * 7 + [128, 128] + [0] * 7
-        ac_vals = list(range(256))
-
-        def enc_table(bits, vals):
-            codes, code, i = {}, 0, 0
-            for ln in range(1, 17):
-                for _ in range(bits[ln - 1]):
-                    codes[vals[i]] = (ln, code)
-                    code += 1
-                    i += 1
-                code <<= 1
-            return codes
-
-        dc_codes, ac_codes = enc_table(dc_bits, dc_vals), enc_table(ac_bits, ac_vals)
-
-        k = np.arange(8)
-        basis = np.cos((2 * k[:, None] + 1) * k[None, :] * np.pi / 16)
-        alpha = np.full(8, np.sqrt(2.0 / 8.0))
-        alpha[0] = np.sqrt(1.0 / 8.0)
-        m = basis * alpha[None, :]
-
-        out = bytearray()
-        bitbuf = 0
-        nbits = 0
-
-        def put(ln, code):
-            nonlocal bitbuf, nbits
-            bitbuf = (bitbuf << ln) | code
-            nbits += ln
-            while nbits >= 8:
-                nbits -= 8
-                byte = (bitbuf >> nbits) & 0xFF
-                out.append(byte)
-                if byte == 0xFF:
-                    out.append(0x00)
-
-        def magnitude(v):
-            av, s = abs(v), 0
-            while av:
-                av >>= 1
-                s += 1
-            return s
-
-        def encode_block(blockf, qtab, pred):
-            coeffs = m.T @ (blockf - 2048.0) @ m
-            nat_q = np.zeros(64)
-            nat_q[zigzag] = qtab
-            qz = np.round(coeffs.reshape(64) / nat_q).astype(np.int64)
-            zz = qz[zigzag]
-            diff = int(zz[0]) - pred
-            s = magnitude(diff)
-            ln, code = dc_codes[s]
-            put(ln, code)
-            if s:
-                d = diff if diff >= 0 else diff + (1 << s) - 1
-                put(s, d & ((1 << s) - 1))
-            run = 0
-            last = 63
-            while last > 0 and zz[last] == 0:
-                last -= 1
-            for i in range(1, last + 1):
-                v = int(zz[i])
-                if v == 0:
-                    run += 1
-                    continue
-                while run > 15:
-                    ln, code = ac_codes[0xF0]
-                    put(ln, code)
-                    run -= 16
-                s = magnitude(v)
-                ln, code = ac_codes[(run << 4) | s]
-                put(ln, code)
-                d = v if v >= 0 else v + (1 << s) - 1
-                put(s, d & ((1 << s) - 1))
-                run = 0
-            if last < 63:
-                ln, code = ac_codes[0x00]
-                put(ln, code)
-            return int(zz[0])
-
-        r_, g_, b_ = a[:, :, 0], a[:, :, 1], a[:, :, 2]
-        y = 0.299 * r_ + 0.587 * g_ + 0.114 * b_
-        cb = -0.168736 * r_ - 0.331264 * g_ + 0.5 * b_ + 2048.0
-        cr = 0.5 * r_ - 0.418688 * g_ - 0.081312 * b_ + 2048.0
-        plan = (
-            [(y, qly, 0)]
+        # the libjpeg-like script: (component or None for the
+        # interleaved DC scan, Ss, Se, Ah, Al)
+        script = [(None, 0, 0, 0, 1)] + (
+            [(0, 1, 63, 0, 1), (None, 0, 0, 1, 0), (0, 1, 63, 1, 0)]
             if grayscale
-            else [(y, qly, 0), (cb, qlc, 1), (cr, qlc, 1)]
+            else [(0, 1, 5, 0, 2), (1, 1, 63, 0, 1), (2, 1, 63, 0, 1),
+                  (0, 6, 63, 0, 2), (0, 1, 63, 2, 1), (None, 0, 0, 1, 0),
+                  (0, 1, 63, 1, 0), (1, 1, 63, 1, 0), (2, 1, 63, 1, 0)]
         )
-        bh, bw = -(-h // 8), -(-w // 8)
-
-        def pad(p):
-            return np.pad(
-                p, ((0, bh * 8 - h), (0, bw * 8 - w)), mode="edge"
-            )
-
-        plan = [(pad(p), qt_, tq) for p, qt_, tq in plan]
-        preds = [0] * len(plan)
-        for by in range(bh):
-            for bx in range(bw):
-                for ci, (p, qt_, _) in enumerate(plan):
-                    preds[ci] = encode_block(
-                        p[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8],
-                        qt_,
-                        preds[ci],
-                    )
-        if nbits:
-            put(8 - nbits, (1 << (8 - nbits)) - 1)
-
-        def seg(marker, payload):
-            return (
-                bytes([0xFF, marker])
-                + struct.pack(">H", len(payload) + 2)
-                + payload
-            )
-
-        def dqt16(tid, tab):  # pq=1: 16-bit big-endian entries
-            return seg(
-                0xDB,
-                bytes([0x10 | tid])
-                + b"".join(struct.pack(">H", int(v)) for v in tab),
-            )
-
-        def dht(tc, th, bits, vals):
-            return seg(0xC4, bytes([(tc << 4) | th]) + bytes(bits) + bytes(vals))
-
-        nc = len(plan)
-        sof_body = bytes([12]) + struct.pack(">HH", h, w) + bytes([nc])
-        sos_body = bytes([nc])
-        for ci, (_, _, tq) in enumerate(plan):
-            sof_body += bytes([ci + 1, 0x11, tq])
-            sos_body += bytes([ci + 1, 0x00])  # DC 0 / AC 0 for all
-        sos_body += bytes([0, 63, 0])
-        header = b"\xff\xd8" + dqt16(0, qly)
-        if not grayscale:
-            header += dqt16(1, qlc)
-        header += seg(0xC1, sof_body)
-        header += dht(0, 0, dc_bits, dc_vals) + dht(1, 0, ac_bits, ac_vals)
-        return header + seg(0xDA, sos_body) + bytes(out) + b"\xff\xd9"
-
-    return encode_jpeg_12bit
-
-
-def build_lossless_encoder():
-    """Factory returning a predictive lossless (SOF3) encoder as a
-    by-value closure — the encode-side twin that makes the lossless
-    decode path testable without libjpeg (same pattern as the
-    progressive encoder twin; finishes the job commit 6224580 half
-    started, r7 verdict "what's wrong" #1).
-
-    Any T.81 precision 2-16 (r13; default 8), any predictor 1-7,
-    optional point transform, grayscale (1 component) or RGB
-    (3 components, 1×1 sampling, NO color transform — T.81 defines no
-    colorspace for the lossless process; the decoder mirrors this).
-    Differences are coded with the Annex K DC luminance Huffman table
-    at ≤8 bits (byte-identical to the r8 encoder) and a flat
-    17-category table above it (wide-precision diffs reach SSSS 16 —
-    past both Annex K tables); SSSS category + extend bits per T.81
-    H.1.1/H.1.2, byte stuffing as everywhere else. Exact round-trip
-    ``decode(encode(img)) == img`` is pinned in tests/test_jpeg.py for
-    every predictor and a sweep of precisions."""
-    tables = {"dc0": (list(DC_LUMA_BITS), list(DC_LUMA_VALS))}
-    # flat canonical table for SSSS 0..16: seventeen 5-bit codes
-    WIDE_BITS = [0, 0, 0, 0, 17] + [0] * 11
-    WIDE_VALS = list(range(17))
+        for ci, ss, se, ah, al in script:
+            ids = range(len(plan)) if ci is None else [ci]
+            out += sos([(c + 1, 0) for c in ids], ss, se, ah, al)
+            if ci is None:
+                dc_scan(ah, al)
+            else:
+                ac_scan(ci, ss, se, ah, al)
+            flush()
+        return bytes(out + b"\xff\xd9")
 
     def encode_jpeg_lossless(
         arr,
@@ -1478,10 +1079,12 @@ def build_lossless_encoder():
         precision: int = 8,
         restart_interval: int = 0,
     ) -> bytes:
-        import struct
-
-        import numpy as np
-
+        """Predictive lossless (SOF3) encode at any T.81 precision 2-16:
+        predictor 1-7, optional point transform, grayscale or RGB (3
+        components, 1×1 sampling, NO color transform — T.81 defines no
+        colorspace for the lossless process; the decoder mirrors this),
+        optional restart markers. Differences are coded as SSSS
+        category + extend bits (T.81 H.1.2)."""
         if not 1 <= predictor <= 7:
             raise ValueError(f"predictor must be 1..7, got {predictor}")
         if not 0 <= point_transform <= 7:
@@ -1501,146 +1104,62 @@ def build_lossless_encoder():
                 f"{(1 << precision) - 1}"
             )
         if a.ndim == 2:
-            planes = [a.astype(np.int64)]
+            planes = [a]
         elif a.ndim == 3 and a.shape[2] == 3:
-            planes = [a[:, :, c].astype(np.int64) for c in range(3)]
+            planes = [a[:, :, c] for c in range(3)]
         else:
             raise ValueError(f"expected HxW or HxWx3 array, got {a.shape}")
-        h, w = planes[0].shape
         pt = point_transform
-        planes = [p >> pt for p in planes]
-
-        # canonical Huffman codes for the DC table: Annex K luma at
-        # ≤8-bit precision (keeps the r8 byte stream), flat 17-category
-        # above it (wide diffs reach SSSS 16)
-        codes = {}
-        code = 0
-        i = 0
-        bits, vals = (
-            tables["dc0"] if precision <= 8 else (WIDE_BITS, WIDE_VALS)
-        )
-        for ln in range(1, 17):
-            for _ in range(bits[ln - 1]):
-                codes[vals[i]] = (ln, code)
-                code += 1
-                i += 1
-            code <<= 1
-
-        out = bytearray()
-        bitbuf = 0
-        nbits = 0
-
-        def put(ln, c):
-            nonlocal bitbuf, nbits
-            bitbuf = (bitbuf << ln) | c
-            nbits += ln
-            while nbits >= 8:
-                nbits -= 8
-                byte = (bitbuf >> nbits) & 0xFF
-                out.append(byte)
-                if byte == 0xFF:
-                    out.append(0x00)
-
-        def magnitude(v):
-            av, s = abs(v), 0
-            while av:
-                av >>= 1
-                s += 1
-            return s
-
+        planes = [(p.astype(np.int64) >> pt).tolist() for p in planes]
+        h, w = a.shape[:2]
+        # Annex K luma DC table at ≤8 bits, the flat 17-category table
+        # above (wide-precision diffs reach SSSS 16)
+        table = annex_k[0][0] if precision <= 8 else flat_dc17
+        codes = dict(huffman_codes(*table))
+        nc = len(planes)
+        out = bytearray(b"\xff\xd8") + dht(0, 0, table)
+        out += sof(0xC3, precision, h, w, [(ci + 1, 0x11, 0) for ci in range(nc)])
+        if restart_interval:
+            out += dri(restart_interval)
+        # Ss = predictor, Se = 0, Al = point transform; no AC table
+        out += sos([(ci + 1, 0x00) for ci in range(nc)], predictor, 0, 0, pt)
+        put, put_coded, flush, restart = bit_writer(out)
         default = 1 << (precision - pt - 1)
         n_mcu = 0
-        rst_m = 0
         sy, sx = 0, 0  # position where the current interval began
         for y in range(h):
             for x in range(w):
-                if (
-                    restart_interval
-                    and n_mcu
-                    and n_mcu % restart_interval == 0
-                ):
-                    # flush to a byte boundary (1-padded), emit RSTn
-                    # RAW (markers are never byte-stuffed), reset the
-                    # prediction state exactly like the decoder
-                    if nbits:
-                        put(8 - nbits, (1 << (8 - nbits)) - 1)
-                    out += bytes([0xFF, 0xD0 + rst_m])
-                    rst_m = (rst_m + 1) % 8
+                if restart_interval and n_mcu and n_mcu % restart_interval == 0:
+                    restart()  # prediction resets exactly like the decoder
                     sy, sx = y, x
                 n_mcu += 1
                 for p in planes:
-                    if y == sy and x == sx:
-                        px = default
-                    elif y == sy:
-                        px = int(p[y, x - 1])
-                    elif x == 0:
-                        px = int(p[y - 1, 0])
-                    else:
-                        ra = int(p[y, x - 1])
-                        rb = int(p[y - 1, x])
-                        rc = int(p[y - 1, x - 1])
-                        if predictor == 1:
-                            px = ra
-                        elif predictor == 2:
-                            px = rb
-                        elif predictor == 3:
-                            px = rc
-                        elif predictor == 4:
-                            px = ra + rb - rc
-                        elif predictor == 5:
-                            px = ra + ((rb - rc) >> 1)
-                        elif predictor == 6:
-                            px = rb + ((ra - rc) >> 1)
-                        else:  # 7
-                            px = (ra + rb) >> 1
-                        # px may exceed 8 bits for predictors 4-6; the
-                        # mod-2^16 difference arithmetic absorbs it
-                    diff = (int(p[y, x]) - px) & 0xFFFF
+                    # px may exceed the sample width for predictors 4-6;
+                    # the mod-2^16 difference arithmetic absorbs it
+                    px = predict(p, y, x, sy, sx, default, predictor)
+                    diff = (p[y][x] - px) & 0xFFFF
                     if diff >= 32768:
                         diff -= 65536  # signed representative
-                    if diff == 32768 or diff == -32768:
-                        ln, c = codes[16]
-                        put(ln, c)  # SSSS=16 carries no extend bits
-                        continue
-                    s = magnitude(diff)
-                    ln, c = codes[s]
-                    put(ln, c)
-                    if s:
-                        d = diff if diff >= 0 else diff + (1 << s) - 1
-                        put(s, d & ((1 << s) - 1))
-        if nbits:
-            put(8 - nbits, (1 << (8 - nbits)) - 1)  # pad with 1s
+                    if diff == -32768:
+                        put(*codes[16])  # SSSS=16 carries no extend bits
+                    else:
+                        put_coded(codes, 0, diff)
+        flush()
+        return bytes(out + b"\xff\xd9")
 
-        def seg(marker, payload):
-            return (
-                bytes([0xFF, marker])
-                + struct.pack(">H", len(payload) + 2)
-                + payload
-            )
-
-        nc = len(planes)
-        sof_body = (
-            bytes([precision]) + struct.pack(">HH", h, w) + bytes([nc])
-        )
-        sos_body = bytes([nc])
-        for ci in range(nc):
-            sof_body += bytes([ci + 1, 0x11, 0])  # 1x1 sampling, Tq ignored
-            sos_body += bytes([ci + 1, 0x00])  # DC table 0, no AC table
-        sos_body += bytes([predictor, 0, pt])  # Ss=predictor, Se=0, Al=Pt
-        header = (
-            b"\xff\xd8"
-            + seg(0xC4, bytes([0x00]) + bytes(bits) + bytes(vals))
-            + seg(0xC3, sof_body)
-        )
-        if restart_interval:
-            header += seg(0xDD, struct.pack(">H", restart_interval))
-        return header + seg(0xDA, sos_body) + bytes(out) + b"\xff\xd9"
-
-    return encode_jpeg_lossless
+    return (
+        decode_jpeg,
+        encode_jpeg,
+        encode_jpeg_progressive,
+        encode_jpeg_12bit,
+        encode_jpeg_lossless,
+    )
 
 
-decode_jpeg = build_jpeg_decoder()
-encode_jpeg = build_jpeg_encoder()
-encode_jpeg_progressive = build_progressive_encoder()
-encode_jpeg_lossless = build_lossless_encoder()
-encode_jpeg_12bit = build_extended_encoder()
+(
+    decode_jpeg,
+    encode_jpeg,
+    encode_jpeg_progressive,
+    encode_jpeg_12bit,
+    encode_jpeg_lossless,
+) = _build_jpeg_codec()

@@ -441,9 +441,8 @@ def build_synth_mp4():
     DRIFTS cumulatively per frame along a seed-derived direction field —
     adjacent frames differ a little, the first and last a lot. ``seed``
     may be an int or bytes (e.g. ``md5(text).digest()``)."""
-    from .jpeg import build_jpeg_encoder
+    from .jpeg import encode_jpeg
 
-    encode_jpeg = build_jpeg_encoder()
     mux = build_mjpeg_muxer()
 
     def synth_mp4(

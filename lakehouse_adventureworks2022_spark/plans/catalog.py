@@ -38,7 +38,6 @@ from lakehouse_adventureworks2022_spark.plans import (
     windowed,
 )
 from lakehouse_adventureworks2022_spark.plans import text_queries as tq
-from lakehouse_adventureworks2022_spark.plans.tpch_extra import EXTRA_ORACLES as EXTRA
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -741,13 +740,13 @@ ORACLE_SCD2_PART_PRICE_ASOF = """
 RECORDS: tuple[Query, ...] = (
     # ---- the driver window: hash-checked by the driver itself ----
     Query("tpch_q22_idle_balances", tpch_extra.q22_idle_balances,
-        oracle=EXTRA["tpch_q22_idle_balances"], driver=True, headline=True),
+        oracle=tpch_extra.ORACLE_TPCH_Q22_IDLE_BALANCES, driver=True, headline=True),
     Query("tpch_q11_important_parts", tpch_extra.q11_important_parts,
-        oracle=EXTRA["tpch_q11_important_parts"], driver=True, headline=True),
+        oracle=tpch_extra.ORACLE_TPCH_Q11_IMPORTANT_PARTS, driver=True, headline=True),
     Query("tpch_q4_priority_check", tpch_extra.q4_priority_check,
-        oracle=EXTRA["tpch_q4_priority_check"], driver=True),
+        oracle=tpch_extra.ORACLE_TPCH_Q4_PRIORITY_CHECK, driver=True),
     Query("tpch_q15_top_supplier", tpch_extra.q15_top_supplier,
-        oracle=EXTRA["tpch_q15_top_supplier"], driver=True),
+        oracle=tpch_extra.ORACLE_TPCH_Q15_TOP_SUPPLIER, driver=True),
     Query("docs_dsir_weights", tq.q_docs_dsir_weights,
         oracle=tq.ORACLE_DOCS_DSIR_WEIGHTS, driver=True, headline=True),
     Query("source_overlap_matrix", tq.q_source_overlap,
@@ -796,21 +795,21 @@ RECORDS: tuple[Query, ...] = (
     Query("perplexity_quality_buckets", tq.q_perplexity_quality_buckets,
         oracle=tq.ORACLE_PERPLEXITY_QUALITY_BUCKETS, driver=True, headline=True),
     Query("tpch_q2_min_balance_supplier", tpch_extra.q2_min_balance_supplier,
-        oracle=EXTRA["tpch_q2_min_balance_supplier"], driver=True, headline=True),
+        oracle=tpch_extra.ORACLE_TPCH_Q2_MIN_BALANCE_SUPPLIER, driver=True, headline=True),
     Query("tpch_q9_product_profit", tpch_extra.q9_product_profit,
-        oracle=EXTRA["tpch_q9_product_profit"], driver=True, headline=True),
+        oracle=tpch_extra.ORACLE_TPCH_Q9_PRODUCT_PROFIT, driver=True, headline=True),
     Query("tpch_q18_large_orders", tpch_extra.q18_large_orders,
-        oracle=EXTRA["tpch_q18_large_orders"], driver=True),
+        oracle=tpch_extra.ORACLE_TPCH_Q18_LARGE_ORDERS, driver=True),
     Query("tpch_q20_excess_shippers", tpch_extra.q20_excess_shippers,
-        oracle=EXTRA["tpch_q20_excess_shippers"], driver=True),
+        oracle=tpch_extra.ORACLE_TPCH_Q20_EXCESS_SHIPPERS, driver=True),
     Query("tpch_q21_waiting_suppliers", tpch_extra.q21_waiting_suppliers,
-        oracle=EXTRA["tpch_q21_waiting_suppliers"], driver=True, headline=True),
+        oracle=tpch_extra.ORACLE_TPCH_Q21_WAITING_SUPPLIERS, driver=True, headline=True),
     Query("tpch_q19_disjunctive_revenue", tpch_extra.q19_disjunctive_revenue,
-        oracle=EXTRA["tpch_q19_disjunctive"], driver=True),
+        oracle=tpch_extra.ORACLE_TPCH_Q19_DISJUNCTIVE_REVENUE, driver=True),
     Query("tpch_q12_shipping_delay_bands", tpch_extra.q12_shipping_delay_bands,
-        oracle=EXTRA["tpch_q12_shipping_delay_bands"], driver=True),
+        oracle=tpch_extra.ORACLE_TPCH_Q12_SHIPPING_DELAY_BANDS, driver=True),
     Query("tpch_q16_supplier_count_by_part", tpch_extra.q16_supplier_count_by_part,
-        oracle=EXTRA["tpch_q16_supplier_count_by_part"], driver=True),
+        oracle=tpch_extra.ORACLE_TPCH_Q16_SUPPLIER_COUNT_BY_PART, driver=True),
     Query("cdc_upsert", facts.q_cdc_upsert,
         oracle=facts.ORACLE_CDC_UPSERT, driver=True, headline=True),
     Query("normalize_text", tq.q_normalize_text,
@@ -822,7 +821,7 @@ RECORDS: tuple[Query, ...] = (
     Query("customer_running_revenue", windowed.customer_running_revenue,
         oracle=ORACLE_CUSTOMER_RUNNING_REVENUE, driver=True, headline=True),
     Query("user_value_moving_stats", tpch_extra.user_value_moving_stats,
-        oracle=EXTRA["user_value_moving_stats"], driver=True),
+        oracle=tpch_extra.ORACLE_USER_VALUE_MOVING_STATS, driver=True),
     Query("user_hourly_gapfill", events.user_hourly_gapfill,
         oracle=ORACLE_USER_HOURLY_GAPFILL, driver=True),
     Query("asof_click_attribution", advanced_joins.asof_click_attribution,
@@ -860,7 +859,7 @@ RECORDS: tuple[Query, ...] = (
     Query("daily_event_pivot", semistructured.daily_event_pivot,
         oracle=semistructured.ORACLE_DAILY_PIVOT),
     Query("tpch_q6_forecast_revenue", tpch_extra.q6_forecast_revenue,
-        oracle=EXTRA["tpch_q6_forecast_revenue"]),
+        oracle=tpch_extra.ORACLE_TPCH_Q6_FORECAST_REVENUE),
     Query("top_products_approx", marts.top_products_approx, rows_only="HLL distinct count"),
     Query("event_value_stats_approx", relational.event_value_stats_approx,
         rows_only="t-digest percentiles"),
@@ -956,11 +955,11 @@ RECORDS: tuple[Query, ...] = (
     Query("text_stats", tq.q_text_stats, oracle=tq.ORACLE_TEXT_STATS, headline=True),
     Query("ann_cosine_topk", tq.q_ann_cosine, oracle=tq.ORACLE_ANN_COSINE),
     Query("tpch_q7_nation_volume", tpch_extra.q7_nation_volume,
-        oracle=EXTRA["tpch_q7_nation_volume"]),
+        oracle=tpch_extra.ORACLE_TPCH_Q7_NATION_VOLUME),
     Query("tpch_q10_returned_items", tpch_extra.q10_returned_items,
-        oracle=EXTRA["tpch_q10_returned_items"]),
+        oracle=tpch_extra.ORACLE_TPCH_Q10_RETURNED_ITEMS),
     Query("tpch_q14_promo_revenue_ratio", tpch_extra.q14_promo_revenue_ratio,
-        oracle=EXTRA["tpch_q14_promo_ratio"]),
+        oracle=tpch_extra.ORACLE_TPCH_Q14_PROMO_REVENUE_RATIO),
     Query("ivf_sq8_index_ingest", tq.q_ivf_sq8_index_ingest,
         rows_only="probe-pruned ANN: approx by design", headline=True),
     Query("rag_index_ingest", tq.q_rag_index_ingest,

@@ -205,17 +205,7 @@ def q22_idle_balances(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EXTRA_QUERIES = {
-    "tpch_q6_forecast_revenue": q6_forecast_revenue,
-    "tpch_q7_nation_volume": q7_nation_volume,
-    "tpch_q10_returned_items": q10_returned_items,
-    "tpch_q14_promo_ratio": q14_promo_revenue_ratio,
-    "tpch_q19_disjunctive": q19_disjunctive_revenue,
-    "tpch_q22_idle_balances": q22_idle_balances,
-}
-
-EXTRA_ORACLES = {
-    "tpch_q6_forecast_revenue": """
+ORACLE_TPCH_Q6_FORECAST_REVENUE = """
         SELECT ROUND(SUM(l_extendedprice * l_discount), 4) AS revenue,
                COUNT(*) AS line_count
         FROM lineitem
@@ -223,8 +213,9 @@ EXTRA_ORACLES = {
           AND l_shipdate < TIMESTAMP '1998-01-01'
           AND l_discount BETWEEN 0.05 AND 0.07
           AND l_quantity < 24
-    """,
-    "tpch_q7_nation_volume": """
+    """
+
+ORACLE_TPCH_Q7_NATION_VOLUME = """
         SELECT n1.n_name AS supp_nation,
                n2.n_name AS cust_nation,
                CAST(year(l.l_shipdate) AS INT) AS ship_year,
@@ -238,8 +229,9 @@ EXTRA_ORACLES = {
         WHERE (n1.n_name = 'NATION_20' AND n2.n_name = 'NATION_11')
            OR (n1.n_name = 'NATION_11' AND n2.n_name = 'NATION_20')
         GROUP BY 1, 2, 3
-    """,
-    "tpch_q10_returned_items": """
+    """
+
+ORACLE_TPCH_Q10_RETURNED_ITEMS = """
         SELECT c.c_custkey AS customer_key,
                c.c_name AS customer_name,
                c.c_acctbal AS account_balance,
@@ -256,8 +248,9 @@ EXTRA_ORACLES = {
         GROUP BY 1, 2, 3, 4
         ORDER BY lost_revenue DESC, customer_key ASC
         LIMIT 20
-    """,
-    "tpch_q14_promo_ratio": """
+    """
+
+ORACLE_TPCH_Q14_PROMO_REVENUE_RATIO = """
         SELECT ROUND(100.0 * SUM(CASE WHEN p.p_type LIKE 'PROMO%'
                      THEN l.l_extendedprice * (1 - l.l_discount)
                      ELSE 0.0 END)
@@ -267,8 +260,9 @@ EXTRA_ORACLES = {
         FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
         WHERE l.l_shipdate >= TIMESTAMP '1997-03-01'
           AND l.l_shipdate < TIMESTAMP '1997-04-01'
-    """,
-    "tpch_q19_disjunctive": """
+    """
+
+ORACLE_TPCH_Q19_DISJUNCTIVE_REVENUE = """
         SELECT ROUND(SUM(l.l_extendedprice * (1 - l.l_discount)), 4)
                  AS revenue,
                COUNT(*) AS line_count
@@ -279,8 +273,9 @@ EXTRA_ORACLES = {
                AND l.l_quantity BETWEEN 10 AND 20)
            OR (p.p_brand = 'Brand#3' AND p.p_size BETWEEN 1 AND 30
                AND l.l_quantity BETWEEN 20 AND 30)
-    """,
-    "tpch_q22_idle_balances": """
+    """
+
+ORACLE_TPCH_Q22_IDLE_BALANCES = """
         SELECT c.c_mktsegment AS market_segment,
                COUNT(*) AS customer_count,
                ROUND(SUM(c.c_acctbal), 2) AS total_balance
@@ -291,8 +286,7 @@ EXTRA_ORACLES = {
                           WHERE o.o_custkey = c.c_custkey
                             AND o.o_orderpriority = '1-URGENT')
         GROUP BY 1
-    """,
-}
+    """
 
 
 def user_value_moving_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -325,8 +319,7 @@ def user_value_moving_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EXTRA_QUERIES["user_value_moving_stats"] = user_value_moving_stats
-EXTRA_ORACLES["user_value_moving_stats"] = """
+ORACLE_USER_VALUE_MOVING_STATS = """
     SELECT user_id, event_id, ts, value,
            ROUND(AVG(value) OVER w, 6) AS moving_avg_4,
            MAX(value) OVER w AS moving_max_4,
@@ -400,8 +393,7 @@ def q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.col("o_totalprice").desc(), "o_orderkey")
         .limit(100)
     )
-EXTRA_QUERIES["tpch_q15_top_supplier"] = q15_top_supplier
-EXTRA_ORACLES["tpch_q15_top_supplier"] = """
+ORACLE_TPCH_Q15_TOP_SUPPLIER = """
     WITH revenue AS (
         SELECT l_suppkey, ROUND(SUM(l_extendedprice * (1 - l_discount)), 4)
                    AS total_revenue
@@ -416,8 +408,7 @@ EXTRA_ORACLES["tpch_q15_top_supplier"] = """
     ORDER BY s.s_suppkey
 """
 
-EXTRA_QUERIES["tpch_q18_large_orders"] = q18_large_orders
-EXTRA_ORACLES["tpch_q18_large_orders"] = """
+ORACLE_TPCH_Q18_LARGE_ORDERS = """
     WITH big AS (
         SELECT l_orderkey, ROUND(SUM(l_quantity), 4) AS total_qty
         FROM lineitem GROUP BY l_orderkey HAVING SUM(l_quantity) > 150
@@ -495,8 +486,7 @@ def q2_min_balance_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EXTRA_QUERIES["tpch_q2_min_balance_supplier"] = q2_min_balance_supplier
-EXTRA_ORACLES["tpch_q2_min_balance_supplier"] = """
+ORACLE_TPCH_Q2_MIN_BALANCE_SUPPLIER = """
     WITH rs AS (
       SELECT DISTINCT l.l_partkey, s.s_suppkey, s.s_name, s.s_acctbal,
              n.n_name
@@ -543,8 +533,7 @@ def q4_priority_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EXTRA_QUERIES["tpch_q4_priority_check"] = q4_priority_check
-EXTRA_ORACLES["tpch_q4_priority_check"] = """
+ORACLE_TPCH_Q4_PRIORITY_CHECK = """
     SELECT o.o_orderpriority AS order_priority,
            COUNT(*) AS order_count
     FROM orders o
@@ -594,8 +583,7 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EXTRA_QUERIES["tpch_q9_product_profit"] = q9_product_profit
-EXTRA_ORACLES["tpch_q9_product_profit"] = """
+ORACLE_TPCH_Q9_PRODUCT_PROFIT = """
     SELECT n.n_name AS nation_name,
            CAST(year(o.o_orderdate) AS INT) AS o_year,
            CAST(ROUND(SUM(CAST(l.l_extendedprice * (1 - l.l_discount)
@@ -669,8 +657,7 @@ def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _attach_cached_input(out, v)
 
 
-EXTRA_QUERIES["tpch_q11_important_parts"] = q11_important_parts
-EXTRA_ORACLES["tpch_q11_important_parts"] = """
+ORACLE_TPCH_Q11_IMPORTANT_PARTS = """
     WITH v AS (
       SELECT n.n_name AS nation_name, l.l_partkey AS part_key,
              SUM(CAST(l.l_extendedprice * (1 - l.l_discount)
@@ -716,8 +703,7 @@ def q12_shipping_delay_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EXTRA_QUERIES["tpch_q12_shipping_delay_bands"] = q12_shipping_delay_bands
-EXTRA_ORACLES["tpch_q12_shipping_delay_bands"] = """
+ORACLE_TPCH_Q12_SHIPPING_DELAY_BANDS = """
     SELECT CASE WHEN datediff('day', o.o_orderdate, l.l_shipdate) <= 30
                 THEN 'FAST'
                 WHEN datediff('day', o.o_orderdate, l.l_shipdate) <= 60
@@ -765,8 +751,7 @@ def q16_supplier_count_by_part(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EXTRA_QUERIES["tpch_q16_supplier_count_by_part"] = q16_supplier_count_by_part
-EXTRA_ORACLES["tpch_q16_supplier_count_by_part"] = """
+ORACLE_TPCH_Q16_SUPPLIER_COUNT_BY_PART = """
     SELECT p.p_brand AS brand, p.p_type AS part_type,
            p.p_size AS part_size,
            COUNT(DISTINCT l.l_suppkey) AS supplier_cnt
@@ -819,8 +804,7 @@ def q20_excess_shippers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EXTRA_QUERIES["tpch_q20_excess_shippers"] = q20_excess_shippers
-EXTRA_ORACLES["tpch_q20_excess_shippers"] = """
+ORACLE_TPCH_Q20_EXCESS_SHIPPERS = """
     WITH sp AS (
       SELECT l.l_suppkey, l.l_partkey, SUM(l.l_quantity) AS q
       FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
@@ -885,8 +869,7 @@ def q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EXTRA_QUERIES["tpch_q21_waiting_suppliers"] = q21_waiting_suppliers
-EXTRA_ORACLES["tpch_q21_waiting_suppliers"] = """
+ORACLE_TPCH_Q21_WAITING_SUPPLIERS = """
     SELECT s.s_name AS supplier_name,
            COUNT(DISTINCT l1.l_orderkey) AS numwait
     FROM (SELECT DISTINCT l.l_orderkey, l.l_suppkey

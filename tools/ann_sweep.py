@@ -69,7 +69,7 @@ def main() -> None:
                 "median_search_sec": round(statistics.median(times), 3),
             }
         )
-    cells.unpersist()
+    index.base.unpersist()
 
     pq_sweep = []
     for rerank in (2, 8, 16):

@@ -360,8 +360,12 @@ def main() -> None:
     from lakehouse_adventureworks2022_spark.operators import (  # noqa: E402
         multimodal,
     )
+    from lakehouse_adventureworks2022_spark.operators.jpeg import (  # noqa: E402
+        encode_jpeg,
+        encode_jpeg_progressive,
+    )
 
-    def _jpeg_assets():
+    def _jpeg_assets(encode):
         import numpy as np
 
         # 24 distinct payloads re-referenced rep*500 times: the decode
@@ -374,7 +378,7 @@ def main() -> None:
             a = base.copy()
             a[:, :, 0] = (i * 37) % 256
             a[: 12 + (i % 12), :, 1] = (i * 101) % 256
-            payloads.append(bytearray(multimodal.encode_jpeg(a, quality=85)))
+            payloads.append(bytearray(encode(a, quality=85)))
         rows = [
             (i, payloads[i % len(payloads)], "image/jpeg", 32, 24, None)
             for i in range(n_assets)
@@ -382,34 +386,13 @@ def main() -> None:
         assets = spark.createDataFrame(rows, multimodal.ASSET_SCHEMA)
         return multimodal.image_hashes(assets.repartition(32))
 
-    run("jpeg_decode_dhash", _jpeg_assets)
-
-    def _progressive_assets():
-        # late-r7: same shape with PROGRESSIVE files — the multi-scan
-        # decode path (spectral bands + refinement bits) at rep*500 rows
-        import numpy as np
-
-        from lakehouse_adventureworks2022_spark.operators.jpeg import (
-            build_progressive_encoder,
-        )
-
-        enc_p = build_progressive_encoder()
-        n_assets = rep * 500
-        payloads = []
-        base = np.zeros((24, 32, 3), dtype=np.uint8)
-        for i in range(24):
-            a = base.copy()
-            a[:, :, 0] = (i * 37) % 256
-            a[: 12 + (i % 12), :, 1] = (i * 101) % 256
-            payloads.append(bytearray(enc_p(a, quality=85)))
-        rows = [
-            (i, payloads[i % len(payloads)], "image/jpeg", 32, 24, None)
-            for i in range(n_assets)
-        ]
-        assets = spark.createDataFrame(rows, multimodal.ASSET_SCHEMA)
-        return multimodal.image_hashes(assets.repartition(32))
-
-    run("progressive_jpeg_decode_dhash", _progressive_assets)
+    run("jpeg_decode_dhash", lambda: _jpeg_assets(encode_jpeg))
+    # late-r7: the same shape with PROGRESSIVE files — the multi-scan
+    # decode path (spectral bands + refinement bits) at rep*500 rows
+    run(
+        "progressive_jpeg_decode_dhash",
+        lambda: _jpeg_assets(encode_jpeg_progressive),
+    )
 
     def _video_frames():
         # late-r7: MP4 parse + frame extraction + per-frame JPEG decode
